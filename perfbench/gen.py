@@ -55,7 +55,8 @@ WORKLOADS = {
                        "COUNTER": 0.0},
              "value_bytes": (512, 1024)},
     # per-file fixed costs: sixty small uncompressed files, about half
-    # their atoms dead, a tenth of the files entirely deleted
+    # their atoms dead, a tenth of the files entirely deleted.  Not in
+    # BENCHMARK.json (see README.md); it runs by hand
     "many_files": {"files": 60, "partitions": 40, "mean_cells": 4,
                    "compression": None, "deleted_partitions": 0.25,
                    "dead_files": 0.10, "range_tombstones": 0.05,

@@ -1,6 +1,6 @@
 """Benchmark of the paper's job: SSTables in, `.proto.zst` files out.
 
-    python3 perfbench/run.py --workload narrow --seed 1 --seconds 8 --trace 0
+    python3 perfbench/run.py --workload narrow --seed 1 --seconds 18 --trace 0
 
 Run from the root of a source checkout.  Inputs are generated from the
 seed (perfbench/gen.py), then one client process converts them with the
