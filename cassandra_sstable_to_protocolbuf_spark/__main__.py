@@ -89,7 +89,7 @@ def convert(input_path: str, output_dir: str,
     from cassandra_sstable_to_protocolbuf_spark.session import (
         ensure_shipped, get_spark)
     from cassandra_sstable_to_protocolbuf_spark.sources.sstable_native import (
-        read_native_cells)
+        discover_data_files, read_native_cells)
     from cassandra_sstable_to_protocolbuf_spark.sources.sstable_pb import (
         write_cells_pb)
 
@@ -97,17 +97,10 @@ def convert(input_path: str, output_dir: str,
     spark.sparkContext.setLogLevel("ERROR")
     ensure_shipped(spark)
 
-    import glob
-
-    if os.path.isdir(input_path):
-        # one recursive walk, matching scan discovery (sstable_native.py
-        # `_data_files`) -- a flat glob here missed the reference's own
-        # canonical `ks/table/xxx-Data.db` nesting (Runner.java:54-60
-        # uses Files.walk) and crashed the metrics pass below.
-        inputs = sorted(glob.glob(
-            os.path.join(input_path, "**", "*-Data.db"), recursive=True))
-    else:
-        inputs = [input_path]
+    # the scan's own discovery (manifest-first, recursive walk, then the
+    # maintenance transaction log's visibility filter): inputs an
+    # in-place OPTIMIZE already replaced get no output and no metrics
+    inputs = discover_data_files(input_path)
     # metrics and outputs are keyed by sstable_id (basename sans -Data.db,
     # flat `<id>-Data.db.proto.zst` like the reference's), so two nested
     # inputs sharing a basename would merge in the sink -- refuse up front.
@@ -123,9 +116,8 @@ def convert(input_path: str, output_dir: str,
         # reference parity (Runner.java:84-87): a corrupt file prints its
         # error and processing continues with the next file. One Spark job
         # per input file isolates failures; each job still fans out over
-        # that file's index splits. Reuses the discovery list above --
-        # round 2's nested-dir bug was exactly two discovery sites
-        # disagreeing.
+        # that file's index splits. Reuses the discovery list above, so
+        # the loop converts exactly the files the scan would read.
         failures = 0
         for data_path in inputs:
             try:

@@ -179,21 +179,13 @@ def input_data_files(input_path: str | list[str]) -> list[str]:
     sorted list of Data.db paths. Directory discovery applies the
     maintenance transaction log's visibility filter (txnlog.filter_live)
     so a planner never sees a torn in-place swap."""
-    import glob
-
     if isinstance(input_path, (list, tuple)):
         return sorted(input_path)
-    from cassandra_sstable_to_protocolbuf_spark import manifest, txnlog
-    from cassandra_sstable_to_protocolbuf_spark.sources.sstable_native import (
-        DATA_SUFFIX)
-
     if os.path.isdir(input_path):
-        listed = manifest.data_files(input_path)
-        if listed is None:
-            listed = glob.glob(
-                os.path.join(input_path, "**", f"*{DATA_SUFFIX}"),
-                recursive=True)
-        return sorted(txnlog.filter_live(input_path, listed))
+        from cassandra_sstable_to_protocolbuf_spark.sources.sstable_native import (
+            discover_data_files)
+
+        return discover_data_files(input_path)
     return [input_path]
 
 

@@ -7,8 +7,6 @@ north-star extension surface. Implementations live next to their
 operators; this package re-exports the column-level API.
 """
 
-from pyspark.sql import functions as F
-
 from cassandra_sstable_to_protocolbuf_spark.operators.text import (  # noqa: F401
     alpha_chars,
     fingerprint,
@@ -19,19 +17,3 @@ from cassandra_sstable_to_protocolbuf_spark.operators.text import (  # noqa: F40
     token_count,
     tokens,
 )
-
-
-def dot_product(a, b):
-    """Left-fold dot product over two array<double> columns (JVM-side
-    higher-order functions; for hot candidate-pair paths prefer the
-    Arrow-batched `operators.similarity.cosine_verify_udf`, which
-    computes the same fold order vectorized)."""
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                       F.lit(0.0), lambda acc, x: acc + x)
-
-
-def l2_norm(a):
-    """Euclidean norm of an array<double> column (same fold order as
-    DuckDB's list_sum, so values are engine-reproducible)."""
-    return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x),
-                              F.lit(0.0), lambda acc, x: acc + x))

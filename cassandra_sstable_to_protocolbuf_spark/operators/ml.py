@@ -13,19 +13,11 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 SCALE = 1_000_000  # fixed-point: coord = round(x * 1e6) as BIGINT
-
-
-def _dist_sq(a: Column, b: Column) -> Column:
-    """Exact integer squared L2 distance between two BIGINT arrays
-    (interpreted-HOF form; the hot path uses dist_sq_udf)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"), lambda acc, x: acc + x)
 
 
 def dist_sq_udf():

@@ -1,9 +1,12 @@
-"""Projection and grouping operators -- P1, P2, and LWW dedup (SURVEY.md §2).
+"""Projection operators -- P1, the P2 row-width cap, and LWW dedup
+(SURVEY.md §2).
 
 P1 projects each cell to the 3-field proto shape {name, value, writeTime}
-(reference: service/ColumnMapper.java:9-21). P2 folds a partition's
-surviving cells into Row{key, repeated Column} preserving cell-name order
-(reference: service/SSTableReader.java:87-109).
+(reference: service/ColumnMapper.java:9-21). P2 -- folding a partition's
+surviving cells into Row{key, repeated Column} in cell-name order
+(reference: service/SSTableReader.java:87-109) -- happens inside the
+protobuf sink's writer (sources/sstable_pb.write_cells_pb), which folds
+adjacent sorted runs; MAX_CELLS_PER_ROW is its memory bound.
 
 The LWW (last-write-wins) dedup is the extension op the reference lacks:
 it never reconciles duplicate keys across SSTables (Runner.java:59
@@ -11,65 +14,26 @@ processes files independently), so the same (key, name) can appear in many
 files. `lww_dedup` keeps the cell with the highest writeTime -- Cassandra's
 own reconciliation rule -- via a lexicographic struct max, a single hash
 aggregation (no sort; partial agg ships one candidate per group per task).
-
-Scale notes: group_rows shuffles on (sstable_id, key); at 100 TB that is
-one shuffle keyed by partition key, the same data movement any
-wide-row reconstruction needs. A native SSTable source would emit cells of
-a partition adjacently, letting the grouping happen shuffle-free inside
-the source (SURVEY §2 P2); over generic parquet the shuffle is required.
-AQE handles skewed partition keys (skew-join/partition splitting).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 # P2's documented memory bound: the nested Row output shape requires one
-# in-memory array of a partition's surviving cells (the proto Row message
+# in-memory copy of a partition's surviving cells (the proto Row message
 # itself must fit in memory on ANY implementation, including the
 # reference's streaming builder -- service/SSTableReader.java:90-107 still
 # materializes the Message). A partition wider than this cap would silently
-# stress executor memory; instead the aggregation FAILS LOUDLY with the
+# stress executor memory; instead the protobuf writer FAILS LOUDLY with the
 # offending key, and the caller either raises the cap deliberately or
 # routes the table through the flat-cell surface (which streams O(cell)).
 MAX_CELLS_PER_ROW = 1_000_000
 
 
-def guard_row_width(columns: Column, key: Column,
-                    max_cells: int = MAX_CELLS_PER_ROW) -> Column:
-    """Wrap a collected `columns` array so rows wider than `max_cells`
-    raise a descriptive error instead of OOMing the executor. Pure
-    codegen expression (size + when) -- zero cost on healthy rows."""
-    return F.when(
-        F.size(columns) <= F.lit(max_cells), columns,
-    ).otherwise(F.raise_error(F.format_string(
-        "partition %s has %d surviving cells, over the nested-Row cap of "
-        f"{max_cells}; raise max_cells deliberately or use the flat cell "
-        "surface, which streams in O(cell) memory",
-        F.base64(key), F.size(columns))))
-
-
 def project_cells(cells: DataFrame) -> DataFrame:
     """P1: prune to the proto Column shape plus routing keys."""
     return cells.select("sstable_id", "key", "name", "value", "writeTime")
-
-
-def group_rows(cells: DataFrame,
-               max_cells: int = MAX_CELLS_PER_ROW) -> DataFrame:
-    """P2: partition -> Row{key, columns sorted by name}.
-
-    sort_array on struct(name, ...) sorts by the first field, matching the
-    reference's comparator (on-disk cell-name order,
-    SSTableIdentityIteratorPatched.java:72). Rows wider than `max_cells`
-    fail loudly (guard_row_width) rather than exhausting executor memory.
-    """
-    return (
-        cells.groupBy("sstable_id", "key")
-        .agg(guard_row_width(
-            F.sort_array(F.collect_list(F.struct("name", "value", "writeTime"))),
-            F.col("key"), max_cells).alias("columns"))
-    )
 
 
 def lww_dedup(cells: DataFrame) -> DataFrame:

@@ -171,8 +171,8 @@ def sst_pb_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from cassandra_sstable_to_protocolbuf_spark.session import scratch_dir
     out = scratch_dir("sstpb_roundtrip", os.path.basename(sf_dir.rstrip("/")),
                       fresh=True)
-    # flat-cell writer: ONE exchange + fold-adjacent-runs, byte-identical
-    # to the old collect_list grouping + second exchange (golden-pinned)
+    # flat-cell writer: ONE exchange + fold-adjacent-runs; its streams
+    # are golden-pinned on the per-row protowire codec
     write_cells_pb(cells, out).collect()
     back = read_rows_pb(spark, out)
     return (back.groupBy("sstable_id")

@@ -116,10 +116,11 @@ def frame_row_parts(key: bytes, columns_bytes: bytes) -> bytes:
 
 
 # --------------------------------------------------------------------------
-# vectorized block encoder (VERDICT r7 #1 applied to the K1 sink): many
-# framed Rows laid out as one numpy scatter block, byte-identical to
-# frame_row(encode_row(...)) per row (pinned in tests/test_protowire_props
-# and tests/test_cellcodec.py-style parity in test_protobuf_sink).
+# vectorized block encoder (the K1 sink's hot path): many framed Rows laid
+# out as one numpy scatter block over Arrow-shaped buffers. encode_row +
+# frame_row above are its golden oracle: a block equals the per-row
+# frames joined (pinned in tests/test_protowire_props, and on whole
+# decompressed sink files in tests/test_protobuf_sink).
 # --------------------------------------------------------------------------
 
 _VSZ_THRESH = None  # lazily built numpy varint size thresholds
@@ -149,31 +150,6 @@ def _scatter_varints(np, out, pos, vals, sizes) -> None:
         b = (vals[m] >> (7 * j)) & 0x7F
         more = (sizes[m] > (j + 1)).astype(np.int64) << 7
         out[pos[m] + j] = (b | more).astype(np.uint8)
-
-
-def encode_rows_block(keys: list, counts, names: list, values: list,
-                      write_times) -> bytes:
-    """Frame + encode a RUN of Rows as one contiguous block:
-    `keys`/`counts` per row, `names`/`values`/`write_times` the rows'
-    columns flattened in order (values use b"" for NULL -- proto3 omits
-    empty anyway). Byte-identical to per-row
-    frame_row(encode_row(key, cols)); all layout arithmetic (varint
-    sizes, field omission for proto3 defaults) runs vectorized, with
-    one Python-level ragged scatter per variable field."""
-    np = _np()
-    n_rows = len(keys)
-    n_cols = len(names)
-    klen = np.fromiter(map(len, keys), dtype=np.int64, count=n_rows)
-    nlen = np.fromiter(map(len, names), dtype=np.int64, count=n_cols)
-    vlen = np.fromiter(map(len, values), dtype=np.int64, count=n_cols)
-    # zero-length entries contribute nothing to a join, so joining ALL
-    # entries equals joining only the non-empty ones the scatter targets
-    key_data = np.frombuffer(b"".join(keys), dtype=np.uint8)
-    name_data = np.frombuffer(b"".join(names), dtype=np.uint8)
-    value_data = np.frombuffer(b"".join(values), dtype=np.uint8)
-    return encode_rows_block_bufs(key_data, klen, counts,
-                                  name_data, nlen, value_data, vlen,
-                                  write_times)
 
 
 def _columns_layout(np, nlen, vlen, wts):
@@ -254,12 +230,15 @@ def encode_columns_bufs(name_data, nlen, value_data, vlen,
 
 def encode_rows_block_bufs(key_data, klen, counts, name_data, nlen,
                            value_data, vlen, write_times) -> bytes:
-    """Buffer-form core of encode_rows_block: payloads arrive as
-    concatenated byte buffers (uint8 arrays) + per-entry length arrays
-    instead of Python lists of bytes -- an Arrow Binary column IS this
-    shape (one data buffer + offsets), so a columnar caller encodes
-    with zero per-cell Python objects. NULL values must arrive as
-    zero-length spans (Arrow offsets already do this)."""
+    """Frame + encode a RUN of Rows as one contiguous block, equal to
+    b"".join(frame_row(encode_row(key, cols))) over the rows. Payloads
+    arrive as concatenated byte buffers (uint8 arrays) + per-entry
+    length arrays: `key_data`/`klen`/`counts` per row, the name, value
+    and writeTime columns flattened in row order. An Arrow Binary column
+    IS this shape (one data buffer + offsets), so a columnar caller
+    encodes with zero per-cell Python objects. NULL values must arrive
+    as zero-length spans (Arrow offsets already do this); all layout
+    arithmetic (varint sizes, proto3 default omission) runs vectorized."""
     np = _np()
     from cassandra_sstable_to_protocolbuf_spark.sources.cellcodec import (
         _ragged_idx)
@@ -374,7 +353,7 @@ def decode_row(buf: bytes) -> tuple[bytes, list[tuple[bytes, bytes, int]]]:
 
 
 # --------------------------------------------------------------------------
-# vectorized block decoder: the read-side twin of encode_rows_block.
+# vectorized block decoder: the read-side twin of encode_rows_block_bufs.
 # One offset-only Python walk per buffered region collects field SPANS
 # (any field order, last-wins, unknown tags raise -- the same semantics
 # as decode_row); all byte movement happens as numpy gathers straight

@@ -245,11 +245,6 @@ def sweep_pinned() -> int:
     return n
 
 
-TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
-
 # analyzed-DataFrame memo for the IMMUTABLE testdata inputs: every
 # spark.read.parquet re-lists the path and re-reads the footer schema
 # (~0.15-0.3 s of driver time warm), and catalog queries re-load the
@@ -278,18 +273,6 @@ def read_base_table(spark: SparkSession, path: str) -> "DataFrame":
         df = spark.read.parquet(path)
         _BASE_TABLES[key] = df
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict:
-    """Load the driver testdata parquet tables as DataFrames."""
-    return {t: read_base_table(spark, f"{sf_dir}/{t}.parquet")
-            for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register each testdata table as a temp view (for spark.sql plans)."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
 
 
 def build_once(cache_name: str, digest: str, build_fn) -> str:

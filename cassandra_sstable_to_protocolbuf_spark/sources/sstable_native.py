@@ -2354,6 +2354,33 @@ class _SSTableSplit(InputPartition):
         self.verify = verify
 
 
+def discover_data_files(path: str) -> list[str]:
+    """The sorted Data.db paths a read of `path` sees ([] when none): a
+    Data.db file is itself; a directory is listed MANIFEST-FIRST (one
+    GET at any file count), falling back to the recursive walk matching
+    the reference's Files.walk discovery (Runner.java:54-60: real
+    Cassandra data dirs nest sstables under keyspace/table/
+    subdirectories). Either way the listing then passes the maintenance
+    transaction log's visibility filter: a reader racing an in-place
+    OPTIMIZE swap sees exactly one consistent generation (uncommitted
+    outputs hidden, committed inputs hidden), never a torn mix --
+    txnlog.filter_live. The one discovery site for the scan, the CLI's
+    convert and compaction planning."""
+    import glob
+
+    if os.path.isdir(path):
+        from cassandra_sstable_to_protocolbuf_spark import manifest, txnlog
+
+        listed = manifest.data_files(path)
+        if listed is None:
+            listed = glob.glob(
+                os.path.join(path, "**", f"*{DATA_SUFFIX}"), recursive=True)
+        return sorted(txnlog.filter_live(path, listed))
+    if path.endswith(DATA_SUFFIX):
+        return [path]
+    return []
+
+
 class SSTableNativeReader(DataSourceReader):
     """One task per byte-range split; splits computed from Index.db.
 
@@ -2548,32 +2575,7 @@ class SSTableNativeReader(DataSourceReader):
             self.name_range = (name_lo, name_hi)
 
     def _data_files(self) -> list[str]:
-        import glob
-
-        if os.path.isdir(self.path):
-            # MANIFEST-FIRST discovery (one GET at any file count),
-            # falling back to the recursive walk matching the
-            # reference's Files.walk discovery (Runner.java:54-60:
-            # real Cassandra data dirs nest sstables under
-            # keyspace/table/ subdirectories). Either way, discovery
-            # then applies the maintenance transaction log's
-            # visibility filter: a reader racing an in-place OPTIMIZE
-            # swap sees exactly one consistent generation (uncommitted
-            # outputs hidden, committed inputs hidden), never a torn
-            # mix -- txnlog.filter_live.
-            from cassandra_sstable_to_protocolbuf_spark import (manifest,
-                                                                txnlog)
-
-            listed = manifest.data_files(self.path)
-            if listed is None:
-                listed = glob.glob(
-                    os.path.join(self.path, "**", f"*{DATA_SUFFIX}"),
-                    recursive=True)
-            files = sorted(txnlog.filter_live(self.path, listed))
-        elif self.path.endswith(DATA_SUFFIX):
-            files = [self.path]
-        else:
-            files = []
+        files = discover_data_files(self.path)
         if not files:
             raise FileNotFoundError(f"no {DATA_SUFFIX} files under {self.path}")
         return files
@@ -3250,8 +3252,7 @@ class SSTableNativeReader(DataSourceReader):
                        str(e)[:500].encode(), 0, "ERROR", None, None, False)
 
         if (not self.permissive and split is not None
-                and not getattr(split, "error", None)
-                and self._fast_scan_eligible(split)):
+                and not getattr(split, "error", None)):
             # vectorized batch decode (cellcodec): same rows, same
             # order, ~2.5x the per-task throughput of the tuple path.
             # PERMISSIVE stays on the scalar path: its good-prefix
@@ -3297,16 +3298,6 @@ class SSTableNativeReader(DataSourceReader):
     # hands the split's remainder back to the O(cell) streaming path
     FAST_SCAN_PARTITION_CAP = 64 << 20
     FAST_SCAN_GROW = 4 << 20
-
-    def _fast_scan_eligible(self, split) -> bool:
-        """Plain byte-range splits that pass this check vectorize
-        through _read_fast; name_range (clustering slice) splits pass
-        through it too and dispatch to _read_fast_sliced (VERDICT r8
-        #3). Both row framings qualify: decode_partitions handles the
-        pre-'ja' (ka) framing via old_format -- the foreign-ka point
-        and scan legs used to run the scalar tuple walk at roughly
-        half the vectorized throughput."""
-        return True
 
     @staticmethod
     def _old_format(data_path: str) -> bool:

@@ -5,15 +5,20 @@ The reference serializes each Row with writeDelimitedTo into a
 zstd-compressed stream, one output file per input SSTable, named
 `<src>.proto.zst` (reference: Runner.java:114-156). Here:
 
-* write_rows_pb -- distributed STREAMING sink: repartition(sstable_id) +
-  sortWithinPartitions(sstable_id, key), then iterator-style mapInPandas
-  that pushes each Arrow batch through the wire codec into a zstd stream
-  (pyarrow CompressedOutputStream -- standard zstd frames, readable by
-  any zstd tool), rolling output files when sstable_id changes. Executor
-  memory is O(one Arrow batch), never O(file) -- the key-order sort is
-  Spark's spillable sort machinery, not an in-task pandas sort. Returns
-  the per-file metrics the reference prints (M1: sizes, row counts, wall
-  seconds, Runner.java:88-96) as a DataFrame instead of stdout.
+* write_cells_pb -- distributed STREAMING sink over flat binary cells:
+  repartition(sstable_id) + sortWithinPartitions(sstable_id, key, name,
+  value, writeTime), then an iterator-style mapInArrow writer that folds
+  adjacent (sstable_id, key) runs into Rows with the vectorized wire
+  codec and pushes them into a zstd stream (pyarrow
+  CompressedOutputStream -- standard zstd frames, readable by any zstd
+  tool), rolling output files when sstable_id changes. Executor memory
+  is O(one Arrow batch) + O(one row's encoded columns), never O(file)
+  -- the key-order sort is Spark's spillable sort machinery, not an
+  in-task sort. Returns the per-file metrics the reference prints (M1:
+  sizes, row counts, wall seconds, Runner.java:88-96) as a DataFrame
+  instead of stdout. The decompressed stream equals, row for row,
+  protowire.frame_row(protowire.encode_row(...)) -- the per-row codec
+  is the format's golden oracle.
 * SSTablePbDataSource -- a Spark 4 Python DataSource ("sstable_pb"
   format) reading those files back: one input partition per file
   (file-parallel scan), lazy streaming decode, nested Row schema.
@@ -70,7 +75,7 @@ ROW_SCHEMA = StructType([
 
 def _open_pb_file(out_dir: str, sstable_id: str) -> dict:
     """Open-file state for one sstable's `.proto.zst` output (temp file +
-    zstd stream + running metrics); shared by both stream writers."""
+    zstd stream + running metrics)."""
     import pyarrow as pa
 
     final = os.path.join(out_dir, f"{sstable_id}-Data.db{FILE_SUFFIX}")
@@ -117,98 +122,24 @@ def _abort_pb_file(st: dict | None) -> None:
         pass
 
 
-def _pb_stream_writer(out_dir: str):
-    """mapInPandas function factory: consume an ITERATOR of Arrow batches
-    already sorted by (sstable_id, key), stream-encode delimited-protobuf
-    frames into a zstd stream, and roll to a new `.proto.zst` when
-    sstable_id changes. Peak memory is O(one Arrow batch) + the codec's
-    fixed compression window -- pinned by tests/test_writer_memory.py --
-    regardless of file size; the old applyInPandas shape held one whole
-    sstable's row set per task (flagged weak-at-100x in round 4)."""
-
-    def write_stream(batches):
-        import pandas as pd
-
-        state = None  # open-file state for the current sstable_id
-
-        def open_file(sstable_id):
-            return _open_pb_file(out_dir, sstable_id)
-
-        def close_file(st):
-            return pd.DataFrame([_close_pb_file(st)])
-
-        try:
-            import numpy as np
-
-            for pdf in batches:
-                # tolist() once per column, then VECTORIZED block
-                # framing (protowire.encode_rows_block): the per-cell
-                # Python work left is dict field extraction; all wire
-                # layout (varint sizes, proto3 default omission,
-                # scatter) runs as numpy over the whole sstable run --
-                # byte-identical to per-row frame_row(encode_row(...))
-                sids = pdf["sstable_id"].tolist()
-                keys = pdf["key"].tolist()
-                columns = pdf["columns"].tolist()
-                n = len(sids)
-                i = 0
-                while i < n:
-                    sid = sids[i]
-                    j = i
-                    while j < n and sids[j] == sid:
-                        j += 1
-                    if state is None or state["sstable_id"] != sid:
-                        if state is not None:
-                            yield close_file(state)
-                        state = open_file(sid)
-                    counts = []
-                    names: list = []
-                    vals: list = []
-                    wts: list = []
-                    for cols in columns[i:j]:
-                        counts.append(len(cols))
-                        for c in cols:
-                            names.append(c["name"])
-                            v = c["value"]
-                            vals.append(v if v is not None else b"")
-                            wts.append(c["writeTime"])
-                    block = protowire.encode_rows_block(
-                        [bytes(k) for k in keys[i:j]],
-                        np.array(counts, dtype=np.int64), names, vals,
-                        np.array(wts, dtype=np.int64))
-                    state["zout"].write(block)
-                    state["n_rows"] += j - i
-                    state["n_cells"] += len(names)
-                    state["raw"] += len(block)
-                    i = j
-            if state is not None:
-                yield close_file(state)
-        except BaseException:
-            _abort_pb_file(state)
-            raise
-
-    return write_stream
-
-
 def _pb_flat_stream_writer(out_dir: str, max_cells: int | None = None):
     """mapInArrow function factory: consume an ITERATOR of Arrow batches
     of FLAT cells (sstable_id, key, live, name, value, writeTime) already
     sorted by (sstable_id, key, name, value, writeTime), fold adjacent
     (sstable_id, key) runs into delimited-protobuf Rows, and roll to a new
-    `.proto.zst` when sstable_id changes -- byte-identical to
-    _pb_stream_writer fed by the collect_list grouping, without the extra
-    exchange or any per-cell Python objects (run detection, live
-    filtering and wire layout are Arrow/numpy kernels over the batch's
-    buffers). Dead cells (live=false, payload nulled upstream) are
-    dropped per-cell but still mark their (sstable_id, key) run, so a
-    live partition whose cells are ALL filtered still emits its Row.
+    `.proto.zst` when sstable_id changes. No per-cell Python objects:
+    run detection, live filtering and wire layout are Arrow/numpy
+    kernels over the batch's buffers, and the decompressed output equals
+    per-row frame_row(encode_row(...)). Dead cells (live=false, payload
+    nulled upstream) are dropped per-cell but still mark their
+    (sstable_id, key) run, so a live partition whose cells are ALL
+    filtered still emits its Row.
 
     A (sstable_id, key) run may span batches: the unfinished tail run is
     accumulated as ENCODED column bytes (encode_columns_bufs) and framed
     when the run ends (frame_row_parts), so peak memory is O(one Arrow
-    batch) + O(one row's encoded columns) -- the same nested-Row bound as
-    the collect_list path, with the same loud failure past `max_cells`
-    (operators.projection.MAX_CELLS_PER_ROW)."""
+    batch) + O(one row's encoded columns), with a loud failure past
+    `max_cells` (operators.projection.MAX_CELLS_PER_ROW)."""
     from cassandra_sstable_to_protocolbuf_spark.operators.projection import (
         MAX_CELLS_PER_ROW)
 
@@ -221,6 +152,9 @@ def _pb_flat_stream_writer(out_dir: str, max_cells: int | None = None):
         import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        metrics_schema = to_arrow_schema(WRITE_METRICS_SCHEMA)
 
         def bin_parts(arr):
             # (concatenated payload bytes, per-entry lengths) of a Binary
@@ -264,13 +198,7 @@ def _pb_flat_stream_writer(out_dir: str, max_cells: int | None = None):
             pend = None
 
         def metrics_batch(rows):
-            return pa.RecordBatch.from_pylist(
-                rows, schema=pa.schema([
-                    ("sstable_id", pa.string()), ("path", pa.string()),
-                    ("n_rows", pa.int64()), ("n_cells", pa.int64()),
-                    ("raw_bytes", pa.int64()),
-                    ("compressed_bytes", pa.int64()),
-                    ("seconds", pa.string())]))
+            return pa.RecordBatch.from_pylist(rows, schema=metrics_schema)
 
         try:
             for b in batches:
@@ -387,19 +315,18 @@ def write_cells_pb(cells_binary: DataFrame, out_dir: str) -> DataFrame:
     """K1 sink straight from FLAT binary cells: the F1 partition filter,
     ONE exchange (repartition by sstable_id) and a within-partition sort
     by (sstable_id, key, name, value, writeTime); the writer folds
-    adjacent (sstable_id, key) runs into Rows. Output is byte-identical
-    to write_rows_pb(nested_rows_from_cells(cells), out_dir) -- pinned by
-    the golden-equality test -- with one fewer shuffle and no
-    collect_list hash aggregate: the nested path shuffled every cell
-    twice (groupBy(sstable_id, key), then repartition(sstable_id)).
+    adjacent (sstable_id, key) runs into Rows. Each file's decompressed
+    stream equals the per-row oracle, frame_row(encode_row(key, cols))
+    over the live rows in key order -- pinned by the golden tests. Rows
+    are written in ascending key-byte order within each file (the
+    reference preserves token order; byte order is this model's analog).
 
     Parity quirk preserved: dead cells of live partitions ship as
     (sstable_id, key) markers with NULLed payload (near-zero shuffle
     bytes) so a live partition whose cells are ALL filtered out still
-    emits its Row with an empty columns list. The within-partition sort
-    mirrors sort_array's struct order (name, value, writeTime; NULLs
-    first) so the folded rows carry cells in exactly collect_list +
-    sort_array order."""
+    emits its Row with an empty columns list (reference:
+    service/SSTableReader.java:87-109). The within-partition sort orders
+    each Row's cells by (name, value, writeTime), NULLs first."""
     from cassandra_sstable_to_protocolbuf_spark.operators.tombstones import (
         live_cell_predicate, partition_live_predicate)
 
@@ -418,23 +345,6 @@ def write_cells_pb(cells_binary: DataFrame, out_dir: str) -> DataFrame:
                                   "writeTime")
             .mapInArrow(_pb_flat_stream_writer(out_dir),
                         WRITE_METRICS_SCHEMA))
-
-
-def write_rows_pb(nested_rows: DataFrame, out_dir: str) -> DataFrame:
-    """Write nested rows (sstable_id, key, columns) as one
-    `<sstable_id>-Data.db.proto.zst` per sstable_id under out_dir.
-
-    Rows are written in ascending key-byte order within each file (the
-    reference preserves token order; byte order is this model's analog).
-    The order comes from Spark's spillable sort, not an in-task pandas
-    sort, so the encoder sees a bounded window of rows at a time.
-    Returns the metrics DataFrame (collected by the caller as needed).
-    """
-    os.makedirs(out_dir, exist_ok=True)
-    return (nested_rows
-            .repartition("sstable_id")
-            .sortWithinPartitions("sstable_id", "key")
-            .mapInPandas(_pb_stream_writer(out_dir), WRITE_METRICS_SCHEMA))
 
 
 class _PbFilePartition(InputPartition):
@@ -518,34 +428,3 @@ def register(spark) -> None:
 def read_rows_pb(spark, path: str) -> DataFrame:
     register(spark)
     return spark.read.format("sstable_pb").load(path)
-
-
-def nested_rows_from_cells(cells_binary: DataFrame) -> DataFrame:
-    """Live-filter + project + group binary cells into the sink shape.
-
-    Composes the full reference pipeline: F1/F2 filters, P1 projection,
-    P2 grouping (cell-name order), producing ROW_SCHEMA.
-
-    Parity quirk preserved: a live partition whose cells are ALL filtered
-    out still emits a Row with an empty columns list -- the reference
-    always emits the key once the partition survives the tombstone check
-    (reference: service/SSTableReader.java:87-109). Hence: filter F1
-    (partition tombstone) only, then aggregate with a conditional
-    collect_list (nulls are skipped) so non-LIVE cells vanish per-cell
-    while the group survives.
-    """
-    from cassandra_sstable_to_protocolbuf_spark.operators.tombstones import (
-        live_cell_predicate, partition_live_predicate)
-
-    from cassandra_sstable_to_protocolbuf_spark.operators.projection import (
-        MAX_CELLS_PER_ROW, guard_row_width)
-
-    live_struct = F.when(live_cell_predicate(),
-                         F.struct("name", "value", "writeTime"))
-    return (
-        cells_binary.filter(partition_live_predicate())
-        .groupBy("sstable_id", "key")
-        .agg(guard_row_width(F.sort_array(F.collect_list(live_struct)),
-                             F.col("key"), MAX_CELLS_PER_ROW)
-             .alias("columns"))
-    )

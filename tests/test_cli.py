@@ -62,6 +62,34 @@ def test_convert_end_to_end(tmp_path):
     assert rows == [(b"k1", [(b"a", b"x", 10)])]
 
 
+@pytest.mark.parametrize("flags", [(), ("--continue-on-error",)])
+def test_convert_discovers_like_the_scan(tmp_path, flags):
+    """`convert` sees exactly the files the scan reads: once an OPTIMIZE
+    transaction has committed gen 1+2 -> gen 3 (its inputs not yet
+    unlinked), the replaced generations get no output file and no
+    metrics line -- in the one-job path and the per-file error loop."""
+    from cassandra_sstable_to_protocolbuf_spark import txnlog
+
+    src = str(tmp_path / "sst_in")
+
+    def cells(ts):
+        return [{"key": b"k1", "cells": [
+            {"name": b"a", "kind": "LIVE", "timestamp": ts, "value": b"v"}]}]
+
+    old = [N.write_sstable(src, gen, cells(gen)) for gen in (1, 2)]
+    new = N.write_sstable(src, 3, cells(2))
+    txnlog.begin(src, "opt-1", "opt-1", old)
+    txnlog.commit(src, "opt-1", [new])
+
+    out = str(tmp_path / "pb_out")
+    r = _run("convert", *flags, src, out)
+    assert r.returncode == 0, r.stderr[-2000:]
+    assert os.listdir(out) == ["ks-cf-ka-3-Data.db.proto.zst"]
+    assert "ks-cf-ka-3: rows=1 cells=1" in r.stdout
+    assert "ks-cf-ka-1:" not in r.stdout and "ks-cf-ka-2:" not in r.stdout
+    assert "converted 1 sstable(s)" in r.stdout
+
+
 def test_compact_merges_generations_lww(tmp_path):
     """`compact` merges overlapping generations into one reconciled
     sstable: the newer write wins, tombstoned data is dropped, and the

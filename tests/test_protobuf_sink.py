@@ -75,19 +75,72 @@ def test_iter_delimited_truncated():
         list(pw.iter_delimited(io.BytesIO(framed[:50])))
 
 
+def _cell_order(col):
+    # the sink's within-row order: (name, value, writeTime), NULLs first
+    name, value, wt = col
+    return name, value is not None, value or b"", wt
+
+
+def _live_rows(cells):
+    """The live rule over collected flat cells, in plain Python:
+    {sstable_id: [(key, [(name, value, writeTime), ...]), ...]}. A dead
+    partition drops; a live key whose cells are all dead keeps an empty
+    Row; rows in key order, cells in _cell_order."""
+    by_sid: dict = {}
+    for c in cells:
+        if not c.partition_deletion_live:
+            continue
+        row = by_sid.setdefault(c.sstable_id, {}).setdefault(bytes(c.key), [])
+        if c.cell_kind == "LIVE":
+            row.append((bytes(c.name),
+                        None if c.value is None else bytes(c.value),
+                        c.writeTime))
+    return {sid: [(k, sorted(rows[k], key=_cell_order)) for k in sorted(rows)]
+            for sid, rows in by_sid.items()}
+
+
+def _decompressed(path):
+    import pyarrow as pa
+
+    with pa.input_stream(path, compression=None) as raw, \
+            pa.CompressedInputStream(raw, "zstd") as zin:
+        return zin.read()
+
+
+def _assert_golden(cells, out_dir, metrics):
+    """Every output file decompresses to exactly the per-row oracle's
+    frames, b"".join(frame_row(encode_row(key, cols))), over the live
+    rows; the metrics row counts, cell counts and byte sizes agree."""
+    import os
+
+    expected = _live_rows(cells.collect())
+    assert sorted(os.listdir(out_dir)) == sorted(
+        f"{sid}-Data.db.proto.zst" for sid in expected)
+    by_sid = {m.sstable_id: m for m in metrics}
+    assert sorted(by_sid) == sorted(expected)
+    for sid, rows in expected.items():
+        m = by_sid[sid]
+        got = _decompressed(m.path)
+        assert got == b"".join(pw.frame_row(pw.encode_row(k, cols))
+                               for k, cols in rows), f"stream differs: {sid}"
+        assert m.n_rows == len(rows)
+        assert m.n_cells == sum(len(cols) for _, cols in rows)
+        assert m.raw_bytes == len(got)
+        assert m.compressed_bytes == os.path.getsize(m.path)
+
+
 def test_write_read_roundtrip(spark, tmp_path):
-    """Full pipeline: cells -> live filter -> nested rows -> pb+zstd files
-    -> DataSource read-back == what was written."""
+    """Full pipeline: cells -> live filter -> pb+zstd files ->
+    DataSource read-back == the live rows that were written."""
     from cassandra_sstable_to_protocolbuf_spark.sources.cells import (
         encode_lineitem_cells, to_binary_cells)
     from cassandra_sstable_to_protocolbuf_spark.sources.sstable_pb import (
-        nested_rows_from_cells, read_rows_pb, write_rows_pb)
+        read_rows_pb, write_cells_pb)
     from tests.conftest import SF_SMOKE
 
     cells = to_binary_cells(encode_lineitem_cells(spark, SF_SMOKE))
-    nested = nested_rows_from_cells(cells)
     out = str(tmp_path / "pb_out")
-    metrics = write_rows_pb(nested, out).collect()
+    metrics = write_cells_pb(cells, out).collect()
     assert len(metrics) == 5  # sst-0..3 + sst-r
     assert all(m.n_rows > 0 and m.compressed_bytes > 0 for m in metrics)
 
@@ -95,51 +148,31 @@ def test_write_read_roundtrip(spark, tmp_path):
     with open(metrics[0].path, "rb") as f:
         assert f.read(4) == bytes.fromhex("28b52ffd")
 
-    back = read_rows_pb(spark, out)
-    a = nested.selectExpr("sstable_id", "key",
-                          "transform(columns, c -> struct(c.name, coalesce(c.value, cast('' as binary)) as value, c.writeTime)) as columns")
-    b = back.select("sstable_id", "key", "columns")
-    assert a.count() == b.count()
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-
-
-def _files_bytes(d):
-    import os
-
-    out = {}
-    for name in sorted(os.listdir(d)):
-        with open(os.path.join(d, name), "rb") as f:
-            out[name] = f.read()
-    return out
+    # the reader decodes NULL values as the b"" the wire carries
+    a = sorted((sid, k, [(n, v or b"", t) for n, v, t in cols])
+               for sid, rows in _live_rows(cells.collect()).items()
+               for k, cols in rows)
+    b = sorted((r.sstable_id, bytes(r.key),
+                [(bytes(c.name), bytes(c.value), c.writeTime)
+                 for c in r.columns])
+               for r in read_rows_pb(spark, out).collect())
+    assert len(a) == len(b)
+    assert a == b
 
 
 def test_flat_writer_golden_equality(spark, tmp_path):
-    """write_cells_pb (one-exchange fold-adjacent-runs writer) must be
-    BYTE-IDENTICAL to the nested collect_list + second-exchange path it
-    replaced, file for file, on the real cells fixture -- plus matching
-    metrics (all but the wall-clock column)."""
+    """write_cells_pb (one-exchange fold-adjacent-runs writer) on the
+    real cells fixture: every file's decompressed stream equals the
+    per-row oracle, and the metrics match it."""
     from cassandra_sstable_to_protocolbuf_spark.sources.cells import (
         encode_lineitem_cells, to_binary_cells)
     from cassandra_sstable_to_protocolbuf_spark.sources.sstable_pb import (
-        nested_rows_from_cells, write_cells_pb, write_rows_pb)
+        write_cells_pb)
     from tests.conftest import SF_SMOKE
 
     cells = to_binary_cells(encode_lineitem_cells(spark, SF_SMOKE))
-    old_dir, new_dir = str(tmp_path / "old"), str(tmp_path / "new")
-    m_old = write_rows_pb(nested_rows_from_cells(cells), old_dir).collect()
-    m_new = write_cells_pb(cells, new_dir).collect()
-
-    old_files, new_files = _files_bytes(old_dir), _files_bytes(new_dir)
-    assert list(old_files) == list(new_files)
-    for name in old_files:
-        assert old_files[name] == new_files[name], f"bytes differ: {name}"
-
-    strip = [(m.sstable_id, m.n_rows, m.n_cells, m.raw_bytes,
-              m.compressed_bytes) for m in m_old]
-    assert sorted(strip) == sorted(
-        (m.sstable_id, m.n_rows, m.n_cells, m.raw_bytes,
-         m.compressed_bytes) for m in m_new)
+    out = str(tmp_path / "pb_out")
+    _assert_golden(cells, out, write_cells_pb(cells, out).collect())
 
 
 def test_flat_writer_runs_span_arrow_batches(spark, tmp_path):
@@ -147,9 +180,9 @@ def test_flat_writer_runs_span_arrow_batches(spark, tmp_path):
     longer than one Arrow batch (pending-row accumulation across
     batches), an all-dead-cells key (must still emit its Row, empty), a
     dead PARTITION (must vanish), NULL values and writeTime 0 -- all at a
-    tiny forced batch size, against the nested path's bytes."""
+    tiny forced batch size, against the per-row oracle."""
     from cassandra_sstable_to_protocolbuf_spark.sources.sstable_pb import (
-        nested_rows_from_cells, write_cells_pb, write_rows_pb)
+        write_cells_pb)
 
     rows = []
     # wide run: 100 cells for one key (batch size forced to 7 below)
@@ -177,16 +210,13 @@ def test_flat_writer_runs_span_arrow_batches(spark, tmp_path):
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
     try:
-        old_dir, new_dir = str(tmp_path / "old"), str(tmp_path / "new")
-        write_rows_pb(nested_rows_from_cells(cells), old_dir).collect()
-        m = {r.sstable_id: r for r in write_cells_pb(cells, new_dir).collect()}
+        out = str(tmp_path / "pb_out")
+        metrics = write_cells_pb(cells, out).collect()
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
 
-    old_files, new_files = _files_bytes(old_dir), _files_bytes(new_dir)
-    assert list(old_files) == list(new_files)
-    for name in old_files:
-        assert old_files[name] == new_files[name], f"bytes differ: {name}"
+    _assert_golden(cells, out, metrics)
+    m = {r.sstable_id: r for r in metrics}
     # the all-dead key still occupies a Row; the dead partition does not
     assert m["wide"].n_rows == 3
     assert m["wide"].n_cells == 100 + 5
@@ -194,8 +224,8 @@ def test_flat_writer_runs_span_arrow_batches(spark, tmp_path):
 
 
 def test_flat_writer_wide_row_cap(spark, tmp_path):
-    """A run wider than max_cells fails loudly (same contract as
-    guard_row_width), not by exhausting executor memory."""
+    """A run wider than max_cells fails loudly with the offending key,
+    not by exhausting executor memory."""
     import pyarrow as pa
 
     from cassandra_sstable_to_protocolbuf_spark.sources.sstable_pb import (
@@ -222,12 +252,12 @@ def test_read_keys_sorted_within_file(spark, tmp_path):
     from cassandra_sstable_to_protocolbuf_spark.sources.cells import (
         encode_lineitem_cells, to_binary_cells)
     from cassandra_sstable_to_protocolbuf_spark.sources.sstable_pb import (
-        SSTablePbReader, nested_rows_from_cells, write_rows_pb)
+        SSTablePbReader, write_cells_pb)
     from tests.conftest import SF_SMOKE
 
     cells = to_binary_cells(encode_lineitem_cells(spark, SF_SMOKE))
     out = str(tmp_path / "pb_sorted")
-    write_rows_pb(nested_rows_from_cells(cells), out).collect()
+    write_cells_pb(cells, out).collect()
     reader = SSTablePbReader(out)
     part = reader.partitions()[0]
     keys = [k for batch in reader.read(part)

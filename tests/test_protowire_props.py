@@ -142,17 +142,23 @@ def test_int32_overflow_guards_raise_instead_of_wrapping():
 @settings(max_examples=100, deadline=None)
 @given(st.lists(row, max_size=12))
 def test_block_encoder_byte_identical(rows):
-    """encode_rows_block == per-row frame_row(encode_row(...)) for any
-    shape hypothesis can draw: empty keys, empty names/values, zero and
-    negative writeTimes, zero-column rows, varint-size boundaries."""
+    """encode_rows_block_bufs == per-row frame_row(encode_row(...)) for
+    any shape hypothesis can draw: empty keys, empty names/values, zero
+    and negative writeTimes, zero-column rows, varint-size boundaries."""
     import numpy as np
 
+    def bufs(parts):
+        # Arrow Binary shape: one concatenated buffer + per-entry lengths
+        return (np.frombuffer(b"".join(parts), dtype=np.uint8),
+                np.array([len(p) for p in parts], dtype=np.int64))
+
     ref = b"".join(pw.frame_row(pw.encode_row(k, cs)) for k, cs in rows)
-    keys = [k for k, _ in rows]
+    key_data, klen = bufs([k for k, _ in rows])
     counts = np.array([len(cs) for _, cs in rows], dtype=np.int64)
-    names = [n for _, cs in rows for (n, _v, _t) in cs]
-    vals = [(v if v is not None else b"")
-            for _, cs in rows for (_n, v, _t) in cs]
+    name_data, nlen = bufs([n for _, cs in rows for (n, _v, _t) in cs])
+    value_data, vlen = bufs([(v if v is not None else b"")
+                             for _, cs in rows for (_n, v, _t) in cs])
     wts = np.array([t for _, cs in rows for (_n, _v, t) in cs],
                    dtype=np.int64)
-    assert pw.encode_rows_block(keys, counts, names, vals, wts) == ref
+    assert pw.encode_rows_block_bufs(key_data, klen, counts, name_data,
+                                     nlen, value_data, vlen, wts) == ref

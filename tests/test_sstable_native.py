@@ -318,7 +318,7 @@ def test_full_reference_pipeline_from_binary(spark, fixture_sstables, tmp_path):
     drop-unexpired-TTL quirk) -> Row grouping -> protobuf+zstd -> decode:
     the reference's entire job, end to end, from real component files."""
     from cassandra_sstable_to_protocolbuf_spark.sources.sstable_pb import (
-        nested_rows_from_cells, read_rows_pb, write_rows_pb)
+        read_rows_pb, write_cells_pb)
 
     cells = N.read_native_cells(spark, fixture_sstables).select(
         "sstable_id", "key", "name", "value", "writeTime", "cell_kind",
@@ -326,7 +326,7 @@ def test_full_reference_pipeline_from_binary(spark, fixture_sstables, tmp_path):
         "partition_deletion_live",
     )
     out = str(tmp_path / "native_pb")
-    write_rows_pb(nested_rows_from_cells(cells), out).collect()
+    write_cells_pb(cells, out).collect()
     back = read_rows_pb(spark, out)
     rows = {(r.sstable_id, bytes(r.key)):
             [(bytes(c.name), bytes(c.value), c.writeTime) for c in r.columns]

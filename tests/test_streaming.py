@@ -114,7 +114,7 @@ def test_stream_cells_to_protobuf_sink(spark, tmp_path):
     from cassandra_sstable_to_protocolbuf_spark.sources.cells import (
         encode_lineitem_cells, to_binary_cells)
     from cassandra_sstable_to_protocolbuf_spark.sources.sstable_pb import (
-        nested_rows_from_cells, read_rows_pb)
+        read_rows_pb)
     from cassandra_sstable_to_protocolbuf_spark.streaming.pipeline import (
         stream_cells_to_protobuf)
     from tests.conftest import SF_SMOKE

@@ -2,11 +2,11 @@
 memory, never O(file) (round-4 verdict: the applyInPandas shapes held a
 whole sstable per task -- the one scale-killer class found that round).
 
-These call the mapInPandas stream-writer functions DIRECTLY with a lazy
-generator of small pandas batches simulating one very large sstable, and
-tracemalloc-pin peak Python allocation to a few MB while the encoded
-output is tens of MB -- the writer mirror of the reader pin in
-tests/test_sstable_native.py (test_wide_partition_streams_per_cell).
+These call the stream-writer functions DIRECTLY with a lazy generator of
+small batches simulating one very large sstable, and tracemalloc-pin
+peak Python allocation to a few MB while the encoded output is tens of
+MB -- the writer mirror of the reader pin in tests/test_sstable_native.py
+(test_wide_partition_streams_per_cell).
 """
 
 from __future__ import annotations
@@ -15,6 +15,7 @@ import os
 import tracemalloc
 
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from cassandra_sstable_to_protocolbuf_spark import protowire
@@ -24,75 +25,105 @@ from cassandra_sstable_to_protocolbuf_spark.sources import sstable_pb as PB
 PIN_BYTES = 8 * 1024 * 1024  # generous vs the ~40 MB streamed through
 
 
+_FLAT_CELLS = pa.schema([
+    ("sstable_id", pa.string()), ("key", pa.binary()), ("live", pa.bool_()),
+    ("name", pa.binary()), ("value", pa.binary()), ("writeTime", pa.int64())])
+
+
+def _flat_batch(cells):
+    return pa.RecordBatch.from_pylist(cells, schema=_FLAT_CELLS)
+
+
+def _pb_metrics(write, batches):
+    return pa.Table.from_batches(list(write(batches))).to_pylist()
+
+
+def _pb_rows(path):
+    with pa.input_stream(path, compression="zstd") as f:
+        return [protowire.decode_row(body)
+                for body in protowire.iter_delimited(f)]
+
+
 def test_pb_sink_streams_per_batch(tmp_path):
-    """One 40 MB sstable through the protobuf+zstd sink: peak Python
-    allocation stays O(one batch), and the streamed file decodes back to
-    every frame (the pin must not pass by writing garbage)."""
-    n_batches, rows_per_batch, val = 100, 200, b"v" * 2000  # ~40 MB
+    """One 40 MB sstable through the protobuf+zstd sink
+    (_pb_flat_stream_writer, the write_cells_pb hot path): peak Python
+    allocation stays O(one batch) -- an absolute cap, and doubling the
+    input must not grow the peak -- and the streamed file decodes back
+    to every frame (the pin must not pass by writing garbage)."""
+    rows_per_batch, val = 200, b"v" * 2000
 
-    def batches():
-        row_no = 0
-        for _ in range(n_batches):
-            rows = []
-            for _ in range(rows_per_batch):
-                rows.append({
-                    "sstable_id": "big",
-                    "key": b"k%010d" % row_no,
-                    "columns": [{"name": b"c1", "value": val,
-                                 "writeTime": row_no}],
-                })
-                row_no += 1
-            yield pd.DataFrame(rows)
+    def batches(n_batches):
+        for b in range(n_batches):
+            yield _flat_batch([
+                {"sstable_id": "big", "key": b"k%010d" % row_no,
+                 "live": True, "name": b"c1", "value": val,
+                 "writeTime": row_no}
+                for row_no in range(b * rows_per_batch,
+                                    (b + 1) * rows_per_batch)])
 
-    write = PB._pb_stream_writer(str(tmp_path))
-    tracemalloc.start()
-    metrics = pd.concat(list(write(batches())), ignore_index=True)
-    _, peak = tracemalloc.get_traced_memory()
-    tracemalloc.stop()
+    def writer(sub):
+        (tmp_path / sub).mkdir()
+        return PB._pb_flat_stream_writer(str(tmp_path / sub))
 
-    assert peak < PIN_BYTES, f"peak {peak} bytes: file buffered in task?"
-    assert len(metrics) == 1
-    assert metrics["n_rows"].iloc[0] == n_batches * rows_per_batch
-    assert metrics["raw_bytes"].iloc[0] > 40_000_000
+    # warm: the first call's imports alone would dwarf the pin
+    _pb_metrics(writer("warm"), batches(1))
+
+    def run(n_batches, sub):
+        write = writer(sub)
+        tracemalloc.start()
+        metrics = _pb_metrics(write, batches(n_batches))
+        _, peak = tracemalloc.get_traced_memory()
+        tracemalloc.stop()
+        return metrics, peak
+
+    metrics, peak_40 = run(100, "a")     # ~40 MB
+    _, peak_80 = run(200, "b")           # ~80 MB: peak must NOT follow
+
+    assert peak_40 < PIN_BYTES, f"peak {peak_40} bytes: file buffered in task?"
+    assert peak_80 < peak_40 + PIN_BYTES // 4, \
+        f"peak grew with file size ({peak_40} -> {peak_80}): " \
+        f"sstable buffered in task?"
+    (m,) = metrics
+    assert m["n_rows"] == 100 * rows_per_batch
+    assert m["raw_bytes"] > 40_000_000
 
     # decode back: frame count matches, keys arrive in written order
-    import pyarrow as pa
-
-    path = metrics["path"].iloc[0]
     n = 0
-    with pa.input_stream(path, compression="zstd") as f:
+    with pa.input_stream(m["path"], compression="zstd") as f:
         for body in protowire.iter_delimited(f):
             key, cols = protowire.decode_row(body)
             assert key == b"k%010d" % n
             assert len(cols) == 1
             n += 1
-    assert n == n_batches * rows_per_batch
+    assert n == 100 * rows_per_batch
 
 
 def test_pb_sink_rolls_files_on_sstable_change(tmp_path):
     """Several sstables inside one sorted stream -> one file + one
-    metrics row each, regardless of batch boundaries."""
+    metrics row each, regardless of batch boundaries; an all-dead key
+    still writes its (empty) Row and a NULL value writes as omitted."""
+    def cell(sid, key, live, name=None, value=None, wt=0):
+        return {"sstable_id": sid, "key": key, "live": live, "name": name,
+                "value": value, "writeTime": wt}
+
     def batches():
         # sst-a spans two batches; sst-b and sst-c share one batch
-        yield pd.DataFrame([
-            {"sstable_id": "sst-a", "key": b"a1",
-             "columns": [{"name": b"n", "value": b"x", "writeTime": 1}]},
-        ])
-        yield pd.DataFrame([
-            {"sstable_id": "sst-a", "key": b"a2", "columns": []},
-            {"sstable_id": "sst-b", "key": b"b1",
-             "columns": [{"name": b"n", "value": None, "writeTime": 2}]},
-            {"sstable_id": "sst-c", "key": b"c1",
-             "columns": [{"name": b"n", "value": b"y", "writeTime": 3}]},
+        yield _flat_batch([cell("sst-a", b"a1", True, b"n", b"x", 1)])
+        yield _flat_batch([
+            cell("sst-a", b"a2", False),          # all-dead key
+            cell("sst-b", b"b1", True, b"n", None, 2),
+            cell("sst-c", b"c1", True, b"n", b"y", 3),
         ])
 
-    out = pd.concat(list(PB._pb_stream_writer(str(tmp_path))(batches())),
-                    ignore_index=True)
-    assert list(out["sstable_id"]) == ["sst-a", "sst-b", "sst-c"]
-    assert list(out["n_rows"]) == [2, 1, 1]
+    out = _pb_metrics(PB._pb_flat_stream_writer(str(tmp_path)), batches())
+    assert [m["sstable_id"] for m in out] == ["sst-a", "sst-b", "sst-c"]
+    assert [m["n_rows"] for m in out] == [2, 1, 1]
     assert sorted(os.listdir(tmp_path)) == [
         "sst-a-Data.db.proto.zst", "sst-b-Data.db.proto.zst",
         "sst-c-Data.db.proto.zst"]
+    assert _pb_rows(out[0]["path"]) == [(b"a1", [(b"n", b"x", 1)]),
+                                        (b"a2", [])]
+    assert _pb_rows(out[1]["path"]) == [(b"b1", [(b"n", b"", 2)])]
 
 
 def _cell_batches(n_batches, cells_per_batch, val, sstable_id="big",
@@ -225,27 +256,6 @@ def test_stream_writer_abort_leaves_no_temp_files(tmp_path):
     w.add_cell(b"c", "LIVE", 1, b"v")
     w.abort()
     assert os.listdir(tmp_path) == []
-
-
-def test_group_rows_wide_partition_guard(spark):
-    """P2's nested-Row cap: a partition wider than max_cells fails with
-    the documented loud error (never a silent executor OOM); under the
-    cap the same data encodes normally."""
-    from pyspark.sql.utils import AnalysisException  # noqa: F401
-
-    from cassandra_sstable_to_protocolbuf_spark.operators.projection import (
-        group_rows)
-
-    rows = [("s1", b"wide", b"c%02d" % i, b"v", i) for i in range(10)]
-    cells = spark.createDataFrame(
-        rows, "sstable_id string, key binary, name binary, value binary, "
-              "writeTime long")
-
-    ok = group_rows(cells, max_cells=10).collect()
-    assert len(ok) == 1 and len(ok[0]["columns"]) == 10
-
-    with pytest.raises(Exception, match="nested-Row cap"):
-        group_rows(cells, max_cells=9).collect()
 
 
 def test_native_sink_rejects_inconsistent_partition_flag(tmp_path):
