@@ -911,11 +911,16 @@ def _composite_ka_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
             stats = data[:-len(sn.DATA_SUFFIX)] + sn.STATS_SUFFIX
             part = sn.read_statistics(stats)
             c1s, c2s = [], []
-            for p in sn.scan_partitions(data, 0, os.path.getsize(data)):
-                for c in p["cells"]:
-                    comps = sn.composite_split(c["name"])
-                    c1s.append(comps[0][0])
-                    c2s.append(comps[1][0])
+            rdr = sn.SSTableNativeReader(data, None)
+            for split in rdr.partitions():
+                for b in rdr.read(split):
+                    for name, kind in zip(b.column("name").to_pylist(),
+                                          b.column("cell_kind").to_pylist()):
+                        if kind == "PARTITION":
+                            continue
+                        comps = sn.composite_split(name)
+                        c1s.append(comps[0][0])
+                        c2s.append(comps[1][0])
             sn.write_real_ka_statistics(
                 stats, [min(c1s), min(c2s)], [max(c1s), max(c2s)],
                 partitioner=part["partitioner"],

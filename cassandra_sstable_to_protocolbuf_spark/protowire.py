@@ -562,9 +562,10 @@ def pb_registers_to_arrow(buf, regs: _PbRegisters, sstable_id: str):
 
 
 # a single framed Row buffered past this falls back to the scalar
-# decode_row path (mirrors sstable_native.FAST_SCAN_PARTITION_CAP): the
-# vectorized walk's numpy gathers index with int32, so unbounded buffer
-# growth on a multi-GB Row would otherwise wrap offsets silently
+# decode_row path: the vectorized walk's numpy gathers index with int32,
+# so unbounded buffer growth on a multi-GB Row would otherwise wrap
+# offsets silently (the native reader needs no such cap: it resumes a
+# partition cut by its read window, cellcodec.decode_partitions)
 PB_ROW_CAP = 64 << 20
 # flush a batch once its buffered payload passes this even before
 # batch_rows accumulate, so buffer size stays O(cap), not O(rows x row)
@@ -634,8 +635,7 @@ def iter_decoded_batches(stream, sstable_id: str,
     decoded by the scalar decode_row path instead (memory O(row), and
     the int32 gather index space of the vectorized builder is never
     exceeded -- the cellcodec guards would raise rather than wrap, but
-    the fallback keeps giant rows WORKING, mirroring _read_fast's
-    FAST_SCAN_PARTITION_CAP)."""
+    the fallback keeps giant rows WORKING)."""
     buf = bytearray(stream.read(chunk_bytes))
     o = 0
     while True:

@@ -1,7 +1,7 @@
 """Vectorized batch codec for the SSTable cell framing (VERDICT r7 #1).
 
 The native read and write paths were per-cell pure-Python struct loops
-(`_read_cell_atoms`, `SSTableStreamWriter.add_cell`) -- plan-safe but a
+(a per-atom reader, `SSTableStreamWriter.add_cell`) -- plan-safe but a
 ~200-460k cells/s/task constant-factor ceiling that dominated the three
 most expensive bench lines (pb/compact/optimize roundtrips). The cell
 framing is fixed-layout big-endian, so both directions batch:
@@ -11,7 +11,9 @@ framing is fixed-layout big-endian, so both directions batch:
   struct), then EVERY field materializes via numpy gathers (ragged
   delta-cumsum indexing for names/values, strided view for
   timestamps) straight into pyarrow buffers. Per-cell Python objects
-  never exist.
+  never exist. The walk resumes mid-partition (decode_partitions
+  open_part), so one partition of any size streams through a bounded
+  read window.
 * ENCODE: whole partition RUNS (headers + cells + end markers) lay out
   as one preallocated numpy buffer from FLAT columnar inputs;
   lengths/offsets via cumsum, fixed fields via vectorized scatter
@@ -22,11 +24,11 @@ framing is fixed-layout big-endian, so both directions batch:
   grouped uint64 numpy lanes, and the double-hash bit scatter as a
   sort + reduceat segment-OR.
 
-All of it is byte-identical to the scalar paths (pinned by
-tests/test_cellcodec.py round-trips against the original
-implementations); the scalar paths remain as the semantic reference
-and the fallback for exotic shapes (pre-'ja' framing, promoted-index
-block reads, range tombstones in the writer).
+DECODE is the reader's only decoder: SSTableNativeReader.read() sends
+every split (plain, sliced, composite, digest-verified, PERMISSIVE)
+through it. The per-cell scalar walk lives on under tests/ as the
+identity oracle (tests/sstable_oracle.py), and the encoders are pinned
+byte-identical to the per-cell writer (tests/test_cellcodec.py).
 
 Reference parity note: the reference's per-cell iterator is
 SSTableIdentityIteratorPatched.java (computeNext); this module changes
@@ -64,18 +66,6 @@ _LIVE_LDT = 0x7FFFFFFF
 _LIVE_MARKED = -(1 << 63)
 
 _M64 = (1 << 64) - 1
-
-
-class Overrun(Exception):
-    """Decoder ran past the buffered bytes mid-partition: the caller
-    reads more from the file and retries from the partition start (the
-    split's tail partition extends past split.end by design -- same as
-    scan_partitions finishing the partition it started)."""
-
-    def __init__(self, partition_start: int):
-        super().__init__(f"atom region overran buffer at partition "
-                         f"offset {partition_start}")
-        self.partition_start = partition_start
 
 
 def _ragged_idx(offs: np.ndarray, lens: np.ndarray) -> np.ndarray:
@@ -148,27 +138,37 @@ def decode_partitions(buf, base: int, end_hint: int, regs: _Registers,
                       live_only: bool = False,
                       emit_partition=None,
                       max_records: int | None = None,
-                      old_format: bool = False) -> int:
+                      old_format: bool = False,
+                      open_part: tuple | None = None):
     """Walk partitions from `buf[start_at:]` appending records into
-    `regs` and (key, live) tuples into `parts`. Stops at the first
-    partition whose ABSOLUTE start offset (base + buffer offset) is >=
-    `end_hint` -- the same partition-start boundary rule as
-    scan_partitions -- or on clean EOF at a partition boundary.
-    Raises Overrun(partition_start) when the buffer ends mid-partition
-    (registers rolled back to the last complete partition) so the
-    caller can extend the buffer and retry.
+    `regs` and a (key, live) entry per partition into `parts`. Stops at
+    the first partition whose ABSOLUTE start offset (base + buffer
+    offset) is >= `end_hint` (a split finishes the partition it
+    started), at a partition boundary once `max_records` records are
+    buffered, or where the buffer ends.
+
+    Returns (offset, open_part). open_part is None when the walk stopped
+    at a partition boundary, or inside a partition header (offset is
+    then that partition's start and the caller reads more). Otherwise
+    the buffer ended inside a partition's atoms: offset is the end of
+    its last complete atom, and open_part (key, liveness, emit
+    decision, atoms left in an old-format row) is passed back with that
+    offset as `start_at` once the caller has flushed the registers and
+    read more bytes -- memory stays O(read window) however large one
+    partition grows. Each call that appends records for a partition
+    adds one `parts` entry; only the first call emits its PARTITION
+    marker.
 
     `old_format=True` decodes pre-'ja' (ka) row framing: an i64 row
     size precedes the deletion time and an i32 column count replaces
     the zero-short end-of-row marker. Cell-atom encoding is identical
-    across formats (the scalar _read_cell_atoms is shared), so foreign
-    ka files ride the same vectorized gathers as engine files.
+    across formats, so foreign ka files ride the same vectorized
+    gathers as engine files.
 
     `emit_partition(key) -> bool` optionally decides per-partition
     emission (pushed keys / token range); skipped partitions are still
     WALKED (the stream has no other way to find their end) but append
-    nothing. Returns the buffer offset after the last complete
-    partition."""
+    nothing."""
     n = len(buf)
     o = start_at
     s_extend = regs.spans.extend
@@ -176,29 +176,24 @@ def decode_partitions(buf, base: int, end_hint: int, regs: _Registers,
     lexp_append = regs.sparse_lexp.append
     pc_append = regs.part_counts.append
     nrec = start_nrec = len(regs)
-    # NOTE the hot loop relies on bytes indexing raising IndexError at
-    # the buffer edge instead of explicit bounds checks -- every field
-    # is either read via buf[i] (raises) or guarded by the next read
-    # (an over-advanced `o` hits buf[o] on the following atom/marker).
+    hdr_tail = 24 if old_format else 12
     while True:
-        part_start = o
-        if base + o >= end_hint:
-            return o
-        if o == n:
-            return o  # buffer exhausted at a partition boundary
-        if max_records is not None and nrec - start_nrec >= max_records:
-            return o  # flush point: caller drains the registers
-        snap = nrec
-        snap_parts = len(parts)
-        snap_ttl = len(regs.sparse_ttl)
-        snap_lexp = len(regs.sparse_lexp)
-        try:
+        if open_part is not None:
+            key, live, emit, remaining = open_part
+            open_part = None
+            snap = nrec
+        else:
+            if base + o >= end_hint or o == n:
+                return o, None
+            if max_records is not None and nrec - start_nrec >= max_records:
+                return o, None  # flush point: caller drains the registers
+            if o + 2 > n:
+                return o, None
             klen = (buf[o] << 8) | buf[o + 1]
-            o += 2
-            key_end = o + klen
-            if key_end + (24 if old_format else 12) > n:
-                raise IndexError
-            key = bytes(buf[o:key_end])
+            key_end = o + 2 + klen
+            if key_end + hdr_tail > n:
+                return o, None  # header cut by the buffer end
+            key = bytes(buf[o + 2:key_end])
             if old_format:
                 # i64 row size (skipped: the walk finds the row's end
                 # from its counted atoms), then the deletion time, then
@@ -225,20 +220,21 @@ def decode_partitions(buf, base: int, end_hint: int, regs: _Registers,
                 else True
             if live_only and not live:
                 emit = False
+            snap = nrec
             if emit:
-                parts.append((key, live))
-                # one PARTITION marker row per partition (empty-Row
-                # quirk plumbing -- see _iter_rows)
+                # one PARTITION marker row per partition: it carries the
+                # key and liveness even for a partition with no atoms
                 s_extend((KIND_PARTITION, 0, 0, 0, -1, marked_off))
                 nrec += 1
+        # NOTE the atom loop relies on bytes indexing raising IndexError
+        # at the buffer edge instead of explicit bounds checks on the
+        # fixed fields; every atom checks its END against the buffer
+        # before advancing `o` or appending, so on IndexError `o` is
+        # the end of the last complete atom
+        try:
             while True:
                 if remaining is not None:
                     if remaining <= 0:
-                        # counted row: no end-of-row marker guards the
-                        # last atom's value read -- check the buffer
-                        # edge explicitly before accepting the row
-                        if o > n:
-                            raise IndexError
                         break
                     remaining -= 1
                     nlen = (buf[o] << 8) | buf[o + 1]
@@ -262,7 +258,10 @@ def decode_partitions(buf, base: int, end_hint: int, regs: _Registers,
                             | (buf[vlen_off + 2] << 8)
                             | buf[vlen_off + 3])
                     ve = vlen_off + 4
-                    o = ve + vlen
+                    end = ve + vlen
+                    if end > n:
+                        raise IndexError
+                    o = end
                     if emit:
                         s_extend((KIND_LIVE, name_off, nlen, ve, vlen,
                                   body))
@@ -272,9 +271,10 @@ def decode_partitions(buf, base: int, end_hint: int, regs: _Registers,
                     elen = (buf[body] << 8) | buf[body + 1]
                     end_off = body + 2
                     rt_ldt_off = end_off + elen
-                    o = rt_ldt_off + 12
-                    if o > n:
+                    end = rt_ldt_off + 12
+                    if end > n:
                         raise IndexError
+                    o = end
                     if emit and not live_only:
                         s_extend((KIND_RANGE_TOMBSTONE, name_off, nlen,
                                   end_off, elen, rt_ldt_off + 4))
@@ -285,13 +285,16 @@ def decode_partitions(buf, base: int, end_hint: int, regs: _Registers,
                     continue
                 if flags & (_FLAG_EXPIRATION | _FLAG_COUNTER):
                     ts_off = body + 8
-                else:  # DELETED (or unknown flags: scalar path = LIVE)
+                else:  # DELETED (or unknown flags, read as LIVE)
                     ts_off = body
                 vlen_off = ts_off + 8
                 vlen = ((buf[vlen_off] << 24) | (buf[vlen_off + 1] << 16)
                         | (buf[vlen_off + 2] << 8) | buf[vlen_off + 3])
                 ve = vlen_off + 4
-                o = ve + vlen
+                end = ve + vlen
+                if end > n:
+                    raise IndexError
+                o = end
                 if not emit or live_only:
                     continue
                 if flags & _FLAG_EXPIRATION:
@@ -307,8 +310,6 @@ def decode_partitions(buf, base: int, end_hint: int, regs: _Registers,
                               ts_off))
                     nrec += 1
                 elif flags & _FLAG_DELETION:
-                    if o > n:
-                        raise IndexError
                     # DELETED surfaces value=b"" (empty, not null)
                     s_extend((KIND_DELETED, name_off, nlen, ve, 0,
                               ts_off))
@@ -316,32 +317,32 @@ def decode_partitions(buf, base: int, end_hint: int, regs: _Registers,
                     lexp_append((nrec - 1, int.from_bytes(
                         buf[ve:ve + 4], "big", signed=True)
                         if vlen == 4 else 0))
-                else:  # unknown flag combo: scalar path treats as LIVE
+                else:  # unknown flag combo: read as LIVE
                     s_extend((KIND_LIVE, name_off, nlen, ve, vlen,
                               ts_off))
                     nrec += 1
-            if emit:
-                pc_append(nrec - snap)
         except IndexError:
-            del regs.spans[snap * 6:], regs.sparse_ttl[snap_ttl:], \
-                regs.sparse_lexp[snap_lexp:]
-            del parts[snap_parts:]
-            nrec = snap
-            raise Overrun(part_start) from None
+            if remaining is not None:
+                remaining += 1  # the cut atom was counted on entry
+            if nrec > snap:
+                parts.append((key, live))
+                pc_append(nrec - snap)
+            return o, (key, live, emit, remaining)
+        if nrec > snap:
+            parts.append((key, live))
+            pc_append(nrec - snap)
 
 
 def decode_atom_run(buf, start: int, end: int, regs: _Registers,
                     parts: list, key: bytes, live: bool) -> None:
-    """Vectorized twin of the scalar promoted-block read
-    (sstable_native._read_cell_atoms(until=...)): walk the COMPLETE
-    atoms tiling buf[start:end) -- a promoted-index block run; the
-    end-of-row marker is outside every block, so a zero-length name or
-    an atom overrunning `end` is corruption and raises ValueError,
-    exactly like the scalar path. Appends every atom's spans into
-    `regs` (ALL kinds -- the caller applies live_only/name-range as a
-    columnar mask) and one (key, live) group into `parts`. NO partition
-    marker record is emitted: the sliced read surface is cell atoms
-    only."""
+    """Promoted-index block read: walk the COMPLETE atoms tiling
+    buf[start:end) -- a promoted-index block run; the end-of-row marker
+    is outside every block, so a zero-length name or an atom overrunning
+    `end` is corruption and raises ValueError. Appends every atom's
+    spans into `regs` (ALL kinds -- the caller applies
+    live_only/name-range as a columnar mask) and one (key, live) group
+    into `parts`. NO partition marker record is emitted: the sliced
+    read surface is cell atoms only."""
     o = start
     s_extend = regs.spans.extend
     ttl_append = regs.sparse_ttl.append
@@ -384,7 +385,7 @@ def decode_atom_run(buf, start: int, end: int, regs: _Registers,
                 continue
             if flags & (_FLAG_EXPIRATION | _FLAG_COUNTER):
                 ts_off = body + 8
-            else:  # DELETED (or unknown flags: scalar path = LIVE)
+            else:  # DELETED (or unknown flags, read as LIVE)
                 ts_off = body
             vlen_off = ts_off + 8
             vlen = ((buf[vlen_off] << 24) | (buf[vlen_off + 1] << 16)
@@ -410,7 +411,7 @@ def decode_atom_run(buf, start: int, end: int, regs: _Registers,
                 lexp_append((nrec - 1, int.from_bytes(
                     buf[ve:ve + 4], "big", signed=True)
                     if vlen == 4 else 0))
-            else:  # unknown flag combo: scalar path treats as LIVE
+            else:  # unknown flag combo: read as LIVE
                 s_extend((KIND_LIVE, name_off, nlen, ve, vlen, ts_off))
                 nrec += 1
         if o != end:
@@ -516,16 +517,35 @@ def registers_to_arrow(buf, regs: _Registers, parts: list,
                                 count=len(parts))
         pdl = pa.array(part_live[part_idx])
 
-    schema = pa.schema([
+    return pa.RecordBatch.from_arrays(
+        [sid, keys, names, values, write_time, kinds, ttl, lexp, pdl],
+        schema=cell_schema())
+
+
+def cell_schema():
+    """The native cell Arrow schema (sstable_native.NATIVE_CELL_SCHEMA_DDL
+    as pyarrow types): the one layout every read() batch carries."""
+    import pyarrow as pa
+
+    return pa.schema([
         ("sstable_id", pa.string()), ("key", pa.binary()),
         ("name", pa.binary()), ("value", pa.binary()),
         ("writeTime", pa.int64()), ("cell_kind", pa.string()),
         ("ttl", pa.int32()), ("local_expiration", pa.int32()),
         ("partition_deletion_live", pa.bool_()),
     ])
-    return pa.RecordBatch.from_arrays(
-        [sid, keys, names, values, write_time, kinds, ttl, lexp, pdl],
-        schema=schema)
+
+
+def error_batch(sstable_id: str, message: str):
+    """The one-row PERMISSIVE marker batch: cell_kind='ERROR', the
+    message in `value`, every cell field empty or null."""
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_pylist(
+        [{"sstable_id": sstable_id, "key": b"", "name": b"",
+          "value": message.encode(), "writeTime": 0, "cell_kind": "ERROR",
+          "ttl": None, "local_expiration": None,
+          "partition_deletion_live": False}], schema=cell_schema())
 
 
 # --------------------------------------------------------------------------

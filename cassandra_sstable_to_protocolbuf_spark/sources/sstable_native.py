@@ -1048,8 +1048,8 @@ class SSTableStreamWriter:
     decorated-key order, cells in comparator order, and every component
     (Data, Index, CompressionInfo) is written as bytes arrive -- peak
     memory is O(compression chunk) + O(index summary sample), never
-    O(file). This is the writer analog of the reader's O(one-cell)
-    streaming pin (scan_partitions), and mirrors the reference's
+    O(file). This is the writer analog of the reader's O(read window)
+    streaming pin (SSTableNativeReader._read_fast), and mirrors the reference's
     fold-over-a-row-stream write posture (Runner.java:114-124): nothing
     the size of the output is ever resident.
 
@@ -2009,26 +2009,6 @@ def _block_range_tests(lo: bytes | None, hi: bytes | None, cmp):
             lambda first: hi is not None and cmp(first, hi) >= 0)
 
 
-def _select_block_runs(blocks: list[tuple[bytes, bytes, int, int]],
-                       lo: bytes | None, hi: bytes | None,
-                       cmp=None) -> list[tuple[int, int]]:
-    """Coalesced (start, end) relative byte runs of the IndexInfo blocks
-    that can contain an atom name in [lo, hi) -- block [first, last]
-    overlaps iff last >= lo and first < hi (None = unbounded, order per
-    `cmp`). Adjacent selected blocks merge into one run so a wide slice
-    issues one seek, not one per 64 KiB."""
-    below, above = _block_range_tests(lo, hi, cmp)
-    runs: list[tuple[int, int]] = []
-    for first, last, offset, width in blocks:
-        if below(last) or above(first):
-            continue
-        if runs and runs[-1][1] == offset:
-            runs[-1] = (runs[-1][0], offset + width)
-        else:
-            runs.append((offset, offset + width))
-    return runs
-
-
 def _chunk_block_runs(blocks: list[tuple[bytes, bytes, int, int]],
                       lo: bytes | None, hi: bytes | None,
                       budget: int, cmp=None) -> list[list[tuple[int, int]]]:
@@ -2193,125 +2173,6 @@ def load_summary(data_path: str) -> dict | None:
         return None
 
 
-def _read_cell_atoms(f, count: int | None = None,
-                     until: int | None = None) -> Iterator[dict]:
-    """Lazy per-cell decoder: yields one atom dict at a time until the
-    partition's end-of-row marker (nlen == 0), or -- for pre-'ja'
-    versions, which carry an explicit column count instead of a
-    terminator -- until `count` atoms have been read, or -- for
-    promoted-index block reads -- until the stream reaches absolute
-    offset `until` (a block's exact end; blocks never contain the row
-    marker, so hitting nlen == 0 mid-block is corruption). O(one cell)
-    memory -- a single wide partition (the wide-row model's whole point)
-    never materializes, matching the reference's lazy column iterator
-    (SSTableIdentityIteratorPatched.java computeNext)."""
-    remaining = count
-    while True:
-        if remaining is not None:
-            if remaining == 0:
-                return
-            remaining -= 1
-        if until is not None and f.tell() >= until:
-            if f.tell() > until:
-                raise ValueError(
-                    f"atom overran its promoted-index block end by "
-                    f"{f.tell() - until} bytes (corrupt block extents)")
-            return
-        (nlen,) = struct.unpack(">H", f.read(2))
-        if nlen == 0:
-            if count is not None or until is not None:
-                raise ValueError(
-                    "zero-length cell name inside a "
-                    + ("column-counted row" if count is not None
-                       else "promoted-index block"))
-            return
-        name = _read_exact(f, nlen)
-        (flags,) = struct.unpack(">B", f.read(1))
-        if flags & FLAG_RANGE_TOMBSTONE:
-            (elen,) = struct.unpack(">H", f.read(2))
-            end_name = _read_exact(f, elen)
-            rt_ldt, rt_marked = struct.unpack(">iq", f.read(12))
-            yield {"name": name, "kind": "RANGE_TOMBSTONE",
-                   "value": end_name, "timestamp": rt_marked,
-                   "ttl": None, "local_expiration": rt_ldt}
-        elif flags & FLAG_EXPIRATION:
-            ttl, lexp = struct.unpack(">ii", f.read(8))
-            ts, vlen = struct.unpack(">qi", f.read(12))
-            yield {"name": name, "kind": "EXPIRING",
-                   "value": _read_exact(f, vlen), "timestamp": ts,
-                   "ttl": ttl, "local_expiration": lexp}
-        elif flags & FLAG_COUNTER:
-            _tsd, ts, vlen = struct.unpack(">qqi", f.read(20))
-            yield {"name": name, "kind": "COUNTER",
-                   "value": _read_exact(f, vlen), "timestamp": ts,
-                   "ttl": None, "local_expiration": None}
-        elif flags & FLAG_DELETION:
-            ts, vlen = struct.unpack(">qi", f.read(12))
-            body = _read_exact(f, vlen)
-            (cell_ldt,) = struct.unpack(">i", body) if vlen == 4 else (0,)
-            yield {"name": name, "kind": "DELETED",
-                   "value": b"", "timestamp": ts,
-                   "ttl": None, "local_expiration": cell_ldt}
-        else:
-            ts, vlen = struct.unpack(">qi", f.read(12))
-            yield {"name": name, "kind": "LIVE",
-                   "value": _read_exact(f, vlen), "timestamp": ts,
-                   "ttl": None, "local_expiration": None}
-
-
-def scan_partitions(data_path: str, start: int, end: int) -> Iterator[dict]:
-    """Stream partitions whose start offset is in [start, end) --
-    offsets in LOGICAL (uncompressed) coordinates; lz4-block-compressed
-    tables (CompressionInfo.db present) decompress transparently (S6).
-
-    Yields {key, deletion_live, cells: LAZY per-cell generator}; range
-    tombstones are surfaced with kind RANGE_TOMBSTONE so the filter layer
-    can reproduce the reference's silent skip
-    (service/SSTableReader.java:92).
-
-    Streaming contract: `cells` reads from the underlying file stream, so
-    consume it before advancing the outer iterator; any unconsumed tail
-    is drained (parsed and discarded) automatically on advance. Use
-    scan_partitions_eager() when partitions are to be held as values.
-    """
-    try:
-        old_format = Descriptor.from_filename(data_path).has_row_size_and_column_count
-    except ValueError:
-        old_format = False  # unnamed fixture paths: current layout
-    f, _logical_size = open_data_file(data_path)
-    with f:
-        f.seek(start)
-        while f.tell() < end:
-            hdr = f.read(2)
-            if len(hdr) < 2:
-                return
-            (klen,) = struct.unpack(">H", hdr)
-            key = _read_exact(f, klen)
-            if old_format:
-                # pre-'ja' row framing: long row-size precedes the
-                # deletion time, and an int column count replaces the
-                # zero-short end-of-row marker
-                (_row_size,) = struct.unpack(">q", f.read(8))
-                ldt, marked = struct.unpack(">iq", f.read(12))
-                (column_count,) = struct.unpack(">i", f.read(4))
-                cells = _read_cell_atoms(f, count=column_count)
-            else:
-                ldt, marked = struct.unpack(">iq", f.read(12))
-                cells = _read_cell_atoms(f)
-            deletion_live = (ldt == LIVE_LOCAL_DELETION and marked == LIVE_MARKED_AT)
-            yield {"key": key, "deletion_live": deletion_live,
-                   "deletion_marked_at": marked, "cells": cells}
-            for _ in cells:  # drain unconsumed tail to the next partition
-                pass
-
-
-def scan_partitions_eager(data_path: str, start: int, end: int) -> Iterator[dict]:
-    """scan_partitions with cells materialized per partition (testing /
-    small-table convenience; the Spark source uses the lazy form)."""
-    for part in scan_partitions(data_path, start, end):
-        yield {**part, "cells": list(part["cells"])}
-
-
 class _SliceRunSplit(InputPartition):
     """One task's worth of promoted-index block RUNS inside a single
     wide partition -- the unit that parallelizes a clustering slice of
@@ -2427,10 +2288,11 @@ class SSTableNativeReader(DataSourceReader):
         # selection and per-atom residuals, whole-file elimination uses
         # the ka per-component min/maxColumnNames lists
         # (composite_bounds_disjoint, still behind the foreign-bounds
-        # opt-in), sliced reads keep the scalar path (the vectorized
-        # decoder's numpy byte compares implement raw order), and
-        # Spark-pushed raw-byte name predicates are never folded into
-        # the slice (they stay Spark-evaluated residuals).
+        # opt-in), the sliced read's columnar residual runs
+        # composite_compare per name (_slice_batch_filter) instead of
+        # the raw-byte compare, and Spark-pushed raw-byte name
+        # predicates are never folded into the slice (they stay
+        # Spark-evaluated residuals).
         self.composite = composite_comparator
         # opt-in: treat genuine ka StatsMetadata min/maxColumnNames as
         # byte-order bounds for whole-file slice elimination -- sound
@@ -2494,8 +2356,9 @@ class SSTableNativeReader(DataSourceReader):
         reads O(partition) bytes of Data.db no matter the sstable size
         (the reference's indexed-seek path, SSTableReaderPatched.java's
         index-directed positioning). Other filters are returned to Spark
-        unhandled; absorbed key filters are re-checked in _iter_rows
-        anyway (multi-key splits coalesce adjacent index entries).
+        unhandled; absorbed key filters are re-checked by read()'s
+        emit filter anyway (multi-key splits coalesce adjacent index
+        entries).
 
         Range predicates on `name` are used as IO-PRUNING HINTS for the
         promoted-index clustering slice and ALWAYS yielded back to Spark
@@ -2756,7 +2619,7 @@ class SSTableNativeReader(DataSourceReader):
         if self.verify:
             # digest granularity is the whole file: one verified split
             # per sstable (see __init__ docstring); residual key/token
-            # filters still apply in _iter_rows
+            # filters still apply in read()
             splits.append(_SSTableSplit(sstable_id, data_path, 0, size,
                                         verify=True))
             return splits
@@ -2842,8 +2705,8 @@ class SSTableNativeReader(DataSourceReader):
                 # (file order IS token order): prune whole splits
                 # outside [lo, hi) -- the summary makes a sharded
                 # export read only its own token interval's bytes.
-                # Boundary ties keep the split (residual filter in
-                # _iter_rows is exact either way).
+                # Boundary ties keep the split (read()'s residual
+                # filter is exact either way).
                 lo, hi = self.token_range
                 if self._token_hex(skey) >= hi:
                     continue
@@ -3031,43 +2894,12 @@ class SSTableNativeReader(DataSourceReader):
         return out
 
     ARROW_BATCH_ROWS = 8192
-
-    def _iter_rows(self, split) -> Iterator[tuple]:
-        if split is None:  # pushed filters matched nothing: zero splits
-            return
-        if self.name_range is not None:
-            yield from self._iter_rows_sliced(split)
-            return
-        for part in scan_partitions(split.data_path, split.start, split.end):
-            if self.pushed_keys is not None and part["key"] not in self.pushed_keys:
-                continue
-            if self.token_range is not None \
-                    and not self._in_token_range(part["key"]):
-                continue
-            if self.live_only:
-                if not part["deletion_live"]:
-                    continue
-                yield (split.sstable_id, part["key"], b"", None,
-                       part["deletion_marked_at"],
-                       "PARTITION", None, None, True)
-                for c in part["cells"]:
-                    if c["kind"] == "LIVE":
-                        yield (split.sstable_id, part["key"], c["name"],
-                               c["value"], c["timestamp"], "LIVE",
-                               None, None, True)
-                continue
-            # one PARTITION marker row per partition: carries the partition
-            # key + deletion state even when the partition has no atoms, so
-            # downstream grouping can emit the empty Row the reference
-            # always produces (service/SSTableReader.java:87-109). Cell-kind
-            # filters drop it from flat cell views naturally.
-            yield (split.sstable_id, part["key"], b"", None,
-                   part["deletion_marked_at"],
-                   "PARTITION", None, None, part["deletion_live"])
-            for c in part["cells"]:
-                yield (split.sstable_id, part["key"], c["name"], c["value"],
-                       c["timestamp"], c["kind"], c["ttl"],
-                       c["local_expiration"], part["deletion_live"])
+    # bytes per read after a split's first window (4x this): the decode
+    # buffer stays O(window) whatever the partition sizes
+    FAST_SCAN_GROW = 4 << 20
+    # a vectorized sliced batch flushes once this many selected-run
+    # bytes have accumulated across index entries (memory bound per task)
+    SLICE_FAST_BATCH_BYTES = 8 << 20
 
     def _cell_in_range(self, name: bytes) -> bool:
         lo, hi = self.name_range
@@ -3084,220 +2916,51 @@ class SSTableNativeReader(DataSourceReader):
         (None selects the helpers' inlined raw operators)."""
         return composite_compare if self.composite else None
 
-    def _iter_rows_sliced(self, split) -> Iterator[tuple]:
-        """Clustering-slice read: walk Index.db entries in lockstep with
-        the split's data range; wide partitions' promoted IndexInfo
-        blocks let the task seek straight to the slice -- bytes outside
-        the selected blocks are NEVER read, so a narrow slice of a huge
-        partition costs O(slice). Narrow (unpromoted) rows stream their
-        atoms with an exact emit filter; a dead partition under
-        live_only is skipped from the blob's DeletionTime with zero
-        data IO. The block min/max test over-selects only; membership
-        is re-checked per atom, so results match full-scan + filter
-        bit for bit (pinned in tests/test_promoted_index.py)."""
-        lo, hi = self.name_range
-        if isinstance(split, _SliceRunSplit):
-            # plan-derived block runs inside ONE wide partition: seek,
-            # read, residual-filter -- no header or index IO at all.
-            # Re-check the pushed token interval (belt for the plan-time
-            # skips above): tokenRange is source-only, so a split that
-            # slipped through would silently duplicate rows across shards.
-            if self.token_range is not None \
-                    and not self._in_token_range(split.key):
-                return
-            f, _logical_size = open_data_file(split.data_path)
-            with f:
-                for run_start, run_end in split.runs:
-                    f.seek(split.position + run_start)
-                    for c in _read_cell_atoms(
-                            f, until=split.position + run_end):
-                        if self.live_only and c["kind"] != "LIVE":
-                            continue
-                        if self._cell_in_range(c["name"]):
-                            yield (split.sstable_id, split.key, c["name"],
-                                   c["value"], c["timestamp"], c["kind"],
-                                   c["ttl"], c["local_expiration"],
-                                   split.live)
-            return
-        index_path = split.data_path[:-len(DATA_SUFFIX)] + INDEX_SUFFIX
-        try:
-            old_format = Descriptor.from_filename(
-                split.data_path).has_row_size_and_column_count
-        except ValueError:
-            old_format = False
-        if old_format or not os.path.exists(index_path):
-            # pre-'ja' row framing (no engine-written promoted blobs) or
-            # an indexless fixture: exact emit filter over the plain scan
-            for part in scan_partitions(split.data_path, split.start,
-                                        split.end):
-                if self.pushed_keys is not None \
-                        and part["key"] not in self.pushed_keys:
-                    continue
-                if self.token_range is not None \
-                        and not self._in_token_range(part["key"]):
-                    continue
-                if self.live_only and not part["deletion_live"]:
-                    continue
-                for c in part["cells"]:
-                    if self.live_only and c["kind"] != "LIVE":
-                        continue
-                    if self._cell_in_range(c["name"]):
-                        yield (split.sstable_id, part["key"], c["name"],
-                               c["value"], c["timestamp"], c["kind"],
-                               c["ttl"], c["local_expiration"],
-                               part["deletion_live"])
-            return
-        f, _logical_size = open_data_file(split.data_path)
-        with f:
-            for key, position, _ipos, blob in iter_index_promoted(
-                    index_path, start_pos=split.index_start):
-                if position >= split.end:
-                    break
-                if position < split.start:
-                    continue
-                if self.pushed_keys is not None \
-                        and key not in self.pushed_keys:
-                    continue
-                if self.token_range is not None \
-                        and not self._in_token_range(key):
-                    continue
-                pi = parse_promoted_index(blob)
-                if pi is not None:
-                    live = (pi["ldt"] == LIVE_LOCAL_DELETION
-                            and pi["marked_at"] == LIVE_MARKED_AT)
-                    if self.live_only and not live:
-                        continue  # decided from the blob: zero data IO
-                    for run_start, run_end in _select_block_runs(
-                            pi["blocks"], lo, hi, cmp=self._name_cmp):
-                        f.seek(position + run_start)
-                        for c in _read_cell_atoms(
-                                f, until=position + run_end):
-                            if self.live_only and c["kind"] != "LIVE":
-                                continue
-                            if self._cell_in_range(c["name"]):
-                                yield (split.sstable_id, key, c["name"],
-                                       c["value"], c["timestamp"],
-                                       c["kind"], c["ttl"],
-                                       c["local_expiration"], live)
-                    continue
-                # narrow row: read its header, stream atoms, emit-filter
-                f.seek(position + 2 + len(key))  # skip key_len + key
-                ldt, marked = struct.unpack(">iq", f.read(12))
-                live = (ldt == LIVE_LOCAL_DELETION
-                        and marked == LIVE_MARKED_AT)
-                if self.live_only and not live:
-                    continue  # next entry re-seeks: no drain needed
-                for c in _read_cell_atoms(f):
-                    if self.live_only and c["kind"] != "LIVE":
-                        continue
-                    if self._cell_in_range(c["name"]):
-                        yield (split.sstable_id, key, c["name"], c["value"],
-                               c["timestamp"], c["kind"], c["ttl"],
-                               c["local_expiration"], live)
-
     def read(self, split) -> Iterator:
-        """Yield pyarrow.RecordBatch chunks, not per-row tuples: rows
-        cross the Python->JVM boundary as Arrow columns, amortizing the
-        per-row pickle cost that dominates a TB-scale scan. Composes with
-        the lazy cell iterator: peak memory is one batch, never one
-        partition."""
-        import pyarrow as pa
+        """Yield pyarrow.RecordBatch chunks in the native cell schema
+        (cellcodec.cell_schema): rows cross the Python->JVM boundary as
+        Arrow columns built by the vectorized codec, with no per-cell
+        Python objects, and memory stays O(read window), never
+        O(partition). Every split takes the one path of _decode_split.
 
-        arrow_schema = pa.schema([
-            ("sstable_id", pa.string()), ("key", pa.binary()),
-            ("name", pa.binary()), ("value", pa.binary()),
-            ("writeTime", pa.int64()), ("cell_kind", pa.string()),
-            ("ttl", pa.int32()), ("local_expiration", pa.int32()),
-            ("partition_deletion_live", pa.bool_()),
-        ])
-        def batch(rows: list) -> "pa.RecordBatch":
-            # one C-level transpose per batch instead of 9 Python-level
-            # appends per row -- the per-row cost is the boundary's
-            # bottleneck at millions of cells per split
-            cols = zip(*rows)
-            return pa.RecordBatch.from_arrays(
-                [pa.array(c, t.type) for c, t in zip(cols, arrow_schema)],
-                schema=arrow_schema)
+        PERMISSIVE turns any exception into ONE cell_kind='ERROR' row
+        after the batches already yielded: the split's good prefix
+        stands as whole batches (at-least-the-parsed-prefix, like
+        PERMISSIVE CSV), and consumers key on cell_kind='ERROR'."""
+        from cassandra_sstable_to_protocolbuf_spark.sources import (
+            cellcodec as _cc)
 
-        def rows_or_error(split):
-            if split is not None and getattr(split, "error", None):
-                # plan-time component failure captured as an error split
-                yield (split.sstable_id, b"", b"", split.error.encode(),
-                       0, "ERROR", None, None, False)
-                return
-            if split is not None and getattr(split, "verify", False):
-                # executor-side integrity gate: sha1 the physical file
-                # against -Digest.sha1 BEFORE parsing a single cell. On
-                # mismatch nothing from the suspect file surfaces --
-                # unlike parse-time corruption there is no trustworthy
-                # prefix, the whole file failed its checksum.
-                if verify_digest(split.data_path) is False:
-                    msg = (f"Data.db digest mismatch vs -Digest.sha1 for "
-                           f"{split.sstable_id} (corrupt or tampered file)")
-                    if not self.permissive:
-                        raise ValueError(msg)
-                    yield (split.sstable_id, b"", b"", msg.encode(),
-                           0, "ERROR", None, None, False)
-                    return
-            if not self.permissive:
-                yield from self._iter_rows(split)
-                return
-            try:
-                yield from self._iter_rows(split)
-            except Exception as e:  # corruption -> ERROR marker row;
-                # rows already yielded from the split's good prefix stand
-                # (same at-least-the-parsed-prefix contract as PERMISSIVE
-                # CSV), and consumers key on cell_kind='ERROR'
-                yield (split.sstable_id, b"", b"",
-                       str(e)[:500].encode(), 0, "ERROR", None, None, False)
+        if split is None:  # pushed filters matched nothing: zero splits
+            return
+        batches = self._decode_split(split)
+        if not self.permissive:
+            yield from batches
+            return
+        try:
+            yield from batches
+        except Exception as e:  # noqa: BLE001 -- error channel
+            yield _cc.error_batch(split.sstable_id, str(e)[:500])
 
-        if (not self.permissive and split is not None
-                and not getattr(split, "error", None)):
-            # vectorized batch decode (cellcodec): same rows, same
-            # order, ~2.5x the per-task throughput of the tuple path.
-            # PERMISSIVE stays on the scalar path: its good-prefix
-            # contract is PER-CELL (rows parsed before the corrupt
-            # byte stand), which a block decoder cannot reproduce --
-            # and a corruption sweep is not the throughput path.
-            if self.name_range is None:
-                yield from self._read_fast(split, batch)
-                return
-            if self.composite:
-                # composite slices stay scalar: the vectorized sliced
-                # decoder's residual mask is a numpy RAW-byte compare,
-                # which mis-orders composite encodings (length prefix
-                # first); the scalar walk runs composite_compare
-                rows: list = []
-                for row in rows_or_error(split):
-                    rows.append(row)
-                    if len(rows) >= self.ARROW_BATCH_ROWS:
-                        yield batch(rows)
-                        rows = []
-                if rows:
-                    yield batch(rows)
-                return
-            if not getattr(split, "verify", False):
-                # clustering slices ride the same codec (VERDICT r8
-                # #3); verify+slice stays scalar -- an integrity sweep
-                # is not the throughput path either
-                yield from self._read_fast_sliced(split, batch)
-                return
-
-        rows: list[tuple] = []
-        append = rows.append
-        for row in rows_or_error(split):
-            append(row)
-            if len(rows) >= self.ARROW_BATCH_ROWS:
-                yield batch(rows)
-                rows, append = [], None
-                append = rows.append
-        if rows:
-            yield batch(rows)
-
-    # one buffered partition may grow this large before the fast scan
-    # hands the split's remainder back to the O(cell) streaming path
-    FAST_SCAN_PARTITION_CAP = 64 << 20
-    FAST_SCAN_GROW = 4 << 20
+    def _decode_split(self, split) -> Iterator:
+        """The one decode path every split takes; corruption raises
+        (read() turns it into the PERMISSIVE error row)."""
+        if getattr(split, "error", None):
+            # plan-time component failure captured as an error split
+            raise ValueError(split.error)
+        if getattr(split, "verify", False) \
+                and verify_digest(split.data_path) is False:
+            # executor-side integrity gate: sha1 the physical file
+            # against -Digest.sha1 BEFORE decoding a single cell. On
+            # mismatch nothing from the suspect file surfaces -- unlike
+            # parse-time corruption there is no trustworthy prefix, the
+            # whole file failed its checksum.
+            raise ValueError(
+                f"Data.db digest mismatch vs -Digest.sha1 for "
+                f"{split.sstable_id} (corrupt or tampered file)")
+        if self.name_range is None:
+            yield from self._read_fast(split)
+        else:
+            yield from self._read_fast_sliced(split)
 
     @staticmethod
     def _old_format(data_path: str) -> bool:
@@ -3310,26 +2973,22 @@ class SSTableNativeReader(DataSourceReader):
         except ValueError:
             return False  # unnamed fixture paths: current layout
 
-    def _read_fast(self, split, batch) -> Iterator:
+    def _read_fast(self, split) -> Iterator:
         """Arrow batches straight from the vectorized region decoder
         (cellcodec.decode_partitions): one offset-only Python walk, all
-        field materialization via numpy gathers. Memory stays O(batch):
-        the buffer trims to the unconsumed tail after every flush, and
-        a single partition larger than FAST_SCAN_PARTITION_CAP falls
-        back to the O(cell) scalar path for the split's remainder.
-        Emission semantics (PARTITION markers, live_only, pushed keys,
-        token range, PERMISSIVE error rows, digest verify) match
-        _iter_rows row for row -- pinned in tests/test_cellcodec.py."""
+        field materialization via numpy gathers. A batch flushes at
+        ARROW_BATCH_ROWS records (on a partition boundary) or when the
+        buffer runs out with a read window consumed; the buffer then
+        drops the decoded prefix, and a partition cut by the buffer end
+        resumes from its open state after the next read -- so memory is
+        O(read window) for any partition size. Emission semantics
+        (PARTITION markers, live_only, pushed keys, token range) match
+        the per-cell oracle row for row, order included -- pinned in
+        tests/test_cellcodec.py."""
         from cassandra_sstable_to_protocolbuf_spark.sources import (
             cellcodec as _cc)
 
         sid = split.sstable_id
-        if getattr(split, "verify", False):
-            # FAILFAST only here -- PERMISSIVE never reaches this path
-            if verify_digest(split.data_path) is False:
-                raise ValueError(
-                    f"Data.db digest mismatch vs -Digest.sha1 for "
-                    f"{sid} (corrupt or tampered file)")
         pk = self.pushed_keys
         tr = self.token_range
         if pk is None and tr is None:
@@ -3342,163 +3001,119 @@ class SSTableNativeReader(DataSourceReader):
                         and (tr is None or in_tr(key)))
 
         old_format = self._old_format(split.data_path)
+        grow = self.FAST_SCAN_GROW
         f, _logical_size = open_data_file(split.data_path)
         with f:
             f.seek(split.start)
             base = split.start
-            # bounded initial read: the loop below grows on demand and
-            # trims after every flush, so memory stays O(batch) even
+            # bounded first read: later reads add `grow` bytes and the
+            # consumed prefix is dropped, so memory stays O(window) even
             # for a whole-file split (also keeps every buffer offset
-            # comfortably inside the scatter indexer's int32 range)
-            buf = bytearray(f.read(min(split.end - split.start,
-                                       4 * self.FAST_SCAN_GROW)))
+            # inside the gather indexer's int32 range)
+            buf = bytearray(f.read(min(split.end - split.start, 4 * grow)))
             o = 0
+            open_part = None
+            regs, parts = _cc._Registers(), []
             while True:
-                regs = _cc._Registers()
-                parts: list = []
-                done = False
-                while True:
-                    try:
-                        o = _cc.decode_partitions(
-                            buf, base, split.end, regs, parts,
-                            start_at=o, live_only=self.live_only,
-                            emit_partition=emit,
-                            max_records=self.ARROW_BATCH_ROWS,
-                            old_format=old_format)
-                    except _cc.Overrun as ov:
-                        # GEOMETRIC growth: each Overrun retry re-walks
-                        # the partition from its start, so fixed-size
-                        # growth makes a W-byte partition cost
-                        # O(W^2/GROW) header parses (measured 2.3x on
-                        # 8 MiB wide partitions). Doubling the pending
-                        # window bounds total re-parsing at ~2x the
-                        # partition, CLAMPED so the window never exceeds
-                        # the cap unless the partition truly does: an
-                        # uncapped doubling overshot to CAP + GROW and
-                        # demoted partitions in the (CAP/2, CAP] band to
-                        # the scalar fallback below (ADVICE r10).
-                        pending = len(buf) - ov.partition_start
-                        grow_n = max(self.FAST_SCAN_GROW,
-                                     min(pending,
-                                         self.FAST_SCAN_PARTITION_CAP
-                                         - pending))
-                        more = f.read(grow_n)
-                        if not more:
-                            raise ValueError(
-                                f"unexpected EOF reading cell atoms in "
-                                f"{split.data_path} (truncated "
-                                f"partition at logical offset "
-                                f"{base + ov.partition_start})"
-                            ) from None
-                        buf += more
-                        o = ov.partition_start
-                        if len(buf) - o > self.FAST_SCAN_PARTITION_CAP:
-                            # ONE partition larger than the cap: hand
-                            # the remainder to the O(cell) scalar walk
-                            if len(regs):
-                                yield _cc.registers_to_arrow(
-                                    buf, regs, parts, sid,
-                                    self.live_only)
-                            yield from self._read_fast_fallback(
-                                split, base + o, batch)
+                o, open_part = _cc.decode_partitions(
+                    buf, base, split.end, regs, parts, start_at=o,
+                    live_only=self.live_only, emit_partition=emit,
+                    max_records=self.ARROW_BATCH_ROWS,
+                    old_format=old_format, open_part=open_part)
+                if open_part is None:
+                    done = base + o >= split.end
+                    if done or len(regs) >= self.ARROW_BATCH_ROWS:
+                        if len(regs):
+                            yield _cc.registers_to_arrow(
+                                buf, regs, parts, sid, self.live_only)
+                            regs, parts = _cc._Registers(), []
+                        if done:
                             return
                         continue
-                    if base + o >= split.end:
-                        done = True
-                        break
-                    if o == len(buf):
-                        more = f.read(self.FAST_SCAN_GROW)
-                        if not more:
-                            done = True  # clean EOF
-                            break
-                        buf += more
-                        continue
-                    break  # flush point (max_records reached)
-                if len(regs):
-                    yield _cc.registers_to_arrow(buf, regs, parts, sid,
-                                                 self.live_only)
-                if done:
-                    return
-                # amortized trim of the consumed prefix: memory stays
-                # O(grow window) without paying an O(buffer) copy per
-                # flush (a per-flush trim is quadratic over the split)
-                if o >= self.FAST_SCAN_GROW:
-                    buf = buf[o:]
+                # the buffer ran out between partitions, inside a header
+                # or inside a partition's atoms: read on
+                if o >= grow:
+                    if len(regs):
+                        yield _cc.registers_to_arrow(buf, regs, parts, sid,
+                                                     self.live_only)
+                        regs, parts = _cc._Registers(), []
+                    del buf[:o]
                     base += o
                     o = 0
-
-    # a vectorized sliced batch flushes once this many selected-run
-    # bytes have accumulated across index entries (memory bound per task)
-    SLICE_FAST_BATCH_BYTES = 8 << 20
+                more = f.read(grow)
+                if more:
+                    buf += more
+                    continue
+                if open_part is not None or o < len(buf):
+                    raise ValueError(
+                        f"unexpected EOF reading cell atoms in "
+                        f"{split.data_path} (truncated partition at "
+                        f"logical offset {base + o})")
+                if len(regs):  # clean EOF at a partition boundary
+                    yield _cc.registers_to_arrow(buf, regs, parts, sid,
+                                                 self.live_only)
+                return
 
     def _slice_batch_filter(self, b):
-        """Columnar residual for the vectorized sliced paths: name in
-        [lo, hi), never PARTITION marker rows (sliced reads emit cell
-        atoms only), and live_only's kind filter -- exactly the
-        per-atom checks of the scalar sliced walk, applied as ONE mask
-        per batch. Returns None when nothing survives."""
+        """Columnar residual for the sliced read: name in [lo, hi)
+        (composite component order under the opt-in, via
+        _cell_in_range), never PARTITION marker rows (sliced reads emit
+        cell atoms only), and live_only's kind filter -- applied as ONE
+        mask per batch. Returns None when nothing survives."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
         lo, hi = self.name_range
-        names = b.column(2)
         kinds = b.column(5)
         mask = pc.not_equal(kinds, pa.scalar("PARTITION"))
         if self.live_only:
             mask = pc.and_(mask, pc.equal(kinds, pa.scalar("LIVE")))
-        if lo is not None:
-            mask = pc.and_(mask, pc.greater_equal(
-                names, pa.scalar(lo, type=pa.binary())))
-        if hi is not None:
-            mask = pc.and_(mask, pc.less(
-                names, pa.scalar(hi, type=pa.binary())))
+        if self.composite:
+            b = b.filter(mask)
+            mask = pa.array([self._cell_in_range(n)
+                             for n in b.column(2).to_pylist()], pa.bool_())
+        else:
+            names = b.column(2)
+            if lo is not None:
+                mask = pc.and_(mask, pc.greater_equal(
+                    names, pa.scalar(lo, type=pa.binary())))
+            if hi is not None:
+                mask = pc.and_(mask, pc.less(
+                    names, pa.scalar(hi, type=pa.binary())))
         b = b.filter(mask)
         return b if b.num_rows else None
 
-    def _scalar_run_rows(self, f, abs_start: int, abs_end: int,
-                         key: bytes, live: bool, sid: str):
-        """Scalar residual-filtered atom walk over one selected run --
-        the over-cap fallback of the vectorized sliced read (and its
-        semantic reference, same as _iter_rows_sliced's inner loop)."""
-        f.seek(abs_start)
-        for c in _read_cell_atoms(f, until=abs_end):
-            if self.live_only and c["kind"] != "LIVE":
-                continue
-            if self._cell_in_range(c["name"]):
-                yield (sid, key, c["name"], c["value"], c["timestamp"],
-                       c["kind"], c["ttl"], c["local_expiration"], live)
-
-    def _read_fast_sliced(self, split, batch) -> Iterator:
-        """Vectorized clustering-slice read (VERDICT r8 #3): the
-        selected promoted-index block runs are contiguous byte regions,
-        so they decode through the same numpy/Arrow codec as plain
-        scans (cellcodec.decode_atom_run), with the per-atom residual
-        applied as one columnar mask per batch (_slice_batch_filter).
-        Three shapes:
+    def _read_fast_sliced(self, split) -> Iterator:
+        """Clustering-slice read on the same codec: the selected
+        promoted-index block runs are contiguous byte regions, decoded
+        by cellcodec.decode_atom_run, with the per-atom residual applied
+        as one columnar mask per batch (_slice_batch_filter). Three
+        shapes:
 
         * _SliceRunSplit (plan-chunked runs inside one wide partition):
-          read the runs (<= SLICE_SPLIT_BYTES by plan), decode, mask.
-        * coarse split, wide entry: selected runs accumulate across
-          index entries into SLICE_FAST_BATCH_BYTES decode batches --
-          bytes outside selected blocks are still NEVER read.
+          read the runs (about SLICE_SPLIT_BYTES by plan), decode, mask.
+        * coarse split, wide entry: the entry's selected blocks chunk at
+          SLICE_FAST_BATCH_BYTES (_chunk_block_runs, in comparator
+          order) and chunks of consecutive entries share a decode batch
+          up to that budget -- no batch exceeds it by more than one
+          block, and bytes outside selected blocks are NEVER read.
         * coarse split, narrow window: contiguous unpromoted partitions
-          stream through _read_fast (whole-partition decode; block
-          pruning has nothing to prune on narrow rows) + the same mask.
+          stream through _read_fast (block pruning has nothing to prune
+          on narrow rows) + the same mask. Indexless fixtures and
+          pre-'ja' files (no promoted blobs) read the whole split so.
 
-        A single run larger than FAST_SCAN_PARTITION_CAP falls back to
-        the scalar atom walk for that run, mirroring _read_fast's
-        giant-partition discipline. Row MULTISET matches
-        _iter_rows_sliced exactly (pinned in tests/test_promoted_index
-        and the sliced Spark row-identity test); intra-split order may
-        differ (runs batch before narrow windows flush), which Spark's
-        source contract permits."""
+        Row MULTISET equals a full scan plus the slice residual (pinned
+        in tests/test_cellcodec.py and tests/test_promoted_index.py);
+        intra-split order may differ (runs batch before narrow windows
+        flush), which Spark's source contract permits."""
         from cassandra_sstable_to_protocolbuf_spark.sources import (
             cellcodec as _cc)
 
         lo, hi = self.name_range
         sid = split.sstable_id
+        budget = self.SLICE_FAST_BATCH_BYTES
 
-        def decode_pending(runs: list) -> Iterator:
+        def decode_runs(runs: list) -> Iterator:
             """(key, live, abs_start, abs_end) runs -> one masked batch."""
             f, _sz = open_data_file(split.data_path)
             chunks = []
@@ -3525,63 +3140,35 @@ class SSTableNativeReader(DataSourceReader):
                 if out is not None:
                     yield out
 
-        def scalar_giant_runs(runs: list) -> Iterator:
-            f, _sz = open_data_file(split.data_path)
-            rows: list = []
-            with f:
-                for key, live, s, e in runs:
-                    for row in self._scalar_run_rows(f, s, e, key, live,
-                                                     sid):
-                        rows.append(row)
-                        if len(rows) >= self.ARROW_BATCH_ROWS:
-                            yield batch(rows)
-                            rows = []
-            if rows:
-                yield batch(rows)
+        def narrow_window(start: int, end: int) -> Iterator:
+            # contiguous unpromoted partitions: whole-partition decode
+            # (pushed keys / token range ride _read_fast's emit filter)
+            syn = _SSTableSplit(sid, split.data_path, start, end)
+            for b in self._read_fast(syn):
+                out = self._slice_batch_filter(b)
+                if out is not None:
+                    yield out
 
         if isinstance(split, _SliceRunSplit):
-            # same plan-time-skip belt as the scalar branch: tokenRange
-            # is source-only, a slipped split would duplicate rows
+            # re-check the pushed token interval (belt for the plan-time
+            # skips): tokenRange is source-only, so a split that slipped
+            # through would silently duplicate rows across shards
             if self.token_range is not None \
                     and not self._in_token_range(split.key):
                 return
-            vec, giant = [], []
-            for run_start, run_end in split.runs:
-                target = (giant if run_end - run_start
-                          > self.FAST_SCAN_PARTITION_CAP else vec)
-                target.append((split.key, split.live,
-                               split.position + run_start,
-                               split.position + run_end))
-            if vec:
-                yield from decode_pending(vec)
-            if giant:
-                yield from scalar_giant_runs(giant)
+            yield from decode_runs([
+                (split.key, split.live, split.position + s,
+                 split.position + e) for s, e in split.runs])
             return
 
         index_path = split.data_path[:-len(DATA_SUFFIX)] + INDEX_SUFFIX
         if (not os.path.exists(index_path)
                 or self._old_format(split.data_path)):
-            # indexless fixture, or pre-'ja' framing (no engine-written
-            # promoted blobs to walk): the scalar path's
-            # emit-filter-over-plain-scan, vectorized
-            for b in self._read_fast(split, batch):
-                out = self._slice_batch_filter(b)
-                if out is not None:
-                    yield out
+            yield from narrow_window(split.start, split.end)
             return
-
-        def narrow_window(win_start: int, win_end: int) -> Iterator:
-            # contiguous unpromoted partitions: whole-partition decode
-            # (pushed keys / token range ride _read_fast's emit filter)
-            syn = _SSTableSplit(sid, split.data_path, win_start, win_end)
-            for b in self._read_fast(syn, batch):
-                out = self._slice_batch_filter(b)
-                if out is not None:
-                    yield out
 
         pending: list = []
         pending_bytes = 0
-        giant: list = []
         narrow_start: int | None = None
         for key, position, _ipos, blob in iter_index_promoted(
                 index_path, start_pos=split.index_start):
@@ -3609,41 +3196,19 @@ class SSTableNativeReader(DataSourceReader):
                     and pi["marked_at"] == LIVE_MARKED_AT)
             if self.live_only and not live:
                 continue  # decided from the blob: zero data IO
-            for run_start, run_end in _select_block_runs(
-                    pi["blocks"], lo, hi):
-                ln = run_end - run_start
-                if ln > self.FAST_SCAN_PARTITION_CAP:
-                    giant.append((key, live, position + run_start,
-                                  position + run_end))
-                    continue
-                pending.append((key, live, position + run_start,
-                                position + run_end))
-                pending_bytes += ln
-                if pending_bytes >= self.SLICE_FAST_BATCH_BYTES:
-                    yield from decode_pending(pending)
+            for chunk in _chunk_block_runs(pi["blocks"], lo, hi, budget,
+                                           cmp=self._name_cmp):
+                chunk_bytes = sum(e - s for s, e in chunk)
+                if pending and pending_bytes + chunk_bytes > budget:
+                    yield from decode_runs(pending)
                     pending, pending_bytes = [], 0
+                pending.extend((key, live, position + s, position + e)
+                               for s, e in chunk)
+                pending_bytes += chunk_bytes
         if narrow_start is not None:
             yield from narrow_window(narrow_start, split.end)
         if pending:
-            yield from decode_pending(pending)
-        if giant:
-            yield from scalar_giant_runs(giant)
-
-    def _read_fast_fallback(self, split, from_offset: int,
-                            batch) -> Iterator:
-        """Continue a fast scan through the scalar per-cell path from
-        `from_offset` (a partition boundary): identical row semantics,
-        used only past the giant-partition buffer cap."""
-        syn = _SSTableSplit(split.sstable_id, split.data_path,
-                            from_offset, split.end)
-        rows: list[tuple] = []
-        for row in self._iter_rows(syn):
-            rows.append(row)
-            if len(rows) >= self.ARROW_BATCH_ROWS:
-                yield batch(rows)
-                rows = []
-        if rows:
-            yield batch(rows)
+            yield from decode_runs(pending)
 
 
 class SSTableNativeDataSource(DataSource):
@@ -3735,7 +3300,9 @@ def read_native_cells(spark, path: str,
     ring) -- the Cassandra parallel-export sharding surface. Splits
     wholly outside the interval are pruned at plan time.
     mode: FAILFAST (default, corruption fails the task loudly) or
-    PERMISSIVE (corruption emits a cell_kind='ERROR' marker row).
+    PERMISSIVE (corruption emits one cell_kind='ERROR' marker row per
+    split; the batches decoded before the corrupt byte stand, so the
+    good prefix is whole Arrow batches, never a cut cell).
     verify_digest: executor-side sha1 check of each Data.db against its
     -Digest.sha1 before scanning (one whole-file split per sstable).
     name_range: optional [lo, hi) clustering slice over cell NAME bytes

@@ -10,6 +10,7 @@ import sys
 import pytest
 
 from cassandra_sstable_to_protocolbuf_spark.sources import sstable_native as N
+from tests.sstable_oracle import scan_partitions_eager
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -114,7 +115,7 @@ def test_compact_merges_generations_lww(tmp_path):
     assert "compacted-0: partitions=1 cells=2" in r.stdout
 
     data = os.path.join(out, "ks-compacted-0-ka-1-Data.db")
-    parts = list(N.scan_partitions_eager(data, 0, os.path.getsize(data)))
+    parts = list(scan_partitions_eager(data, 0, os.path.getsize(data)))
     assert [p["key"] for p in parts] == [b"k1"]
     got = {(c["name"], c["value"], c["timestamp"]) for c in parts[0]["cells"]}
     assert got == {(b"a", b"new", 20), (b"b", b"keep", 11)}

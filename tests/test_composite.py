@@ -20,6 +20,7 @@ from cassandra_sstable_to_protocolbuf_spark.sources.sstable_native import (
     SSTableNativeReader, composite_compare, composite_encode,
     composite_split, read_native_cells, read_stats_column_name_lists,
     write_real_ka_statistics)
+from tests.sstable_oracle import scan_partitions
 
 _components = st.lists(
     st.tuples(st.binary(min_size=0, max_size=6),
@@ -166,7 +167,7 @@ def _strip_to_foreign_ka(data_path):
     stats = data_path[:-len(N.DATA_SUFFIX)] + N.STATS_SUFFIX
     part = N.read_statistics(stats)
     c1s, c2s = [], []
-    for p in N.scan_partitions(data_path, 0, os.path.getsize(data_path)):
+    for p in scan_partitions(data_path, 0, os.path.getsize(data_path)):
         for c in p["cells"]:
             comps = composite_split(c["name"])
             c1s.append(comps[0][0])

@@ -33,6 +33,7 @@ import struct
 import pytest
 
 from cassandra_sstable_to_protocolbuf_spark.sources import sstable_native as N
+from tests.sstable_oracle import scan_partitions_eager
 
 
 def _atom_live(name: bytes, ts: int, value: bytes) -> bytes:
@@ -111,7 +112,7 @@ def test_descriptor_from_filename():
 
 
 def test_golden_jb_parses_exactly(golden_jb):
-    parts = list(N.scan_partitions_eager(golden_jb, 0, len(GOLDEN_JB_DATA)))
+    parts = list(scan_partitions_eager(golden_jb, 0, len(GOLDEN_JB_DATA)))
     assert [p["key"] for p in parts] == [KEY_A, KEY_B]
     a, b = parts
     assert a["deletion_live"] is True
@@ -191,7 +192,7 @@ def test_golden_ic_row_size_and_column_count(tmp_path):
     path = str(tmp_path / "Keyspace1-Standard1-ic-1-Data.db")
     with open(path, "wb") as f:
         f.write(row)
-    parts = list(N.scan_partitions_eager(path, 0, os.path.getsize(path)))
+    parts = list(scan_partitions_eager(path, 0, os.path.getsize(path)))
     assert len(parts) == 1
     assert parts[0]["key"] == b"key"
     assert [(c["name"], c["value"], c["timestamp"]) for c in parts[0]["cells"]] \

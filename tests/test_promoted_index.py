@@ -19,6 +19,7 @@ import struct
 import pytest
 
 from cassandra_sstable_to_protocolbuf_spark.sources import sstable_native as N
+from tests.sstable_oracle import expected_rows, read_rows
 
 
 def _write_fixture(dir_path: str, cib: int = 256, wide_n: int = 200,
@@ -40,22 +41,19 @@ def _write_fixture(dir_path: str, cib: int = 256, wide_n: int = 200,
 
 
 def _slice_rows(dir_path: str, lo, hi, **reader_kw):
+    """The production sliced read: read() over the planned splits."""
     rdr = N.SSTableNativeReader(dir_path, 4096, name_range=(lo, hi),
                                 **reader_kw)
-    return sorted((r[1], r[2], r[3], r[4]) for s in rdr.partitions()
-                  for r in rdr._iter_rows(s))
+    return sorted((r[1], r[2], r[3], r[4]) for r in read_rows(rdr))
 
 
 def _full_rows_filtered(dir_path: str, lo, hi, live_only=False):
+    """The expected side: the scalar oracle's full scan + name filter."""
     rdr = N.SSTableNativeReader(dir_path, 4096, live_only=live_only)
-    out = []
-    for s in rdr.partitions():
-        for r in rdr._iter_rows(s):
-            if r[5] == "PARTITION":
-                continue
-            if (lo is None or r[2] >= lo) and (hi is None or r[2] < hi):
-                out.append((r[1], r[2], r[3], r[4]))
-    return sorted(out)
+    return sorted((r[1], r[2], r[3], r[4]) for r in expected_rows(rdr)
+                  if r[5] != "PARTITION"
+                  and (lo is None or r[2] >= lo)
+                  and (hi is None or r[2] < hi))
 
 
 # -- serialization ----------------------------------------------------------
@@ -154,21 +152,29 @@ def test_single_block_row_not_promoted(tmp_path):
 
 # -- block selection --------------------------------------------------------
 
-def test_select_block_runs():
+def test_chunk_block_runs_unbounded_budget():
+    """With an unbounded budget _chunk_block_runs is plain block
+    selection: one chunk of coalesced (start, end) runs over the blocks
+    that can hold a name in [lo, hi)."""
+    def runs(blocks, lo, hi):
+        chunks = N._chunk_block_runs(blocks, lo, hi, budget=1 << 62)
+        assert len(chunks) <= 1
+        return chunks[0] if chunks else []
+
     blocks = [(b"a", b"f", 16, 100), (b"g", b"m", 116, 100),
               (b"n", b"s", 216, 100), (b"t", b"z", 316, 50)]
     # middle slice: two adjacent blocks coalesce into one run
-    assert N._select_block_runs(blocks, b"h", b"p") == [(116, 200 + 116)]
+    assert runs(blocks, b"h", b"p") == [(116, 200 + 116)]
     # unbounded both sides: everything, one run
-    assert N._select_block_runs(blocks, None, None) == [(16, 366)]
+    assert runs(blocks, None, None) == [(16, 366)]
     # before-all and after-all: empty
-    assert N._select_block_runs(blocks, b"zz", None) == []
-    assert N._select_block_runs(blocks, None, b"a") == []
+    assert runs(blocks, b"zz", None) == []
+    assert runs(blocks, None, b"a") == []
     # exact block-edge bounds: hi == first name of next block
-    assert N._select_block_runs(blocks, b"a", b"g") == [(16, 116)]
+    assert runs(blocks, b"a", b"g") == [(16, 116)]
     # non-adjacent selections stay separate runs
     gappy = [(b"a", b"b", 16, 10), (b"c", b"d", 40, 10)]
-    assert N._select_block_runs(gappy, None, None) == [(16, 26), (40, 50)]
+    assert runs(gappy, None, None) == [(16, 26), (40, 50)]
 
 
 # -- read parity ------------------------------------------------------------
@@ -275,7 +281,7 @@ def test_dead_partition_skipped_without_data_io(tmp_path):
     try:
         rdr = N.SSTableNativeReader(str(tmp_path), 4096, live_only=True,
                                     name_range=(None, None))
-        rows = [r for s in rdr.partitions() for r in rdr._iter_rows(s)]
+        rows = read_rows(rdr)
     finally:
         N.open_data_file = orig
     # only q2's 3 narrow cells surface; p1 (dead, wide) read 0 data bytes
@@ -291,7 +297,7 @@ def test_slice_composes_with_pushed_keys(tmp_path):
     rdr = N.SSTableNativeReader(str(tmp_path), 4096,
                                 name_range=(b"n0000", b"n0004"))
     rdr.pushed_keys = {b"q2"}
-    rows = [r for s in rdr.partitions() for r in rdr._iter_rows(s)]
+    rows = read_rows(rdr)
     assert sorted(r[2] for r in rows) == [b"n0000", b"n0001", b"n0002"]
     assert all(r[1] == b"q2" for r in rows)
 
@@ -327,7 +333,7 @@ def test_slice_parallelizes_inside_one_partition(tmp_path):
     all_runs = sorted(r for s in run_splits for r in s.runs)
     for (a0, a1), (b0, b1) in zip(all_runs, all_runs[1:]):
         assert a1 <= b0, "runs must never overlap"
-    rows = sorted((r[1], r[2]) for s in splits for r in rdr._iter_rows(s))
+    rows = sorted((r[1], r[2]) for r in read_rows(rdr, splits))
     want = _full_rows_filtered(str(tmp_path), b"n0100", b"n1900")
     assert rows == [(k, n) for k, n, _v, _t in want]
 
@@ -342,7 +348,7 @@ def test_slice_plans_zero_splits_for_dead_partition(tmp_path):
                                 name_range=(None, None))
     splits = rdr.partitions()
     assert not any(isinstance(s, N._SliceRunSplit) for s in splits)
-    rows = [r for s in splits for r in rdr._iter_rows(s)]
+    rows = read_rows(rdr, splits)
     assert [r[1] for r in rows] == [b"q2"] * 3  # narrow survivor only
 
 
@@ -359,7 +365,7 @@ def test_seek_plus_slice_fans_out(tmp_path):
     splits = rdr.partitions()
     run_splits = [s for s in splits if isinstance(s, N._SliceRunSplit)]
     assert len(run_splits) > 4 and len(run_splits) == len(splits)
-    rows = sorted(r[2] for s in splits for r in rdr._iter_rows(s))
+    rows = sorted(r[2] for r in read_rows(rdr, splits))
     assert rows == [b"n%04d" % i for i in range(100, 1900)]
     # narrow matched partition: the classic seek split survives intact
     rdr2 = N.SSTableNativeReader(str(tmp_path), 4096,
@@ -368,7 +374,7 @@ def test_seek_plus_slice_fans_out(tmp_path):
     splits2 = rdr2.partitions()
     assert len(splits2) == 1 and not isinstance(splits2[0],
                                                 N._SliceRunSplit)
-    assert sorted(r[2] for s in splits2 for r in rdr2._iter_rows(s)) \
+    assert sorted(r[2] for r in read_rows(rdr2, splits2)) \
         == [b"n0001", b"n0002"]
 
 
@@ -389,7 +395,7 @@ def test_seek_slice_respects_token_range(tmp_path):
                                     token_range=tr)
         rdr.SLICE_SPLIT_BYTES = 4096
         rdr.pushed_keys = {b"p1"}
-        return [r for s in rdr.partitions() for r in rdr._iter_rows(s)]
+        return read_rows(rdr)
 
     # the excluding shard must plan (and emit) NOTHING for p1
     assert shard_rows(excludes) == []
@@ -401,7 +407,7 @@ def test_seek_slice_respects_token_range(tmp_path):
     rdr = N.SSTableNativeReader(str(tmp_path), 4096,
                                 name_range=(b"n0100", b"n0110"),
                                 token_range=excludes)
-    assert [r for s in rdr.partitions() for r in rdr._iter_rows(s)] == []
+    assert read_rows(rdr) == []
 
 
 def test_narrow_rows_chunk_by_partitions_per_split(tmp_path):
@@ -422,7 +428,7 @@ def test_narrow_rows_chunk_by_partitions_per_split(tmp_path):
     spans = sorted((s.start, s.end) for s in splits)
     for (a0, a1), (b0, b1) in zip(spans, spans[1:]):
         assert a1 == b0
-    rows = sorted(r[1:3] for s in splits for r in rdr._iter_rows(s))
+    rows = sorted(r[1:3] for r in read_rows(rdr, splits))
     want = sorted((p["key"], c["name"]) for p in parts
                   for c in p["cells"] if b"n00" <= c["name"] < b"n04")
     assert rows == want
@@ -451,7 +457,7 @@ def test_name_bounds_eliminate_whole_files(tmp_path, monkeypatch):
     rdr2 = N.SSTableNativeReader(str(tmp_path), 4096,
                                  name_range=(b"n0048", None))
     splits = rdr2.partitions()
-    rows = sorted(r[2] for s in splits for r in rdr2._iter_rows(s))
+    rows = sorted(r[2] for r in read_rows(rdr2, splits))
     assert rows == [b"n0048", b"n0049"]  # only p1 reaches n0048+
     # malformed bounds body: pruning silently disabled, results intact
     raw = bytearray(open(stats, "rb").read())
@@ -462,8 +468,7 @@ def test_name_bounds_eliminate_whole_files(tmp_path, monkeypatch):
     assert N.read_name_bounds(stats) is None
     rdr3 = N.SSTableNativeReader(str(tmp_path), 4096,
                                  name_range=(b"zz", None))
-    assert [r for s in rdr3.partitions()
-            for r in rdr3._iter_rows(s)] == []
+    assert read_rows(rdr3) == []
 
 
 def _real_ka_statistics(min_names: list[bytes], max_names: list[bytes],
@@ -546,8 +551,7 @@ def test_real_ka_stats_bounds_eliminate_whole_files(tmp_path, monkeypatch):
     rdr2 = N.SSTableNativeReader(str(tmp_path), 4096,
                                  name_range=(b"n0048", None),
                                  trust_foreign_name_bounds=True)
-    rows = sorted(r[2] for s in rdr2.partitions()
-                  for r in rdr2._iter_rows(s))
+    rows = sorted(r[2] for r in read_rows(rdr2))
     assert rows == [b"n0048", b"n0049"]
 
     # composite clustering (2 components): soundness demands NO pruning
@@ -557,8 +561,7 @@ def test_real_ka_stats_bounds_eliminate_whole_files(tmp_path, monkeypatch):
     rdr3 = N.SSTableNativeReader(str(tmp_path), 4096,
                                  name_range=(b"zz", None),
                                  trust_foreign_name_bounds=True)
-    assert [r for s in rdr3.partitions()
-            for r in rdr3._iter_rows(s)] == []  # scanned, empty result
+    assert read_rows(rdr3) == []  # scanned, empty result
 
     # foreign-malformed STATS body (truncated mid-histogram): parse
     # declines, planning unchanged, rows never dropped
@@ -569,8 +572,7 @@ def test_real_ka_stats_bounds_eliminate_whole_files(tmp_path, monkeypatch):
     rdr4 = N.SSTableNativeReader(str(tmp_path), 4096,
                                  name_range=(b"n0048", None),
                                  trust_foreign_name_bounds=True)
-    rows4 = sorted(r[2] for s in rdr4.partitions()
-                   for r in rdr4._iter_rows(s))
+    rows4 = sorted(r[2] for r in read_rows(rdr4))
     assert rows4 == [b"n0048", b"n0049"]
 
 
@@ -592,8 +594,7 @@ def test_foreign_ka_bounds_untrusted_by_default(tmp_path):
 
     rdr = N.SSTableNativeReader(str(tmp_path), 4096,
                                 name_range=(b"n0048", None))
-    rows = sorted(r[2] for s in rdr.partitions()
-                  for r in rdr._iter_rows(s))
+    rows = sorted(r[2] for r in read_rows(rdr))
     assert rows == [b"n0048", b"n0049"], \
         "default reader pruned on untrusted foreign bounds"
     rdr2 = N.SSTableNativeReader(str(tmp_path), 4096,
@@ -611,7 +612,7 @@ def test_slice_index_cap_falls_back_to_walk(tmp_path):
     rdr.SLICE_INDEX_WALK_CAP = 0  # everything is "too big"
     splits = rdr.partitions()
     assert not any(isinstance(s, N._SliceRunSplit) for s in splits)
-    rows = sorted((r[1], r[2]) for s in splits for r in rdr._iter_rows(s))
+    rows = sorted((r[1], r[2]) for r in read_rows(rdr, splits))
     assert rows == [(k, n) for k, n, _v, _t in
                     _full_rows_filtered(str(tmp_path), b"n0050", b"n0060")]
 

@@ -4,10 +4,13 @@ the full binary-sstable -> protobuf+zstd reference pipeline."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from cassandra_sstable_to_protocolbuf_spark.sources import sstable_native as N
+from tests.sstable_oracle import (read_rows, scan_partitions,
+                                  scan_partitions_eager)
 
 
 @pytest.fixture(scope="module")
@@ -48,7 +51,7 @@ def test_scan_partitions_pure(fixture_sstables):
     import os
 
     data = sorted(glob.glob(os.path.join(fixture_sstables, "*-1-Data.db")))[0]
-    parts = list(N.scan_partitions_eager(data, 0, os.path.getsize(data)))
+    parts = list(scan_partitions_eager(data, 0, os.path.getsize(data)))
     assert len(parts) == 4
     by_key = {p["key"]: p for p in parts}
     assert by_key[b"beta"]["deletion_live"] is False
@@ -104,7 +107,7 @@ def test_write_scan_murmur3_partitioner(spark, tmp_path):
     data = N.write_sstable(d, 1, parts, partitioner=N.MURMUR3_PARTITIONER)
     import os
     scanned = [p["key"] for p in
-               N.scan_partitions_eager(data, 0, os.path.getsize(data))]
+               scan_partitions_eager(data, 0, os.path.getsize(data))]
     assert scanned == sorted(scanned, key=lambda k: (N.murmur3_token(k), k))
     assert scanned != sorted(scanned, key=lambda k: (N.md5_token(k), k))
     reader = N.SSTableNativeReader(d, 4096,
@@ -142,29 +145,52 @@ def test_validate_first_key_after_last_rejected(tmp_path):
         reader.partitions()
 
 
+def _one_wide_partition(dir_path: str, n_cells: int, val: bytes) -> None:
+    w = N.SSTableStreamWriter(dir_path, 1)
+    w.start_partition(b"wide")
+    for lo in range(0, n_cells, 10_000):
+        ts = np.arange(lo, min(lo + 10_000, n_cells), dtype=np.int64)
+        w.add_cells_batch([b"c%08d" % i for i in ts.tolist()],
+                          np.zeros(len(ts), np.int8), ts, [val] * len(ts))
+    w.end_partition()
+    w.close()
+
+
 def test_wide_partition_streams_per_cell(tmp_path):
-    """One wide partition must scan in O(one cell) memory: the lazy cell
-    iterator (S7) never materializes the partition. Peak Python
-    allocation while streaming a ~40 MB single-partition sstable stays
-    under a few MB."""
-    import os
+    """One wide partition must read in O(read window) memory, never
+    O(partition): read() flushes the decoded prefix of a partition cut
+    by its buffer and resumes it after the next read (S7's lazy column
+    iterator, vectorized). Doubling the partition from 40 to 80 MiB
+    must not grow the traced peak, and the peak stays under 8x the
+    16 MiB first read."""
     import tracemalloc
 
-    n_cells, val = 100_000, b"x" * 400  # ~40 MB of cell values
-    parts = [{"key": b"wide", "cells": [
-        {"name": b"c%08d" % i, "kind": "LIVE", "timestamp": i, "value": val}
-        for i in range(n_cells)]}]
-    data = N.write_sstable(str(tmp_path), 1, parts)
-    del parts
-    tracemalloc.start()
-    seen = 0
-    for part in N.scan_partitions(data, 0, os.path.getsize(data)):
-        for _cell in part["cells"]:
-            seen += 1
-    _, peak = tracemalloc.get_traced_memory()
-    tracemalloc.stop()
-    assert seen == n_cells
-    assert peak < 8 * 1024 * 1024, f"peak {peak} bytes: partition buffered?"
+    val = b"x" * 8000  # large atoms: tracing costs per atom, not per byte
+
+    def peak(name: str, n_cells: int) -> int:
+        d = str(tmp_path / name)
+        _one_wide_partition(d, n_cells, val)
+        rdr = N.SSTableNativeReader(d, None)
+        splits = rdr.partitions()
+        tracemalloc.start()
+        seen = 0
+        for s in splits:
+            for b in rdr.read(s):
+                seen += b.num_rows
+        _, pk = tracemalloc.get_traced_memory()
+        tracemalloc.stop()
+        assert seen == n_cells + 1  # the PARTITION marker + every cell
+        return pk
+
+    # warm call: imports and first-use caches stay out of the pin
+    _one_wide_partition(str(tmp_path / "warm"), 100, val)
+    read_rows(N.SSTableNativeReader(str(tmp_path / "warm"), None))
+
+    peak_40 = peak("p40", 5_000)  # ~40 MiB partition
+    peak_80 = peak("p80", 10_000)  # ~80 MiB partition
+    assert peak_40 < 128 << 20, f"peak {peak_40} bytes: partition buffered?"
+    assert peak_80 <= peak_40 + (4 << 20), \
+        f"peak grew with the partition ({peak_40} -> {peak_80})"
 
 
 def test_recursive_discovery_nested_dirs(spark, fixture_sstables, tmp_path):
@@ -250,7 +276,7 @@ def test_lz4_corruption_detected(tmp_path):
     raw[10] ^= 0xFF  # flip a byte inside the compressed chunk
     open(data, "wb").write(bytes(raw))
     with pytest.raises(ValueError, match="checksum mismatch"):
-        list(N.scan_partitions(data, 0, 10 ** 9))
+        list(scan_partitions(data, 0, 10 ** 9))
 
 
 def test_live_only_pushdown(spark, fixture_sstables):
@@ -418,7 +444,7 @@ def test_truncated_value_raises_not_silently_truncates(tmp_path):
     import pytest as _pytest
 
     from cassandra_sstable_to_protocolbuf_spark.sources.sstable_native import (
-        scan_partitions_eager, write_sstable)
+        write_sstable)
 
     d = str(tmp_path / "ssts")
     write_sstable(d, 1, [
@@ -431,3 +457,74 @@ def test_truncated_value_raises_not_silently_truncates(tmp_path):
         f.truncate(size - 4)  # chop mid-value
     with _pytest.raises((ValueError, struct.error)):
         list(scan_partitions_eager(data, 0, size))
+
+
+def _corrupt_fixture(d: str, case: str) -> dict:
+    """Write the case's sstable, corrupt it, return {(key, name): value}
+    as written."""
+    import os
+    import struct
+
+    if case == "eof_in_value":
+        parts = [{"key": b"k", "cells": [
+            {"name": b"c", "kind": "LIVE", "timestamp": 1,
+             "value": b"0123456789"}]}]
+    elif case == "overshoot_mid_file":
+        parts = [{"key": b"p%d" % i, "cells": [
+            {"name": b"n-%d-%d" % (i, j), "kind": "LIVE", "timestamp": j,
+             "value": b"v" * (10 + j)} for j in range(3)]}
+            for i in range(5)]
+    else:  # eof_in_wide_partition
+        parts = [{"key": b"p%d" % i, "cells": [
+            {"name": b"c%04d" % j, "kind": "LIVE", "timestamp": j,
+             "value": b"%d-" % i + b"v" * 40} for j in range(n)]}
+            for i, n in enumerate((3, 300, 3))]
+    data = N.write_sstable(d, 1, parts)
+    size = os.path.getsize(data)
+    raw = bytearray(open(data, "rb").read())
+    if case == "eof_in_value":
+        raw = raw[:size - 4]
+    elif case == "overshoot_mid_file":
+        # the middle partition in file (token) order: its first value
+        # length now runs past the end of the file
+        keys = [k for k, _o in N.read_index(
+            data[:-len(N.DATA_SUFFIX)] + N.INDEX_SUFFIX)]
+        name = b"n-%s-0" % keys[len(keys) // 2][1:]
+        at = raw.find(name) + len(name) + 1 + 8
+        raw[at:at + 4] = struct.pack(">i", size)
+    else:
+        offs = {k: o for k, o in N.read_index(
+            data[:-len(N.DATA_SUFFIX)] + N.INDEX_SUFFIX)}
+        ends = sorted(offs.values()) + [size]
+        start = offs[b"p1"]
+        raw = raw[:(start + ends[ends.index(start) + 1]) // 2]
+    with open(data, "wb") as f:
+        f.write(raw)
+    return {(p["key"], c["name"]): c["value"] for p in parts
+            for c in p["cells"]}
+
+
+@pytest.mark.parametrize("case", ["eof_in_value", "overshoot_mid_file",
+                                  "eof_in_wide_partition"])
+def test_read_refuses_truncated_atoms(tmp_path, case):
+    """The production decoder on corrupt files: FAILFAST raises
+    ValueError; PERMISSIVE yields exactly one ERROR row and never a
+    LIVE row whose value differs from the one written (a cut value
+    must not surface as data). The wide case reads through a window
+    of a few hundred bytes, so the partition's good prefix flushes
+    before the end of the file is found."""
+    written = _corrupt_fixture(str(tmp_path), case)
+    for permissive in (False, True):
+        rdr = N.SSTableNativeReader(str(tmp_path), 4096,
+                                    permissive=permissive)
+        rdr.FAST_SCAN_GROW = 512
+        if not permissive:
+            with pytest.raises(ValueError):
+                read_rows(rdr)
+            continue
+        rows = read_rows(rdr)
+        assert [r[5] for r in rows].count("ERROR") == 1, rows
+        live = [r for r in rows if r[5] == "LIVE"]
+        assert all(r[3] == written[(r[1], r[2])] for r in live)
+        if case == "eof_in_wide_partition":
+            assert live, "the good prefix should stand"

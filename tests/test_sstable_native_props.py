@@ -9,6 +9,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from cassandra_sstable_to_protocolbuf_spark.sources import sstable_native as N
+from tests.sstable_oracle import read_rows, scan_partitions_eager
 
 name_bytes = st.binary(min_size=1, max_size=32)
 value_bytes = st.binary(min_size=0, max_size=128)
@@ -44,7 +45,7 @@ partition = st.fixed_dictionaries(
 def test_native_write_scan_roundtrip(tmp_path_factory, parts):
     d = str(tmp_path_factory.mktemp("prop_sst"))
     data = N.write_sstable(d, 1, parts)
-    scanned = list(N.scan_partitions_eager(data, 0, os.path.getsize(data)))
+    scanned = list(scan_partitions_eager(data, 0, os.path.getsize(data)))
     assert len(scanned) == len(parts)
     expected = {p["key"]: p for p in parts}
     for got in scanned:
@@ -110,6 +111,5 @@ def test_promoted_slice_equals_filter(tmp_path_factory, parts, cib, lo, hi):
                 expected.append((p["key"], name, c["timestamp"]))
     rdr = N.SSTableNativeReader(d, 4096, name_range=(lo, hi))
     rdr.SLICE_SPLIT_BYTES = 64  # force chunking wherever possible
-    got = [(r[1], r[2], r[4]) for s in rdr.partitions()
-           for r in rdr._iter_rows(s)]
+    got = [(r[1], r[2], r[4]) for r in read_rows(rdr)]
     assert sorted(got) == sorted(expected)

@@ -15,6 +15,7 @@ import os
 import struct
 
 from cassandra_sstable_to_protocolbuf_spark.sources import sstable_native as N
+from tests.sstable_oracle import read_rows
 
 
 def _mk(dir_path, n_parts, gen=1, **kw):
@@ -25,12 +26,7 @@ def _mk(dir_path, n_parts, gen=1, **kw):
 
 
 def _scan_keys(reader):
-    keys = []
-    for split in reader.partitions():
-        for row in reader._iter_rows(split):
-            if row[5] == "PARTITION":
-                keys.append(row[1])
-    return keys
+    return [row[1] for row in read_rows(reader) if row[5] == "PARTITION"]
 
 
 def test_summary_written_sampled_and_loadable(tmp_path):

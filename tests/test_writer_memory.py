@@ -21,6 +21,7 @@ import pytest
 from cassandra_sstable_to_protocolbuf_spark import protowire
 from cassandra_sstable_to_protocolbuf_spark.sources import sstable_native as N
 from cassandra_sstable_to_protocolbuf_spark.sources import sstable_pb as PB
+from tests.sstable_oracle import scan_partitions, scan_partitions_eager
 
 PIN_BYTES = 8 * 1024 * 1024  # generous vs the ~40 MB streamed through
 
@@ -185,7 +186,7 @@ def test_native_sink_streams_per_batch(tmp_path, compression):
     f, logical_size = N.open_data_file(data)
     f.close()
     seen = 0
-    for part in N.scan_partitions(data, 0, logical_size):
+    for part in scan_partitions(data, 0, logical_size):
         assert part["key"] == b"wide"
         for cell in part["cells"]:
             assert cell["name"] == b"c%010d" % seen
@@ -230,7 +231,7 @@ def test_native_sink_rolls_sstables_and_partitions(tmp_path):
     f, logical_size = N.open_data_file(s1_path)
     f.close()
     parts = {p["key"]: p
-             for p in N.scan_partitions_eager(s1_path, 0, logical_size)}
+             for p in scan_partitions_eager(s1_path, 0, logical_size)}
     assert parts[b"a"]["deletion_live"] and not parts[b"b"]["deletion_live"]
     kinds = [c["kind"] for c in parts[b"a"]["cells"]]
     assert kinds == ["LIVE", "EXPIRING"]
