@@ -12,8 +12,11 @@ Mirrors the reference's contract (reference: Runner.java:39-103):
 * Per-file metrics print on completion: rows, cells, source/target
   bytes, bytes saved, seconds (Runner.java:88-96).
 
-Unlike the reference's single-threaded loop, conversion is one Spark job:
-file-parallel scan tasks, one writer task per output file.
+Unlike the reference's single-threaded loop, conversion is one Spark job
+with one task per scan split: each task reads its byte range, drops dead
+cells and writes that range's rows in scan (token) order, as the
+reference's loop does; the driver then publishes one output per input
+(sources/sstable_pb.py write_native_pb).
 """
 
 from __future__ import annotations
@@ -84,14 +87,12 @@ def _die(msg: str, code: int = 2) -> "None":
 
 def convert(input_path: str, output_dir: str,
             continue_on_error: bool = False) -> int:
-    from pyspark.sql import functions as F
-
     from cassandra_sstable_to_protocolbuf_spark.session import (
         ensure_shipped, get_spark)
     from cassandra_sstable_to_protocolbuf_spark.sources.sstable_native import (
-        discover_data_files, read_native_cells)
+        discover_data_files)
     from cassandra_sstable_to_protocolbuf_spark.sources.sstable_pb import (
-        write_cells_pb)
+        write_native_pb)
 
     spark = get_spark("sstable-to-protobuf-convert")
     spark.sparkContext.setLogLevel("ERROR")
@@ -100,73 +101,34 @@ def convert(input_path: str, output_dir: str,
     # the scan's own discovery (manifest-first, recursive walk, then the
     # maintenance transaction log's visibility filter): inputs an
     # in-place OPTIMIZE already replaced get no output and no metrics
-    inputs = discover_data_files(input_path)
-    # metrics and outputs are keyed by sstable_id (basename sans -Data.db,
-    # flat `<id>-Data.db.proto.zst` like the reference's), so two nested
-    # inputs sharing a basename would merge in the sink -- refuse up front.
-    id_to_path: dict[str, str] = {}
-    for data_path in inputs:
-        sid = os.path.basename(data_path)[:-len("-Data.db")]
-        if sid in id_to_path:
-            _die(f"duplicate sstable basename {sid!r}: {id_to_path[sid]} vs "
-                 f"{data_path}; outputs are named by basename and would collide")
-        id_to_path[sid] = data_path
+    # (metrics and outputs are keyed by sstable_id, the basename sans
+    # -Data.db; write_native_pb refuses two inputs sharing one)
+    id_to_path = {os.path.basename(p)[:-len("-Data.db")]: p
+                  for p in discover_data_files(input_path)}
 
-    if continue_on_error and os.path.isdir(input_path):
-        # reference parity (Runner.java:84-87): a corrupt file prints its
-        # error and processing continues with the next file. One Spark job
-        # per input file isolates failures; each job still fans out over
-        # that file's index splits. Reuses the discovery list above, so
-        # the loop converts exactly the files the scan would read.
-        failures = 0
-        for data_path in inputs:
-            try:
-                convert(data_path, output_dir, continue_on_error=False)
-            except Exception as e:  # noqa: BLE001 -- per-file error channel
-                failures += 1
-                first_line = next(
-                    (ln for ln in str(e).splitlines() if ln.strip()), "")
-                print(f"ERROR converting {os.path.basename(data_path)}: "
-                      f"{type(e).__name__}: {first_line[:200]}",
-                      file=sys.stderr)
-        return 1 if failures else 0
-
-    cells = read_native_cells(spark, input_path, live_only=True).select(
-        "sstable_id", "key", "name", "value", "writeTime", "cell_kind",
-        F.lit(None).cast("boolean").alias("ttl_expired"),
-        "partition_deletion_live",
-    )
-    metrics = write_cells_pb(cells, output_dir).collect()
-
-    # parity: the reference opens an output stream per input file even
-    # when every partition is dead (Runner.java:75-82) -- emit empty
-    # .proto.zst files for inputs that produced no live rows
-    import pyarrow as pa
-
-    produced = {m.sstable_id for m in metrics}
+    # one job, one task per scan split; every input gets an output, an
+    # empty stream when nothing in it is live (Runner.java:75-82).
+    # --continue-on-error plans the scan PERMISSIVE: like the reference
+    # (Runner.java:84-87), a corrupt file prints its error, gets no
+    # output, and the other files still convert.
+    metrics, errors = write_native_pb(spark, input_path, output_dir,
+                                      permissive=continue_on_error)
     total_saved = 0
-    for data_path in inputs:
-        sstable_id = os.path.basename(data_path)[:-len("-Data.db")]
-        if sstable_id not in produced:
-            empty = os.path.join(output_dir, f"{sstable_id}-Data.db.proto.zst")
-            with pa.output_stream(empty, compression=None) as raw, \
-                    pa.CompressedOutputStream(raw, "zstd"):
-                pass
-            src = os.path.getsize(data_path)
-            total_saved += src - os.path.getsize(empty)
-            print(f"{sstable_id}: rows=0 cells=0 source={src}B "
-                  f"target={os.path.getsize(empty)}B "
-                  f"saved={src - os.path.getsize(empty)}B seconds=0.000")
-
-    for m in sorted(metrics, key=lambda m: m.sstable_id):
-        src = os.path.getsize(id_to_path[m.sstable_id])
-        saved = src - m.compressed_bytes
+    for m in metrics:
+        src = os.path.getsize(id_to_path[m["sstable_id"]])
+        saved = src - m["compressed_bytes"]
         total_saved += saved
-        print(f"{m.sstable_id}: rows={m.n_rows} cells={m.n_cells} "
-              f"source={src}B target={m.compressed_bytes}B saved={saved}B "
-              f"seconds={m.seconds}")
-    print(f"converted {len(inputs)} sstable(s), total bytes saved: {total_saved}")
-    return 0
+        print(f"{m['sstable_id']}: rows={m['n_rows']} cells={m['n_cells']} "
+              f"source={src}B target={m['compressed_bytes']}B "
+              f"saved={saved}B seconds={m['seconds']}")
+    for sid in sorted(errors):
+        first_line = next(
+            (ln for ln in errors[sid].splitlines() if ln.strip()), "")
+        print(f"ERROR converting {sid}-Data.db: {first_line[:200]}",
+              file=sys.stderr)
+    print(f"converted {len(metrics)} sstable(s), "
+          f"total bytes saved: {total_saved}")
+    return 1 if errors else 0
 
 
 def to_parquet(input_path: str, output_dir: str,

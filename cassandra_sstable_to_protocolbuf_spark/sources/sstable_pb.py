@@ -5,38 +5,51 @@ The reference serializes each Row with writeDelimitedTo into a
 zstd-compressed stream, one output file per input SSTable, named
 `<src>.proto.zst` (reference: Runner.java:114-156). Here:
 
-* write_cells_pb -- distributed STREAMING sink over flat binary cells:
-  repartition(sstable_id) + sortWithinPartitions(sstable_id, key, name,
-  value, writeTime), then an iterator-style mapInArrow writer that folds
-  adjacent (sstable_id, key) runs into Rows with the vectorized wire
-  codec and pushes them into a zstd stream (pyarrow
+* write_native_pb -- the CLI's `convert`: SSTables on disk straight to
+  `.proto.zst`, in scan (token) order like the reference's loop. One
+  Spark job with one task per scan split: each task drains the native
+  reader's live-only Arrow batches (F1/F2 applied in the source) into
+  the flat writer, which writes that split's part; the driver then
+  publishes each sstable's parts in split order (zstd frames
+  concatenate into one valid stream) and sums their metrics. Cells never
+  enter the JVM: no row conversion, no exchange, no sort.
+* write_cells_pb -- the sink for DataFrame inputs that carry no scan
+  order (streaming foreachBatch, parquet-derived cells): the F1
+  partition filter, repartition(sstable_id) + sortWithinPartitions
+  (sstable_id, key, name, value, writeTime), then the same writer
+  behind mapInArrow, rolling output files when sstable_id changes.
+* _pb_flat_stream_writer -- the one writer both paths share: folds
+  adjacent (sstable_id, key) runs of flat cells into Rows with the
+  vectorized wire codec and pushes them into a zstd stream (pyarrow
   CompressedOutputStream -- standard zstd frames, readable by any zstd
-  tool), rolling output files when sstable_id changes. Executor memory
-  is O(one Arrow batch) + O(one row's encoded columns), never O(file)
-  -- the key-order sort is Spark's spillable sort machinery, not an
-  in-task sort. Returns the per-file metrics the reference prints (M1:
-  sizes, row counts, wall seconds, Runner.java:88-96) as a DataFrame
-  instead of stdout. The decompressed stream equals, row for row,
+  tool). Executor memory is O(one Arrow batch) + O(one row's encoded
+  columns), never O(file). Both sinks report the per-file metrics the
+  reference prints (M1: sizes, row counts, wall seconds,
+  Runner.java:88-96). The decompressed stream equals, row for row,
   protowire.frame_row(protowire.encode_row(...)) -- the per-row codec
   is the format's golden oracle.
 * SSTablePbDataSource -- a Spark 4 Python DataSource ("sstable_pb"
   format) reading those files back: one input partition per file
   (file-parallel scan), lazy streaming decode, nested Row schema.
 
-Scale notes: the sink shuffles once on sstable_id (the one-output-per-
-input contract forces file==contiguous run within a task); each task
-streams with O(batch) memory -- a 50 GB sstable's rows pass through a
-bounded window, nothing file-sized is ever resident (pinned by
-tests/test_writer_memory.py). Task-retry safety via write-to-temp +
-atomic rename. The source enumerates files driver-side
-but decodes entirely in executors; a 100 TB run gets one task per file
--- matching the reference's unit of work, but parallel across the
-cluster instead of sequential on one thread (Runner.java:56-59).
+Scale notes: convert's parallelism is the scan's -- a 50 GB sstable
+plans into byte-range splits, each written by its own task with O(batch)
+memory (pinned by tests/test_writer_memory.py), and the driver's commit
+is a rename per single-split file or one sequential append of the later
+parts per multi-split file, never a decode. write_cells_pb shuffles once
+on sstable_id (the one-output-per-input contract forces
+file==contiguous run within a task). Task-retry safety via
+write-to-temp + atomic rename, in the parts and in the published file.
+The source enumerates files driver-side but decodes entirely in
+executors; a 100 TB run gets one task per file -- matching the
+reference's unit of work, but parallel across the cluster instead of
+sequential on one thread (Runner.java:56-59).
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import time
 import uuid
 from collections.abc import Iterator
@@ -123,17 +136,19 @@ def _abort_pb_file(st: dict | None) -> None:
 
 
 def _pb_flat_stream_writer(out_dir: str, max_cells: int | None = None):
-    """mapInArrow function factory: consume an ITERATOR of Arrow batches
-    of FLAT cells (sstable_id, key, live, name, value, writeTime) already
-    sorted by (sstable_id, key, name, value, writeTime), fold adjacent
-    (sstable_id, key) runs into delimited-protobuf Rows, and roll to a new
-    `.proto.zst` when sstable_id changes. No per-cell Python objects:
-    run detection, live filtering and wire layout are Arrow/numpy
-    kernels over the batch's buffers, and the decompressed output equals
-    per-row frame_row(encode_row(...)). Dead cells (live=false, payload
-    nulled upstream) are dropped per-cell but still mark their
-    (sstable_id, key) run, so a live partition whose cells are ALL
-    filtered still emits its Row.
+    """Writer function factory: consume an ITERATOR of Arrow batches of
+    FLAT cells (sstable_id, key, live, name, value, writeTime; other
+    columns are ignored) in which each (sstable_id, key) run is
+    contiguous -- sorted by write_cells_pb, in scan order from
+    write_native_pb -- fold adjacent (sstable_id, key) runs into
+    delimited-protobuf Rows, and roll to a new `.proto.zst` when
+    sstable_id changes. No per-cell Python objects: run detection, live
+    filtering and wire layout are Arrow/numpy kernels over the batch's
+    buffers, and the decompressed output equals per-row
+    frame_row(encode_row(...)). Dead cells (live=false: dead cells of
+    write_cells_pb's input, the native scan's PARTITION markers) are
+    dropped per-cell but still mark their (sstable_id, key) run, so a
+    live partition whose cells are ALL filtered still emits its Row.
 
     A (sstable_id, key) run may span batches: the unfinished tail run is
     accumulated as ENCODED column bytes (encode_columns_bufs) and framed
@@ -312,14 +327,16 @@ def _pb_flat_stream_writer(out_dir: str, max_cells: int | None = None):
 
 
 def write_cells_pb(cells_binary: DataFrame, out_dir: str) -> DataFrame:
-    """K1 sink straight from FLAT binary cells: the F1 partition filter,
-    ONE exchange (repartition by sstable_id) and a within-partition sort
-    by (sstable_id, key, name, value, writeTime); the writer folds
-    adjacent (sstable_id, key) runs into Rows. Each file's decompressed
-    stream equals the per-row oracle, frame_row(encode_row(key, cols))
-    over the live rows in key order -- pinned by the golden tests. Rows
-    are written in ascending key-byte order within each file (the
-    reference preserves token order; byte order is this model's analog).
+    """K1 sink from FLAT binary cells that carry no scan order (streaming
+    micro-batches, parquet-derived cells); SSTables on disk go through
+    write_native_pb instead. The F1 partition filter, ONE exchange
+    (repartition by sstable_id) and a within-partition sort by
+    (sstable_id, key, name, value, writeTime); the writer folds adjacent
+    (sstable_id, key) runs into Rows. Each file's decompressed stream
+    equals the per-row oracle, frame_row(encode_row(key, cols)) over the
+    live rows in key order -- pinned by the golden tests. Rows are
+    written in ascending key-byte order within each file: cells without
+    a source file have no token order to keep, so the sort fixes one.
 
     Parity quirk preserved: dead cells of live partitions ship as
     (sstable_id, key) markers with NULLed payload (near-zero shuffle
@@ -345,6 +362,145 @@ def write_cells_pb(cells_binary: DataFrame, out_dir: str) -> DataFrame:
                                   "writeTime")
             .mapInArrow(_pb_flat_stream_writer(out_dir),
                         WRITE_METRICS_SCHEMA))
+
+
+class _SplitError(Exception):
+    """A PERMISSIVE scan hit corruption in the split being written."""
+
+
+def _native_split_writer(reader, parts_root: str):
+    """mapPartitions function over (split index, split) pairs: drain
+    reader.read(split) -- live-only batches in scan order, F1/F2 applied
+    by the source -- add the writer's `live` flag (PARTITION markers are
+    the only non-LIVE rows) and write the split's part into
+    <parts_root>/<split index>/. Yields one record per written file (the
+    writer's metrics plus `split`) or, when a PERMISSIVE read reports
+    corruption, one error record for the split's sstable; raising through
+    the writer aborts that split's temp file, so a failed split leaves no
+    part."""
+
+    def run(items):
+        import pyarrow.compute as pc
+
+        for idx, split in items:
+            part_dir = os.path.join(parts_root, str(idx))
+            try:
+                os.mkdir(part_dir)  # never recreates a removed parts_root
+            except FileExistsError:
+                pass  # a retried task overwrites its own part
+
+            def batches():
+                for b in reader.read(split):
+                    kind = b.column("cell_kind")
+                    row = (pc.index(kind, "ERROR").as_py()
+                           if reader.permissive else -1)
+                    if row >= 0:
+                        raise _SplitError(
+                            b.column("value")[row].as_py().decode(
+                                "utf-8", "replace"))
+                    yield b.append_column("live", pc.equal(kind, "LIVE"))
+
+            try:
+                for m in _pb_flat_stream_writer(part_dir)(batches()):
+                    for rec in m.to_pylist():
+                        yield {**rec, "split": idx}
+            except _SplitError as e:
+                yield {"sstable_id": split.sstable_id, "split": idx,
+                       "error": str(e)}
+
+    return run
+
+
+def _commit_parts(records: list[dict], sstable_ids: list[str],
+                  out_dir: str) -> tuple[list[dict], dict[str, str]]:
+    """Driver-side publish of write_native_pb's parts: per sstable, its
+    parts in split order -- one part is renamed into place, several are
+    concatenated (the later parts appended to the first, then renamed;
+    zstd frames concatenate into one valid stream) -- with rows, cells,
+    raw bytes and writer seconds summed. An sstable with no part gets an
+    empty stream, as the reference opens an output per input even when
+    nothing is live (Runner.java:75-82). An sstable with an error record
+    gets no output. Returns (metrics sorted by sstable_id,
+    {sstable_id: first error message})."""
+    records = sorted(records, key=lambda r: r["split"])
+    errors: dict[str, str] = {}
+    parts: dict[str, list[dict]] = {}
+    for r in records:
+        if "error" in r:
+            errors.setdefault(r["sstable_id"], r["error"])
+        else:
+            parts.setdefault(r["sstable_id"], []).append(r)
+    metrics = []
+    for sid in sorted(set(sstable_ids) - set(errors)):
+        ps = parts.get(sid)
+        if not ps:
+            metrics.append(_close_pb_file(_open_pb_file(out_dir, sid)))
+            continue
+        final = os.path.join(out_dir, f"{sid}-Data.db{FILE_SUFFIX}")
+        head = ps[0]["path"]
+        if len(ps) > 1:
+            with open(head, "ab") as dst:
+                for p in ps[1:]:
+                    with open(p["path"], "rb") as src:
+                        shutil.copyfileobj(src, dst, 1 << 20)
+        os.replace(head, final)
+        metrics.append({
+            "sstable_id": sid, "path": final,
+            "n_rows": sum(p["n_rows"] for p in ps),
+            "n_cells": sum(p["n_cells"] for p in ps),
+            "raw_bytes": sum(p["raw_bytes"] for p in ps),
+            "compressed_bytes": os.path.getsize(final),
+            "seconds": f"{sum(float(p['seconds']) for p in ps):.3f}",
+        })
+    return metrics, errors
+
+
+def write_native_pb(spark, input_path: str, out_dir: str,
+                    permissive: bool = False
+                    ) -> tuple[list[dict], dict[str, str]]:
+    """K1 sink straight from SSTables on disk, in scan order: the CLI's
+    convert. The driver plans the live-only native scan; ONE Spark job
+    runs one task per split (_native_split_writer), each writing its
+    split's part under <out_dir>/_parts; the driver then publishes every
+    sstable's `<id>-Data.db.proto.zst` (_commit_parts). Rows come out in
+    token order and each Row's cells in on-disk clustering order, as the
+    reference emits them. Plain-scan splits start and end on partition
+    boundaries, so no Row spans two parts.
+
+    FAILFAST (default): a corrupt split fails the job, and the call
+    raises with nothing published. permissive=True plans the reader
+    PERMISSIVE: a file whose plan or any split reports corruption gets no
+    output and one entry in the returned errors, and every other file
+    converts. Returns (metrics, errors) -- per-file metrics dicts in
+    WRITE_METRICS_SCHEMA's fields, sorted by sstable_id, one for each
+    input without an error; {sstable_id: message}. `_parts` is removed
+    before the job and again when the call ends, whatever the outcome."""
+    from cassandra_sstable_to_protocolbuf_spark.sources.sstable_native import (
+        SSTableNativeReader)
+
+    sc = spark.sparkContext
+    reader = SSTableNativeReader(input_path, None, live_only=True,
+                                 permissive=permissive,
+                                 scan_parallelism=sc.defaultParallelism)
+    splits = reader.partitions()
+    paths: dict[str, str] = {}
+    for s in splits:
+        if paths.setdefault(s.sstable_id, s.data_path) != s.data_path:
+            raise ValueError(
+                f"duplicate sstable basename {s.sstable_id!r}: "
+                f"{paths[s.sstable_id]} vs {s.data_path}; outputs are "
+                f"named by basename and would collide")
+    os.makedirs(out_dir, exist_ok=True)
+    parts_root = os.path.join(out_dir, "_parts")
+    shutil.rmtree(parts_root, ignore_errors=True)
+    os.mkdir(parts_root)
+    try:
+        records = (sc.parallelize(list(enumerate(splits)), len(splits))
+                   .mapPartitions(_native_split_writer(reader, parts_root))
+                   .collect()) if splits else []
+        return _commit_parts(records, list(paths), out_dir)
+    finally:
+        shutil.rmtree(parts_root, ignore_errors=True)
 
 
 class _PbFilePartition(InputPartition):

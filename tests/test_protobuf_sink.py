@@ -8,6 +8,7 @@ import io
 import pytest
 
 from cassandra_sstable_to_protocolbuf_spark import protowire as pw
+from tests.test_cellcodec import _mixed_fixture, _write_ic_fixture
 
 
 def test_varint_roundtrip():
@@ -248,7 +249,8 @@ def test_flat_writer_wide_row_cap(spark, tmp_path):
 
 
 def test_read_keys_sorted_within_file(spark, tmp_path):
-    """Sink writes rows in key-byte order (token-order analog)."""
+    """write_cells_pb writes rows in key-byte order: its inputs carry no
+    scan order to keep."""
     from cassandra_sstable_to_protocolbuf_spark.sources.cells import (
         encode_lineitem_cells, to_binary_cells)
     from cassandra_sstable_to_protocolbuf_spark.sources.sstable_pb import (
@@ -264,3 +266,298 @@ def test_read_keys_sorted_within_file(spark, tmp_path):
             for k in batch.column("key").to_pylist()]
     assert keys == sorted(keys)
     assert len(keys) > 100
+
+
+# --------------------------------------------------------------------------
+# write_native_pb: SSTables on disk -> .proto.zst in scan (token) order
+# --------------------------------------------------------------------------
+
+def _all_dead_cells_fixture(d):
+    """A live partition whose cells are all dead (DELETED, EXPIRING, a
+    range tombstone) beside a plain live one and a deleted one."""
+    from cassandra_sstable_to_protocolbuf_spark.sources import (
+        sstable_native as N)
+
+    return N.write_sstable(d, 1, [
+        {"key": b"k-alldead", "cells": [
+            {"name": b"a", "kind": "DELETED", "timestamp": 3},
+            {"name": b"b", "kind": "EXPIRING", "timestamp": 4,
+             "value": b"x", "ttl": 60, "local_expiration": 9}],
+         "range_tombstones": [(b"c", b"d", 5, 6)]},
+        {"key": b"k-live", "cells": [
+            {"name": b"a", "kind": "LIVE", "timestamp": 1, "value": b""},
+            {"name": b"b", "kind": "LIVE", "timestamp": 0, "value": b"v"}]},
+        {"key": b"k-gone", "deletion": (1, 2), "cells": [
+            {"name": b"a", "kind": "LIVE", "timestamp": 1, "value": b"z"}]},
+    ])
+
+
+def _all_deleted_fixture(d):
+    from cassandra_sstable_to_protocolbuf_spark.sources import (
+        sstable_native as N)
+
+    return N.write_sstable(d, 1, [
+        {"key": b"k%02d" % i, "deletion": (10, 20 + i), "cells": [
+            {"name": b"a", "kind": "LIVE", "timestamp": 1, "value": b"v"}]}
+        for i in range(12)])
+
+
+SCAN_FIXTURES = {
+    "mixed_kinds": lambda d: _mixed_fixture(d)[0],
+    "all_dead_cells": _all_dead_cells_fixture,
+    "ic": _write_ic_fixture,
+    "all_deleted": _all_deleted_fixture,
+}
+
+
+def _oracle_stream(data_path):
+    """The reference's loop over the per-cell oracle scan: partitions in
+    file (token) order, deleted ones dropped, each live one a Row of its
+    LIVE cells in on-disk order -- an empty Row when none is LIVE."""
+    from cassandra_sstable_to_protocolbuf_spark.sources import (
+        sstable_native as N)
+    from tests.sstable_oracle import scan_partitions_eager
+
+    size = N.SSTableNativeReader._logical_size(data_path)
+    return b"".join(
+        pw.frame_row(pw.encode_row(part["key"], [
+            (c["name"], c["value"], c["timestamp"])
+            for c in part["cells"] if c["kind"] == "LIVE"]))
+        for part in scan_partitions_eager(data_path, 0, size)
+        if part["deletion_live"])
+
+
+def _stream_rows(stream):
+    return [pw.decode_row(b) for b in pw.iter_delimited(io.BytesIO(stream))]
+
+
+def _row_multiset(rows):
+    from collections import Counter
+
+    return Counter((k, tuple(cols)) for k, cols in rows)
+
+
+@pytest.mark.parametrize("fixture", sorted(SCAN_FIXTURES))
+def test_native_writer_scan_order_golden(spark, tmp_path, fixture):
+    """write_native_pb on one input file: the decompressed stream equals
+    frame_row(encode_row(...)) over the oracle scan in token order, the
+    metrics agree with it, and the rows equal, as a multiset with each
+    Row's cells in order, what the sorted path
+    write_cells_pb(read_native_cells(...)) writes."""
+    import os
+
+    from cassandra_sstable_to_protocolbuf_spark.sources.sstable_native import (
+        DATA_SUFFIX, read_native_cells)
+    from cassandra_sstable_to_protocolbuf_spark.sources.sstable_pb import (
+        write_cells_pb, write_native_pb)
+
+    src = str(tmp_path / "in")
+    os.makedirs(src)
+    data_path = SCAN_FIXTURES[fixture](src)
+    sid = os.path.basename(data_path)[:-len(DATA_SUFFIX)]
+    name = f"{sid}-Data.db.proto.zst"
+
+    out = str(tmp_path / "native")
+    metrics, errors = write_native_pb(spark, src, out)
+    assert errors == {}
+    assert os.listdir(out) == [name]
+    got = _decompressed(os.path.join(out, name))
+    expected = _oracle_stream(data_path)
+    assert got == expected
+    rows = _stream_rows(got)
+    (m,) = metrics
+    assert (m["sstable_id"], m["path"]) == (sid, os.path.join(out, name))
+    assert m["n_rows"] == len(rows)
+    assert m["n_cells"] == sum(len(cols) for _, cols in rows)
+    assert m["raw_bytes"] == len(got)
+    assert m["compressed_bytes"] == os.path.getsize(m["path"])
+    if fixture == "all_deleted":
+        assert rows == []
+    else:
+        assert rows and any(cols == [] for _, cols in rows)  # empty-Row quirk
+
+    sorted_out = str(tmp_path / "sorted")
+    write_cells_pb(read_native_cells(spark, src, live_only=True),
+                   sorted_out).collect()
+    sorted_path = os.path.join(sorted_out, name)
+    sorted_rows = (_stream_rows(_decompressed(sorted_path))
+                   if os.path.exists(sorted_path) else [])
+    assert _row_multiset(rows) == _row_multiset(sorted_rows)
+
+
+def _multi_split_fixture(d, generation=1, compression=None):
+    from cassandra_sstable_to_protocolbuf_spark.sources import (
+        sstable_native as N)
+
+    return N.write_sstable(d, generation, [
+        {"key": b"key-%05d" % i,
+         "deletion": (1, 2) if i % 11 == 0 else None,
+         "cells": [{"name": b"c%02d" % c,
+                    "kind": "DELETED" if (i + c) % 5 == 0 else "LIVE",
+                    "timestamp": i * 10 + c, "value": b"v%05d-%d" % (i, c)}
+                   for c in range(i % 6)]}
+        for i in range(3000)], compression=compression, chunk_length=4096)
+
+
+def test_native_writer_concatenates_split_parts(spark, tmp_path,
+                                                monkeypatch):
+    """One file planned into >= 3 splits: each split's task writes a
+    part, and the commit concatenates them in split index order (even
+    when the task records reach it in another order) into one file whose
+    decompressed stream equals the one-split stream byte for byte; both
+    read_rows_pb and a plain zstd input stream read the concatenated
+    frames; rows and cells are summed across parts; nothing but the
+    .proto.zst is left in the output directory."""
+    import os
+
+    import pyarrow as pa
+
+    from cassandra_sstable_to_protocolbuf_spark.sources import sstable_pb
+    from cassandra_sstable_to_protocolbuf_spark.sources.sstable_native import (
+        SSTableNativeReader)
+
+    src = str(tmp_path / "in")
+    _multi_split_fixture(src)
+    name = "ks-cf-ka-1-Data.db.proto.zst"
+    one = str(tmp_path / "one")
+    (m1,), _ = sstable_pb.write_native_pb(spark, src, one)
+    assert len(SSTableNativeReader(
+        src, None, live_only=True,
+        scan_parallelism=spark.sparkContext.defaultParallelism
+    ).partitions()) == 1
+
+    monkeypatch.setattr(SSTableNativeReader, "SPLIT_TARGET_MIN_BYTES", 1)
+    monkeypatch.setattr(SSTableNativeReader, "SPLIT_TARGET_MAX_BYTES",
+                        32 << 10)
+    n_splits = len(SSTableNativeReader(
+        src, None, live_only=True,
+        scan_parallelism=spark.sparkContext.defaultParallelism
+    ).partitions())
+    assert n_splits >= 3
+    commit = sstable_pb._commit_parts
+    monkeypatch.setattr(sstable_pb, "_commit_parts",
+                        lambda recs, ids, out: commit(recs[::-1], ids, out))
+    many = str(tmp_path / "many")
+    (m3,), errors = sstable_pb.write_native_pb(spark, src, many)
+    assert errors == {}
+
+    assert os.listdir(many) == [name]
+    path = os.path.join(many, name)
+    stream = _decompressed(path)
+    assert stream == _decompressed(os.path.join(one, name))
+    assert os.path.getsize(path) != os.path.getsize(os.path.join(one, name))
+    with pa.input_stream(path, compression="zstd") as zin:
+        assert zin.read() == stream
+    rows = _stream_rows(stream)
+    got = sstable_pb.read_rows_pb(spark, many).collect()
+    assert [(bytes(r.key), [(bytes(c.name), bytes(c.value), c.writeTime)
+                            for c in r.columns]) for r in got] == rows
+    for f in ("n_rows", "n_cells", "raw_bytes"):
+        assert m3[f] == m1[f]
+    assert m3["n_rows"] == len(rows) > 2000
+    assert m3["compressed_bytes"] == os.path.getsize(path)
+
+
+def _corrupt_last_chunk(data_path):
+    from cassandra_sstable_to_protocolbuf_spark.sources import (
+        sstable_native as N)
+
+    info = N.CompressionInfo.parse(
+        data_path[:-len(N.DATA_SUFFIX)] + N.COMPRESSION_SUFFIX)
+    raw = bytearray(open(data_path, "rb").read())
+    raw[info.offsets[-1] + 1] ^= 0xFF
+    open(data_path, "wb").write(bytes(raw))
+
+
+def _good_and_bad_inputs(src):
+    """ks-cf-ka-1: one live row. ks-cf-ka-2: multi-split-sized, LZ4, its
+    last chunk corrupt -- with small split targets, its earlier splits
+    read cleanly and only the last one fails."""
+    import os
+
+    from cassandra_sstable_to_protocolbuf_spark.sources import (
+        sstable_native as N)
+
+    N.write_sstable(src, 1, [{"key": b"k1", "cells": [
+        {"name": b"a", "kind": "LIVE", "timestamp": 1, "value": b"v"}]}])
+    _corrupt_last_chunk(_multi_split_fixture(
+        os.path.join(src, "nested"), generation=2, compression="lz4"))
+
+
+def test_native_writer_failfast_leaves_no_parts(spark, tmp_path):
+    """FAILFAST over one good file and one with a corrupt LZ4 chunk: the
+    call raises, and the output directory holds no `_parts`, no temp
+    file and no output for the bad input."""
+    import os
+
+    from cassandra_sstable_to_protocolbuf_spark.sources.sstable_pb import (
+        write_native_pb)
+
+    src = str(tmp_path / "in")
+    _good_and_bad_inputs(src)
+    out = str(tmp_path / "out")
+    with pytest.raises(Exception, match="checksum mismatch"):
+        write_native_pb(spark, src, out)
+    left = os.listdir(out)
+    assert "_parts" not in left
+    assert not [f for f in left if ".tmp-" in f]
+    assert "ks-cf-ka-2-Data.db.proto.zst" not in left
+
+
+def test_native_writer_permissive_drops_failed_file(spark, tmp_path,
+                                                   monkeypatch):
+    """permissive=True in one job: the corrupt file's clean splits still
+    write parts, but its error record makes the commit drop them -- no
+    output, one error naming the chunk -- while the good file converts
+    and nothing else is left behind."""
+    import os
+
+    from cassandra_sstable_to_protocolbuf_spark.sources import sstable_pb
+    from cassandra_sstable_to_protocolbuf_spark.sources.sstable_native import (
+        SSTableNativeReader)
+
+    src = str(tmp_path / "in")
+    _good_and_bad_inputs(src)
+    monkeypatch.setattr(SSTableNativeReader, "SPLIT_TARGET_MIN_BYTES", 1)
+    monkeypatch.setattr(SSTableNativeReader, "SPLIT_TARGET_MAX_BYTES",
+                        32 << 10)
+    seen = []
+    commit = sstable_pb._commit_parts
+
+    def spy(records, ids, out_dir):
+        seen.extend(records)
+        return commit(records, ids, out_dir)
+
+    monkeypatch.setattr(sstable_pb, "_commit_parts", spy)
+    out = str(tmp_path / "out")
+    metrics, errors = sstable_pb.write_native_pb(spark, src, out,
+                                                 permissive=True)
+    bad = [r for r in seen if r["sstable_id"] == "ks-cf-ka-2"]
+    assert [r for r in bad if "error" in r] and [
+        r for r in bad if "error" not in r]  # parts written, then dropped
+    assert list(errors) == ["ks-cf-ka-2"]
+    assert "checksum mismatch" in errors["ks-cf-ka-2"]
+    assert [(m["sstable_id"], m["n_rows"]) for m in metrics] == [
+        ("ks-cf-ka-1", 1)]
+    assert os.listdir(out) == ["ks-cf-ka-1-Data.db.proto.zst"]
+
+
+def test_native_writer_refuses_shared_basenames(spark, tmp_path):
+    """Outputs are named by basename: two nested inputs sharing one are
+    refused at plan time, before any task writes."""
+    import os
+
+    from cassandra_sstable_to_protocolbuf_spark.sources import (
+        sstable_native as N)
+    from cassandra_sstable_to_protocolbuf_spark.sources.sstable_pb import (
+        write_native_pb)
+
+    src = str(tmp_path / "in")
+    part = [{"key": b"k", "cells": [
+        {"name": b"a", "kind": "LIVE", "timestamp": 1, "value": b"v"}]}]
+    for sub in ("ks1", "ks2"):
+        N.write_sstable(os.path.join(src, sub), 1, part)
+    out = str(tmp_path / "out")
+    with pytest.raises(ValueError, match="duplicate sstable basename"):
+        write_native_pb(spark, src, out)
+    assert not os.path.exists(out)
