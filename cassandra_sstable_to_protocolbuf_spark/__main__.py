@@ -17,67 +17,23 @@ with one task per scan split: each task reads its byte range, drops dead
 cells and writes that range's rows in scan (token) order, as the
 reference's loop does; the driver then publishes one output per input
 (sources/sstable_pb.py write_native_pb).
+
+Every subcommand is one COMMANDS entry, which drives both parsing and
+dispatch; `-h`, at the top or after a subcommand, prints the usage.
+Flags follow their subcommand. Exit codes: 2 for a usage or operand
+error (argparse's `usage:` message: operand count, missing path, bad
+number, a flag the subcommand lacks); otherwise what the command
+returns -- 1 for `convert` errors, a failed `verify-digest` or a
+`manifest status` out of step with the walk, 3 for `check` on a
+rows-only query.
 """
 
 from __future__ import annotations
 
+import argparse
+import math
 import os
 import sys
-
-USAGE = ("usage: python -m cassandra_sstable_to_protocolbuf_spark "
-         "convert [--continue-on-error] <sstable_dir_or_data_file> <output_dir>\n"
-         "       python -m cassandra_sstable_to_protocolbuf_spark "
-         "to-parquet [--by-shard] <sstable_dir_or_data_file> <output_dir>\n"
-         "       python -m cassandra_sstable_to_protocolbuf_spark "
-         "compact <sstable_dir_or_data_file> <output_dir>\n"
-         "       python -m cassandra_sstable_to_protocolbuf_spark "
-         "merge <delta_sstable_dir_or_data_file> <landed_shard_dir>\n"
-         "       python -m cassandra_sstable_to_protocolbuf_spark "
-         "delete-keys <keys_file> <landed_shard_dir>\n"
-         "       python -m cassandra_sstable_to_protocolbuf_spark "
-         "init-versioned [--force] <sstable_dir_or_data_file> <table_dir>\n"
-         "       python -m cassandra_sstable_to_protocolbuf_spark "
-         "merge-versioned [--mor] <delta_sstable_dir_or_data_file> <table_dir>\n"
-         "       python -m cassandra_sstable_to_protocolbuf_spark "
-         "merge-into <delta_sstable_dir_or_data_file> <keys_file> <table_dir>\n"
-         "       python -m cassandra_sstable_to_protocolbuf_spark "
-         "compact-versioned <table_dir>\n"
-         "       python -m cassandra_sstable_to_protocolbuf_spark "
-         "reshard-versioned <n_shards> <table_dir>\n"
-         "       python -m cassandra_sstable_to_protocolbuf_spark "
-         "compact-respec <table_dir>\n"
-         "       python -m cassandra_sstable_to_protocolbuf_spark "
-         "restore <version> <table_dir>\n"
-         "       python -m cassandra_sstable_to_protocolbuf_spark "
-         "vacuum [--no-grace] <retain_versions> <table_dir>\n"
-         "       python -m cassandra_sstable_to_protocolbuf_spark "
-         "table-history <table_dir>\n"
-         "       python -m cassandra_sstable_to_protocolbuf_spark "
-         "sstable-info <sstable_dir_or_data_file>\n"
-         "       python -m cassandra_sstable_to_protocolbuf_spark "
-         "optimize-plan <sstable_dir>\n"
-         "       python -m cassandra_sstable_to_protocolbuf_spark "
-         "optimize [--until-stable] <sstable_dir>\n"
-         "       python -m cassandra_sstable_to_protocolbuf_spark "
-         "manifest <init|reconcile|status> <sstable_dir>\n"
-         "       python -m cassandra_sstable_to_protocolbuf_spark "
-         "maintenance-vacuum <sstable_dir> [<min_age_s>]\n"
-         "       python -m cassandra_sstable_to_protocolbuf_spark "
-         "verify-digest <sstable_dir_or_data_file>\n"
-         "       python -m cassandra_sstable_to_protocolbuf_spark "
-         "slice <sstable_dir_or_data_file> <name_start> <name_end> <output_dir>\n"
-         "       python -m cassandra_sstable_to_protocolbuf_spark "
-         "build-corpus <sf_dir> <out_dir>\n"
-         "       python -m cassandra_sstable_to_protocolbuf_spark "
-         "repair-diff <stale_sstables> <synced_sstables>\n"
-         "       python -m cassandra_sstable_to_protocolbuf_spark "
-         "analyze-events <sf_dir> <out_dir>\n"
-         "       python -m cassandra_sstable_to_protocolbuf_spark "
-         "explain <query_name> [<sf_dir>]\n"
-         "       python -m cassandra_sstable_to_protocolbuf_spark "
-         "check <query_name> <sf_dir>\n"
-         "       python -m cassandra_sstable_to_protocolbuf_spark "
-         "list-queries")
 
 
 def _die(msg: str, code: int = 2) -> "None":
@@ -419,7 +375,7 @@ def compact_versioned_cmd(table_dir: str) -> int:
     return 0
 
 
-def reshard_versioned_cmd(n_shards: str, table_dir: str) -> int:
+def reshard_versioned_cmd(n_shards: int, table_dir: str) -> int:
     """Evolve the partition spec (shard count) via a metadata-only
     commit; the table reads through read_respec until compact-respec
     relabels the files."""
@@ -427,11 +383,11 @@ def reshard_versioned_cmd(n_shards: str, table_dir: str) -> int:
         current_version, reshard_versioned)
 
     before = current_version(table_dir)
-    v = reshard_versioned(table_dir, int(n_shards))
+    v = reshard_versioned(table_dir, n_shards)
     if v == before:
         print(f"spec unchanged: table stays at v{v}")
     else:
-        print(f"resharded to {int(n_shards)} shards as v{v} "
+        print(f"resharded to {n_shards} shards as v{v} "
               f"(metadata-only; run compact-respec to relabel data files)")
     return 0
 
@@ -448,27 +404,23 @@ def compact_respec_cmd(table_dir: str) -> int:
     return 0
 
 
-def restore_cmd(version: str, table_dir: str) -> int:
+def restore_cmd(version: int, table_dir: str) -> int:
     from cassandra_sstable_to_protocolbuf_spark.versioned import restore_version
 
-    if not version.isdigit():
-        _die(f"restore expects a numeric version, got {version!r}")
-    v = restore_version(table_dir, int(version))
+    v = restore_version(table_dir, version)
     print(f"restored content of v{version} as new version v{v}")
     return 0
 
 
-def vacuum_cmd(retain: str, table_dir: str, no_grace: bool = False) -> int:
+def vacuum_cmd(retain: int, table_dir: str, no_grace: bool = False) -> int:
     """Reclaim unreferenced files. By default unreferenced files younger
     than the liveness grace survive (they may belong to an in-flight
     commit); `--no-grace` reclaims them too -- safe only when no other
     writer can be running."""
     from cassandra_sstable_to_protocolbuf_spark.versioned import vacuum
 
-    if not retain.isdigit() or int(retain) < 1:
-        _die(f"vacuum expects a positive retain count, got {retain!r}")
     kwargs = {"min_file_age_s": 0.0} if no_grace else {}
-    deleted = vacuum(table_dir, retain=int(retain), **kwargs)
+    deleted = vacuum(table_dir, retain=retain, **kwargs)
     print(f"vacuum reclaimed {len(deleted)} file(s)")
     return 0
 
@@ -819,25 +771,21 @@ def manifest_cmd(action: str, input_dir: str) -> int:
         print(f"reconciled: {len(missing)} out-of-band addition(s) "
               f"recorded" + (f": {', '.join(missing)}" if missing else ""))
         return 0
-    if action == "status":
-        entries = manifest.read_entries(input_dir)
-        walked = sorted(os.path.relpath(p, input_dir) for p in _glob.glob(
-            os.path.join(input_dir, "**", f"*{DATA_SUFFIX}"),
-            recursive=True))
-        if entries is None:
-            print(f"no manifest: discovery walks ({len(walked)} sstables "
-                  f"on disk)")
-            return 0
-        extra = sorted(set(entries) - set(walked))
-        missing = sorted(set(walked) - set(entries))
-        print(f"manifest: {len(entries)} entries "
-              f"({manifest.segment_count(input_dir)} delta segments); "
-              f"walk: {len(walked)} "
-              f"sstables; ghosts (entry, no file): {len(extra)}; "
-              f"unrecorded (file, no entry): {len(missing)}")
-        return 0 if not extra and not missing else 1
-    _die(f"unknown manifest action {action!r} (init|reconcile|status)")
-    return 2
+    entries = manifest.read_entries(input_dir)  # status
+    walked = sorted(os.path.relpath(p, input_dir) for p in _glob.glob(
+        os.path.join(input_dir, "**", f"*{DATA_SUFFIX}"), recursive=True))
+    if entries is None:
+        print(f"no manifest: discovery walks ({len(walked)} sstables "
+              f"on disk)")
+        return 0
+    extra = sorted(set(entries) - set(walked))
+    missing = sorted(set(walked) - set(entries))
+    print(f"manifest: {len(entries)} entries "
+          f"({manifest.segment_count(input_dir)} delta segments); "
+          f"walk: {len(walked)} "
+          f"sstables; ghosts (entry, no file): {len(extra)}; "
+          f"unrecorded (file, no entry): {len(missing)}")
+    return 0 if not extra and not missing else 1
 
 
 def maintenance_vacuum_cmd(input_dir: str,
@@ -865,170 +813,114 @@ def maintenance_vacuum_cmd(input_dir: str,
     return 0
 
 
+def _exists(kind: str, test=os.path.exists):
+    """argparse `type=` for a path operand: exit 2 with "<kind> does
+    not exist: <path>" unless `test(path)` holds."""
+    def check(path: str) -> str:
+        if not test(path):
+            raise argparse.ArgumentTypeError(f"{kind} does not exist: {path}")
+        return path
+    return check
+
+
+def _int_at_least(lo: int):
+    def check(s: str) -> int:
+        if not (s.isdecimal() and int(s) >= lo):
+            raise argparse.ArgumentTypeError(
+                f"expected an integer >= {lo}, got {s!r}")
+        return int(s)
+    return check
+
+
+def _age_s(s: str) -> float:
+    try:
+        age = float(s)
+    except ValueError:
+        age = math.nan
+    if not (math.isfinite(age) and age >= 0):
+        raise argparse.ArgumentTypeError(
+            f"expected a finite number of seconds >= 0, got {s!r}")
+    return age
+
+
+_PATH = _exists("input path")
+_DIR = _exists("input path", os.path.isdir)
+_TABLE = _exists("table dir", os.path.isdir)
+_LANDED = _exists("landed dir", os.path.isdir)
+_SF = _exists("sf dir", os.path.isdir)
+
+# subcommand -> (function, operands, *flags). Operands map each
+# positional, named as the function's parameter, to its argparse type
+# (or a tuple of choices); a trailing "?" makes one optional, left to the
+# function's default when omitted. A flag sets its keyword to True.
+COMMANDS = {
+    "convert": (convert, {"input_path": _PATH, "output_dir": str},
+                "--continue-on-error"),
+    "to-parquet": (to_parquet, {"input_path": _PATH, "output_dir": str},
+                   "--by-shard"),
+    "compact": (compact_cmd, {"input_path": _PATH, "output_dir": str}),
+    "merge": (merge_cmd, {"delta_path": _PATH, "landed_dir": _LANDED}),
+    "delete-keys": (delete_keys_cmd,
+                    {"keys_file": _PATH, "landed_dir": _LANDED}),
+    "init-versioned": (init_versioned_cmd,
+                       {"input_path": _PATH, "table_dir": str}, "--force"),
+    "merge-versioned": (merge_versioned_cmd,
+                        {"delta_path": _PATH, "table_dir": _TABLE}, "--mor"),
+    "merge-into": (merge_into_cmd, {"delta_path": _PATH, "keys_file": _PATH,
+                                    "table_dir": _TABLE}),
+    "compact-versioned": (compact_versioned_cmd, {"table_dir": _TABLE}),
+    "reshard-versioned": (reshard_versioned_cmd,
+                          {"n_shards": _int_at_least(1), "table_dir": _TABLE}),
+    "compact-respec": (compact_respec_cmd, {"table_dir": _TABLE}),
+    "restore": (restore_cmd,
+                {"version": _int_at_least(0), "table_dir": _TABLE}),
+    "vacuum": (vacuum_cmd, {"retain": _int_at_least(1), "table_dir": _TABLE},
+               "--no-grace"),
+    "table-history": (table_history_cmd, {"table_dir": _TABLE}),
+    "sstable-info": (sstable_info_cmd, {"input_path": _PATH}),
+    "optimize-plan": (optimize_plan_cmd, {"input_path": _DIR}),
+    "optimize": (optimize_cmd, {"input_path": _DIR}, "--until-stable"),
+    "manifest": (manifest_cmd, {"action": ("init", "reconcile", "status"),
+                                "input_dir": _DIR}),
+    "maintenance-vacuum": (maintenance_vacuum_cmd,
+                           {"input_dir": _DIR, "min_age_s?": _age_s}),
+    "verify-digest": (verify_digest_cmd, {"input_path": _PATH}),
+    "slice": (slice_cmd, {"input_path": _PATH, "name_start": str,
+                          "name_end": str, "output_dir": str}),
+    "build-corpus": (build_corpus_cmd, {"sf_dir": _SF, "out_dir": str}),
+    "repair-diff": (repair_diff_cmd,
+                    {"stale_path": _PATH, "synced_path": _PATH}),
+    "analyze-events": (analyze_events_cmd, {"sf_dir": _SF, "out_dir": str}),
+    "explain": (explain_cmd, {"query_name": str, "sf_dir?": _SF}),
+    "check": (check_cmd, {"query_name": str, "sf_dir": _SF}),
+    "list-queries": (list_queries_cmd, {}),
+}
+
+
+def _parser() -> argparse.ArgumentParser:
+    parser = argparse.ArgumentParser(
+        prog="python -m cassandra_sstable_to_protocolbuf_spark")
+    commands = parser.add_subparsers(dest="command", required=True)
+    for name, (fn, operands, *flags) in COMMANDS.items():
+        sub = commands.add_parser(name, description=fn.__doc__,
+                                  allow_abbrev=False)
+        for operand, check in operands.items():
+            sub.add_argument(
+                operand.rstrip("?"),
+                nargs="?" if operand.endswith("?") else None,
+                **({"choices": check} if isinstance(check, tuple)
+                   else {"type": check}))
+        for flag in flags:
+            sub.add_argument(flag, action="store_true")
+    return parser
+
+
 def main(argv: list[str]) -> int:
-    args = list(argv)
-    continue_on_error = "--continue-on-error" in args
-    if continue_on_error:
-        args.remove("--continue-on-error")
-    by_shard = "--by-shard" in args
-    if by_shard:
-        args.remove("--by-shard")
-    mor = "--mor" in args
-    if mor:
-        args.remove("--mor")
-    no_grace = "--no-grace" in args
-    if no_grace:
-        args.remove("--no-grace")
-    force = "--force" in args
-    if force:
-        args.remove("--force")
-    until_stable = "--until-stable" in args
-    if until_stable:
-        args.remove("--until-stable")
-    if until_stable and (len(args) != 2 or args[0] != "optimize"):
-        _die("--until-stable applies to `optimize <sstable_dir>` only")
-    if len(args) == 2 and args[0] == "compact-respec" \
-            and not (continue_on_error or by_shard or mor or no_grace
-                     or force):
-        if not os.path.isdir(args[1]):
-            _die(f"table dir does not exist: {args[1]}")
-        return compact_respec_cmd(args[1])
-    if len(args) == 3 and args[0] == "reshard-versioned" \
-            and not (continue_on_error or by_shard or mor or no_grace
-                     or force):
-        if not args[1].isdigit() or int(args[1]) < 1:
-            _die(f"n_shards must be a positive integer: {args[1]}")
-        if not os.path.isdir(args[2]):
-            _die(f"table dir does not exist: {args[2]}")
-        return reshard_versioned_cmd(args[1], args[2])
-    if len(args) == 2 and args[0] in ("table-history", "compact-versioned",
-                                      "sstable-info", "optimize-plan",
-                                      "optimize", "verify-digest") \
-            and not (continue_on_error or by_shard or mor or no_grace
-                     or force):
-        if args[0] == "sstable-info":
-            if not os.path.exists(args[1]):
-                _die(f"input path does not exist: {args[1]}")
-            return sstable_info_cmd(args[1])
-        if args[0] == "optimize-plan":
-            if not os.path.isdir(args[1]):
-                _die(f"input path does not exist: {args[1]}")
-            return optimize_plan_cmd(args[1])
-        if args[0] == "optimize":
-            if not os.path.isdir(args[1]):
-                _die(f"input path does not exist: {args[1]}")
-            return optimize_cmd(args[1], until_stable=until_stable)
-        if args[0] == "verify-digest":
-            if not os.path.exists(args[1]):
-                _die(f"input path does not exist: {args[1]}")
-            return verify_digest_cmd(args[1])
-        if not os.path.isdir(args[1]):
-            _die(f"table dir does not exist: {args[1]}")
-        return (table_history_cmd if args[0] == "table-history"
-                else compact_versioned_cmd)(args[1])
-    if args and args[0] == "manifest":
-        if len(args) != 3 or continue_on_error or by_shard or mor \
-                or no_grace or force or until_stable:
-            _die(USAGE)
-        if not os.path.isdir(args[2]):
-            _die(f"input path does not exist: {args[2]}")
-        return manifest_cmd(args[1], args[2])
-    if args and args[0] == "maintenance-vacuum":
-        if len(args) not in (2, 3) or continue_on_error or by_shard \
-                or mor or no_grace or force or until_stable:
-            _die(USAGE)
-        if not os.path.isdir(args[1]):
-            _die(f"input path does not exist: {args[1]}")
-        return maintenance_vacuum_cmd(
-            args[1], float(args[2]) if len(args) == 3 else 3600.0)
-    if args and args[0] == "list-queries":
-        if len(args) != 1:
-            _die(USAGE)
-        return list_queries_cmd()
-    if args and args[0] == "explain":
-        if len(args) not in (2, 3):
-            _die(USAGE)
-        if len(args) == 3 and not os.path.isdir(args[2]):
-            _die(f"sf dir does not exist: {args[2]}")
-        return explain_cmd(*args[1:])
-    if args and args[0] == "check":
-        if len(args) != 3:
-            _die(USAGE)
-        if not os.path.isdir(args[2]):
-            _die(f"sf dir does not exist: {args[2]}")
-        return check_cmd(args[1], args[2])
-    if args and args[0] == "slice":
-        if len(args) != 5 or continue_on_error or by_shard or mor \
-                or no_grace or force or until_stable:
-            _die(USAGE)
-        if not os.path.exists(args[1]):
-            _die(f"input path does not exist: {args[1]}")
-        return slice_cmd(args[1], args[2], args[3], args[4])
-    if args and args[0] == "merge-into":
-        if len(args) != 4:
-            _die(USAGE)
-        for p in (args[1], args[2]):
-            if not os.path.exists(p):
-                _die(f"input path does not exist: {p}")
-        if not os.path.isdir(args[3]):
-            _die(f"table dir does not exist: {args[3]}")
-        return merge_into_cmd(args[1], args[2], args[3])
-    commands = ("convert", "to-parquet", "compact", "merge", "delete-keys",
-                "init-versioned", "merge-versioned", "restore", "vacuum",
-                "build-corpus", "repair-diff", "analyze-events")
-    if len(args) != 3 or args[0] not in commands:
-        _die(USAGE)
-    cmd, input_path, output_dir = args
-    if cmd != "convert" and continue_on_error:
-        _die(USAGE)
-    if cmd != "to-parquet" and by_shard:
-        _die(USAGE)
-    if cmd != "merge-versioned" and mor:
-        _die(USAGE)
-    if cmd != "vacuum" and no_grace:
-        _die(USAGE)
-    if cmd != "init-versioned" and force:
-        _die(USAGE)
-    if cmd in ("restore", "vacuum"):
-        # first operand is a number, not a path
-        if not os.path.isdir(output_dir):
-            _die(f"table dir does not exist: {output_dir}")
-        if cmd == "vacuum":
-            return vacuum_cmd(input_path, output_dir, no_grace=no_grace)
-        return restore_cmd(input_path, output_dir)
-    if not os.path.exists(input_path):
-        _die(f"input path does not exist: {input_path}")
-    if cmd == "build-corpus":
-        if not os.path.isdir(input_path):
-            _die(f"sf dir does not exist: {input_path}")
-        return build_corpus_cmd(input_path, output_dir)
-    if cmd == "repair-diff":
-        if not os.path.exists(output_dir):
-            _die(f"input path does not exist: {output_dir}")
-        return repair_diff_cmd(input_path, output_dir)
-    if cmd == "analyze-events":
-        if not os.path.isdir(input_path):
-            _die(f"sf dir does not exist: {input_path}")
-        return analyze_events_cmd(input_path, output_dir)
-    if cmd == "init-versioned":
-        return init_versioned_cmd(input_path, output_dir, force=force)
-    if cmd == "merge-versioned":
-        if not os.path.isdir(output_dir):
-            _die(f"table dir does not exist: {output_dir}")
-        return merge_versioned_cmd(input_path, output_dir, mor=mor)
-    if cmd == "to-parquet":
-        return to_parquet(input_path, output_dir, by_shard=by_shard)
-    if cmd == "compact":
-        return compact_cmd(input_path, output_dir)
-    if cmd == "merge":
-        if not os.path.isdir(output_dir):
-            _die(f"landed dir does not exist: {output_dir}")
-        return merge_cmd(input_path, output_dir)
-    if cmd == "delete-keys":
-        if not os.path.isdir(output_dir):
-            _die(f"landed dir does not exist: {output_dir}")
-        return delete_keys_cmd(input_path, output_dir)
-    return convert(input_path, output_dir, continue_on_error)
+    args = vars(_parser().parse_args(argv))
+    fn = COMMANDS[args.pop("command")][0]
+    # an omitted optional operand parses as None, so the function's own
+    # default applies (a string default would go through the type check)
+    return fn(**{k: v for k, v in args.items() if v is not None})
 
 
 if __name__ == "__main__":

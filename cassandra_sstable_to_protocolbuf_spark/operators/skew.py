@@ -45,11 +45,3 @@ def salted_join(skewed: DataFrame, other: DataFrame, on: str,
         "_salt", F.explode(F.array(*[F.lit(i) for i in range(salt_factor)])))
     joined = salted.join(replicated, [on, "_salt"], how)
     return joined.drop("_salt")
-
-
-def top_heavy_keys(df: DataFrame, key_col: str, threshold_rows: int) -> DataFrame:
-    """Diagnostic: keys whose row count exceeds threshold (the candidates
-    that make a shuffle partition spill)."""
-    return (df.groupBy(key_col).agg(F.count(F.lit(1)).alias("n_rows"))
-            .filter(F.col("n_rows") > threshold_rows)
-            .orderBy(F.desc("n_rows")))

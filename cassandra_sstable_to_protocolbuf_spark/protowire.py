@@ -689,30 +689,3 @@ def iter_decoded_batches(stream, sstable_id: str,
             # the first cut of this decoder into 3+ GB of memcpy)
             buf = buf[o:]
             o = 0
-
-
-def iter_delimited(stream) -> Iterator[bytes]:
-    """Yield message bodies from a length-delimited stream (file-like)."""
-    while True:
-        # read one varint byte-at-a-time off the stream
-        shift = 0
-        length = 0
-        first = stream.read(1)
-        if not first:
-            return
-        b = first[0]
-        while True:
-            length |= (b & 0x7F) << shift
-            if not b & 0x80:
-                break
-            shift += 7
-            if shift > 63:
-                raise ValueError("varint too long")
-            nxt = stream.read(1)
-            if not nxt:
-                raise ValueError("truncated varint at EOF")
-            b = nxt[0]
-        body = stream.read(length)
-        if len(body) != length:
-            raise ValueError("truncated message body")
-        yield body

@@ -6,7 +6,11 @@ The reader decodes every split through the vectorized codec
 walk of the same framing -- the shape of the reference's lazy column
 iterator (SSTableIdentityIteratorPatched.computeNext) -- so tests state
 what read() must produce without sharing a line of decode code with it.
-O(one cell) memory: a partition's cells are a lazy generator."""
+O(one cell) memory: a partition's cells are a lazy generator.
+
+iter_delimited is the read half of the per-row protobuf oracle: it
+splits a varint-delimited stream back into the message bodies that
+protowire.frame_row(encode_row(...)) framed."""
 
 from __future__ import annotations
 
@@ -165,3 +169,30 @@ def read_rows(reader, splits=None) -> list[tuple]:
         splits = reader.partitions()
     return [r for s in splits for b in reader.read(s)
             for r in zip(*(c.to_pylist() for c in b.columns))]
+
+
+def iter_delimited(stream) -> Iterator[bytes]:
+    """Yield message bodies from a length-delimited stream (file-like)."""
+    while True:
+        # read one varint byte-at-a-time off the stream
+        shift = 0
+        length = 0
+        first = stream.read(1)
+        if not first:
+            return
+        b = first[0]
+        while True:
+            length |= (b & 0x7F) << shift
+            if not b & 0x80:
+                break
+            shift += 7
+            if shift > 63:
+                raise ValueError("varint too long")
+            nxt = stream.read(1)
+            if not nxt:
+                raise ValueError("truncated varint at EOF")
+            b = nxt[0]
+        body = stream.read(length)
+        if len(body) != length:
+            raise ValueError("truncated message body")
+        yield body

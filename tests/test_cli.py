@@ -10,7 +10,7 @@ import sys
 import pytest
 
 from cassandra_sstable_to_protocolbuf_spark.sources import sstable_native as N
-from tests.sstable_oracle import scan_partitions_eager
+from tests.sstable_oracle import iter_delimited, scan_partitions_eager
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -59,7 +59,7 @@ def test_convert_end_to_end(tmp_path):
 
     with pa.input_stream(os.path.join(out, files[0]), compression=None) as raw, \
             pa.CompressedInputStream(raw, "zstd") as zin:
-        rows = [pw.decode_row(b) for b in pw.iter_delimited(zin)]
+        rows = [pw.decode_row(b) for b in iter_delimited(zin)]
     assert rows == [(b"k1", [(b"a", b"x", 10)])]
 
 

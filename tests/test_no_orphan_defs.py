@@ -18,10 +18,6 @@ PACKAGE = REPO / "cassandra_sstable_to_protocolbuf_spark"
 ALLOWED = {
     "S3CommitBackend": "S3 conditional-write commit backend a deployment "
                        "installs; tested against a mock S3 transport",
-    "iter_delimited": "per-frame reader of the delimited stream, the "
-                      "decode half of the per-row golden oracle",
-    "top_heavy_keys": "skew diagnostic: the keys that make a shuffle "
-                      "partition spill",
     "read_event_stream": "file-based event stream source of the "
                          "streaming library surface",
     "hourly_windowed_agg": "streaming twin of relational.events_hourly",

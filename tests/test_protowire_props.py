@@ -8,6 +8,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from cassandra_sstable_to_protocolbuf_spark import protowire as pw
+from tests.sstable_oracle import iter_delimited
 
 cell = st.tuples(
     st.binary(min_size=0, max_size=64),
@@ -36,7 +37,7 @@ def test_stream_roundtrip(rows):
     for key, cells in rows:
         buf.write(pw.frame_row(pw.encode_row(key, cells)))
     buf.seek(0)
-    decoded = [pw.decode_row(b) for b in pw.iter_delimited(buf)]
+    decoded = [pw.decode_row(b) for b in iter_delimited(buf)]
     assert decoded == [(k, list(cs)) for k, cs in rows]
 
 

@@ -51,14 +51,6 @@ def test_salted_join_rejects_right_and_full_outer(spark):
             salted_join(li, orders, "l_orderkey", how=how)
 
 
-def test_top_heavy_keys_diagnostic(spark):
-    from cassandra_sstable_to_protocolbuf_spark.operators.skew import top_heavy_keys
-
-    li = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet")
-    hot = top_heavy_keys(li, "l_orderkey", threshold_rows=5).collect()
-    assert all(r.n_rows > 5 for r in hot)
-
-
 def test_bucketed_join_is_exchange_free(spark, tmp_path):
     """Pre-bucketing both sides on the join key removes the shuffle --
     the co-location strategy for repeated big-big joins at scale."""

@@ -21,7 +21,8 @@ import pytest
 from cassandra_sstable_to_protocolbuf_spark import protowire
 from cassandra_sstable_to_protocolbuf_spark.sources import sstable_native as N
 from cassandra_sstable_to_protocolbuf_spark.sources import sstable_pb as PB
-from tests.sstable_oracle import scan_partitions, scan_partitions_eager
+from tests.sstable_oracle import (
+    iter_delimited, scan_partitions, scan_partitions_eager)
 
 PIN_BYTES = 8 * 1024 * 1024  # generous vs the ~40 MB streamed through
 
@@ -42,7 +43,7 @@ def _pb_metrics(write, batches):
 def _pb_rows(path):
     with pa.input_stream(path, compression="zstd") as f:
         return [protowire.decode_row(body)
-                for body in protowire.iter_delimited(f)]
+                for body in iter_delimited(f)]
 
 
 def test_pb_sink_streams_per_batch(tmp_path):
@@ -91,7 +92,7 @@ def test_pb_sink_streams_per_batch(tmp_path):
     # decode back: frame count matches, keys arrive in written order
     n = 0
     with pa.input_stream(m["path"], compression="zstd") as f:
-        for body in protowire.iter_delimited(f):
+        for body in iter_delimited(f):
             key, cols = protowire.decode_row(body)
             assert key == b"k%010d" % n
             assert len(cols) == 1
