@@ -40,12 +40,17 @@ Murmur3Partitioner (Cassandra's hash3_x64_128 with its signed-tail-byte
 quirk, the reference's configured default, cassandra.yaml:91) are
 implemented; Statistics.db records which one wrote the file.
 
-Scale design: InputPartitions are BYTE-RANGE SPLITS of Data.db computed
+Scale design: the scan plans BYTE-RANGE SPLITS of Data.db computed
 from Index.db entries (the reference's index-summary chunking analog,
-SSTableReaderPatched.java:123-178) -- a 100 GB sstable becomes many
-parallel scan tasks, each seeking to its first partition boundary and
-reading a bounded extent, instead of the reference's one thread per
-file. Cell decoding streams lazily: O(one cell) memory, matching the
+SSTableReaderPatched.java:123-178), each seeking to its first partition
+boundary and reading a bounded extent. The DataSource then packs runs of
+consecutive splits into Spark tasks: max(defaultParallelism,
+bytes / SPLIT_TARGET_MAX_BYTES) of them, never more than there are
+splits, balanced by logical bytes (the rule of Spark's own
+FilePartition.getFilePartitions). A 100 GB sstable thus becomes many
+parallel scan tasks instead of the reference's one thread per file,
+while a fine split plan does not pay one Python task start per split.
+Cell decoding streams lazily: O(one cell) memory, matching the
 reference's iterator pipeline.
 """
 
@@ -2243,7 +2248,13 @@ def discover_data_files(path: str) -> list[str]:
 
 
 class SSTableNativeReader(DataSourceReader):
-    """One task per byte-range split; splits computed from Index.db.
+    """Byte-range splits computed from Index.db, and the read of one.
+
+    partitions() is the flat split list: the unit of planning, of
+    PERMISSIVE error rows and of write_native_pb's output parts. The
+    DataSource does not hand it to Spark as is: _PackedNativeReader
+    packs runs of consecutive splits into one task each, so the number
+    of Python tasks follows cores and bytes, not splits.
 
     live_only=True pushes the reference's F1/F2 filters INTO the source
     (manual predicate pushdown, the analog of its early filtering before
@@ -2257,8 +2268,11 @@ class SSTableNativeReader(DataSourceReader):
     # MAX mirrors Spark's own files.maxPartitionBytes default (128 MiB)
     # -- at 100 TB the split count is bytes-derived, never a constant;
     # MIN keeps ~parallelism-many splits on small inputs, where the
-    # per-task Python-runner handshake (measured ~0.3 s/task on this
-    # host) would otherwise dominate a 2 MiB split's 50 ms of decode.
+    # per-task Python-runner handshake (70-120 ms of wall per task on a
+    # 4-core host, barely overlapping across tasks) would otherwise
+    # dominate a 2 MiB split's 50 ms of decode. A DataSource scan packs
+    # splits into tasks anyway (_PackedNativeReader), so an explicit
+    # fine partitions_per_split does not multiply that cost either.
     SPLIT_TARGET_MIN_BYTES = 1 << 20
     SPLIT_TARGET_MAX_BYTES = 128 << 20
 
@@ -3211,6 +3225,66 @@ class SSTableNativeReader(DataSourceReader):
             yield from decode_runs(pending)
 
 
+class _SplitPack(InputPartition):
+    """One Spark task's run of consecutive splits."""
+
+    def __init__(self, splits: list):
+        self.splits = splits
+
+
+def _split_bytes(split) -> int:
+    """Logical Data.db bytes a split reads (0 for a plan-time error
+    split)."""
+    if isinstance(split, _SliceRunSplit):
+        return sum(e - s for s, e in split.runs)
+    return split.end - split.start
+
+
+def pack_splits(splits: list, n_tasks: int) -> list[list]:
+    """Cut `splits` into n_tasks (1 <= n_tasks <= len(splits)) non-empty
+    runs of CONSECUTIVE splits with near-equal logical bytes: each split
+    joins the run whose share of the byte total holds its midpoint,
+    never skipping a run and always leaving one split per run still to
+    fill. Keeping runs consecutive keeps the scan's row order."""
+    weights = [_split_bytes(s) for s in splits]
+    total = sum(weights) or 1
+    packs: list[list] = []
+    acc = 0
+    for i, (split, w) in enumerate(zip(splits, weights)):
+        want = min((2 * acc + w) * n_tasks // (2 * total), n_tasks - 1)
+        t = min(max(want, n_tasks - len(splits) + i, len(packs) - 1),
+                len(packs))
+        if t == len(packs):
+            packs.append([])
+        packs[t].append(split)
+        acc += w
+    return packs
+
+
+class _PackedNativeReader(SSTableNativeReader):
+    """The DataSource's reader: one Spark task per _SplitPack. A Python
+    task costs 70-120 ms of start-up that overlaps poorly with other
+    tasks, so one task per split let 37 splits of one sstable on 4
+    cores scan slower than a single split. The task count is
+    min(splits, max(scan_parallelism, bytes / SPLIT_TARGET_MAX_BYTES)),
+    and read() drains a pack's splits in order through the per-split
+    read(): row order is the flat plan's, and PERMISSIVE still gives
+    one ERROR row per bad split without dropping its pack-mates."""
+
+    def partitions(self):
+        splits = super().partitions()
+        total = sum(_split_bytes(s) for s in splits)
+        n_tasks = min(len(splits), max(
+            self.scan_parallelism, -(-total // self.SPLIT_TARGET_MAX_BYTES)))
+        return [_SplitPack(run) for run in pack_splits(splits, n_tasks)]
+
+    def read(self, pack) -> Iterator:
+        if pack is None:  # pushed filters matched nothing: zero packs
+            return
+        for split in pack.splits:
+            yield from super().read(split)
+
+
 class SSTableNativeDataSource(DataSource):
     """spark.read.format("sstable_cassandra")
          .option("partitionsPerSplit", n).load(dir)"""
@@ -3254,7 +3328,7 @@ class SSTableNativeDataSource(DataSource):
             "trustforeignnamebounds", "false")).lower() == "true"
         composite = str(self.options.get(
             "compositecomparator", "false")).lower() == "true"
-        return SSTableNativeReader(path, pps, live_only, expected,
+        return _PackedNativeReader(path, pps, live_only, expected,
                                    token_range=token_range,
                                    permissive=(mode == "PERMISSIVE"),
                                    verify_digest=verify,

@@ -239,6 +239,77 @@ def test_split_parallelism_equals_whole(spark, fixture_sstables):
     assert split.exceptAll(whole).count() == 0
 
 
+def test_packed_tasks_keep_split_rows_in_order(spark, fixture_sstables,
+                                               tmp_path):
+    """The DataSource packs runs of consecutive splits into Spark tasks;
+    that must not change what a scan yields. With one split per
+    partition, the frame's rows are reader.read(split) over
+    reader.partitions(), in that exact order: in FAILFAST, and in
+    PERMISSIVE with one corrupt file, where the bad split still gives
+    its own ERROR row and the good splits packed with it still stand.
+    Once there are more splits than defaultParallelism, fewer tasks run
+    than splits were planned."""
+    import os
+    import shutil
+    import struct
+
+    bad = str(tmp_path / "bad")
+    shutil.copytree(fixture_sstables, bad)
+    data = os.path.join(bad, "ks-cf-ka-1-Data.db")
+    raw = bytearray(open(data, "rb").read())
+    at = raw.find(b"zombie") - 4  # beta's value length runs off the file
+    raw[at:at + 4] = struct.pack(">i", len(raw))
+    with open(data, "wb") as f:
+        f.write(raw)
+
+    cores = spark.sparkContext.defaultParallelism
+    for path, mode in ((fixture_sstables, "FAILFAST"), (bad, "PERMISSIVE")):
+        reader = N.SSTableNativeReader(path, 1,
+                                       permissive=(mode == "PERMISSIVE"))
+        splits = reader.partitions()
+        assert len(splits) == 6  # one per partition
+        want = read_rows(reader, splits)
+        if mode == "PERMISSIVE":
+            kinds = [r[5] for r in want]
+            assert kinds.count("ERROR") == 1 and kinds.count("LIVE") >= 3
+        df = N.read_native_cells(spark, path, partitions_per_split=1,
+                                 mode=mode)
+        assert df.rdd.getNumPartitions() == min(len(splits), cores)
+        assert [tuple(r) for r in df.collect()] == want
+        # packing whatever the host's core count: two tasks, six splits
+        two = (spark.read.format("sstable_cassandra")
+               .option("partitionsPerSplit", "1")
+               .option("scanParallelism", "2")
+               .option("mode", mode).load(path))
+        assert two.rdd.getNumPartitions() == 2
+        assert [tuple(r) for r in two.collect()] == want
+
+def test_pack_rule_follows_cores_and_bytes(monkeypatch):
+    """The DataSource runs min(splits, max(scan_parallelism,
+    ceil(bytes / SPLIT_TARGET_MAX_BYTES))) tasks, each a non-empty run
+    of consecutive splits, balanced by logical bytes."""
+    mb = 1 << 20
+
+    def plan(sizes, cores):
+        offs = np.cumsum([0] + sizes).tolist()
+        splits = [N._SSTableSplit("s", "p", a, b)
+                  for a, b in zip(offs, offs[1:])]
+        monkeypatch.setattr(N.SSTableNativeReader, "partitions",
+                            lambda self: splits)
+        packs = N._PackedNativeReader("unused", None,
+                                      scan_parallelism=cores).partitions()
+        assert [s for p in packs for s in p.splits] == splits
+        return [[s.end - s.start for s in p.splits] for p in packs]
+
+    assert plan([], 4) == []
+    assert len(plan([mb] * 3, 4)) == 3  # never more tasks than splits
+    assert len(plan([mb] * 37, 4)) == 4  # small input: one per core
+    big = plan([100 * mb] * 40, 4)  # 4000 MiB: bytes set the count
+    assert len(big) == -(-4000 // 128)
+    assert {len(p) for p in big} == {1, 2}
+    # a heavy split runs alone; the light ones share the other task
+    assert plan([10 * mb] + [mb] * 9, 2) == [[10 * mb], [mb] * 9]
+
 def test_lz4_compressed_roundtrip(spark, tmp_path):
     """S6: lz4-block-compressed Data.db (CompressionInfo.db chunk map,
     Adler32 checksums) reads identically to the uncompressed form,
