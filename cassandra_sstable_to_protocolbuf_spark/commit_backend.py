@@ -1,54 +1,40 @@
-"""Commit-seam storage backends for the versioned table's OCC protocol.
+"""Storage primitives for the commit protocols: the versioned table's
+OCC commits, the sstable manifest's CAS root and the maintenance
+transaction log.
 
-The round-4 audit's #1 forward-looking gap: every commit primitive in
-`versioned.py` was POSIX-rename-based (O_EXCL claim, temp+fsync+rename
-publish), and none of those primitives exist on S3/GCS -- where a 100 TB
-deployment actually keeps its table roots. This module is the seam: the
-OCC *protocol* (claim version N exclusively -> publish the current
-pointer -> reclaim crashed claims after a grace window) stays in
-`versioned.py`, and the five storage primitives it needs live behind
-`CommitBackend`:
+The PROTOCOLS (claim version N exclusively -> publish the current
+pointer -> reclaim crashed claims after a grace window; CAS a manifest
+root; claim, commit and retire a transaction) live in `versioned.py`,
+`manifest.py` and `txnlog.py`. The storage primitives they need live on
+`PosixCommitBackend`, for local/NFS filesystems where O_EXCL and rename
+are atomic:
 
   read_text / exists / listdir  -- snapshot reads
-  put_if_absent                 -- the CAS claim (POSIX: O_EXCL create;
-                                   S3: PutObject + If-None-Match:*;
-                                   GCS: x-goods-if-generation-match:0)
+  put_if_absent                 -- the CAS claim (O_EXCL create)
   put_atomic                    -- last-writer-wins pointer publish
-                                   (POSIX: temp+fsync+rename; object
-                                   stores: plain PUT, which is atomic)
+                                   (temp+fsync+rename)
+  put_if_match                  -- CAS replace (compare under a
+                                   sidecar flock, then put_atomic)
+  put_atomic_fenced             -- overwrite under the same flock
   steal                         -- at-most-once reclaim of a crashed
-                                   claim (POSIX: rename-then-unlink; S3:
-                                   conditional PUT of a caller-unique
-                                   reclaim TOMBSTONE with If-Match:
-                                   <etag>, left in place -- GP buckets
-                                   have no conditional delete, and an
-                                   unconditional one could land after
-                                   another writer re-created the key)
+                                   claim (rename-then-unlink)
   claim                         -- tombstone-aware CAS create (the
                                    post-steal claim path)
   age_s / delete                -- grace-window reclaim + vacuum
 
-Two implementations ship:
-
-* PosixCommitBackend -- the default; byte-for-byte the behavior
-  versioned.py had inline before the seam existed (all versioned gates
-  and tests/test_versioned_concurrency.py pin it).
-* InMemoryCommitBackend -- an object-store-SHAPED backend: no rename, no
-  directories, conditional puts under a lock, exactly the primitive set
-  an S3 conditional-write implementation would map onto. It exists to
-  prove the protocol never leans on a POSIX-only primitive through the
-  seam (tests/test_commit_backend.py runs the OCC concurrency battery
-  against both), and as the drop-in template for a real S3 backend.
+Protocol layers reach the backend through get_commit_backend(), the one
+place tests substitute a fake: tests/memory_commit_backend.py holds a
+rename-free in-memory fake (flat keys, conditional puts under a lock)
+that the contract battery and the concurrency drills also run against,
+so the protocols are shown not to lean on rename or directories.
 
 Only the PROTOCOL plane routes through the backend. The data plane
-(parquet files under data/c{N}) is written and read by Spark's own
-Hadoop filesystem layer, which already speaks s3a/gs natively -- the
-seam covers exactly the part Spark does not.
+(sstable components, parquet files under data/c{N}) is written and read
+by Spark's own filesystem layer.
 """
 
 from __future__ import annotations
 
-import abc
 import contextlib
 import json
 import os
@@ -58,19 +44,20 @@ import time
 import uuid
 
 # -- reclaim tombstones ---------------------------------------------------
-# Backends without an at-most-once *removal* primitive (S3 GP buckets:
-# conditional PUT yes, conditional DELETE no) implement steal() as a
-# conditional PUT of a recognized, caller-unique TOMBSTONE body that is
-# left in place -- no stealer ever issues a DELETE, so a delayed request
-# can never destroy a claim another writer re-created at the same key
-# (advisor r9, high). The only transition out of a tombstone is the CAS
-# replace inside claim(), which arbitrates racers exactly once.
+# Protocol objects are RETIRED, never unconditionally deleted: a delete
+# decided on an earlier read can land after another writer re-created
+# the key and destroy that writer's claim (advisor r9, high).
+# Retirement CAS-replaces the object's exact bytes with a recognized,
+# caller-unique TOMBSTONE body that is left in place; the only
+# transition out of a tombstone is the CAS replace inside claim(), which
+# arbitrates racers exactly once.
 _TOMBSTONE_FIELD = "reclaimed-by"
 
 
 def make_reclaim_tombstone(guards: list[str] | None = None) -> str:
-    """A caller-unique tombstone body (the uuid makes lost-response
-    body-compare disambiguation sound, like every other claim body).
+    """A caller-unique tombstone body (the uuid rules out ABA: a
+    claimer CAS-ing against a tombstone it read earlier can never match
+    a later, re-written one, like every other claim body).
     `guards` optionally records which data files the retired object
     referred to: a vacuum may hard-DELETE a tombstone only when it can
     prove the path can never be claimed again (every guarded file
@@ -102,121 +89,14 @@ def tombstone_guards(text: str) -> list[str] | None:
     return json.loads(text).get("guards")
 
 
-class CommitBackend(abc.ABC):
-    """Storage primitives for the versioned-table commit protocol. Paths
-    are opaque strings (POSIX paths or object keys); implementations
-    must make put_if_absent and steal linearizable -- the protocol's
-    correctness reduces to those two being at-most-once."""
+class PosixCommitBackend:
+    """Storage primitives for the commit protocols on local/NFS
+    filesystems, where O_EXCL and rename are atomic. Paths are plain
+    POSIX paths. put_if_absent and steal are linearizable -- the
+    protocols' correctness reduces to those two being at-most-once."""
 
-    @abc.abstractmethod
     def read_text(self, path: str) -> str:
         """Full contents; raises FileNotFoundError when absent."""
-
-    @abc.abstractmethod
-    def exists(self, path: str) -> bool: ...
-
-    @abc.abstractmethod
-    def listdir(self, dirpath: str) -> list[str]:
-        """Immediate child names under a prefix; raises
-        FileNotFoundError for a prefix that was never written."""
-
-    @abc.abstractmethod
-    def put_if_absent(self, path: str, text: str) -> bool:
-        """CAS create: True if this call created the object, False if it
-        already existed (the loser of a race). Never overwrites.
-
-        Contract: `text` must be CALLER-UNIQUE (the protocol layers
-        embed a uuid -- versioned manifests a `writer`, txnlog claims an
-        `owner`). Backends whose transport can lose a success response
-        (S3) disambiguate a retried CAS by reading the object back and
-        byte-comparing; identical bodies from different callers would
-        let both believe they won."""
-
-    @abc.abstractmethod
-    def put_atomic(self, path: str, text: str) -> None:
-        """Atomic last-writer-wins publish: readers see the old or the
-        new contents, never a prefix."""
-
-    @abc.abstractmethod
-    def put_if_match(self, path: str, text: str, expected: str) -> bool:
-        """CAS replace: write `text` iff the object currently holds
-        exactly `expected`. True when this call's write landed; False
-        when the contents differ or the object is absent (the caller
-        re-reads and retries -- the optimistic-concurrency loop).
-        Same caller-unique contract as put_if_absent: `text` must embed
-        a nonce so lost-response disambiguation can identify its own
-        write (manifest updates carry a `rev` uuid)."""
-
-    @abc.abstractmethod
-    def steal(self, path: str) -> bool:
-        """At-most-once reclaim of an existing object: of N concurrent
-        stealers exactly one returns True. Postcondition: the object is
-        either ABSENT (backends with an atomic removal primitive) or
-        holds a reclaim TOMBSTONE (is_reclaim_tombstone) -- either way
-        the key is claimable via claim(). Stealers must NEVER issue an
-        unconditional delete that could land after another writer
-        re-creates the key: on object stores the tombstone stays in
-        place and only the claim() CAS replaces it (advisor r9). A
-        stealer that observes an existing tombstone loses cleanly
-        (another reclaim is in flight)."""
-
-    @abc.abstractmethod
-    def delete(self, path: str) -> None:
-        """Idempotent removal (vacuum plane)."""
-
-    def claim(self, path: str, text: str) -> bool:
-        """Tombstone-aware CAS create: the claim primitive protocol
-        layers use after a steal(). put_if_absent, falling back to a
-        CAS replace when the key holds a reclaim tombstone (a stealer
-        won but has not -- or crashed before -- re-claiming; on object
-        stores the tombstone is steal's normal postcondition). Of N
-        racers on one tombstone the put_if_match arbitrates exactly
-        one winner. `text` must be caller-unique like every claim
-        body."""
-        for _ in range(2):
-            if self.put_if_absent(path, text):
-                return True
-            try:
-                cur = self.read_text(path)
-            except FileNotFoundError:
-                continue  # removed between the 412 and the read: retry
-            if is_reclaim_tombstone(cur):
-                return self.put_if_match(path, text, cur)
-            return False
-        return False
-
-    def put_atomic_fenced(self, path: str, text: str) -> None:
-        """Last-writer-wins overwrite that SERIALIZES with concurrent
-        put_if_match CAS attempts on the same path. On backends whose
-        CAS is natively atomic against any PUT (object stores: the
-        overwrite changes the ETag, so an in-flight If-Match loses)
-        this is just put_atomic; backends whose CAS is lock-based
-        (POSIX flock) must take the same lock so a reseed cannot be
-        silently overwritten by an in-flight CAS holding a pre-reseed
-        snapshot (advisor r9). Use for manifest init/reseed."""
-        self.put_atomic(path, text)
-
-    @abc.abstractmethod
-    def age_s(self, path: str) -> float | None:
-        """Seconds since the object was written, or None if absent --
-        the liveness signal for the stale-claim grace window."""
-
-    def data_exists(self, path: str) -> bool:
-        """Existence probe for DATA-plane files referenced by protocol
-        objects (manifest entries). The data plane is Spark's
-        filesystem by default -- os.path.exists, matching how read
-        tasks actually open sstable components -- while protocol reads
-        go through the backend; a deployment whose sstable data lives
-        in the same object store as the protocol plane overrides this
-        to HEAD the store, keeping probe and read on one authority."""
-        return os.path.exists(path)
-
-
-class PosixCommitBackend(CommitBackend):
-    """The default: local/NFS filesystems where O_EXCL and rename are
-    atomic. Exactly the inline primitives versioned.py grew up on."""
-
-    def read_text(self, path: str) -> str:
         with open(path, encoding="utf-8") as f:
             return f.read()
 
@@ -224,9 +104,21 @@ class PosixCommitBackend(CommitBackend):
         return os.path.exists(path)
 
     def listdir(self, dirpath: str) -> list[str]:
+        """Immediate child names of a directory; raises
+        FileNotFoundError for one that was never written."""
         return os.listdir(dirpath)
 
     def put_if_absent(self, path: str, text: str) -> bool:
+        """CAS create: True if this call created the object, False if it
+        already existed (the loser of a race). Never overwrites.
+
+        Contract: `text` must be CALLER-UNIQUE (the protocol layers
+        embed a uuid -- versioned manifests a `writer`, txnlog claims an
+        `owner`, manifest roots a `rev`). Callers identify their own
+        claim by reading it back (versioned._verify_claim) and CAS
+        against bytes they read earlier (put_if_match); identical bodies
+        from different callers would let a stalled writer take a rival's
+        re-created claim for its own."""
         os.makedirs(os.path.dirname(path), exist_ok=True)
         try:
             fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
@@ -239,6 +131,8 @@ class PosixCommitBackend(CommitBackend):
         return True
 
     def put_atomic(self, path: str, text: str) -> None:
+        """Atomic last-writer-wins publish: readers see the old or the
+        new contents, never a prefix."""
         # same-directory temp + fsync + rename: POSIX's only atomic
         # publish primitive
         d = os.path.dirname(path)
@@ -298,6 +192,13 @@ class PosixCommitBackend(CommitBackend):
             lock.close()
 
     def put_if_match(self, path: str, text: str, expected: str) -> bool:
+        """CAS replace: write `text` iff the object currently holds
+        exactly `expected`. True when this call's write landed; False
+        when the contents differ or the object is absent (the caller
+        re-reads and retries -- the optimistic-concurrency loop).
+        Same caller-unique contract as put_if_absent: `text` must embed
+        a nonce (manifest updates carry a `rev` uuid), or a later
+        writer's identical bytes would satisfy a stale `expected`."""
         # POSIX has no native compare-and-swap on file contents: take a
         # sidecar flock (auto-released on crash -- no deadlock), compare
         # under it, publish via the same temp+fsync+rename primitive.
@@ -313,19 +214,26 @@ class PosixCommitBackend(CommitBackend):
             return True
 
     def put_atomic_fenced(self, path: str, text: str) -> None:
-        # reseed/overwrite under the SAME lock put_if_match holds, so
-        # an in-flight CAS that compared against the pre-reseed
-        # snapshot cannot rename over the reseed (its compare re-runs
-        # after we release and fails); object-store backends get this
-        # for free from ETag arbitration
+        """Last-writer-wins overwrite that SERIALIZES with concurrent
+        put_if_match CAS attempts on the same path: it takes the same
+        lock, so a reseed cannot be silently overwritten by an
+        in-flight CAS holding a pre-reseed snapshot (that CAS's compare
+        re-runs after we release and fails; advisor r9). Use for
+        manifest init/reseed."""
         with self._cas_lock(path):
             self.put_atomic(path, text)
 
     def steal(self, path: str) -> bool:
+        """At-most-once reclaim of an existing object: of N concurrent
+        stealers exactly one returns True, and afterwards the object is
+        ABSENT, so the key is claimable via claim(). A stealer never
+        issues an unconditional delete of the claim path, which could
+        land after another writer re-created the key."""
         # rename wins at most once: two concurrent stealers cannot both
         # unlink-and-recreate -- the loser's rename raises and it goes
         # back to the CAS create, losing cleanly to the winner's fresh
-        # (hence young) claim
+        # (hence young) claim; the unlink only ever hits the private
+        # renamed-away name
         tomb = f"{path}.reclaimed.{os.getpid()}.{threading.get_ident()}"
         try:
             os.rename(path, tomb)
@@ -337,85 +245,39 @@ class PosixCommitBackend(CommitBackend):
             pass
         return True
 
+    def claim(self, path: str, text: str) -> bool:
+        """Tombstone-aware CAS create: the claim primitive protocol
+        layers use after a steal(). put_if_absent, falling back to a
+        CAS replace when the key holds a reclaim tombstone (a retired
+        txnlog object or vacuumed manifest slot). Of N racers on one
+        tombstone the put_if_match arbitrates exactly one winner.
+        `text` must be caller-unique like every claim body."""
+        for _ in range(2):
+            if self.put_if_absent(path, text):
+                return True
+            try:
+                cur = self.read_text(path)
+            except FileNotFoundError:
+                continue  # removed between the create and the read: retry
+            if is_reclaim_tombstone(cur):
+                return self.put_if_match(path, text, cur)
+            return False
+        return False
+
     def delete(self, path: str) -> None:
+        """Idempotent removal (vacuum plane)."""
         try:
             os.unlink(path)
         except FileNotFoundError:
             pass
 
     def age_s(self, path: str) -> float | None:
+        """Seconds since the object was written, or None if absent --
+        the liveness signal for the stale-claim grace window."""
         try:
             return time.time() - os.path.getmtime(path)
         except OSError:
             return None
-
-
-class InMemoryCommitBackend(CommitBackend):
-    """Object-store-shaped backend: a flat key space, conditional puts
-    under a lock, no rename anywhere. Maps 1:1 onto S3 conditional
-    writes (put_if_absent == If-None-Match:*, steal == If-Match etag
-    PUT of a reclaim tombstone -- here collapsed to an atomic pop,
-    which is the same linearization point -- put_atomic == plain PUT);
-    swapping the dict operations for boto3 calls yields a production
-    S3 backend with the same contract.
-    """
-
-    def __init__(self) -> None:
-        self._lock = threading.Lock()
-        # key -> (text, write_monotonic)
-        self._objects: dict[str, tuple[str, float]] = {}
-
-    def read_text(self, path: str) -> str:
-        with self._lock:
-            try:
-                return self._objects[path][0]
-            except KeyError:
-                raise FileNotFoundError(path) from None
-
-    def exists(self, path: str) -> bool:
-        with self._lock:
-            return path in self._objects
-
-    def listdir(self, dirpath: str) -> list[str]:
-        prefix = dirpath.rstrip("/") + "/"
-        with self._lock:
-            names = {k[len(prefix):].split("/", 1)[0]
-                     for k in self._objects if k.startswith(prefix)}
-        if not names:
-            raise FileNotFoundError(dirpath)
-        return sorted(names)
-
-    def put_if_absent(self, path: str, text: str) -> bool:
-        with self._lock:
-            if path in self._objects:
-                return False
-            self._objects[path] = (text, time.monotonic())
-            return True
-
-    def put_atomic(self, path: str, text: str) -> None:
-        with self._lock:
-            self._objects[path] = (text, time.monotonic())
-
-    def put_if_match(self, path: str, text: str, expected: str) -> bool:
-        with self._lock:
-            entry = self._objects.get(path)
-            if entry is None or entry[0] != expected:
-                return False
-            self._objects[path] = (text, time.monotonic())
-            return True
-
-    def steal(self, path: str) -> bool:
-        with self._lock:
-            return self._objects.pop(path, None) is not None
-
-    def delete(self, path: str) -> None:
-        with self._lock:
-            self._objects.pop(path, None)
-
-    def age_s(self, path: str) -> float | None:
-        with self._lock:
-            entry = self._objects.get(path)
-        return None if entry is None else time.monotonic() - entry[1]
 
 
 def sweep_cas_locks(root_dir: str) -> list[str]:
@@ -457,35 +319,8 @@ def sweep_cas_locks(root_dir: str) -> list[str]:
     return removed
 
 
-_BACKEND: CommitBackend = PosixCommitBackend()
-_BACKEND_LOCK = threading.Lock()
+_BACKEND = PosixCommitBackend()
 
 
-def get_commit_backend() -> CommitBackend:
+def get_commit_backend() -> PosixCommitBackend:
     return _BACKEND
-
-
-def set_commit_backend(backend: CommitBackend) -> CommitBackend:
-    """Install a backend process-wide; returns the previous one (callers
-    restore it -- tests use the use_commit_backend context manager)."""
-    global _BACKEND
-    with _BACKEND_LOCK:
-        prev, _BACKEND = _BACKEND, backend
-    return prev
-
-
-class use_commit_backend:
-    """Context manager: run the versioned-table protocol against a
-    different backend, restoring the default on exit."""
-
-    def __init__(self, backend: CommitBackend) -> None:
-        self._backend = backend
-        self._prev: CommitBackend | None = None
-
-    def __enter__(self) -> CommitBackend:
-        self._prev = set_commit_backend(self._backend)
-        return self._backend
-
-    def __exit__(self, *exc) -> None:
-        assert self._prev is not None
-        set_commit_backend(self._prev)

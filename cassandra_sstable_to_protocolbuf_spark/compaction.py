@@ -461,7 +461,7 @@ def optimize(spark: SparkSession, input_dir: str,
     plus the directory's generation counter, so the DuckDB oracle can
     recompute every output id -- and each bin's publish-then-remove swap
     runs under the maintenance transaction log (txnlog.py, the
-    CommitBackend protocol plane): a crash at ANY point leaves readers
+    commit backend's protocol plane): a crash at ANY point leaves readers
     seeing exactly one consistent generation, and recover() -- run here
     at startup, so a rerun self-heals -- converges the directory.
     Unplanned files (straggler bins) are never touched.

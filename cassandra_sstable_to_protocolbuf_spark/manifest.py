@@ -1,12 +1,12 @@
 """Manifest-backed sstable discovery (VERDICT r7 #6, segmented r10).
 
 Native-source planning walked the directory with a recursive glob per
-plan -- O(files) driver syscalls, and on an object store one paginated
-LIST per query, which dominates planning at 100k+ sstables. This
-module gives a plain native directory an OPT-IN manifest listing every
-live Data.db, consulted by reader and planner discovery before any
-directory walk. Directories without a manifest keep the walk -- the
-manifest is an accelerator a deployment turns on, never a requirement.
+plan -- O(files) driver syscalls, which dominates planning at 100k+
+sstables. This module gives a plain native directory an OPT-IN
+manifest listing every live Data.db, consulted by reader and planner
+discovery before any directory walk. Directories without a manifest
+keep the walk -- the manifest is an accelerator a deployment turns on,
+never a requirement.
 
 STRUCTURE (VERDICT r9 #1 -- the flat single body made every mutation
 an O(total entries) GET+PUT, ~100 MB per add at the 100 TB shape of
@@ -59,8 +59,9 @@ by ORDERING, with the maintenance transaction log as the arbiter):
 Updates are COMPARE-AND-SWAP on the root only (VERDICT r8 #2): two
 concurrent updaters both keep their entries because the loser re-reads
 and retries. Every written root embeds a `rev` uuid so it is
-caller-unique (the S3 backend's lost-response disambiguation
-contract). Readers only ever GET.
+caller-unique (the commit backend's put_if_match contract: a stale
+snapshot can never match a later root's bytes). Readers only ever
+read.
 """
 
 from __future__ import annotations
@@ -380,16 +381,13 @@ def data_files(input_dir: str,
     """Manifest-driven discovery: absolute Data.db paths, or None when
     the directory has no manifest OR the manifest references a missing
     file (external tampering: fall back to the walk -- degraded cost,
-    never wrong results). The probe goes through the CommitBackend's
-    data_exists seam: the filesystem by default (how read tasks open
-    components), overridable by a deployment whose data lives in the
-    same object store as the protocol plane."""
+    never wrong results). The probe is a filesystem existence check,
+    the same filesystem read tasks open components from."""
     entries = read_entries(input_dir)
     if entries is None:
         return None
-    backend = get_commit_backend()
     paths = [os.path.join(input_dir, e) for e in entries]
-    if verify_exists and not all(backend.data_exists(p) for p in paths):
+    if verify_exists and not all(os.path.exists(p) for p in paths):
         return None
     return paths
 

@@ -17,21 +17,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType, LongType, StringType, StructField, StructType, TimestampType,
-)
 
 from cassandra_sstable_to_protocolbuf_spark.session import (
     read_base_table as _bt)
-
-EVENT_SCHEMA = StructType([
-    StructField("event_id", LongType(), False),
-    StructField("ts", TimestampType(), False),
-    StructField("user_id", LongType(), False),
-    StructField("event_type", StringType(), False),
-    StructField("value", DoubleType(), True),
-    StructField("props", StringType(), True),
-])
 
 
 def _ntz_to_instant(col: str):
@@ -43,33 +31,6 @@ def _ntz_to_instant(col: str):
     return F.timestamp_micros(F.expr(ntz_epoch_us(col)))
 
 
-def read_event_stream(spark: SparkSession, path: str,
-                      max_files_per_trigger: int = 8) -> DataFrame:
-    """File-based event stream (json files arriving under `path`)."""
-    return (spark.readStream.schema(EVENT_SCHEMA)
-            .option("maxFilesPerTrigger", max_files_per_trigger)
-            .json(path))
-
-
-def hourly_windowed_agg(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """Tumbling 1-hour windows per event_type with late-data handling.
-
-    Streaming form of plans.relational.events_hourly: same grouping and
-    measures, plus the watermark that lets Spark finalize windows and
-    evict state.
-    """
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"),
-             F.sum("value").alias("sum_value"),
-             F.approx_count_distinct("user_id").alias("approx_users"))
-        .select(F.col("win.start").alias("window_start"),
-                F.col("win.end").alias("window_end"),
-                "event_type", "n_events", "sum_value", "approx_users")
-    )
-
-
 def stream_dedup(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """Exactly-once-per-event_id stream within the watermark horizon:
     dropDuplicatesWithinWatermark keys state on event_id ALONE, so a
@@ -78,21 +39,6 @@ def stream_dedup(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     state is evicted once the id ages past the watermark."""
     return (events.withWatermark("ts", watermark)
             .dropDuplicatesWithinWatermark(["event_id"]))
-
-
-def sessionize(events: DataFrame, gap: str = "30 minutes",
-               watermark: str = "2 hours") -> DataFrame:
-    """Session windows per user: events closer than `gap` merge into one
-    session (built-in session_window -- no custom state management)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("sess"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"),
-             F.sum("value").alias("session_value"))
-        .select(F.col("sess.start").alias("session_start"),
-                F.col("sess.end").alias("session_end"),
-                "user_id", "n_events", "session_value")
-    )
 
 
 def _interval_ms(interval: str) -> int:
@@ -237,17 +183,6 @@ SELECT epoch_us(date_trunc('hour', ts)) AS hour_us,
 FROM events
 GROUP BY 1, 2
 """
-
-
-def run_stream_to_memory(stream_df: DataFrame, query_name: str,
-                         mode: str = "append"):
-    """Drive a streaming DataFrame into an in-memory sink (tests/demos).
-
-    Returns the StreamingQuery; caller awaits processAllAvailable() then
-    reads `SELECT * FROM <query_name>`.
-    """
-    return (stream_df.writeStream.format("memory")
-            .queryName(query_name).outputMode(mode).start())
 
 
 def stream_events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1446,7 +1381,7 @@ def stream_kmv_setops(spark: SparkSession, sf_dir: str, *,
     nothing).
 
     DURABLE STATE (VERDICT r7 #4): the merged sketch persists through
-    the CommitBackend after every batch (put_atomic of <= 2k ints,
+    the commit backend after every batch (put_atomic of <= 2k ints,
     keyed next to the spool, so a regenerated source invalidates state
     with it) and loads on start -- a driver restart with the same
     checkpoint resumes from the committed sketch instead of silently
@@ -1609,7 +1544,7 @@ def native_ingest_trigger(spark: SparkSession, watch_dir: str,
     O(table).
 
     EXACTLY-ONCE EFFECT: the processed-set (one JSON object through
-    the CommitBackend, `_ingest-state.json` inside the landed table,
+    the commit backend, `_ingest-state.json` inside the landed table,
     invisible to Spark's parquet reader) commits AFTER the merge
     publishes, with the batch_id recorded. A crash between publish and
     commit replays the same files into the LWW merge, which is

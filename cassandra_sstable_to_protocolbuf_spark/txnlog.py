@@ -76,11 +76,11 @@ optimize() passes its own grace so racing loops never reclaim each
 other's live work.
 
 Only the PROTOCOL plane (log + claim objects) routes through the
-CommitBackend seam (commit_backend.py) -- claim / put_if_match /
+commit backend (commit_backend.py) -- claim / put_if_match /
 read_text / listdir / age_s, the primitives the versioned table's OCC
-protocol uses, so the log works unchanged on an object store with
-conditional puts. The data plane (sstable components) stays on the
-filesystem Spark writes through.
+protocol uses; the drills also run the log on a rename-free in-memory
+fake, so it leans on no rename or directory. The data plane (sstable
+components) stays on the filesystem Spark writes through.
 """
 
 from __future__ import annotations
@@ -148,10 +148,11 @@ def begin(input_dir: str, name: str, output_prefix: str,
     Both the claims and the log carry a caller-unique `owner` nonce:
     every other field is a deterministic function of the bin, so two
     concurrent maintainers would otherwise write byte-identical
-    bodies -- and the S3 backend's lost-response disambiguation (read
-    the object back, byte-compare) would then let BOTH believe they
-    won the CAS. Creation goes through the backend's tombstone-aware
-    claim(): a retired transaction's tombstones are re-claimable."""
+    bodies -- and a stalled owner's commit, a CAS against the BEGIN
+    bytes it wrote, would then match a rival's log re-created after a
+    reclaim, letting BOTH believe they own the bin. Creation goes
+    through the backend's tombstone-aware claim(): a retired
+    transaction's tombstones are re-claimable."""
     backend = get_commit_backend()
     key = _txn_key(input_dir, input_paths)
     owner = uuid.uuid4().hex

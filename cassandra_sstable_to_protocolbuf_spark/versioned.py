@@ -127,9 +127,9 @@ def _create_exclusive(path: str, text: str, table_dir: str,
     and `_current` repoint is never clobbered."""
     backend = get_commit_backend()
     for attempt in (0, 1):
-        # claim() is tombstone-aware: on object stores a won steal
-        # leaves a reclaim tombstone in place (never a delete), and
-        # the claim CAS-replaces it -- racers arbitrate exactly once
+        # claim() is tombstone-aware: a slot vacuum retired to a
+        # reclaim tombstone (never a delete) is CAS-replaced, so
+        # racers arbitrate exactly once
         if backend.claim(path, text):
             return
         try:

@@ -1,52 +1,39 @@
-"""CommitBackend contract battery: every backend implementation must
-give the versioned table's OCC protocol the same linearizable
-primitives. Runs against BOTH shipped backends -- the POSIX default and
-the object-store-shaped in-memory one -- so the protocol provably never
-leans on a POSIX-only primitive (rename, O_EXCL, directories) through
-the seam; an S3 conditional-put backend drops in by passing this same
-battery.
+"""Commit contract battery: the storage primitives the versioned
+table's OCC protocol, the sstable manifest and the maintenance
+transaction log rely on must be linearizable. Runs against the POSIX
+backend and the rename-free in-memory fake (tests/memory_commit_backend.py)
+-- so the protocol provably never leans on a POSIX-only primitive
+(rename, O_EXCL, directories) through get_commit_backend().
 
 The second half runs the REAL versioned-table protocol (init, two
 genuinely concurrent OCC writers, time travel, vacuum) with the
-in-memory backend installed: the full 100 TB commit path with zero
-renames anywhere in the protocol plane.
+in-memory fake installed: the full commit path with zero renames
+anywhere in the protocol plane.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import threading
+from unittest import mock
 
 import pytest
 
+from cassandra_sstable_to_protocolbuf_spark import commit_backend
 from cassandra_sstable_to_protocolbuf_spark.commit_backend import (
-    CommitBackend, InMemoryCommitBackend, PosixCommitBackend,
-    use_commit_backend)
+    PosixCommitBackend)
+from tests.memory_commit_backend import InMemoryCommitBackend
 
 N_THREADS = 16
 
 
-def _s3_backend(fail_every: int = 0):
-    from cassandra_sstable_to_protocolbuf_spark.s3_commit import (
-        S3CommitBackend)
-    from tests.mock_s3 import MockS3Transport
-
-    return S3CommitBackend("test-bucket", MockS3Transport(fail_every),
-                           backoff_s=0.001)
-
-
-@pytest.fixture(params=["posix", "memory", "s3", "s3-flaky"])
+@pytest.fixture(params=["posix", "memory"])
 def backend(request, tmp_path):
     if request.param == "posix":
         yield PosixCommitBackend(), str(tmp_path / "root")
-    elif request.param == "memory":
-        yield InMemoryCommitBackend(), str(tmp_path / "root")
-    elif request.param == "s3":
-        yield _s3_backend(), str(tmp_path / "root")
     else:
-        # every 7th HTTP request 503s: the whole battery must still
-        # pass bit-identically through the bounded-retry path
-        yield _s3_backend(fail_every=7), str(tmp_path / "root")
+        yield InMemoryCommitBackend(), str(tmp_path / "root")
 
 
 def _race(n: int, fn) -> list:
@@ -84,18 +71,13 @@ def test_put_if_absent_is_exclusive(backend):
 
 
 def test_steal_is_at_most_once(backend):
-    from cassandra_sstable_to_protocolbuf_spark.commit_backend import (
-        is_reclaim_tombstone)
-
     b, root = backend
     path = os.path.join(root, "m", "v9.json")
     assert b.put_if_absent(path, "crashed-writer")
     wins = _race(N_THREADS, lambda i: b.steal(path))
     assert sum(wins) == 1, "of N stealers exactly one may win"
-    # postcondition: absent (atomic-removal backends) or a reclaim
-    # tombstone (object stores never delete) -- claimable either way
-    if b.exists(path):
-        assert is_reclaim_tombstone(b.read_text(path))
+    # postcondition: absent, hence claimable
+    assert not b.exists(path)
     assert b.claim(path, "next-writer") is True
     assert b.read_text(path) == "next-writer"
     # stealing a LIVE claim still works (that is steal's whole job)...
@@ -107,12 +89,18 @@ def test_steal_is_at_most_once(backend):
 
 
 def test_claim_races_single_winner_on_tombstoned_key(backend):
-    """After a steal, N writers race claim() with caller-unique bodies:
-    the tombstone CAS must arbitrate exactly one winner."""
+    """After a retirement (the CAS to a reclaim tombstone txnlog and
+    versioned vacuum use instead of a delete), N writers race claim()
+    with caller-unique bodies: the tombstone CAS must arbitrate exactly
+    one winner."""
+    from cassandra_sstable_to_protocolbuf_spark.commit_backend import (
+        make_reclaim_tombstone)
+
     b, root = backend
     path = os.path.join(root, "m", "v11.json")
     assert b.put_if_absent(path, "crashed-writer")
-    assert b.steal(path) is True
+    assert b.put_if_match(path, make_reclaim_tombstone(), "crashed-writer")
+    assert b.put_if_absent(path, "bare-create") is False
     wins = _race(N_THREADS, lambda i: b.claim(path, f"claimer-{i}"))
     assert sum(wins) == 1, "of N claimers exactly one may win"
     winner = wins.index(True)
@@ -166,16 +154,16 @@ def test_versioned_occ_runs_rename_free_on_object_store_backend(
         spark, tmp_path):
     """The full protocol -- init, two concurrent OCC writers with the
     recompute-and-retry loop, linear history, time travel, vacuum --
-    against the rename-free in-memory backend. This is the drop-in shape
-    of an S3 conditional-write deployment; only parquet data files touch
-    the local filesystem (Spark's own IO layer, s3a-ready)."""
+    against the rename-free in-memory fake; only parquet data files
+    touch the local filesystem (Spark's own IO layer)."""
     from cassandra_sstable_to_protocolbuf_spark.versioned import (
         CommitConflict, current_version, init_versioned, list_versions,
         merge_versioned, read_version, vacuum)
     from tests.test_versioned import _cells
 
     table = str(tmp_path / "vt")
-    with use_commit_backend(InMemoryCommitBackend()):
+    with mock.patch.object(commit_backend, "_BACKEND",
+                           InMemoryCommitBackend()):
         rows = [(f"k{i}", "c", f"base{i}", 100, "sst-base", "LIVE")
                 for i in range(12)]
         init_versioned(spark, _cells(spark, rows), table)
@@ -292,274 +280,52 @@ def test_posix_fenced_reseed_survives_inflight_cas(tmp_path):
     assert not os.path.exists(path + ".cas-lock")
 
 
-# -- S3 backend specifics (mocked HTTP boundary) ---------------------------
-
-def test_s3_listdir_paginates_past_page_size():
-    """More children than the mock's ListObjectsV2 page size: the
-    backend must follow continuation tokens (an S3 deployment lists
-    thousands of manifests) and group nested keys by delimiter."""
-    b = _s3_backend()
-    for v in range(11):
-        assert b.put_if_absent(f"root/_manifests/v{v:02d}.json", f"m{v}")
-    b.put_atomic("root/_manifests/sub/leaf.json", "x")
-    got = b.listdir("root/_manifests")
-    assert got == sorted([f"v{v:02d}.json" for v in range(11)] + ["sub"])
-
-
-def test_s3_cas_lost_response_disambiguation():
-    """The production retry ambiguity: a put_if_absent whose SUCCESS
-    response was lost retries into a 412 -- the backend must read the
-    object back and recognize its own body as a win, and a foreign
-    body as a loss."""
-    from cassandra_sstable_to_protocolbuf_spark.s3_commit import (
-        S3CommitBackend)
-    from tests.mock_s3 import MockS3Transport
-
-    class LoseFirstPutResponse(MockS3Transport):
-        def __init__(self):
-            super().__init__()
-            self.lost = False
-
-        def __call__(self, method, url, headers, body):
-            r = super().__call__(method, url, headers, body)
-            if (method == "PUT" and headers.get("If-None-Match") == "*"
-                    and not self.lost):
-                self.lost = True
-                raise ConnectionError("response lost after commit")
-            return r
-
-    b = S3CommitBackend("bkt", LoseFirstPutResponse(), backoff_s=0.001)
-    # first CAS: the PUT lands server-side, the response is lost, the
-    # retry sees 412 -- and must still report the win (body is ours)
-    assert b.put_if_absent("root/claims/v1", "owner-A") is True
-    # a different writer's CAS against the same key is a clean loss
-    assert b.put_if_absent("root/claims/v1", "owner-B") is False
-    assert b.read_text("root/claims/v1") == "owner-A"
-
-
-def test_s3_steal_never_issues_any_delete():
-    """GP buckets do not support conditional DeleteObject (the mock
-    501s one), and an UNconditional DELETE delayed past the winner's
-    re-claim could destroy a claim another writer re-created at the
-    key (advisor r9, high) -- so steal must issue NO delete of any
-    kind: the winner converts the claim to a reclaim tombstone that
-    only the claim() CAS replaces."""
-    from cassandra_sstable_to_protocolbuf_spark.commit_backend import (
-        is_reclaim_tombstone)
-    from cassandra_sstable_to_protocolbuf_spark.s3_commit import (
-        S3CommitBackend)
-    from tests.mock_s3 import MockS3Transport
-
-    seen: list[tuple[str, dict]] = []
-
-    class Recording(MockS3Transport):
-        def __call__(self, method, url, headers, body):
-            seen.append((method, dict(headers)))
-            return super().__call__(method, url, headers, body)
-
-    t = Recording()
-    b = S3CommitBackend("bkt", t, backoff_s=0.001)
-    assert b.put_if_absent("root/claims/v3", "crashed") is True
-    assert b.steal("root/claims/v3") is True
-    assert is_reclaim_tombstone(b.read_text("root/claims/v3"))
-    assert b.steal("root/claims/v3") is False
-    assert not any(method == "DELETE" for method, _h in seen), \
-        "steal issued a DELETE; a delayed one can destroy a re-created " \
-        "claim"
-    # the tombstone is claimable, and the claim survives
-    assert b.claim("root/claims/v3", "next-writer") is True
-    assert b.read_text("root/claims/v3") == "next-writer"
-    # and the mock really does trip on a conditional DELETE
-    status, _h, _b = t("DELETE", "https://s3/bkt/root/claims/v3",
-                       {"If-Match": '"x"'}, None)
-    assert status == 501
-
-
-def test_s3_stale_stealer_cannot_destroy_recreated_claim():
-    """The advisor's r9 race, end-to-end: stealer A wins the tombstone
-    PUT; stealer B observes the key AFTER A's PUT (the window that
-    previously let B re-steal the tombstone and later delete a fresh
-    claim). B must now refuse (tombstone recognized), writer W's
-    claim() takes the key, and nothing A or B does afterwards can
-    remove W's claim -- no DELETE exists in the protocol to be
-    delayed."""
-    from cassandra_sstable_to_protocolbuf_spark.s3_commit import (
-        S3CommitBackend)
-    from tests.mock_s3 import MockS3Transport
-
-    t = MockS3Transport()
-    a = S3CommitBackend("bkt", t, backoff_s=0.001)
-    b = S3CommitBackend("bkt", t, backoff_s=0.001)
-    w = S3CommitBackend("bkt", t, backoff_s=0.001)
-    key = "root/claims/v13"
-    assert a.put_if_absent(key, "crashed-writer") is True
-    assert a.steal(key) is True          # A: tombstone in place
-    assert b.steal(key) is False         # B: sees the tombstone, loses
-    assert w.claim(key, "writer-W") is True
-    # neither stealer holds any deferred operation; W's claim is safe
-    assert w.read_text(key) == "writer-W"
-    # a later steal of W's claim is a NEW reclaim decision, not a
-    # leftover of the old race
-    assert b.steal(key) is True
-    assert a.claim(key, "writer-A2") is True
-    assert w.read_text(key) == "writer-A2"
-
-
-def test_s3_steal_lost_response_disambiguation():
-    """A steal whose conditional-PUT success response is lost must
-    still report the win exactly once: the caller-unique tombstone
-    body read back identifies the owner."""
-    from cassandra_sstable_to_protocolbuf_spark.s3_commit import (
-        S3CommitBackend)
-    from tests.mock_s3 import MockS3Transport
-
-    class LoseFirstCondPut(MockS3Transport):
-        def __init__(self):
-            super().__init__()
-            self.lost = False
-
-        def __call__(self, method, url, headers, body):
-            r = super().__call__(method, url, headers, body)
-            if (method == "PUT" and "If-Match" in headers
-                    and not self.lost):
-                self.lost = True
-                raise ConnectionError("response lost after commit")
-            return r
-
-    from cassandra_sstable_to_protocolbuf_spark.commit_backend import (
-        is_reclaim_tombstone)
-
-    b = S3CommitBackend("bkt", LoseFirstCondPut(), backoff_s=0.001)
-    assert b.put_if_absent("root/claims/v7", "crashed-writer") is True
-    assert b.steal("root/claims/v7") is True
-    assert is_reclaim_tombstone(b.read_text("root/claims/v7"))
-    # a rival stealer of the same key loses exactly once
-    assert b.steal("root/claims/v7") is False
-
-
-def test_txnlog_claim_bodies_are_caller_unique():
-    """Dual-bin-ownership drill (advisor r8): every txnlog claim field
-    except the `owner` nonce is a deterministic function of the bin, so
-    two maintainers write byte-identical claims without it -- and the S3
-    backend's lost-response body-compare would then let BOTH believe
-    they won the CAS. Exact interleaving: maintainer A's first CAS
-    request dies at the connection WITHOUT being applied; maintainer B
-    claims the bin in the gap; A's retry sees 412 and, because a
-    connection loss happened, reads the object back. With deterministic
-    bodies A would match B's claim and also believe it owns the bin;
-    the nonce makes A lose cleanly."""
+def test_txnlog_claim_bodies_are_caller_unique(tmp_path):
+    """Dual-bin-ownership pin (advisor r8): every txnlog claim and log
+    field except the `owner` nonce is a deterministic function of the
+    bin. Without the nonce two maintainers' bodies for one bin would be
+    byte-identical, and a stalled maintainer's commit -- a CAS against
+    the BEGIN bytes it wrote -- would match a rival's log re-created
+    after a reclaim, granting both of them the bin. So two begin()
+    calls over the same files write different claim and log bodies,
+    differing in `owner` alone."""
     from cassandra_sstable_to_protocolbuf_spark import txnlog
-    from cassandra_sstable_to_protocolbuf_spark.commit_backend import (
-        use_commit_backend)
-    from cassandra_sstable_to_protocolbuf_spark.s3_commit import (
-        S3CommitBackend)
-    from tests.mock_s3 import MockS3Transport
 
-    shared = MockS3Transport()
-    backend_b = S3CommitBackend("bkt", shared, backoff_s=0.001)
-    b_won: list[bool] = []
+    d = str(tmp_path)
+    files = [os.path.join(d, "a-Data.db"), os.path.join(d, "b-Data.db")]
+    backend = commit_backend.get_commit_backend()
 
-    class DropFirstCasAndLetBWin:
-        """A's transport: A's first CAS request never reaches the
-        server; B's whole begin() lands in the gap."""
+    def bodies() -> dict[str, str]:
+        tdir = txnlog.txn_dir(d)
+        return {f: backend.read_text(os.path.join(tdir, f))
+                for f in backend.listdir(tdir) if f.endswith(".json")}
 
-        def __init__(self):
-            self._dropped = False
-
-        def __call__(self, method, url, headers, body):
-            if (method == "PUT" and headers.get("If-None-Match") == "*"
-                    and not self._dropped):
-                self._dropped = True
-                with use_commit_backend(backend_b):
-                    txnlog.begin("/tbl", "opt-1-10-0", "opt-1-10-0",
-                                 ["/tbl/a-Data.db"])
-                    b_won.append(True)
-                raise ConnectionError("request never applied")
-            return shared(method, url, headers, body)
-
-    backend_a = S3CommitBackend("bkt", DropFirstCasAndLetBWin(),
-                                backoff_s=0.001)
-    with use_commit_backend(backend_a):
-        with pytest.raises(RuntimeError, match="already claimed"):
-            txnlog.begin("/tbl", "opt-1-10-0", "opt-1-10-0",
-                         ["/tbl/a-Data.db"])
-    assert b_won == [True], "B must hold the claim, A must have lost"
+    key = txnlog.begin(d, "opt-1-10-0", "opt-1-10-0", files)
+    first = bodies()
+    txnlog.finish(d, "opt-1-10-0", key=key)  # retires claims and log
+    assert txnlog.begin(d, "opt-1-10-0", "opt-1-10-0", files) == key
+    second = bodies()
+    assert sorted(first) == sorted(second) and len(first) == 3
+    for name, text in first.items():
+        a, b = json.loads(text), json.loads(second[name])
+        assert a.pop("owner") != b.pop("owner"), f"{name}: same owner"
+        assert a == b
 
 
-def test_s3_steal_winner_crash_leaves_claimable_tombstone():
-    """A stealer that wins the tombstone PUT and then dies leaves the
-    tombstone behind. That must CONVERGE without any delete: a bare
-    put_if_absent refuses (the key is occupied), rival steals refuse
-    (tombstone recognized), and claim() -- the protocol's actual
-    post-steal path -- CAS-replaces it."""
-    from cassandra_sstable_to_protocolbuf_spark.commit_backend import (
-        is_reclaim_tombstone)
-    from cassandra_sstable_to_protocolbuf_spark.s3_commit import (
-        S3CommitBackend)
-    from tests.mock_s3 import MockS3Transport
+def test_versioned_manifest_bodies_are_caller_unique(tmp_path):
+    """The same pin for versioned manifests: two commits of the same
+    files write manifests that differ in their `writer` uuid alone --
+    the identity _verify_claim reads back around the `_current`
+    repoint, so a stalled writer whose claim was reclaimed can never
+    take the reclaimer's manifest for its own."""
+    from cassandra_sstable_to_protocolbuf_spark import versioned as V
 
-    t = MockS3Transport()
-    b = S3CommitBackend("bkt", t, backoff_s=0.001)
-    assert b.put_if_absent("root/claims/v5", "crashed-writer") is True
-    assert b.steal("root/claims/v5") is True  # ...then the winner dies
-    assert is_reclaim_tombstone(b.read_text("root/claims/v5"))
-    assert b.put_if_absent("root/claims/v5", "late") is False
-    assert b.steal("root/claims/v5") is False
-    # recovery: any writer's claim() takes the leftover tombstone
-    assert b.claim("root/claims/v5", "next-writer") is True
-    assert b.read_text("root/claims/v5") == "next-writer"
-
-
-def test_s3_retries_bounded_and_faults_counted():
-    """Transient 503s retry with backoff and succeed; a hard-down
-    endpoint fails loudly after the bounded attempts."""
-    from cassandra_sstable_to_protocolbuf_spark.s3_commit import (
-        S3CommitBackend)
-    from tests.mock_s3 import MockS3Transport
-
-    flaky = MockS3Transport(fail_every=2)  # every other request 503s
-    b = S3CommitBackend("bkt", flaky, backoff_s=0.001)
-    assert b.put_if_absent("root/x", "v") is True
-    assert b.read_text("root/x") == "v"
-    assert flaky.n_faults > 0
-
-    def down(method, url, headers, body):
-        return 503, {}, b""
-    dead = S3CommitBackend("bkt", down, backoff_s=0.001, max_retries=2)
-    with pytest.raises(Exception, match="HTTP 503"):
-        dead.read_text("root/x")
-
-
-@pytest.mark.skipif("S3_TEST_ENDPOINT" not in os.environ,
-                    reason="integration: needs a reachable S3-compatible "
-                           "endpoint (set S3_TEST_ENDPOINT; no network "
-                           "in the sandbox)")
-def test_s3_backend_against_real_endpoint():
-    """Integration drill against a real S3-compatible endpoint (e.g. a
-    local MinIO with anonymous access): the same CAS/steal/list battery
-    the mock pins, over a genuine network boundary. Deliberately
-    skipped in the sandbox."""
-    import urllib.request
-
-    from cassandra_sstable_to_protocolbuf_spark.s3_commit import (
-        S3CommitBackend)
-
-    def transport(method, url, headers, body):
-        req = urllib.request.Request(url, data=body, method=method,
-                                     headers=headers)
-        try:
-            with urllib.request.urlopen(req, timeout=10) as resp:
-                return resp.status, dict(resp.headers), resp.read()
-        except urllib.error.HTTPError as e:
-            return e.code, dict(e.headers), e.read()
-
-    b = S3CommitBackend(os.environ.get("S3_TEST_BUCKET", "spark-graft-it"),
-                        transport,
-                        endpoint=os.environ["S3_TEST_ENDPOINT"])
-    key = f"it/{os.getpid()}/claim"
-    assert b.put_if_absent(key, "winner") is True
-    assert b.put_if_absent(key, "loser") is False
-    assert b.read_text(key) == "winner"
-    assert b.steal(key) is True
-    assert b.steal(key) is False
-    b.delete(key)
+    files = {"s0": ["data/c0-x/pshard=s0/part-0.parquet"]}
+    manifests = []
+    for name in ("t1", "t2"):
+        table = str(tmp_path / name)
+        assert V._commit(table, files, 0) == 0
+        manifests.append(V.read_manifest(table, 0))
+    a, b = manifests
+    assert a.pop("writer") != b.pop("writer")
+    assert a == b

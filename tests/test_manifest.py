@@ -10,15 +10,18 @@ from __future__ import annotations
 
 import glob
 import os
+from unittest import mock
 
 import pytest
 
+from cassandra_sstable_to_protocolbuf_spark import commit_backend
 from cassandra_sstable_to_protocolbuf_spark import compaction as CP
 from cassandra_sstable_to_protocolbuf_spark import manifest, txnlog
 from cassandra_sstable_to_protocolbuf_spark.sources import sstable_native as N
 from cassandra_sstable_to_protocolbuf_spark.sources.sstable_native import (
     read_native_cells)
-from tests.test_optimize_txn import _lww, _mk
+from tests.memory_commit_backend import InMemoryCommitBackend
+from tests.test_optimize_txn import _lww, _maintenance_backend, _mk
 
 
 def test_init_matches_walk_and_discovery_is_globless(tmp_path,
@@ -148,34 +151,17 @@ def test_manifest_scan_gate_matches_native_scan(spark):
     assert a == b
 
 
-def _backends_for_cas(tmp_path):
-    """The POSIX default plus the mocked-S3 conditional-write backend --
-    the two stores a deployment actually runs the manifest on."""
-    from cassandra_sstable_to_protocolbuf_spark.commit_backend import (
-        PosixCommitBackend)
-    from cassandra_sstable_to_protocolbuf_spark.s3_commit import (
-        S3CommitBackend)
-    from tests.mock_s3 import MockS3Transport
-
-    return [("posix", PosixCommitBackend()),
-            ("s3", S3CommitBackend("maint-bucket", MockS3Transport(),
-                                   backoff_s=0.001))]
-
-
-@pytest.mark.parametrize("which", ["posix", "s3"])
+@pytest.mark.parametrize("which", ["posix", "memory"])
 def test_two_writer_add_interleaved_keeps_both(tmp_path, which,
                                                monkeypatch):
     """VERDICT r8 #2, deterministic worst case: writer A reads the
     manifest, writer B's ENTIRE add lands, then A publishes. The old
     read-modify-put_atomic silently dropped B's entry; the CAS loop
     must keep both."""
-    from cassandra_sstable_to_protocolbuf_spark.commit_backend import (
-        use_commit_backend)
-
     d = str(tmp_path)
     a = _mk(d, "aa", 3, 3, ts=1)
-    backend = dict(_backends_for_cas(tmp_path))[which]
-    with use_commit_backend(backend):
+    backend = _maintenance_backend(which)
+    with mock.patch.object(commit_backend, "_BACKEND", backend):
         manifest.init(d)
         b_new = _mk(d, "bb", 3, 3, ts=2)
         c_new = _mk(d, "cc", 3, 3, ts=3)
@@ -202,20 +188,17 @@ def test_two_writer_add_interleaved_keeps_both(tmp_path, which,
         assert state["interleaved"]
 
 
-@pytest.mark.parametrize("which", ["posix", "s3"])
+@pytest.mark.parametrize("which", ["posix", "memory"])
 def test_add_racing_remove_keeps_both_effects(tmp_path, which,
                                               monkeypatch):
     """An add racing a remove on the same manifest: after both settle,
     the added entry is present and the removed entry is gone --
     neither side's effect is lost."""
-    from cassandra_sstable_to_protocolbuf_spark.commit_backend import (
-        use_commit_backend)
-
     d = str(tmp_path)
     _mk(d, "aa", 3, 3, ts=1)
     victim = _mk(d, "bb", 3, 3, ts=2)
-    backend = dict(_backends_for_cas(tmp_path))[which]
-    with use_commit_backend(backend):
+    backend = _maintenance_backend(which)
+    with mock.patch.object(commit_backend, "_BACKEND", backend):
         manifest.init(d)
         new = _mk(d, "cc", 3, 3, ts=3)
         real = backend.put_if_match
@@ -236,20 +219,17 @@ def test_add_racing_remove_keeps_both_effects(tmp_path, which,
             "remove lost to add"
 
 
-@pytest.mark.parametrize("which", ["posix", "s3"])
+@pytest.mark.parametrize("which", ["posix", "memory"])
 def test_concurrent_adders_thread_stress(tmp_path, which):
     """16 genuinely concurrent adders: every entry survives (the
     probabilistic twin of the deterministic interleaving drills)."""
     import threading
 
-    from cassandra_sstable_to_protocolbuf_spark.commit_backend import (
-        use_commit_backend)
-
     d = str(tmp_path)
     _mk(d, "aa", 2, 2, ts=1)
     paths = [_mk(d, f"n{i:02d}", 2, 2, ts=i + 2) for i in range(16)]
-    backend = dict(_backends_for_cas(tmp_path))[which]
-    with use_commit_backend(backend):
+    backend = _maintenance_backend(which)
+    with mock.patch.object(commit_backend, "_BACKEND", backend):
         manifest.init(d)
         # reset to just the base entry so every add below is a delta
         barrier = threading.Barrier(16)
@@ -373,12 +353,9 @@ def test_manifest_metadata_scales_sublinear_past_100k_entries(tmp_path):
     bounded."""
     import time as _time
 
-    from cassandra_sstable_to_protocolbuf_spark.commit_backend import (
-        InMemoryCommitBackend, use_commit_backend)
-
     d = str(tmp_path)
     counting = _CountingBackend(InMemoryCommitBackend())
-    with use_commit_backend(counting):
+    with mock.patch.object(commit_backend, "_BACKEND", counting):
         manifest.init(d)  # empty dir: zero entries
         corpus = [f"ks-shard{i:06d}-ka-1-Data.db" for i in range(100_000)]
         manifest.add(d, [os.path.join(d, e) for e in corpus])
@@ -472,25 +449,17 @@ def test_manifest_vacuum_sweeps_only_aged_unreferenced_side_files(
     assert manifest.vacuum(d, min_age_s=0.0) == []  # idempotent
 
 
-def test_optimize_with_manifest_on_s3_backend(spark, tmp_path):
+def test_optimize_with_manifest_on_memory_backend(spark, tmp_path):
     """The COMPLETE maintenance lifecycle with the protocol plane on
-    the S3 conditional-write backend (mocked HTTP, injected 503s):
-    manifest discovery, txnlog claims/commits, and the manifest
-    updates all route through S3 requests while the data plane stays
-    on the filesystem -- the exact deployment split the seam was built
-    for. Results and manifest consistency must match the POSIX run."""
-    from cassandra_sstable_to_protocolbuf_spark.commit_backend import (
-        use_commit_backend)
-    from cassandra_sstable_to_protocolbuf_spark.s3_commit import (
-        S3CommitBackend)
-    from tests.mock_s3 import MockS3Transport
-
+    the rename-free in-memory fake: manifest discovery, txnlog
+    claims/commits, and the manifest updates all route through the
+    fake while the data plane stays on the filesystem. Results and
+    manifest consistency must match the POSIX run."""
     d = str(tmp_path)
     for i in range(4):
         _mk(d, f"s{i}", 30, 30, ts=i + 1)
-    be = S3CommitBackend("maint-bucket", MockS3Transport(fail_every=9),
-                         backoff_s=0.001)
-    with use_commit_backend(be):
+    with mock.patch.object(commit_backend, "_BACKEND",
+                           InMemoryCommitBackend()):
         manifest.init(d)
         pre = _lww(spark, d)
         results = CP.optimize(spark, d, target_output_bytes=1 << 20)

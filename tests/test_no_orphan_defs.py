@@ -15,17 +15,7 @@ REPO = pathlib.Path(__file__).resolve().parent.parent
 PACKAGE = REPO / "cassandra_sstable_to_protocolbuf_spark"
 
 # name -> why it stays without a production caller (one line each)
-ALLOWED = {
-    "S3CommitBackend": "S3 conditional-write commit backend a deployment "
-                       "installs; tested against a mock S3 transport",
-    "read_event_stream": "file-based event stream source of the "
-                         "streaming library surface",
-    "hourly_windowed_agg": "streaming twin of relational.events_hourly",
-    "sessionize": "session-window aggregation of the streaming library "
-                  "surface",
-    "run_stream_to_memory": "drives a streaming query into a memory sink "
-                            "for inspection",
-}
+ALLOWED: dict[str, str] = {}
 
 
 def _sources() -> list[pathlib.Path]:
@@ -71,3 +61,46 @@ def test_allowlist_is_current():
     """An ALLOWED name that gained a caller (or was deleted) leaves."""
     orphaned = {o.split()[-1] for o in _orphans()}
     assert sorted(set(ALLOWED) - orphaned) == []
+
+
+def _module_name(path: pathlib.Path) -> str:
+    return ".".join(path.relative_to(REPO).with_suffix("").parts)
+
+
+def _imported_modules(path: pathlib.Path) -> set[str]:
+    """Dotted names `path` imports: `import a.b` gives a.b, and
+    `from a import b` gives a and a.b (b may be a submodule); relative
+    imports resolve against the importing file's package."""
+    package = _module_name(path).split(".")[:-1]
+    tree = ast.parse(path.read_text(encoding="utf-8"), str(path))
+    out: set[str] = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            out.update(alias.name for alias in node.names)
+        elif isinstance(node, ast.ImportFrom):
+            base = package[:len(package) - node.level + 1] \
+                if node.level else []
+            mod = ".".join(base + (node.module.split(".")
+                                   if node.module else []))
+            out.add(mod)
+            out.update(f"{mod}.{alias.name}" for alias in node.names)
+    return out
+
+
+def test_every_module_is_imported():
+    """Every package module (bar __init__ and __main__) is imported by
+    another file of the same source set: a module only tests import is
+    an orphan as a whole."""
+    sources = _sources()
+    imported = {p: _imported_modules(p) for p in sources}
+    orphans = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        if path.name in ("__init__.py", "__main__.py"):
+            continue
+        name = _module_name(path)
+        if not any(name in mods for p, mods in imported.items()
+                   if p != path):
+            orphans.append(str(path.relative_to(REPO)))
+    assert not orphans, (
+        "package modules nothing outside tests imports -- delete them "
+        "or give them a caller:\n" + "\n".join(orphans))

@@ -1,6 +1,6 @@
 """Transactional OPTIMIZE (VERDICT r6 #1/#2/#5 + advisor r6 high):
 every bin's publish-then-remove swap runs under the maintenance
-transaction log (txnlog.py on the CommitBackend seam), output names are
+transaction log (txnlog.py on the commit backend), output names are
 generation-unique so reruns can never merge onto their own input names,
 bins execute concurrently with per-bin failure isolation, crashes at
 any point recover to exactly one consistent generation with readers
@@ -11,15 +11,18 @@ from __future__ import annotations
 import glob
 import os
 import threading
+from unittest import mock
 
 import pytest
 
+from cassandra_sstable_to_protocolbuf_spark import commit_backend
 from cassandra_sstable_to_protocolbuf_spark import compaction as CP
 from cassandra_sstable_to_protocolbuf_spark import txnlog
 from cassandra_sstable_to_protocolbuf_spark.landed import lww_live_cells
 from cassandra_sstable_to_protocolbuf_spark.sources import sstable_native as N
 from cassandra_sstable_to_protocolbuf_spark.sources.sstable_native import (
     read_native_cells)
+from tests.memory_commit_backend import InMemoryCommitBackend
 
 
 def _mk(dirname, cf, n_keys, vlen, ts, overlap_from=0):
@@ -317,34 +320,19 @@ def test_until_stable_converges_across_tiers(spark, tmp_path):
             if CP.derive_n_outputs(t["bytes"], 1 << 20) < len(t["files"])] == []
 
 
-@pytest.mark.parametrize("flavor", ["memory", "s3"])
-def test_txn_protocol_on_object_store_backend(tmp_path, flavor):
-    """The log's protocol plane runs unchanged on the object-store-shaped
-    backends (no rename, conditional puts only) -- the in-memory
-    template AND the S3 conditional-write backend over a mocked HTTP
-    boundary (with injected 503s, so the drill also covers the retry
-    path): begin claims at most once, filter_live hides by state,
-    recover replays both branches."""
-    from cassandra_sstable_to_protocolbuf_spark.commit_backend import (
-        InMemoryCommitBackend, use_commit_backend)
-
-    if flavor == "memory":
-        be = InMemoryCommitBackend()
-    else:
-        from cassandra_sstable_to_protocolbuf_spark.s3_commit import (
-            S3CommitBackend)
-        from tests.mock_s3 import MockS3Transport
-
-        be = S3CommitBackend("txn-bucket", MockS3Transport(fail_every=5),
-                             backoff_s=0.001)
-
+def test_txn_protocol_on_memory_backend(tmp_path):
+    """The log's protocol plane runs unchanged on the rename-free
+    in-memory fake (no rename, conditional puts only): begin claims at
+    most once, filter_live hides by state, recover replays both
+    branches."""
     d = str(tmp_path)
     a = _mk(d, "aa", 5, 4, ts=1)
     b = _mk(d, "bb", 5, 4, ts=2)
     out = _mk(d, "opt-1-13-0-0", 5, 4, ts=3)  # pretend published output
     all_files = sorted(glob.glob(os.path.join(d, "*-Data.db")))
 
-    with use_commit_backend(be):
+    with mock.patch.object(commit_backend, "_BACKEND",
+                           InMemoryCommitBackend()):
         txnlog.begin(d, "opt-1-13-0", "opt-1-13-0", [a, b])
         with pytest.raises(RuntimeError, match="already claimed"):
             txnlog.begin(d, "opt-1-13-0", "opt-1-13-0", [a, b])
@@ -375,20 +363,11 @@ def test_next_generation_scans_names(tmp_path):
 
 
 def _maintenance_backend(which):
-    from cassandra_sstable_to_protocolbuf_spark.commit_backend import (
-        PosixCommitBackend)
-
-    if which == "posix":
-        return PosixCommitBackend()
-    from cassandra_sstable_to_protocolbuf_spark.s3_commit import (
-        S3CommitBackend)
-    from tests.mock_s3 import MockS3Transport
-
-    return S3CommitBackend("maint-bucket", MockS3Transport(),
-                           backoff_s=0.001)
+    return commit_backend.PosixCommitBackend() if which == "posix" \
+        else InMemoryCommitBackend()
 
 
-@pytest.mark.parametrize("which", ["posix", "s3"])
+@pytest.mark.parametrize("which", ["posix", "memory"])
 def test_two_concurrent_optimize_loops_bins_execute_once(
         spark, tmp_path, which, monkeypatch):
     """VERDICT r9 #4: two COMPLETE optimize(until_stable=True) loops
@@ -397,11 +376,9 @@ def test_two_concurrent_optimize_loops_bins_execute_once(
     (the commit spy sees no duplicate transaction key), bins lost to
     the rival surface as 'skipped' -- never as errors -- the manifest
     ends equal to the directory, the LWW state is invariant, and no
-    transaction log survives. Runs on POSIX and the mocked-S3
-    conditional-write backend."""
+    transaction log survives. Runs on POSIX and the rename-free
+    in-memory fake."""
     from cassandra_sstable_to_protocolbuf_spark import manifest
-    from cassandra_sstable_to_protocolbuf_spark.commit_backend import (
-        use_commit_backend)
 
     d = str(tmp_path)
     # two tiers -> multiple bins, so the maintainers can interleave
@@ -422,7 +399,8 @@ def test_two_concurrent_optimize_loops_bins_execute_once(
         return real_commit(input_dir, name, outputs, key=key)
 
     monkeypatch.setattr(txnlog, "commit", spying_commit)
-    with use_commit_backend(_maintenance_backend(which)):
+    with mock.patch.object(commit_backend, "_BACKEND",
+                           _maintenance_backend(which)):
         manifest.init(d)
         barrier = threading.Barrier(2, timeout=120)
         outcomes: list = [None, None]
@@ -463,7 +441,7 @@ def test_two_concurrent_optimize_loops_bins_execute_once(
         assert manifest.read_entries(d) == walked
 
 
-@pytest.mark.parametrize("which", ["posix", "s3"])
+@pytest.mark.parametrize("which", ["posix", "memory"])
 def test_crashed_concurrent_maintainer_is_reclaimed_after_grace(
         spark, tmp_path, which, monkeypatch):
     """The forced mid-loop crash: maintainer A dies between publish and
@@ -478,15 +456,14 @@ def test_crashed_concurrent_maintainer_is_reclaimed_after_grace(
     import time
 
     from cassandra_sstable_to_protocolbuf_spark import manifest
-    from cassandra_sstable_to_protocolbuf_spark.commit_backend import (
-        use_commit_backend)
 
     d = str(tmp_path)
     _mk(d, "aa", 60, 30, ts=10)
     _mk(d, "bb", 60, 30, ts=20)
     pre = _lww(spark, d)
 
-    with use_commit_backend(_maintenance_backend(which)):
+    with mock.patch.object(commit_backend, "_BACKEND",
+                           _maintenance_backend(which)):
         manifest.init(d)
         # maintainer A: crash between publish and commit
         real_commit = txnlog.commit

@@ -234,7 +234,10 @@ def test_spark_read_all_kinds(spark, fixture_sstables):
 def test_split_parallelism_equals_whole(spark, fixture_sstables):
     whole = N.read_native_cells(spark, fixture_sstables, partitions_per_split=4096)
     split = N.read_native_cells(spark, fixture_sstables, partitions_per_split=1)
-    assert split.rdd.getNumPartitions() > whole.rdd.getNumPartitions()
+    # planned splits, not Spark partitions: the DataSource packs splits
+    # into at most defaultParallelism tasks, so task counts tie on few cores
+    assert len(N.SSTableNativeReader(fixture_sstables, 1).partitions()) > \
+        len(N.SSTableNativeReader(fixture_sstables, 4096).partitions())
     assert whole.exceptAll(split).count() == 0
     assert split.exceptAll(whole).count() == 0
 

@@ -9,15 +9,37 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType, LongType, StringType, StructField, StructType, TimestampType,
+)
 
 from cassandra_sstable_to_protocolbuf_spark.streaming.pipeline import (
-    hourly_windowed_agg,
-    read_event_stream,
-    run_stream_to_memory,
-    sessionize,
-    stream_dedup,
-)
+    stream_dedup)
 from tests.conftest import SF_SMOKE
+
+EVENT_SCHEMA = StructType([
+    StructField("event_id", LongType(), False),
+    StructField("ts", TimestampType(), False),
+    StructField("user_id", LongType(), False),
+    StructField("event_type", StringType(), False),
+    StructField("value", DoubleType(), True),
+    StructField("props", StringType(), True),
+])
+
+
+def read_event_stream(spark, path: str, max_files_per_trigger: int = 8):
+    """File-based event stream (json files arriving under `path`)."""
+    return (spark.readStream.schema(EVENT_SCHEMA)
+            .option("maxFilesPerTrigger", max_files_per_trigger)
+            .json(path))
+
+
+def run_stream_to_memory(stream_df, query_name: str, mode: str = "append"):
+    """Drive a streaming DataFrame into an in-memory sink. Returns the
+    StreamingQuery; the caller awaits processAllAvailable() then reads
+    `SELECT * FROM <query_name>`."""
+    return (stream_df.writeStream.format("memory")
+            .queryName(query_name).outputMode(mode).start())
 
 
 @pytest.fixture(scope="module")
@@ -40,30 +62,7 @@ def event_files(tmp_path_factory):
 
 
 def _batch_events(spark, path):
-    from cassandra_sstable_to_protocolbuf_spark.streaming.pipeline import EVENT_SCHEMA
     return spark.read.schema(EVENT_SCHEMA).json(path)
-
-
-def test_windowed_agg_matches_batch(spark, event_files):
-    q = run_stream_to_memory(
-        hourly_windowed_agg(read_event_stream(spark, event_files)),
-        "hourly_stream", mode="append")
-    q.processAllAvailable()
-    q.stop()
-    got = spark.sql(
-        "SELECT window_start, event_type, n_events FROM hourly_stream").collect()
-    # append mode only emits windows the watermark closed; every emitted
-    # window must match the batch computation exactly
-    batch = (
-        _batch_events(spark, event_files)
-        .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("win.start").alias("window_start"), "event_type", "n_events")
-    ).collect()
-    batch_map = {(r.window_start, r.event_type): r.n_events for r in batch}
-    assert len(got) > 0
-    for r in got:
-        assert batch_map[(r.window_start, r.event_type)] == r.n_events
 
 
 def test_stream_dedup_drops_replayed_chunk(spark, event_files, tmp_path):
@@ -145,19 +144,6 @@ def test_stream_cells_to_protobuf_sink(spark, tmp_path):
                 .filter(F.col("partition_deletion_live"))
                 .select("chunk", "sstable_id", "key").distinct().count())
     assert total == expected
-
-
-def test_sessionize_runs_and_bounds(spark, event_files):
-    q = run_stream_to_memory(
-        sessionize(read_event_stream(spark, event_files)), "sess_stream")
-    q.processAllAvailable()
-    q.stop()
-    rows = spark.sql(
-        "SELECT session_start, session_end, n_events FROM sess_stream").collect()
-    assert len(rows) > 0
-    for r in rows:
-        assert r.session_end >= r.session_start
-        assert r.n_events >= 1
 
 
 def test_kmv_stream_kill_and_resume_matches_batch(spark, tmp_path):
