@@ -1,5 +1,4 @@
-"""Projection operators -- P1, the P2 row-width cap, and LWW dedup
-(SURVEY.md §2).
+"""Projection operators -- P1 and the P2 row-width cap (SURVEY.md §2).
 
 P1 projects each cell to the 3-field proto shape {name, value, writeTime}
 (reference: service/ColumnMapper.java:9-21). P2 -- folding a partition's
@@ -8,12 +7,9 @@ surviving cells into Row{key, repeated Column} in cell-name order
 protobuf sink's writer (sources/sstable_pb.write_cells_pb), which folds
 adjacent sorted runs; MAX_CELLS_PER_ROW is its memory bound.
 
-The LWW (last-write-wins) dedup is the extension op the reference lacks:
-it never reconciles duplicate keys across SSTables (Runner.java:59
-processes files independently), so the same (key, name) can appear in many
-files. `lww_dedup` keeps the cell with the highest writeTime -- Cassandra's
-own reconciliation rule -- via a lexicographic struct max, a single hash
-aggregation (no sort; partial agg ships one candidate per group per task).
+The LWW (last-write-wins) dedup the reference lacks -- it never
+reconciles duplicate keys across SSTables (Runner.java:59 processes files
+independently) -- is landed.lww_winners.
 """
 
 from __future__ import annotations
@@ -35,14 +31,3 @@ def project_cells(cells: DataFrame) -> DataFrame:
     """P1: prune to the proto Column shape plus routing keys."""
     return cells.select("sstable_id", "key", "name", "value", "writeTime")
 
-
-def lww_dedup(cells: DataFrame) -> DataFrame:
-    """Extension: last-write-wins reconciliation across SSTables.
-
-    For each (key, name) keep the single cell with max writeTime
-    (ties broken by sstable_id to stay deterministic). One hash
-    aggregation -- map-side partial aggregation keeps the shuffle small.
-    """
-    from cassandra_sstable_to_protocolbuf_spark.landed import lww_winners
-
-    return lww_winners(cells)

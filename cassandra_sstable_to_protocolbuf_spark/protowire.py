@@ -7,8 +7,11 @@ mirroring the reference's IDL (reference: src/main/proto/sstable.proto:1-16):
 Rows are framed length-delimited -- a base-128 varint byte length followed
 by the message body -- matching writeDelimitedTo (reference:
 Runner.java:118). Hand-rolled from the public protobuf wire-format spec
-(no protobuf runtime in this environment); round-trip and golden-bytes
-tests pin the encoding.
+(no protobuf runtime in this environment). The per-row codec that states
+the format one message at a time (encode_row, frame_row, decode_row)
+lives under tests/ as the golden oracle (tests/sstable_oracle.py);
+round-trip and golden-bytes tests pin this module's block encoder and
+stream decoder against it.
 
 Wire tags: field_number << 3 | wire_type. LEN=2, I64=1.
     Column.name      tag 0x0A   Column.value  tag 0x12
@@ -18,8 +21,7 @@ Wire tags: field_number << 3 | wire_type. LEN=2, I64=1.
 
 from __future__ import annotations
 
-import struct
-from collections.abc import Iterable, Iterator
+from collections.abc import Iterator
 
 _COLUMN_NAME_TAG = 0x0A
 _COLUMN_VALUE_TAG = 0x12
@@ -42,68 +44,11 @@ def encode_varint(n: int) -> bytes:
             return bytes(out)
 
 
-def decode_varint(buf: bytes, pos: int) -> tuple[int, int]:
-    """Returns (value, new_pos)."""
-    result = 0
-    shift = 0
-    while True:
-        if pos >= len(buf):
-            raise ValueError("truncated varint")
-        b = buf[pos]
-        pos += 1
-        result |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return result, pos
-        shift += 7
-        if shift > 63:
-            raise ValueError("varint too long")
-
-
-def encode_column(name: bytes, value: bytes | None, write_time: int) -> bytes:
-    """Proto3 semantics: default-valued fields (empty bytes, writeTime 0)
-    are OMITTED, matching what the reference's writeDelimitedTo emits --
-    output is byte-identical, not merely decode-compatible."""
-    out = bytearray()
-    if name:
-        out.append(_COLUMN_NAME_TAG)
-        out += encode_varint(len(name))
-        out += name
-    if value:
-        out.append(_COLUMN_VALUE_TAG)
-        out += encode_varint(len(value))
-        out += value
-    if write_time != 0:
-        out.append(_COLUMN_WRITETIME_TAG)
-        out += struct.pack("<Q", write_time & 0xFFFFFFFFFFFFFFFF)
-    return bytes(out)
-
-
-def encode_row(key: bytes, columns: Iterable[tuple[bytes, bytes | None, int]]) -> bytes:
-    """Row message body (unframed). Proto3: an empty key is omitted;
-    repeated message elements are always emitted (an empty Column still
-    frames as tag + zero length)."""
-    out = bytearray()
-    if key:
-        out.append(_ROW_KEY_TAG)
-        out += encode_varint(len(key))
-        out += key
-    for name, value, wt in columns:
-        col = encode_column(name, value, wt)
-        out.append(_ROW_COLUMNS_TAG)
-        out += encode_varint(len(col))
-        out += col
-    return bytes(out)
-
-
-def frame_row(row_body: bytes) -> bytes:
-    """Length-delimited frame: varint(len) + body (writeDelimitedTo)."""
-    return encode_varint(len(row_body)) + row_body
-
-
 def frame_row_parts(key: bytes, columns_bytes: bytes) -> bytes:
     """Frame one Row whose repeated-columns portion is ALREADY encoded
     (encode_columns_bufs output): varint frame + optional key field +
-    the column bytes, byte-identical to frame_row(encode_row(...)).
+    the column bytes, byte-identical to the oracle's
+    frame_row(encode_row(...)).
     Used by streaming writers that accumulate a wide row's columns in
     encoded form and only learn the row's total size at its end."""
     head = bytearray()
@@ -117,10 +62,11 @@ def frame_row_parts(key: bytes, columns_bytes: bytes) -> bytes:
 
 # --------------------------------------------------------------------------
 # vectorized block encoder (the K1 sink's hot path): many framed Rows laid
-# out as one numpy scatter block over Arrow-shaped buffers. encode_row +
-# frame_row above are its golden oracle: a block equals the per-row
-# frames joined (pinned in tests/test_protowire_props, and on whole
-# decompressed sink files in tests/test_protobuf_sink).
+# out as one numpy scatter block over Arrow-shaped buffers. The per-row
+# encode_row + frame_row in tests/sstable_oracle.py are its golden
+# oracle: a block equals the per-row frames joined (pinned in
+# tests/test_protowire_props, and on whole decompressed sink files in
+# tests/test_protobuf_sink).
 # --------------------------------------------------------------------------
 
 _VSZ_THRESH = None  # lazily built numpy varint size thresholds
@@ -213,7 +159,7 @@ def encode_columns_bufs(name_data, nlen, value_data, vlen,
     a streaming writer accumulate a very wide row's columns in encoded
     form across input batches and emit the Row frame once the row's
     total size is known -- byte-identical to the columns portion of
-    encode_row."""
+    the oracle's encode_row."""
     np = _np()
     wts = np.asarray(write_times, dtype=np.int64)
     nlen = np.asarray(nlen, dtype=np.int64)
@@ -231,14 +177,15 @@ def encode_columns_bufs(name_data, nlen, value_data, vlen,
 def encode_rows_block_bufs(key_data, klen, counts, name_data, nlen,
                            value_data, vlen, write_times) -> bytes:
     """Frame + encode a RUN of Rows as one contiguous block, equal to
-    b"".join(frame_row(encode_row(key, cols))) over the rows. Payloads
-    arrive as concatenated byte buffers (uint8 arrays) + per-entry
-    length arrays: `key_data`/`klen`/`counts` per row, the name, value
-    and writeTime columns flattened in row order. An Arrow Binary column
-    IS this shape (one data buffer + offsets), so a columnar caller
-    encodes with zero per-cell Python objects. NULL values must arrive
-    as zero-length spans (Arrow offsets already do this); all layout
-    arithmetic (varint sizes, proto3 default omission) runs vectorized."""
+    the oracle's b"".join(frame_row(encode_row(key, cols))) over the
+    rows. Payloads arrive as concatenated byte buffers (uint8 arrays) +
+    per-entry length arrays: `key_data`/`klen`/`counts` per row, the
+    name, value and writeTime columns flattened in row order. An Arrow
+    Binary column IS this shape (one data buffer + offsets), so a
+    columnar caller encodes with zero per-cell Python objects. NULL
+    values must arrive as zero-length spans (Arrow offsets already do
+    this); all layout arithmetic (varint sizes, proto3 default
+    omission) runs vectorized."""
     np = _np()
     from cassandra_sstable_to_protocolbuf_spark.sources.cellcodec import (
         _ragged_idx)
@@ -308,66 +255,14 @@ def encode_rows_block_bufs(key_data, klen, counts, name_data, nlen,
     return out.tobytes()
 
 
-def decode_column(buf: bytes) -> tuple[bytes, bytes, int]:
-    name = b""
-    value = b""
-    write_time = 0
-    pos = 0
-    while pos < len(buf):
-        tag, pos = decode_varint(buf, pos)
-        if tag == _COLUMN_NAME_TAG:
-            ln, pos = decode_varint(buf, pos)
-            name = buf[pos:pos + ln]
-            pos += ln
-        elif tag == _COLUMN_VALUE_TAG:
-            ln, pos = decode_varint(buf, pos)
-            value = buf[pos:pos + ln]
-            pos += ln
-        elif tag == _COLUMN_WRITETIME_TAG:
-            # signed: Java writes fixed64 from a long, so a negative
-            # timestamp must round-trip as two's complement, not >= 2^63
-            write_time = struct.unpack_from("<q", buf, pos)[0]
-            pos += 8
-        else:
-            raise ValueError(f"unknown Column tag 0x{tag:02x}")
-    return name, value, write_time
-
-
-def decode_row(buf: bytes) -> tuple[bytes, list[tuple[bytes, bytes, int]]]:
-    key = b""
-    columns: list[tuple[bytes, bytes, int]] = []
-    pos = 0
-    while pos < len(buf):
-        tag, pos = decode_varint(buf, pos)
-        if tag == _ROW_KEY_TAG:
-            ln, pos = decode_varint(buf, pos)
-            key = buf[pos:pos + ln]
-            pos += ln
-        elif tag == _ROW_COLUMNS_TAG:
-            ln, pos = decode_varint(buf, pos)
-            columns.append(decode_column(buf[pos:pos + ln]))
-            pos += ln
-        else:
-            raise ValueError(f"unknown Row tag 0x{tag:02x}")
-    return key, columns
-
-
 # --------------------------------------------------------------------------
 # vectorized block decoder: the read-side twin of encode_rows_block_bufs.
-# One offset-only Python walk per buffered region collects field SPANS
-# (any field order, last-wins, unknown tags raise -- the same semantics
-# as decode_row); all byte movement happens as numpy gathers straight
-# into Arrow buffers. Rows never materialize as Python dicts.
+# One offset-only Python walk per buffered region collects the field SPANS
+# of whole buffered Rows (any field order, last-wins, unknown tags raise
+# -- the same semantics as the oracle's decode_row); all byte movement is
+# Arrow span gathers (cellcodec.spans_to_binary). Rows never materialize
+# as Python dicts, and a Row of any size takes this one path.
 # --------------------------------------------------------------------------
-
-
-class PbOverrun(Exception):
-    """Decoder ran past the buffered bytes mid-row: the caller extends
-    the buffer and retries from `row_start` (registers rolled back)."""
-
-    def __init__(self, row_start: int):
-        super().__init__(f"pb row overran buffer at {row_start}")
-        self.row_start = row_start
 
 
 class _PbRegisters:
@@ -387,30 +282,28 @@ class _PbRegisters:
 
 
 def decode_rows_spans(buf, regs: _PbRegisters, start_at: int = 0,
-                      max_rows: int | None = None) -> int:
-    """Walk framed Rows from buf[start_at:], appending spans into
-    `regs`. Returns the offset after the last complete row (clean EOF
-    at a frame boundary, or the max_rows flush point); raises PbOverrun
-    with registers rolled back when the buffer ends mid-row. Field
-    semantics match decode_row exactly: any order, last-wins for
-    scalars, unknown tags raise ValueError."""
+                      max_rows: int | None = None,
+                      max_bytes: int | None = None) -> tuple[int, int]:
+    """Walk framed Rows from buf[start_at:], appending into `regs` the
+    spans of each Row whose whole frame is buffered. Stops before the
+    first Row not fully buffered; after the first Row, also once
+    `max_rows` Rows are appended or before a Row starting `max_bytes`
+    or more past `start_at`. Returns (offset, need): where the walk
+    stopped, and the buffer length the Row there needs (len(buf) + 1
+    while even its frame length is cut) -- need <= len(buf) means that
+    Row is ready for the next call. Field semantics match the oracle's
+    decode_row exactly: any order, last-wins for scalars; unknown tags
+    and fields overrunning a buffered frame raise ValueError."""
     n = len(buf)
     o = start_at
+    stop = n + 1 if max_bytes is None else start_at + max_bytes
     rows_extend = regs.rows.extend
     counts_append = regs.counts.append
     cols_extend = regs.cols.extend
     done = 0
     while True:
         row_start = o
-        if o == n:
-            return o
-        if max_rows is not None and done >= max_rows:
-            return o
-        snap_rows = len(regs.rows)
-        snap_counts = len(regs.counts)
-        snap_cols = len(regs.cols)
-        try:
-            # frame varint
+        try:  # frame varint
             b = buf[o]
             o += 1
             if b < 0x80:
@@ -427,11 +320,15 @@ def decode_rows_spans(buf, regs: _PbRegisters, start_at: int = 0,
                     shift += 7
                     if shift > 63:
                         raise ValueError("varint too long")
-            row_end = o + ln
-            if row_end > n:
-                raise IndexError
-            key_off = key_len = 0
-            ncols = 0
+        except IndexError:
+            return row_start, n + 1
+        row_end = o + ln
+        if row_end > n or (done and (done == max_rows
+                                     or row_start >= stop)):
+            return row_start, row_end
+        key_off = key_len = 0
+        ncols = 0
+        try:
             while o < row_end:
                 tag = buf[o]
                 o += 1
@@ -497,55 +394,40 @@ def decode_rows_spans(buf, regs: _PbRegisters, start_at: int = 0,
                     ncols += 1
                 else:
                     raise ValueError(f"unknown Row tag 0x{tag:02x}")
-            if o != row_end:
-                raise ValueError("row field overruns frame")
-            rows_extend((key_off, key_len))
-            counts_append(ncols)
-            done += 1
         except IndexError:
-            del regs.rows[snap_rows:], regs.counts[snap_counts:], \
-                regs.cols[snap_cols:]
-            raise PbOverrun(row_start) from None
+            raise ValueError("row field overruns frame") from None
+        if o != row_end:
+            raise ValueError("row field overruns frame")
+        rows_extend((key_off, key_len))
+        counts_append(ncols)
+        done += 1
 
 
 def pb_registers_to_arrow(buf, regs: _PbRegisters, sstable_id: str):
     """Spans -> one Arrow RecordBatch (sstable_id, key,
-    columns: list<struct<name, value, writeTime>>), all columns built
-    via numpy gathers / Arrow buffers."""
+    columns: list<struct<name, value, writeTime>>): keys, names and
+    values gather through cellcodec.spans_to_binary, writeTimes
+    through one strided numpy view."""
     import numpy as np
     import pyarrow as pa
 
     from cassandra_sstable_to_protocolbuf_spark.sources.cellcodec import (
-        _arrow_offsets, _ragged_idx)
+        _arrow_offsets, spans_to_binary)
 
-    buf_np = np.frombuffer(buf, dtype=np.uint8)
     rows = np.frombuffer(regs.rows, dtype=np.int64).reshape(-1, 2)
     counts = np.frombuffer(regs.counts, dtype=np.int64)
     cols = np.frombuffer(regs.cols, dtype=np.int64).reshape(-1, 5)
     n_rows = len(rows)
-    n_cols = len(cols)
 
-    keys = pa.Array.from_buffers(
-        pa.binary(), n_rows,
-        [None, pa.py_buffer(_arrow_offsets(rows[:, 1]).tobytes()),
-         pa.py_buffer(buf_np[_ragged_idx(rows[:, 0],
-                                         rows[:, 1])].tobytes())])
-    names = pa.Array.from_buffers(
-        pa.binary(), n_cols,
-        [None, pa.py_buffer(_arrow_offsets(cols[:, 1]).tobytes()),
-         pa.py_buffer(buf_np[_ragged_idx(cols[:, 0],
-                                         cols[:, 1])].tobytes())])
-    values = pa.Array.from_buffers(
-        pa.binary(), n_cols,
-        [None, pa.py_buffer(_arrow_offsets(cols[:, 3]).tobytes()),
-         pa.py_buffer(buf_np[_ragged_idx(cols[:, 2],
-                                         cols[:, 3])].tobytes())])
-    wt = np.zeros(n_cols, dtype=np.int64)
+    keys = spans_to_binary(buf, rows[:, 0], rows[:, 1])
+    names = spans_to_binary(buf, cols[:, 0], cols[:, 1])
+    values = spans_to_binary(buf, cols[:, 2], cols[:, 3])
+    wt = np.zeros(len(cols), dtype=np.int64)
     present = cols[:, 4] >= 0
     if present.any():
         off = cols[:, 4][present]
-        wt[present] = buf_np[off[:, None] + np.arange(8)].view(
-            "<i8").ravel()
+        wt[present] = np.frombuffer(buf, dtype=np.uint8)[
+            off[:, None] + np.arange(8)].view("<i8").ravel()
     struct = pa.StructArray.from_arrays(
         [names, values, pa.array(wt)], ["name", "value", "writeTime"])
     columns = pa.ListArray.from_arrays(pa.array(_arrow_offsets(counts)),
@@ -561,131 +443,40 @@ def pb_registers_to_arrow(buf, regs: _PbRegisters, sstable_id: str):
                                       schema=schema)
 
 
-# a single framed Row buffered past this falls back to the scalar
-# decode_row path: the vectorized walk's numpy gathers index with int32,
-# so unbounded buffer growth on a multi-GB Row would otherwise wrap
-# offsets silently (the native reader needs no such cap: it resumes a
-# partition cut by its read window, cellcodec.decode_partitions)
-PB_ROW_CAP = 64 << 20
-# flush a batch once its buffered payload passes this even before
-# batch_rows accumulate, so buffer size stays O(cap), not O(rows x row)
+# a batch starts no Row this many bytes or more past its first, even
+# before batch_rows accumulate
 PB_BATCH_BYTE_CAP = 64 << 20
-
-
-def _scalar_row_batch(buf, start: int, stream, chunk_bytes: int,
-                      sstable_id: str):
-    """Decode ONE framed row the scalar way (decode_row) and build a
-    single-row RecordBatch -- the over-cap fallback. Memory is O(row):
-    the row must materialize regardless (it is one record), but the
-    int32-indexed batch gathers never see it. Returns
-    (batch, remainder_buf): the unconsumed tail after the row with the
-    consumed prefix dropped."""
-    import pyarrow as pa
-
-    # frame varint, scalar, extending the buffer on demand
-    pos = start
-    ln = 0
-    shift = 0
-    while True:
-        while pos >= len(buf):
-            more = stream.read(chunk_bytes)
-            if not more:
-                raise ValueError("truncated message body")
-            buf += more
-        b = buf[pos]
-        pos += 1
-        ln |= (b & 0x7F) << shift
-        if not b & 0x80:
-            break
-        shift += 7
-        if shift > 63:
-            raise ValueError("varint too long")
-    end = pos + ln
-    while len(buf) < end:
-        more = stream.read(chunk_bytes)
-        if not more:
-            raise ValueError("truncated message body")
-        buf += more
-    key, columns = decode_row(bytes(buf[pos:end]))
-    struct_type = pa.struct([("name", pa.binary()),
-                             ("value", pa.binary()),
-                             ("writeTime", pa.int64())])
-    schema = pa.schema([
-        ("sstable_id", pa.string()), ("key", pa.binary()),
-        ("columns", pa.list_(struct_type))])
-    batch = pa.RecordBatch.from_arrays(
-        [pa.array([sstable_id], type=pa.string()),
-         pa.array([key], type=pa.binary()),
-         pa.array([[{"name": n, "value": v, "writeTime": wt}
-                    for n, v, wt in columns]],
-                  type=pa.list_(struct_type))],
-        schema=schema)
-    return batch, bytearray(buf[end:])
 
 
 def iter_decoded_batches(stream, sstable_id: str,
                          batch_rows: int = 1024,
                          chunk_bytes: int = 4 << 20,
-                         row_cap: int = PB_ROW_CAP,
                          batch_byte_cap: int = PB_BATCH_BYTE_CAP) -> Iterator:
     """Arrow RecordBatches straight from a length-delimited protobuf
-    stream: bounded buffering (consumed-prefix trimming + grow on
-    demand, flush at `batch_byte_cap`), the vectorized span walk, zero
-    per-row Python objects. A single Row buffered past `row_cap` is
-    decoded by the scalar decode_row path instead (memory O(row), and
-    the int32 gather index space of the vectorized builder is never
-    exceeded -- the cellcodec guards would raise rather than wrap, but
-    the fallback keeps giant rows WORKING)."""
-    buf = bytearray(stream.read(chunk_bytes))
+    stream through the span walk, zero per-row Python objects. A batch
+    holds at most `batch_rows` Rows and starts no Row `batch_byte_cap`
+    or more past its first. When the buffer ends inside a Row, the
+    decoded Rows are already flushed: the consumed prefix is dropped
+    and ONE read of at least `chunk_bytes` fetches what that Row
+    needs. A Row of any size therefore decodes on this one path in
+    O(row + chunk_bytes) buffer memory, reading the stream O(1) times
+    for it."""
+    buf = bytearray()
     o = 0
+    need = 1  # the buffer length the Row at `o` needs
     while True:
-        regs = _PbRegisters()
-        batch_start = o
-        done = False
-        giant = -1
-        while True:
-            try:
-                o = decode_rows_spans(buf, regs, start_at=o,
-                                      max_rows=batch_rows)
-            except PbOverrun as ov:
-                if ov.row_start - batch_start >= batch_byte_cap \
-                        and len(regs):
-                    o = ov.row_start
-                    break  # bounded batch: flush before growing more
-                if len(buf) - ov.row_start > row_cap:
-                    giant = ov.row_start
-                    o = ov.row_start
-                    break
-                more = stream.read(chunk_bytes)
-                if not more:
-                    raise ValueError(
-                        "truncated message body") from None
-                buf += more
-                o = ov.row_start
-                continue
-            if o == len(buf):
-                if o - batch_start >= batch_byte_cap and len(regs):
-                    break  # bounded batch: flush before growing more
-                more = stream.read(chunk_bytes)
-                if not more:
-                    done = True
-                    break
-                buf += more
-                continue
-            break  # flush point
-        if len(regs):
+        while need <= len(buf):
+            regs = _PbRegisters()
+            o, need = decode_rows_spans(buf, regs, start_at=o,
+                                        max_rows=batch_rows,
+                                        max_bytes=batch_byte_cap)
             yield pb_registers_to_arrow(buf, regs, sstable_id)
-        if giant >= 0:
-            batch, buf = _scalar_row_batch(buf, giant, stream,
-                                           chunk_bytes, sstable_id)
-            yield batch
-            o = 0
-            continue
-        if done:
+        del buf[:o]
+        need -= o
+        o = 0
+        have = len(buf)
+        buf += stream.read(max(chunk_bytes, need - have))
+        if len(buf) == have:
+            if buf:
+                raise ValueError("truncated message body")
             return
-        if o >= chunk_bytes:
-            # amortized trim: only once the consumed prefix is at least
-            # a chunk (a per-flush buf[o:] copy is O(buffer) and turned
-            # the first cut of this decoder into 3+ GB of memcpy)
-            buf = buf[o:]
-            o = 0

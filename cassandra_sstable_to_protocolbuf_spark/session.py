@@ -95,8 +95,19 @@ def scratch_dir(name: str, tag: str, fresh: bool = False) -> str:
     users' sessions would fight over the same paths. Concurrent sessions
     of the SAME user at the same (name, tag) still share (that is the
     reuse contract); isolate with a distinct tag if unwanted."""
-    import getpass
     import shutil
+
+    d = os.path.join(_scratch_root(), f"{name}_{tag}")
+    if fresh and os.path.isdir(d):
+        shutil.rmtree(d, ignore_errors=True)
+    os.makedirs(d, exist_ok=True)
+    return d
+
+
+def _scratch_root() -> str:
+    """The per-user mode-0700 parent of all scratch and build-once
+    directories, verified to be this user's on every call."""
+    import getpass
     import tempfile
 
     root = os.path.join(tempfile.gettempdir(),
@@ -113,11 +124,7 @@ def scratch_dir(name: str, tag: str, fresh: bool = False) -> str:
             f"user -- refusing to share scratch with another account")
     if st.st_mode & 0o077:
         os.chmod(root, 0o700)
-    d = os.path.join(root, f"{name}_{tag}")
-    if fresh and os.path.isdir(d):
-        shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(d, exist_ok=True)
-    return d
+    return root
 
 
 _SHIPPED_SESSIONS: set[int] = set()
@@ -281,14 +288,16 @@ def build_once(cache_name: str, digest: str, build_fn) -> str:
     The build lands in a private temp dir and is renamed into place, so
     a concurrent builder losing the rename race just discards its copy;
     the digest must cover every input that should invalidate the cache
-    (source bytes of the code involved + the input's identity)."""
-    import os
+    (source bytes of the code involved + the input's identity). Both
+    live under the per-user scratch root (scratch_dir), never at a
+    predictable shared-/tmp path another account could plant."""
     import shutil
     import tempfile
 
-    out = os.path.join(tempfile.gettempdir(), f"{cache_name}_{digest}")
+    root = _scratch_root()
+    out = os.path.join(root, f"{cache_name}_{digest}")
     if not os.path.isdir(out):
-        tmp = tempfile.mkdtemp(prefix=f"{cache_name}_build_")
+        tmp = tempfile.mkdtemp(prefix=f"{cache_name}_build_", dir=root)
         build_fn(tmp)
         try:
             os.rename(tmp, out)

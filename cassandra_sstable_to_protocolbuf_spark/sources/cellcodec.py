@@ -8,12 +8,12 @@ framing is fixed-layout big-endian, so both directions batch:
 
 * DECODE: one tight offset-only Python walk per region (a handful of
   int ops and ONE array.extend per atom -- no dicts, no tuples, no
-  struct), then EVERY field materializes via numpy gathers (ragged
-  delta-cumsum indexing for names/values, strided view for
-  timestamps) straight into pyarrow buffers. Per-cell Python objects
-  never exist. The walk resumes mid-partition (decode_partitions
-  open_part), so one partition of any size streams through a bounded
-  read window.
+  struct), then EVERY field materializes in bulk: names/values by
+  Arrow's take over the walked spans (spans_to_binary, also the
+  protobuf reader's gather), timestamps by a strided numpy view.
+  Per-cell Python objects never exist. The walk resumes mid-partition
+  (decode_partitions open_part), so one partition of any size streams
+  through a bounded read window.
 * ENCODE: whole partition RUNS (headers + cells + end markers) lay out
   as one preallocated numpy buffer from FLAT columnar inputs;
   lengths/offsets via cumsum, fixed fields via vectorized scatter
@@ -69,17 +69,17 @@ _M64 = (1 << 64) - 1
 
 
 def _ragged_idx(offs: np.ndarray, lens: np.ndarray) -> np.ndarray:
-    """Flat source/destination indexes for n variable-length spans:
-    byte k of span j maps to offs[j] + k. Built as a delta array +
-    IN-PLACE cumsum -- O(total bytes), no np.repeat (whose
-    per-tiny-span cost dominated the first cut of this module), int32
-    and single-buffer so the transient is 4 bytes per payload byte
-    (the int64 double-buffer version tripped the writer memory pin).
-    Zero-length spans are masked out up front so boundary deltas never
-    collide. Callers keep offsets under 2^31 (runs and read buffers
-    are both capped far below 2 GiB) -- and a caller that slips past
-    its cap hits the explicit guard below instead of a silent int32
-    wrap producing corrupt gathers."""
+    """Flat destination indexes for the writers' ragged scatters
+    (_scatter_spans, protowire's block encoder): byte k of span j maps
+    to offs[j] + k. The readers gather with spans_to_binary instead.
+    Built as a delta array + IN-PLACE cumsum -- O(total bytes), no
+    np.repeat (whose per-tiny-span cost dominated the first cut of this
+    module), int32 and single-buffer so the transient is 4 bytes per
+    payload byte (the int64 double-buffer version tripped the writer
+    memory pin). Zero-length spans are masked out up front so boundary
+    deltas never collide. Writer runs are capped far below 2 GiB -- and
+    a caller that slips past its cap hits the explicit guard below
+    instead of a silent int32 wrap producing corrupt scatters."""
     nz = lens > 0
     if not nz.all():
         offs = offs[nz]
@@ -101,6 +101,48 @@ def _ragged_idx(offs: np.ndarray, lens: np.ndarray) -> np.ndarray:
                              ).astype(np.int32)
     np.cumsum(deltas, out=deltas)
     return deltas
+
+
+def spans_to_binary(buf, offs: np.ndarray, lens: np.ndarray,
+                    validity: np.ndarray | None = None):
+    """Arrow `binary` array of the byte spans buf[offs[j]:offs[j] +
+    lens[j]], gathered by Arrow's C++ take with one memcpy per span and
+    no per-byte index: a `large_binary` view over `buf` whose offsets
+    alternate span start and span end holds the spans in its even
+    slots. Zero-length spans (absent proto fields, PARTITION-marker
+    names, NULL values) may carry any offset: they are lifted to the
+    previous span's end so the offsets stay monotone. Non-empty spans
+    must lie inside `buf` in buffer order without overlap -- every
+    decoder walks its buffer forward -- else ValueError before any view
+    exists. `validity` (True = present) marks NULLs. A column past
+    2 GiB, Arrow `binary`'s offset limit, raises ValueError before the
+    gather allocates it."""
+    import pyarrow as pa
+
+    n = len(offs)
+    offs = np.asarray(offs, dtype=np.int64)
+    lens = np.asarray(lens, dtype=np.int64)
+    nz = lens > 0
+    starts = np.where(nz, offs, 0)
+    bounds = np.zeros(2 * n + 1, dtype=np.int64)
+    bounds[0:-1:2] = starts
+    bounds[1::2] = starts + np.where(nz, lens, 0)
+    np.maximum.accumulate(bounds, out=bounds)
+    if (bounds[0:-1:2][nz] != offs[nz]).any() or bounds[0] < 0 \
+            or bounds[-1] > len(buf):
+        raise ValueError("byte spans out of buffer order, overlapping or "
+                         "outside the buffer")
+    total = int(lens[nz].sum())
+    if total > _INT32_MAX:
+        raise ValueError(f"binary column of {total} bytes passes the "
+                         f"int32 offsets of Arrow binary (2 GiB)")
+    view = pa.Array.from_buffers(pa.large_binary(), 2 * n,
+                                 [None, pa.py_buffer(bounds),
+                                  pa.py_buffer(buf)])
+    idx = np.arange(0, 2 * n, 2, dtype=np.int64)
+    if validity is not None and not validity.all():
+        idx = pa.array(idx, mask=~validity)
+    return view.take(idx).cast(pa.binary())
 
 
 def _arrow_offsets(lens: np.ndarray) -> np.ndarray:
@@ -452,8 +494,8 @@ def _sparse_int32(pairs: list, nrec: int):
 def registers_to_arrow(buf, regs: _Registers, parts: list,
                        sstable_id: str, live_only: bool):
     """Columnar registers -> one pyarrow.RecordBatch in the native cell
-    schema. Every column builds via numpy gathers / arrow buffers --
-    no per-row Python objects."""
+    schema. Names and values gather through spans_to_binary, the fixed
+    fields through numpy -- no per-row Python objects."""
     import pyarrow as pa
 
     nrec = len(regs)
@@ -478,26 +520,9 @@ def registers_to_arrow(buf, regs: _Registers, parts: list,
     key_arr = pa.array([p[0] for p in parts], type=pa.binary())
     keys = key_arr.take(pa.array(part_idx.astype(np.int32)))
 
-    names = pa.Array.from_buffers(
-        pa.binary(), nrec,
-        [None, pa.py_buffer(_arrow_offsets(name_len).tobytes()),
-         pa.py_buffer(buf_np[_ragged_idx(name_off, name_len)].tobytes())])
-
-    null_mask = val_len < 0
-    any_null = bool(null_mask.any())
-    v_len = np.where(null_mask, 0, val_len) if any_null else val_len
-    if any_null:
-        validity = pa.py_buffer(
-            np.packbits(~null_mask, bitorder="little").tobytes())
-        nnull = int(null_mask.sum())
-    else:
-        validity = None
-        nnull = 0
-    values = pa.Array.from_buffers(
-        pa.binary(), nrec,
-        [validity, pa.py_buffer(_arrow_offsets(v_len).tobytes()),
-         pa.py_buffer(buf_np[_ragged_idx(val_off, v_len)].tobytes())],
-        null_count=nnull)
+    names = spans_to_binary(buf, name_off, name_len)
+    # value_len -1 marks SQL NULL (PARTITION marker rows)
+    values = spans_to_binary(buf, val_off, val_len, validity=val_len >= 0)
 
     # writeTime: strided 8-byte big-endian gather
     ts_bytes = buf_np[ts_off[:, None] + np.arange(8)]

@@ -1852,9 +1852,8 @@ def write_cells_as_sstables(cells_df, out_dir: str,
 
     MANIFEST NOTE: this returns a LAZY plan, so it cannot itself record
     outputs in a manifest-enabled target directory. Callers exporting
-    into one must materialize through export_sstables (collects the
-    metrics AND publishes them) or call manifest.add on the collected
-    paths -- OPTIMIZE's executor (_run_bin) already does.
+    into one call manifest.add on the collected paths, as OPTIMIZE's
+    executor (_run_bin) does.
 
     lww_by: name of a column carrying each cell's ORIGIN sstable_id.
     When set, cells of the same (sstable_id, key, name) sort by the
@@ -1894,20 +1893,6 @@ def write_cells_as_sstables(cells_df, out_dir: str,
             .drop(lww_by)
             .mapInPandas(_cells_stream_writer(out_dir, compression,
                                               dedup_runs=True), schema))
-
-
-def export_sstables(cells_df, out_dir: str,
-                    compression: str | None = None) -> list:
-    """Collect-and-publish export: run write_cells_as_sstables, record
-    every output in `out_dir`'s manifest (no-op without one -- CAS-safe
-    against concurrent exporters and OPTIMIZE), and return the metrics
-    rows. The publish API for manifest-enabled directories."""
-    from cassandra_sstable_to_protocolbuf_spark import manifest
-
-    metrics = write_cells_as_sstables(cells_df, out_dir,
-                                      compression=compression).collect()
-    manifest.add(out_dir, [m.path for m in metrics])
-    return metrics
 
 
 # --------------------------------------------------------------------------
@@ -3022,8 +3007,8 @@ class SSTableNativeReader(DataSourceReader):
             base = split.start
             # bounded first read: later reads add `grow` bytes and the
             # consumed prefix is dropped, so memory stays O(window) even
-            # for a whole-file split (also keeps every buffer offset
-            # inside the gather indexer's int32 range)
+            # for a whole-file split (and every batch's binary columns
+            # far inside Arrow binary's 2 GiB offsets)
             buf = bytearray(f.read(min(split.end - split.start, 4 * grow)))
             o = 0
             open_part = None

@@ -26,11 +26,12 @@ zstd-compressed stream, one output file per input SSTable, named
   columns), never O(file). Both sinks report the per-file metrics the
   reference prints (M1: sizes, row counts, wall seconds,
   Runner.java:88-96). The decompressed stream equals, row for row,
-  protowire.frame_row(protowire.encode_row(...)) -- the per-row codec
-  is the format's golden oracle.
+  frame_row(encode_row(...)) of the per-row codec in
+  tests/sstable_oracle.py -- the format's golden oracle.
 * SSTablePbDataSource -- a Spark 4 Python DataSource ("sstable_pb"
   format) reading those files back: one input partition per file
-  (file-parallel scan), lazy streaming decode, nested Row schema.
+  (file-parallel scan), lazy streaming decode on one span path for
+  Rows of any size, nested Row schema.
 
 Scale notes: convert's parallelism is the scan's -- a 50 GB sstable
 plans into byte-range splits, each written by its own task with O(batch)
@@ -144,8 +145,8 @@ def _pb_flat_stream_writer(out_dir: str, max_cells: int | None = None):
     delimited-protobuf Rows, and roll to a new `.proto.zst` when
     sstable_id changes. No per-cell Python objects: run detection, live
     filtering and wire layout are Arrow/numpy kernels over the batch's
-    buffers, and the decompressed output equals per-row
-    frame_row(encode_row(...)). Dead cells (live=false: dead cells of
+    buffers, and the decompressed output equals the oracle's per-row
+    frame_row(encode_row(...)) (tests/sstable_oracle.py). Dead cells (live=false: dead cells of
     write_cells_pb's input, the native scan's PARTITION markers) are
     dropped per-cell but still mark their (sstable_id, key) run, so a
     live partition whose cells are ALL filtered still emits its Row.
@@ -333,8 +334,8 @@ def write_cells_pb(cells_binary: DataFrame, out_dir: str) -> DataFrame:
     (repartition by sstable_id) and a within-partition sort by
     (sstable_id, key, name, value, writeTime); the writer folds adjacent
     (sstable_id, key) runs into Rows. Each file's decompressed stream
-    equals the per-row oracle, frame_row(encode_row(key, cols)) over the
-    live rows in key order -- pinned by the golden tests. Rows are
+    equals the per-row oracle's frame_row(encode_row(key, cols)) over
+    the live rows in key order -- pinned by the golden tests. Rows are
     written in ascending key-byte order within each file: cells without
     a source file have no token order to keep, so the sort fixes one.
 
@@ -536,11 +537,12 @@ class SSTablePbReader(DataSourceReader):
         """Yield pyarrow.RecordBatch chunks (Arrow columnar handoff to
         the JVM) straight from the vectorized span decoder
         (protowire.iter_decoded_batches): one offset-only walk per
-        buffered region, every column built by numpy gathers -- rows
-        never exist as Python dicts. Bounded buffering regardless of
-        file size; decode semantics identical to decode_row (any field
-        order, last-wins, loud unknown tags), pinned by the protowire
-        parity sweep."""
+        buffered region, every binary column gathered by Arrow's take
+        -- rows never exist as Python dicts. One path for Rows of any
+        size: buffering is O(largest Row + read chunk) regardless of
+        file size; decode semantics identical to the oracle's
+        decode_row (any field order, last-wins, loud unknown tags),
+        pinned by the protowire parity sweep."""
         import pyarrow as pa
 
         fname = os.path.basename(partition.path)

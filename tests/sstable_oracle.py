@@ -8,16 +8,20 @@ iterator (SSTableIdentityIteratorPatched.computeNext) -- so tests state
 what read() must produce without sharing a line of decode code with it.
 O(one cell) memory: a partition's cells are a lazy generator.
 
-iter_delimited is the read half of the per-row protobuf oracle: it
-splits a varint-delimited stream back into the message bodies that
-protowire.frame_row(encode_row(...)) framed."""
+The per-row protobuf codec below is the golden oracle for the
+engine's `.proto.zst` format (sstable.proto's Row/Column, framed by
+writeDelimitedTo): encode_row + frame_row state one message at a time
+what protowire's block encoder must emit, decode_row what its span
+decoder must read back, and iter_delimited splits a varint-delimited
+stream into the message bodies frame_row framed."""
 
 from __future__ import annotations
 
 import os
 import struct
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
+from cassandra_sstable_to_protocolbuf_spark.protowire import encode_varint
 from cassandra_sstable_to_protocolbuf_spark.sources import sstable_native as N
 
 
@@ -196,3 +200,114 @@ def iter_delimited(stream) -> Iterator[bytes]:
         if len(body) != length:
             raise ValueError("truncated message body")
         yield body
+
+
+# per-row protobuf codec. Wire tags: field_number << 3 | wire_type
+# (LEN=2, I64=1), stated here apart from protowire's own constants.
+_COLUMN_NAME_TAG = 0x0A
+_COLUMN_VALUE_TAG = 0x12
+_COLUMN_WRITETIME_TAG = 0x19
+_ROW_KEY_TAG = 0x0A
+_ROW_COLUMNS_TAG = 0x12
+
+
+def decode_varint(buf: bytes, pos: int) -> tuple[int, int]:
+    """Returns (value, new_pos)."""
+    result = 0
+    shift = 0
+    while True:
+        if pos >= len(buf):
+            raise ValueError("truncated varint")
+        b = buf[pos]
+        pos += 1
+        result |= (b & 0x7F) << shift
+        if not b & 0x80:
+            return result, pos
+        shift += 7
+        if shift > 63:
+            raise ValueError("varint too long")
+
+
+def encode_column(name: bytes, value: bytes | None, write_time: int) -> bytes:
+    """Proto3 semantics: default-valued fields (empty bytes, writeTime 0)
+    are OMITTED, matching what the reference's writeDelimitedTo emits --
+    output is byte-identical, not merely decode-compatible."""
+    out = bytearray()
+    if name:
+        out.append(_COLUMN_NAME_TAG)
+        out += encode_varint(len(name))
+        out += name
+    if value:
+        out.append(_COLUMN_VALUE_TAG)
+        out += encode_varint(len(value))
+        out += value
+    if write_time != 0:
+        out.append(_COLUMN_WRITETIME_TAG)
+        out += struct.pack("<Q", write_time & 0xFFFFFFFFFFFFFFFF)
+    return bytes(out)
+
+
+def encode_row(key: bytes, columns: Iterable[tuple[bytes, bytes | None, int]]) -> bytes:
+    """Row message body (unframed). Proto3: an empty key is omitted;
+    repeated message elements are always emitted (an empty Column still
+    frames as tag + zero length)."""
+    out = bytearray()
+    if key:
+        out.append(_ROW_KEY_TAG)
+        out += encode_varint(len(key))
+        out += key
+    for name, value, wt in columns:
+        col = encode_column(name, value, wt)
+        out.append(_ROW_COLUMNS_TAG)
+        out += encode_varint(len(col))
+        out += col
+    return bytes(out)
+
+
+def frame_row(row_body: bytes) -> bytes:
+    """Length-delimited frame: varint(len) + body (writeDelimitedTo)."""
+    return encode_varint(len(row_body)) + row_body
+
+
+def decode_column(buf: bytes) -> tuple[bytes, bytes, int]:
+    name = b""
+    value = b""
+    write_time = 0
+    pos = 0
+    while pos < len(buf):
+        tag, pos = decode_varint(buf, pos)
+        if tag == _COLUMN_NAME_TAG:
+            ln, pos = decode_varint(buf, pos)
+            name = buf[pos:pos + ln]
+            pos += ln
+        elif tag == _COLUMN_VALUE_TAG:
+            ln, pos = decode_varint(buf, pos)
+            value = buf[pos:pos + ln]
+            pos += ln
+        elif tag == _COLUMN_WRITETIME_TAG:
+            # signed: Java writes fixed64 from a long, so a negative
+            # timestamp must round-trip as two's complement, not >= 2^63
+            write_time = struct.unpack_from("<q", buf, pos)[0]
+            pos += 8
+        else:
+            raise ValueError(f"unknown Column tag 0x{tag:02x}")
+    return name, value, write_time
+
+
+def decode_row(buf: bytes) -> tuple[bytes, list[tuple[bytes, bytes, int]]]:
+    key = b""
+    columns: list[tuple[bytes, bytes, int]] = []
+    pos = 0
+    while pos < len(buf):
+        tag, pos = decode_varint(buf, pos)
+        if tag == _ROW_KEY_TAG:
+            ln, pos = decode_varint(buf, pos)
+            key = buf[pos:pos + ln]
+            pos += ln
+        elif tag == _ROW_COLUMNS_TAG:
+            ln, pos = decode_varint(buf, pos)
+            columns.append(decode_column(buf[pos:pos + ln]))
+            pos += ln
+        else:
+            raise ValueError(f"unknown Row tag 0x{tag:02x}")
+    return key, columns

@@ -179,6 +179,41 @@ def test_batch_writer_rejects_out_of_order_and_empty_names(tmp_path):
     w.abort()
 
 
+def test_spans_to_binary_gathers_spans():
+    """The one gather both decoders build binary columns with: spans in
+    buffer order, zero-length spans at any offset (before, behind or
+    past their neighbours) and NULLs between real ones."""
+    import pyarrow as pa
+
+    empty = C.spans_to_binary(b"abc", np.empty(0, np.int64),
+                              np.empty(0, np.int64))
+    assert empty.type == pa.binary() and len(empty) == 0
+
+    buf = bytearray(b"0123456789")
+    offs = np.array([1, 0, 9, 0, 5, 4, 8], dtype=np.int64)
+    lens = np.array([3, 0, 0, -1, 2, 0, 2], dtype=np.int64)
+    got = C.spans_to_binary(buf, offs, lens, validity=lens >= 0)
+    assert got.type == pa.binary()
+    assert got.to_pylist() == [b"123", b"", b"", None, b"56", b"", b"89"]
+    assert got.null_count == 1
+    # the gather copies: the buffer may be trimmed right after
+    del buf[:4]
+    assert got.to_pylist()[0] == b"123"
+
+
+@pytest.mark.parametrize("offs,lens", [
+    ([5, 1], [2, 2]),      # out of buffer order
+    ([1, 2], [3, 3]),      # overlapping
+    ([1, 1], [2, 2]),      # the same span twice
+    ([-1], [2]),           # before the buffer
+    ([8], [5]),            # past the buffer end
+])
+def test_spans_to_binary_rejects_unordered_spans(offs, lens):
+    with pytest.raises(ValueError, match="span"):
+        C.spans_to_binary(b"0123456789", np.array(offs, dtype=np.int64),
+                          np.array(lens, dtype=np.int64))
+
+
 def test_decode_rows_match_scalar_iter(tmp_path):
     """decode_partitions + registers_to_arrow reproduce the scalar walk
     EXACTLY (same rows, same order, marker rows, nulls, kinds) on the

@@ -55,11 +55,11 @@ def test_convert_end_to_end(tmp_path):
     # decode the output with the wire codec directly
     import pyarrow as pa
 
-    from cassandra_sstable_to_protocolbuf_spark import protowire as pw
+    from tests.sstable_oracle import decode_row
 
     with pa.input_stream(os.path.join(out, files[0]), compression=None) as raw, \
             pa.CompressedInputStream(raw, "zstd") as zin:
-        rows = [pw.decode_row(b) for b in iter_delimited(zin)]
+        rows = [decode_row(b) for b in iter_delimited(zin)]
     assert rows == [(b"k1", [(b"a", b"x", 10)])]
 
 

@@ -269,24 +269,6 @@ def test_writer_publish_records_additions(tmp_path):
     assert manifest.data_files(d) is not None  # no fallback needed
 
 
-def test_export_sstables_publishes_to_manifest(spark, tmp_path):
-    """The distributed export helper collects metrics AND records every
-    output in the target directory's manifest."""
-    d = str(tmp_path)
-    src = str(tmp_path / "src")
-    _mk(src, "aa", 8, 4, ts=1)
-    out = str(tmp_path / "out")
-    os.makedirs(out)
-    manifest.init(out)
-    cells = CP.compact_cells(read_native_cells(spark, src), 1,
-                             output_prefix="exp")
-    metrics = N.export_sstables(cells, out)
-    assert metrics
-    entries = manifest.read_entries(out)
-    for m in metrics:
-        assert os.path.relpath(m.path, out) in entries
-
-
 def test_reconcile_repairs_out_of_band_additions(tmp_path):
     """A raw file copy that bypassed every publish API: reconcile()
     unions the walk back in and reports exactly what was missing."""

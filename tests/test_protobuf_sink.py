@@ -8,14 +8,16 @@ import io
 import pytest
 
 from cassandra_sstable_to_protocolbuf_spark import protowire as pw
-from tests.sstable_oracle import iter_delimited
+from tests.sstable_oracle import (
+    decode_column, decode_row, decode_varint, encode_column, encode_row,
+    frame_row, iter_delimited)
 from tests.test_cellcodec import _mixed_fixture, _write_ic_fixture
 
 
 def test_varint_roundtrip():
     for n in (0, 1, 127, 128, 300, 2 ** 21 - 1, 2 ** 35, 2 ** 63 - 1):
         buf = pw.encode_varint(n)
-        val, pos = pw.decode_varint(buf, 0)
+        val, pos = decode_varint(buf, 0)
         assert val == n and pos == len(buf)
 
 
@@ -28,11 +30,11 @@ def test_golden_row_bytes():
     """Hand-computed wire bytes for Row(key=b'k', [Column(b'n', b'v', 1)])
     per the public protobuf wire spec -- pins the encoding the reference's
     sstable.proto produces."""
-    col = pw.encode_column(b"n", b"v", 1)
+    col = encode_column(b"n", b"v", 1)
     assert col == bytes.fromhex("0a016e120176190100000000000000")
-    row = pw.encode_row(b"k", [(b"n", b"v", 1)])
+    row = encode_row(b"k", [(b"n", b"v", 1)])
     assert row == bytes.fromhex("0a016b120f") + col
-    framed = pw.frame_row(row)
+    framed = frame_row(row)
     assert framed[0] == len(row)  # single-byte varint length prefix
 
 
@@ -41,38 +43,38 @@ def test_proto3_default_fields_omitted():
     Column encodes to ZERO bytes (framed as tag + len 0 inside Row),
     and an empty Row key is omitted -- byte parity with the
     reference's writeDelimitedTo output."""
-    assert pw.encode_column(b"", b"", 0) == b""
-    assert pw.encode_column(b"", None, 0) == b""
-    body = pw.encode_row(b"", [(b"", b"", 0)])
+    assert encode_column(b"", b"", 0) == b""
+    assert encode_column(b"", None, 0) == b""
+    body = encode_row(b"", [(b"", b"", 0)])
     assert body == bytes.fromhex("1200")  # columns tag + zero length
-    assert pw.decode_row(body) == (b"", [(b"", b"", 0)])
+    assert decode_row(body) == (b"", [(b"", b"", 0)])
 
 
 def test_negative_writetime_roundtrip():
     """Java fixed64-as-long: negative timestamps round-trip via two's
     complement instead of decoding as >= 2^63."""
-    col = pw.encode_column(b"n", b"v", -42)
-    assert pw.decode_column(col) == (b"n", b"v", -42)
-    assert pw.decode_column(pw.encode_column(b"n", b"v", -(2 ** 63)))[2] == -(2 ** 63)
+    col = encode_column(b"n", b"v", -42)
+    assert decode_column(col) == (b"n", b"v", -42)
+    assert decode_column(encode_column(b"n", b"v", -(2 ** 63)))[2] == -(2 ** 63)
 
 
 def test_row_codec_roundtrip():
     cols = [(b"", b"", 0), (b"name", None, 2 ** 62), (b"\x00\xff", b"x" * 300, 123)]
-    body = pw.encode_row(b"\x01\x02", cols)
-    key, decoded = pw.decode_row(body)
+    body = encode_row(b"\x01\x02", cols)
+    key, decoded = decode_row(body)
     assert key == b"\x01\x02"
     assert decoded == [(b"", b"", 0), (b"name", b"", 2 ** 62), (b"\x00\xff", b"x" * 300, 123)]
 
 
 def test_iter_delimited_stream():
-    frames = b"".join(pw.frame_row(pw.encode_row(bytes([i]), [])) for i in range(5))
+    frames = b"".join(frame_row(encode_row(bytes([i]), [])) for i in range(5))
     bodies = list(iter_delimited(io.BytesIO(frames)))
     assert len(bodies) == 5
-    assert [pw.decode_row(b)[0] for b in bodies] == [bytes([i]) for i in range(5)]
+    assert [decode_row(b)[0] for b in bodies] == [bytes([i]) for i in range(5)]
 
 
 def test_iter_delimited_truncated():
-    framed = pw.frame_row(b"x" * 100)
+    framed = frame_row(b"x" * 100)
     with pytest.raises(ValueError):
         list(iter_delimited(io.BytesIO(framed[:50])))
 
@@ -123,7 +125,7 @@ def _assert_golden(cells, out_dir, metrics):
     for sid, rows in expected.items():
         m = by_sid[sid]
         got = _decompressed(m.path)
-        assert got == b"".join(pw.frame_row(pw.encode_row(k, cols))
+        assert got == b"".join(frame_row(encode_row(k, cols))
                                for k, cols in rows), f"stream differs: {sid}"
         assert m.n_rows == len(rows)
         assert m.n_cells == sum(len(cols) for _, cols in rows)
@@ -321,7 +323,7 @@ def _oracle_stream(data_path):
 
     size = N.SSTableNativeReader._logical_size(data_path)
     return b"".join(
-        pw.frame_row(pw.encode_row(part["key"], [
+        frame_row(encode_row(part["key"], [
             (c["name"], c["value"], c["timestamp"])
             for c in part["cells"] if c["kind"] == "LIVE"]))
         for part in scan_partitions_eager(data_path, 0, size)
@@ -329,7 +331,7 @@ def _oracle_stream(data_path):
 
 
 def _stream_rows(stream):
-    return [pw.decode_row(b) for b in iter_delimited(io.BytesIO(stream))]
+    return [decode_row(b) for b in iter_delimited(io.BytesIO(stream))]
 
 
 def _row_multiset(rows):

@@ -8,7 +8,8 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from cassandra_sstable_to_protocolbuf_spark import protowire as pw
-from tests.sstable_oracle import iter_delimited
+from tests.sstable_oracle import (
+    decode_row, decode_varint, encode_row, frame_row, iter_delimited)
 
 cell = st.tuples(
     st.binary(min_size=0, max_size=64),
@@ -24,8 +25,8 @@ row = st.tuples(st.binary(min_size=0, max_size=64), st.lists(cell, max_size=8))
 @given(row)
 def test_row_roundtrip(r):
     key, cells = r
-    body = pw.encode_row(key, cells)
-    k2, c2 = pw.decode_row(body)
+    body = encode_row(key, cells)
+    k2, c2 = decode_row(body)
     assert k2 == key
     assert c2 == [(n, v, t) for n, v, t in cells]
 
@@ -35,23 +36,23 @@ def test_row_roundtrip(r):
 def test_stream_roundtrip(rows):
     buf = io.BytesIO()
     for key, cells in rows:
-        buf.write(pw.frame_row(pw.encode_row(key, cells)))
+        buf.write(frame_row(encode_row(key, cells)))
     buf.seek(0)
-    decoded = [pw.decode_row(b) for b in iter_delimited(buf)]
+    decoded = [decode_row(b) for b in iter_delimited(buf)]
     assert decoded == [(k, list(cs)) for k, cs in rows]
 
 
 @settings(max_examples=200, deadline=None)
 @given(st.integers(min_value=0, max_value=2 ** 64 - 1))
 def test_varint_any_u64(n):
-    v, pos = pw.decode_varint(pw.encode_varint(n), 0)
+    v, pos = decode_varint(pw.encode_varint(n), 0)
     assert v == n
 
 
 def _decode_all_batches(rows, **kw):
     buf = io.BytesIO()
     for key, cells in rows:
-        buf.write(pw.frame_row(pw.encode_row(key, cells)))
+        buf.write(frame_row(encode_row(key, cells)))
     buf.seek(0)
     out = []
     for batch in pw.iter_decoded_batches(buf, "sst-x", **kw):
@@ -72,28 +73,110 @@ def test_decoded_batches_match_scalar(rows):
     assert _decode_all_batches(rows, chunk_bytes=7) == expect
 
 
-def test_giant_row_falls_back_to_scalar_and_stays_correct():
-    """Advisor r8: a Row buffered past row_cap must not grow the
-    vectorized buffer unboundedly (nor approach the int32 gather wrap)
-    -- it decodes through the scalar decode_row path, and rows on both
-    sides of it stay on the vectorized path, byte-identical overall."""
+class _CountingStream(io.BytesIO):
+    def __init__(self, data: bytes):
+        super().__init__(data)
+        self.reads = 0
+
+    def read(self, n=-1):
+        self.reads += 1
+        return super().read(n)
+
+
+_GIANT_CHUNK = 64 << 10
+
+
+def _giant_stream(n_giants: int):
+    """Small rows around `n_giants` 8 MiB Rows, each 128 x the chunk
+    and batch byte cap the decoder runs with."""
     small = [(f"k{i}".encode(), [(b"c", f"v{i}".encode(), i)])
-             for i in range(5)]
-    giant = (b"giant", [(f"col{j}".encode(), bytes(300), 7)
-                        for j in range(16)])  # ~5 KB row
-    rows = small[:3] + [giant] + small[3:]
+             for i in range(4)]
+    rows = small[:2]
+    for g in range(n_giants):
+        rows.append((b"giant%d" % g,
+                     [(b"col%05d" % j, bytes([(j + g) % 251]) * 4096, j + 1)
+                      for j in range(2048)]))
+    rows += small[2:]
+    return rows, b"".join(frame_row(encode_row(k, cs)) for k, cs in rows)
+
+
+def _peak_decode(data: bytes) -> tuple[int, int]:
+    """(peak bytes, stream reads) of one decode that drops each batch
+    as it arrives: the tracemalloc peak (buffer, reads) plus the peak
+    of Arrow's pool (the gathered columns), which tracemalloc does not
+    see."""
+    import tracemalloc
+
+    import pyarrow as pa
+
+    stream = _CountingStream(data)
+    pool = pa.proxy_memory_pool(pa.default_memory_pool())
+    old = pa.default_memory_pool()
+    pa.set_memory_pool(pool)
+    tracemalloc.start()
+    try:
+        for batch in pw.iter_decoded_batches(
+                stream, "s", chunk_bytes=_GIANT_CHUNK,
+                batch_byte_cap=_GIANT_CHUNK):
+            del batch
+        _, py_peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+        pa.set_memory_pool(old)
+    return py_peak + pool.max_memory(), stream.reads
+
+
+def test_giant_row_decodes_on_the_span_path():
+    """A Row 128 x the chunk and the batch byte cap decodes on the one
+    span path: equal to the oracle's decode_row with its neighbours
+    unchanged, its remainder fetched in ONE read, and peak memory (the
+    Python heap plus Arrow's pool) O(row) -- an absolute cap, and a
+    stream with twice the giant Rows must not grow the peak."""
+    rows, data = _giant_stream(1)
     expect = [(k, [(n, v or b"", t) for n, v, t in cs]) for k, cs in rows]
-    got = _decode_all_batches(rows, chunk_bytes=512, row_cap=1024)
+    got = _decode_all_batches(rows, chunk_bytes=_GIANT_CHUNK,
+                              batch_byte_cap=_GIANT_CHUNK)
     assert got == expect
-    # the giant row really did take the fallback: it must sit alone in
-    # its batch (the scalar path emits single-row batches)
-    buf = io.BytesIO()
-    for key, cells in rows:
-        buf.write(pw.frame_row(pw.encode_row(key, cells)))
-    buf.seek(0)
-    sizes = [b.num_rows for b in pw.iter_decoded_batches(
-        buf, "s", chunk_bytes=512, row_cap=1024)]
-    assert 1 in sizes and sum(sizes) == len(rows)
+    (body,) = [b for b in iter_delimited(io.BytesIO(data))
+               if len(b) > _GIANT_CHUNK]
+    assert got[2] == decode_row(body)
+
+    row_bytes = len(body)
+    peak_1, reads = _peak_decode(data)
+    # the first chunk (small rows + the giant's head), the giant's
+    # remainder, the tail chunk, EOF -- not row / chunk = 128 reads
+    assert reads <= 4, f"{reads} stream reads for one giant Row"
+    assert peak_1 < 4 * row_bytes, \
+        f"peak {peak_1} bytes for a {row_bytes}-byte Row"
+    peak_2, _ = _peak_decode(_giant_stream(2)[1])
+    assert peak_2 < peak_1 + row_bytes // 4, \
+        f"peak grew with the stream ({peak_1} -> {peak_2})"
+
+
+def test_decoder_refuses_truncated_and_corrupt_streams():
+    """A stream cut at any byte inside a Row raises (one cut at a frame
+    boundary is a clean, shorter stream), and a field overrunning a
+    fully buffered frame is corruption -- whether bytes follow the
+    frame or the buffer ends with it."""
+    import pytest
+
+    rows = [(b"k%d" % i, [(b"c", b"v" * 20, i)]) for i in range(4)]
+    frames = [frame_row(encode_row(k, cs)) for k, cs in rows]
+    data = b"".join(frames)
+    bounds = {sum(map(len, frames[:i])) for i in range(len(frames) + 1)}
+    for cut in range(1, len(data)):
+        stream = io.BytesIO(data[:cut])
+        if cut in bounds:
+            got = sum(b.num_rows for b in pw.iter_decoded_batches(
+                stream, "s", chunk_bytes=5))
+            assert got == sorted(bounds).index(cut)
+        else:
+            with pytest.raises(ValueError, match="truncated"):
+                list(pw.iter_decoded_batches(stream, "s", chunk_bytes=5))
+    bad = frame_row(b"\x0a\x05ab")  # key field claims 5 bytes, has 2
+    for tail in (b"", data):
+        with pytest.raises(ValueError, match="overruns"):
+            list(pw.iter_decoded_batches(io.BytesIO(bad + tail), "s"))
 
 
 def test_batch_byte_cap_bounds_buffered_payload():
@@ -104,7 +187,7 @@ def test_batch_byte_cap_bounds_buffered_payload():
     expect = [(k, [(n, v or b"", t) for n, v, t in cs]) for k, cs in rows]
     buf = io.BytesIO()
     for key, cells in rows:
-        buf.write(pw.frame_row(pw.encode_row(key, cells)))
+        buf.write(frame_row(encode_row(key, cells)))
     buf.seek(0)
     batches = list(pw.iter_decoded_batches(
         buf, "s", batch_rows=10_000, chunk_bytes=256,
@@ -119,22 +202,47 @@ def test_batch_byte_cap_bounds_buffered_payload():
     assert got == expect
 
 
+def test_batch_byte_cap_splits_one_buffer():
+    """With the whole stream in one read, the byte cap alone cuts the
+    batches: no batch starts a Row `batch_byte_cap` or more past its
+    first, so each holds at most cap / row + 1 Rows."""
+    rows = [(f"k{i:03d}".encode(), [(b"c", bytes(200), i)])
+            for i in range(64)]
+    buf = io.BytesIO(b"".join(frame_row(encode_row(k, cs))
+                              for k, cs in rows))
+    sizes = [b.num_rows for b in pw.iter_decoded_batches(
+        buf, "s", batch_rows=10_000, chunk_bytes=1 << 20,
+        batch_byte_cap=1024)]
+    assert sum(sizes) == len(rows)
+    assert max(sizes) <= 1024 // 200 + 1 and len(sizes) > 1
+
+
 def test_int32_overflow_guards_raise_instead_of_wrapping():
-    """cellcodec's gather helpers must refuse totals past int32 rather
-    than silently wrapping into corrupt Arrow arrays."""
+    """The codec's offset helpers must refuse totals past int32 rather
+    than silently wrapping into corrupt Arrow arrays: the readers'
+    span gather, the list offsets and the writers' scatter index."""
     import numpy as np
     import pytest
 
     from cassandra_sstable_to_protocolbuf_spark.sources.cellcodec import (
-        _arrow_offsets, _ragged_idx)
+        _arrow_offsets, _ragged_idx, spans_to_binary)
 
+    # spans totalling past 2 GiB inside a buffer that long are refused
+    # before the gather allocates, so a zero-stride view (no bytes
+    # behind it) stands in for the buffer
+    big = np.broadcast_to(np.uint8(0), ((1 << 31) + 16,))
+    with pytest.raises(ValueError, match="int32"):
+        spans_to_binary(big, np.array([0, 1 << 30], dtype=np.int64),
+                        np.array([1 << 30, (1 << 30) + 8], dtype=np.int64))
+    # a huge OFFSET with a small length, past the buffer: refused too
+    with pytest.raises(ValueError, match="outside the buffer"):
+        spans_to_binary(bytes(16), np.array([1 << 31], dtype=np.int64),
+                        np.array([8], dtype=np.int64))
     with pytest.raises(ValueError, match="int32"):
         _arrow_offsets(np.array([1 << 31], dtype=np.int64))
     with pytest.raises(ValueError, match="int32"):
         _ragged_idx(np.array([0], dtype=np.int64),
                     np.array([(1 << 31) + 8], dtype=np.int64))
-    # a huge OFFSET with a small length wraps the source index the same
-    # way: guarded too
     with pytest.raises(ValueError, match="int32"):
         _ragged_idx(np.array([1 << 31], dtype=np.int64),
                     np.array([8], dtype=np.int64))
@@ -153,7 +261,7 @@ def test_block_encoder_byte_identical(rows):
         return (np.frombuffer(b"".join(parts), dtype=np.uint8),
                 np.array([len(p) for p in parts], dtype=np.int64))
 
-    ref = b"".join(pw.frame_row(pw.encode_row(k, cs)) for k, cs in rows)
+    ref = b"".join(frame_row(encode_row(k, cs)) for k, cs in rows)
     key_data, klen = bufs([k for k, _ in rows])
     counts = np.array([len(cs) for _, cs in rows], dtype=np.int64)
     name_data, nlen = bufs([n for _, cs in rows for (n, _v, _t) in cs])

@@ -132,6 +132,44 @@ def test_scratch_dir_isolated_per_user():
     assert scratch_dir("unit", "t0") == d  # stable across calls
 
 
+def test_build_once_never_returns_a_planted_directory():
+    """build_once publishes under the per-user scratch root: a directory
+    another account planted at the predictable shared-/tmp path
+    `{cache_name}_{digest}` is never returned, and the cache still
+    builds exactly once."""
+    import os
+    import shutil
+    import tempfile
+    import uuid
+
+    from cassandra_sstable_to_protocolbuf_spark.session import (
+        build_once, scratch_dir)
+
+    name, digest = "unit_plant", uuid.uuid4().hex
+    planted = os.path.join(tempfile.gettempdir(), f"{name}_{digest}")
+    os.makedirs(planted)
+    open(os.path.join(planted, "planted"), "w").close()
+    builds = []
+
+    def build(d):
+        builds.append(d)
+        open(os.path.join(d, "built"), "w").close()
+
+    try:
+        out = build_once(name, digest, build)
+        try:
+            assert out != planted
+            assert os.path.dirname(out) == os.path.dirname(
+                scratch_dir("unit", "t0"))
+            assert os.listdir(out) == ["built"]
+            assert build_once(name, digest, build) == out
+            assert len(builds) == 1
+        finally:
+            shutil.rmtree(out, ignore_errors=True)
+    finally:
+        shutil.rmtree(planted, ignore_errors=True)
+
+
 def test_weighted_priority_sample_matches_python_model(spark):
     """The deterministic priority ranking must reproduce a pure-Python
     model exactly (same LCG, same integer DIV), including the top-k cut

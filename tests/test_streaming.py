@@ -7,6 +7,7 @@ from __future__ import annotations
 import json
 import os
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -203,6 +204,39 @@ def test_kmv_stream_kill_and_resume_matches_batch(spark, tmp_path):
     assert any(lossy[m] != batch[m][0]
                for m in ("distinct_A", "distinct_R", "union_AR")), \
         "state loss was invisible: the drill is not load-bearing"
+
+
+def test_ewma_spool_follows_regenerated_testdata(spark, tmp_path):
+    """The streaming EWMA's arrival spool is keyed on its source file's
+    identity, not the testdata directory's name: events regenerated
+    under another parent with the same basename, after a run on the
+    original, must stream their own rows and equal the batch EWMA of
+    the copy -- never replay the original's stale spool."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from cassandra_sstable_to_protocolbuf_spark.plans import relational as R
+    from cassandra_sstable_to_protocolbuf_spark.streaming import (
+        pipeline as P)
+
+    assert P.stream_ewma(spark, SF_SMOKE).count()
+    events = pq.read_table(f"{SF_SMOKE}/events.parquet")
+    # perturb every third value, keeping all inputs positive
+    every_third = pa.array([i % 3 == 0 for i in range(events.num_rows)])
+    value = events.column("value")
+    events = events.set_column(
+        events.schema.get_field_index("value"), "value",
+        pc.if_else(every_third, pc.add(pc.multiply(value, 2.0), 1.0),
+                   value))
+    copy = tmp_path / "regenerated" / os.path.basename(SF_SMOKE.rstrip("/"))
+    copy.mkdir(parents=True)
+    pq.write_table(events, copy / "events.parquet")
+
+    streamed = sorted(map(tuple, P.stream_ewma(spark, str(copy)).collect()))
+    batch = sorted(map(tuple, R.events_ewma(spark, str(copy)).collect()))
+    original = sorted(map(tuple, R.events_ewma(spark, SF_SMOKE).collect()))
+    assert batch != original, "perturbation changed nothing: vacuous"
+    assert streamed == batch
 
 
 @pytest.mark.parametrize("family", ["ewma", "cusum", "holt"])

@@ -47,7 +47,7 @@ def _bench_binary(tmp_path, compression, n_cells=120_000):
 def _bench_pb(n_cells=120_000):
     import pyarrow as pa
 
-    from cassandra_sstable_to_protocolbuf_spark import protowire as pw
+    from tests.sstable_oracle import encode_row, frame_row
 
     rows = [(b"key-%07d" % i,
              [(b"col%d" % c, b"value-%07d-%d" % (i, c), i * 10 + c)
@@ -57,7 +57,7 @@ def _bench_pb(n_cells=120_000):
     start = time.monotonic()
     with pa.CompressedOutputStream(pa.output_stream(sink), "zstd") as z:
         for key, cols in rows:
-            z.write(pw.frame_row(pw.encode_row(key, cols)))
+            z.write(frame_row(encode_row(key, cols)))
     return n_cells / (time.monotonic() - start)
 
 
