@@ -3,15 +3,21 @@ memory, never O(file) (round-4 verdict: the applyInPandas shapes held a
 whole sstable per task -- the one scale-killer class found that round).
 
 These call the stream-writer functions DIRECTLY with a lazy generator of
-small batches simulating one very large sstable, and tracemalloc-pin
-peak Python allocation to a few MB while the encoded output is tens of
-MB -- the writer mirror of the reader pin in tests/test_sstable_native.py
-(test_wide_partition_streams_per_cell).
+small batches simulating one very large sstable, and pin peak allocation
+to a few MB while the encoded output is tens of MB -- the writer mirror
+of the reader pin in tests/test_sstable_native.py
+(test_wide_partition_streams_per_cell). Two allocators are pinned:
+tracemalloc sees Python objects and numpy buffers, and Arrow's memory
+pool holds what Arrow kernels (concat, take, filter) allocate, which
+tracemalloc cannot see.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import subprocess
+import sys
 import tracemalloc
 
 import pandas as pd
@@ -45,47 +51,74 @@ def _pb_rows(path):
                 for body in iter_delimited(f)]
 
 
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _fresh_process_peaks(fn, *args) -> dict:
+    """Run `fn(*args)`, a module-level function of this file returning a
+    JSON-able dict with its tracemalloc `peak`, in a fresh interpreter
+    and add `pool_peak`, the high-water mark of Arrow's default memory
+    pool. That mark cannot be reset, so each measured run gets its own
+    process; `fn` warms up first, and the warm-up is smaller than the
+    run, so the mark is the run's own peak."""
+    code = ("import json, sys\n"
+            "import pyarrow as pa\n"
+            f"from tests.test_writer_memory import {fn.__name__}\n"
+            f"r = {fn.__name__}(*json.loads(sys.argv[1]))\n"
+            "r['pool_peak'] = pa.default_memory_pool().max_memory()\n"
+            "print(json.dumps(r))\n")
+    proc = subprocess.run([sys.executable, "-c", code, json.dumps(args)],
+                          cwd=_ROOT, capture_output=True, text=True)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    return json.loads(proc.stdout.splitlines()[-1])
+
+
+_PB_ROWS_PER_BATCH, _PB_VAL = 200, b"v" * 2000
+
+
+def _pb_batches(n_batches):
+    for b in range(n_batches):
+        yield _flat_batch([
+            {"sstable_id": "big", "key": b"k%010d" % row_no,
+             "live": True, "name": b"c1", "value": _PB_VAL,
+             "writeTime": row_no}
+            for row_no in range(b * _PB_ROWS_PER_BATCH,
+                                (b + 1) * _PB_ROWS_PER_BATCH)])
+
+
+def _pb_run(out_dir, n_batches):
+    # warm: the first call's imports alone would dwarf the pin
+    os.mkdir(out_dir + "-warm")
+    _pb_metrics(PB._pb_flat_stream_writer(out_dir + "-warm"),
+                _pb_batches(1))
+    os.mkdir(out_dir)
+    write = PB._pb_flat_stream_writer(out_dir)
+    tracemalloc.start()
+    metrics = _pb_metrics(write, _pb_batches(n_batches))
+    _, peak = tracemalloc.get_traced_memory()
+    tracemalloc.stop()
+    (m,) = metrics
+    return {"path": m["path"], "n_rows": m["n_rows"],
+            "raw_bytes": m["raw_bytes"], "peak": peak}
+
+
 def test_pb_sink_streams_per_batch(tmp_path):
     """One 40 MB sstable through the protobuf+zstd sink
-    (_pb_flat_stream_writer, the write_cells_pb hot path): peak Python
-    allocation stays O(one batch) -- an absolute cap, and doubling the
-    input must not grow the peak -- and the streamed file decodes back
-    to every frame (the pin must not pass by writing garbage)."""
-    rows_per_batch, val = 200, b"v" * 2000
+    (_pb_flat_stream_writer, the write_cells_pb hot path): peak
+    allocation stays O(one batch) in both tracemalloc and Arrow's pool
+    -- an absolute cap, and doubling the input must not grow the peak
+    -- and the streamed file decodes back to every frame (the pin must
+    not pass by writing garbage)."""
+    m = _fresh_process_peaks(_pb_run, str(tmp_path / "a"), 100)  # ~40 MB
+    m80 = _fresh_process_peaks(_pb_run, str(tmp_path / "b"), 200)  # ~80 MB
 
-    def batches(n_batches):
-        for b in range(n_batches):
-            yield _flat_batch([
-                {"sstable_id": "big", "key": b"k%010d" % row_no,
-                 "live": True, "name": b"c1", "value": val,
-                 "writeTime": row_no}
-                for row_no in range(b * rows_per_batch,
-                                    (b + 1) * rows_per_batch)])
-
-    def writer(sub):
-        (tmp_path / sub).mkdir()
-        return PB._pb_flat_stream_writer(str(tmp_path / sub))
-
-    # warm: the first call's imports alone would dwarf the pin
-    _pb_metrics(writer("warm"), batches(1))
-
-    def run(n_batches, sub):
-        write = writer(sub)
-        tracemalloc.start()
-        metrics = _pb_metrics(write, batches(n_batches))
-        _, peak = tracemalloc.get_traced_memory()
-        tracemalloc.stop()
-        return metrics, peak
-
-    metrics, peak_40 = run(100, "a")     # ~40 MB
-    _, peak_80 = run(200, "b")           # ~80 MB: peak must NOT follow
-
-    assert peak_40 < PIN_BYTES, f"peak {peak_40} bytes: file buffered in task?"
-    assert peak_80 < peak_40 + PIN_BYTES // 4, \
-        f"peak grew with file size ({peak_40} -> {peak_80}): " \
-        f"sstable buffered in task?"
-    (m,) = metrics
-    assert m["n_rows"] == 100 * rows_per_batch
+    for kind in ("peak", "pool_peak"):
+        p40, p80 = m[kind], m80[kind]
+        assert p40 < PIN_BYTES, f"{kind} {p40} bytes: file buffered in task?"
+        assert p80 < p40 + PIN_BYTES // 4, \
+            f"{kind} grew with file size ({p40} -> {p80}): " \
+            f"sstable buffered in task?"
+    assert m["n_rows"] == 100 * _PB_ROWS_PER_BATCH
     assert m["raw_bytes"] > 40_000_000
 
     # decode back: frame count matches, keys arrive in written order
@@ -96,7 +129,7 @@ def test_pb_sink_streams_per_batch(tmp_path):
             assert key == b"k%010d" % n
             assert len(cols) == 1
             n += 1
-    assert n == 100 * rows_per_batch
+    assert n == 100 * _PB_ROWS_PER_BATCH
 
 
 def test_pb_sink_rolls_files_on_sstable_change(tmp_path):
@@ -149,40 +182,53 @@ def _cell_batches(n_batches, cells_per_batch, val, sstable_id="big",
         yield pd.DataFrame(rows)
 
 
+_NATIVE_CELLS_PER_BATCH, _NATIVE_VAL = 1000, b"x" * 400
+
+
+def _native_run(out_dir, compression, n_batches):
+    # warm: the first call's imports alone would dwarf the pin
+    list(N._cells_stream_writer(out_dir + "-warm", compression)(
+        _cell_batches(1, 10, _NATIVE_VAL)))
+    write = N._cells_stream_writer(out_dir, compression)
+    tracemalloc.start()
+    metrics = pd.concat(
+        list(write(_cell_batches(n_batches, _NATIVE_CELLS_PER_BATCH,
+                                 _NATIVE_VAL))),
+        ignore_index=True)
+    _, peak = tracemalloc.get_traced_memory()
+    tracemalloc.stop()
+    assert len(metrics) == 1
+    return {"path": str(metrics["path"].iloc[0]),
+            "n_partitions": int(metrics["n_partitions"].iloc[0]),
+            "n_cells": int(metrics["n_cells"].iloc[0]), "peak": peak}
+
+
 @pytest.mark.parametrize("compression", [None, "lz4"])
 def test_native_sink_streams_per_batch(tmp_path, compression):
     """Single-partition sstables through the native binary writer: peak
-    Python allocation stays O(one batch), proven two ways -- an
-    absolute cap (the vectorized encoder's bounded scatter transient,
-    a few MB regardless of input), and DIRECTLY: doubling the input
-    size must not grow the peak (the old shape dict-materialized every
-    partition, where peak tracked file size 1:1). The streamed
-    components read back cell-for-cell through the lazy scanner."""
-    cells_per_batch, val = 1000, b"x" * 400
+    allocation stays O(one batch) in both tracemalloc and Arrow's pool,
+    proven two ways -- an absolute cap (the vectorized encoder's
+    bounded transient, a few MB regardless of input), and DIRECTLY:
+    doubling the input size must not grow the peak (the old shape
+    dict-materialized every partition, where peak tracked file size
+    1:1). The streamed components read back cell-for-cell through the
+    lazy scanner."""
+    m = _fresh_process_peaks(_native_run, str(tmp_path / "a"),
+                             compression, 100)     # ~40 MB
+    m80 = _fresh_process_peaks(_native_run, str(tmp_path / "b"),
+                               compression, 200)   # ~80 MB: must NOT follow
 
-    def run(n_batches, sub):
-        write = N._cells_stream_writer(str(tmp_path / sub), compression)
-        tracemalloc.start()
-        metrics = pd.concat(
-            list(write(_cell_batches(n_batches, cells_per_batch, val))),
-            ignore_index=True)
-        _, peak = tracemalloc.get_traced_memory()
-        tracemalloc.stop()
-        return metrics, peak
+    for kind in ("peak", "pool_peak"):
+        p40, p80 = m[kind], m80[kind]
+        assert p40 < 2 * PIN_BYTES, \
+            f"{kind} {p40} bytes: encoder transient regressed?"
+        assert p80 < p40 + PIN_BYTES // 4, \
+            f"{kind} grew with file size ({p40} -> {p80}): " \
+            f"sstable buffered in task?"
+    assert m["n_partitions"] == 1
+    assert m["n_cells"] == 100 * _NATIVE_CELLS_PER_BATCH
 
-    metrics, peak_40 = run(100, "a")     # ~40 MB
-    _, peak_80 = run(200, "b")           # ~80 MB: peak must NOT follow
-
-    assert peak_40 < 2 * PIN_BYTES, \
-        f"peak {peak_40} bytes: encoder transient regressed?"
-    assert peak_80 < peak_40 + PIN_BYTES // 4, \
-        f"peak grew with file size ({peak_40} -> {peak_80}): " \
-        f"sstable buffered in task?"
-    assert len(metrics) == 1
-    assert metrics["n_partitions"].iloc[0] == 1
-    assert metrics["n_cells"].iloc[0] == 100 * cells_per_batch
-
-    data = metrics["path"].iloc[0]
+    data = m["path"]
     f, logical_size = N.open_data_file(data)
     f.close()
     seen = 0
@@ -191,7 +237,7 @@ def test_native_sink_streams_per_batch(tmp_path, compression):
         for cell in part["cells"]:
             assert cell["name"] == b"c%010d" % seen
             seen += 1
-    assert seen == 100 * cells_per_batch
+    assert seen == 100 * _NATIVE_CELLS_PER_BATCH
 
 
 def test_native_sink_rolls_sstables_and_partitions(tmp_path):
