@@ -62,197 +62,109 @@ def frame_row_parts(key: bytes, columns_bytes: bytes) -> bytes:
 
 # --------------------------------------------------------------------------
 # vectorized block encoder (the K1 sink's hot path): many framed Rows laid
-# out as one numpy scatter block over Arrow-shaped buffers. The per-row
+# out as one byte block by one Arrow take (cellcodec.interleave_block):
+# the varint/tag headers are built in numpy, one row per Row or Column,
+# and interleaved with the Arrow key, name and value arrays. The per-row
 # encode_row + frame_row in tests/sstable_oracle.py are its golden
 # oracle: a block equals the per-row frames joined (pinned in
 # tests/test_protowire_props, and on whole decompressed sink files in
 # tests/test_protobuf_sink).
 # --------------------------------------------------------------------------
 
-_VSZ_THRESH = None  # lazily built numpy varint size thresholds
-
-
-def _np():
-    import numpy as np
-    global _VSZ_THRESH
-    if _VSZ_THRESH is None:
-        _VSZ_THRESH = np.array([1 << (7 * k) for k in range(1, 8)],
-                               dtype=np.int64)
-    return np
-
 
 def _vsz(np, n):
-    """Vectorized varint byte size (n >= 0, int64)."""
-    return (np.searchsorted(_VSZ_THRESH, n, side="right") + 1).astype(
-        np.int64)
+    """Vectorized varint byte size (0 <= n < 2**53, int64): 7 bits per
+    byte of n's bit length, which frexp gives as its exponent."""
+    return np.maximum((np.frexp(n)[1] + 6) // 7, 1).astype(np.int64)
 
 
-def _scatter_varints(np, out, pos, vals, sizes) -> None:
-    """Scatter base-128 varints of known per-element size at `pos`."""
-    if not len(vals):
-        return
-    for j in range(int(sizes.max())):
-        m = sizes > j
-        b = (vals[m] >> (7 * j)) & 0x7F
-        more = (sizes[m] > (j + 1)).astype(np.int64) << 7
-        out[pos[m] + j] = (b | more).astype(np.uint8)
+def _field_head(np, tag, vals, size, present):
+    """Protobuf field heads as an interleave_block (rows, lens) piece:
+    head i is the tag byte (none when tag is None) and the base-128
+    varint of vals[i], `size` = _vsz(vals) bytes, or nothing where not
+    present[i] -- proto3 omits an absent field whole."""
+    at = tag is not None
+    rows = np.zeros((len(vals), at + int(size.max(initial=1))),
+                    dtype=np.uint8)
+    if at:
+        rows[:, 0] = tag
+    for j in range(rows.shape[1] - at):
+        rows[:, at + j] = ((vals >> (7 * j)) & 0x7F) | (size > j + 1) * 0x80
+    return rows, (at + size) * present
 
 
-def _columns_layout(np, nlen, vlen, wts):
-    """Shared wire-layout arithmetic for a flat run of columns: which
-    fields each column carries (proto3 default omission) and the byte
-    size of each column's body and its length-delimited wrapping."""
-    has_n = nlen > 0
-    has_v = vlen > 0
-    has_t = wts != 0
-    nlen_vsz = _vsz(np, nlen)
-    vlen_vsz = _vsz(np, vlen)
-    col_body = (has_n * (1 + nlen_vsz + nlen)
-                + has_v * (1 + vlen_vsz + vlen)
-                + has_t * 9)
-    col_vsz = _vsz(np, col_body)
-    wrapped = 1 + col_vsz + col_body
-    return (has_n, has_v, has_t, nlen_vsz, vlen_vsz,
-            col_body, col_vsz, wrapped)
-
-
-def _scatter_columns(np, out, col_pos, lay, nlen, vlen, wts,
-                     name_data, value_data) -> None:
-    """Scatter a flat run of wrapped Column messages at `col_pos`.
-    `name_data`/`value_data` are the concatenated payload bytes as
-    uint8 arrays (zero-length/omitted fields contribute no bytes)."""
+def _column_pieces(np, names, values, write_times):
+    """interleave_block pieces of a flat run of wrapped Column messages
+    (Row.columns head | name head | name | value head | value |
+    writeTime) and each wrapped Column's byte size. Empty names and
+    values and zero writeTimes are omitted (proto3 default omission --
+    reference byte parity); NULL values are empty."""
     from cassandra_sstable_to_protocolbuf_spark.sources.cellcodec import (
-        _ragged_idx)
+        _binary_lens)
 
-    (has_n, has_v, has_t, nlen_vsz, vlen_vsz,
-     col_body, col_vsz, wrapped) = lay
-    out[col_pos] = _ROW_COLUMNS_TAG
-    _scatter_varints(np, out, col_pos + 1, col_body, col_vsz)
-    p = col_pos + 1 + col_vsz
-    # name field
-    np_pos = p[has_n]
-    out[np_pos] = _COLUMN_NAME_TAG
-    _scatter_varints(np, out, np_pos + 1, nlen[has_n], nlen_vsz[has_n])
-    idx = _ragged_idx(np_pos + 1 + nlen_vsz[has_n], nlen[has_n])
-    if len(idx):
-        out[idx] = name_data
-    p = p + has_n * (1 + nlen_vsz + nlen)
-    # value field
-    vp = p[has_v]
-    out[vp] = _COLUMN_VALUE_TAG
-    _scatter_varints(np, out, vp + 1, vlen[has_v], vlen_vsz[has_v])
-    idx = _ragged_idx(vp + 1 + vlen_vsz[has_v], vlen[has_v])
-    if len(idx):
-        out[idx] = value_data
-    p = p + has_v * (1 + vlen_vsz + vlen)
-    # writeTime field: tag + fixed64 little-endian two's complement
-    tp = p[has_t]
-    out[tp] = _COLUMN_WRITETIME_TAG
-    wt_bytes = wts[has_t].astype("<i8").view(np.uint8).reshape(-1, 8)
-    out[tp[:, None] + np.arange(1, 9)] = wt_bytes
+    nlen = _binary_lens(names)
+    vlen = _binary_lens(values)
+    wts = np.asarray(write_times, dtype=np.int64)
+    has_n, has_v, has_t = nlen > 0, vlen > 0, wts != 0
+    nsz, vsz = _vsz(np, nlen), _vsz(np, vlen)
+    body = has_n * (1 + nsz + nlen) + has_v * (1 + vsz + vlen) + has_t * 9
+    bsz = _vsz(np, body)
+    wt_field = np.empty((len(wts), 9), dtype=np.uint8)
+    wt_field[:, 0] = _COLUMN_WRITETIME_TAG
+    # fixed64 little-endian two's complement
+    wt_field[:, 1:] = wts.astype("<i8").view(np.uint8).reshape(-1, 8)
+    pieces = [_field_head(np, _ROW_COLUMNS_TAG, body, bsz, True),
+              _field_head(np, _COLUMN_NAME_TAG, nlen, nsz, has_n), names,
+              _field_head(np, _COLUMN_VALUE_TAG, vlen, vsz, has_v), values,
+              (wt_field, 9 * has_t)]
+    return pieces, 1 + bsz + body
 
 
-def encode_columns_bufs(name_data, nlen, value_data, vlen,
-                        write_times) -> bytes:
+def encode_columns_bufs(names, values, write_times) -> bytes:
     """Encode a flat run of wrapped Column messages ONLY (no Row frame,
-    no key field): the bytes a Row message carries after its key. Lets
+    no key field) from Arrow binary `names`/`values` and int64
+    `write_times`: the bytes a Row message carries after its key. Lets
     a streaming writer accumulate a very wide row's columns in encoded
     form across input batches and emit the Row frame once the row's
     total size is known -- byte-identical to the columns portion of
     the oracle's encode_row."""
-    np = _np()
-    wts = np.asarray(write_times, dtype=np.int64)
-    nlen = np.asarray(nlen, dtype=np.int64)
-    vlen = np.asarray(vlen, dtype=np.int64)
-    lay = _columns_layout(np, nlen, vlen, wts)
-    wrapped = lay[-1]
-    out = np.zeros(int(wrapped.sum()), dtype=np.uint8)
-    col_pos = np.cumsum(wrapped) - wrapped  # exclusive prefix
-    if len(nlen):
-        _scatter_columns(np, out, col_pos, lay, nlen, vlen, wts,
-                         name_data, value_data)
-    return out.tobytes()
+    import numpy as np
+
+    from cassandra_sstable_to_protocolbuf_spark.sources.cellcodec import (
+        interleave_block)
+
+    pieces, _ = _column_pieces(np, names, values, write_times)
+    return interleave_block(pieces)[0].tobytes()
 
 
-def encode_rows_block_bufs(key_data, klen, counts, name_data, nlen,
-                           value_data, vlen, write_times) -> bytes:
+def encode_rows_block_bufs(keys, counts, names, values,
+                           write_times) -> bytes:
     """Frame + encode a RUN of Rows as one contiguous block, equal to
     the oracle's b"".join(frame_row(encode_row(key, cols))) over the
-    rows. Payloads arrive as concatenated byte buffers (uint8 arrays) +
-    per-entry length arrays: `key_data`/`klen`/`counts` per row, the
-    name, value and writeTime columns flattened in row order. An Arrow
-    Binary column IS this shape (one data buffer + offsets), so a
-    columnar caller encodes with zero per-cell Python objects. NULL
-    values must arrive as zero-length spans (Arrow offsets already do
-    this); all layout arithmetic (varint sizes, proto3 default
-    omission) runs vectorized."""
-    np = _np()
+    rows. `keys` (Arrow binary) and `counts` are per row; the Arrow
+    binary `names`/`values` and int64 `write_times` are the columns
+    flattened in row order, so a columnar caller encodes with zero
+    per-cell Python objects. NULL keys and values encode as empty;
+    all layout arithmetic (varint sizes, proto3 default omission) runs
+    vectorized."""
+    import numpy as np
+
     from cassandra_sstable_to_protocolbuf_spark.sources.cellcodec import (
-        _ragged_idx)
+        _binary_lens, interleave_block)
 
-    n_rows = len(klen)
-    n_cols = len(nlen)
+    col_pieces, wrapped = _column_pieces(np, names, values, write_times)
     counts = np.asarray(counts, dtype=np.int64)
-    wts = np.asarray(write_times, dtype=np.int64)
-    klen = np.asarray(klen, dtype=np.int64)
-    nlen = np.asarray(nlen, dtype=np.int64)
-    vlen = np.asarray(vlen, dtype=np.int64)
-
-    # per-column body: name/value fields omitted when empty, writeTime
-    # omitted when 0 (proto3 default omission -- reference byte parity)
-    lay = _columns_layout(np, nlen, vlen, wts)
-    (has_n, has_v, has_t, nlen_vsz, vlen_vsz,
-     col_body, col_vsz, wrapped) = lay
-
-    # per-row body: optional key field + the row's wrapped columns
-    row_idx = np.zeros(n_cols, dtype=np.int64)
-    cols_before = np.zeros(n_rows, dtype=np.int64)
-    if n_rows > 1:
-        np.cumsum(counts[:-1], out=cols_before[1:])
-    if n_cols:
-        marks = np.zeros(n_cols, dtype=np.int64)
-        # rows with zero columns must still advance row_idx: add.at
-        # accumulates coinciding boundaries; boundaries AT n_cols
-        # (trailing zero-column rows) own no column and drop out
-        if n_rows > 1:
-            b = cols_before[1:]
-            np.add.at(marks, b[b < n_cols], 1)
-        np.cumsum(marks, out=row_idx)
-    klen_vsz = _vsz(np, klen)
+    klen = _binary_lens(keys)
     has_k = klen > 0
-    wrapped_per_row = np.zeros(n_rows, dtype=np.int64)
-    if n_cols:
-        np.add.at(wrapped_per_row, row_idx, wrapped)
-    row_body = has_k * (1 + klen_vsz + klen) + wrapped_per_row
-    row_vsz = _vsz(np, row_body)
-    framed = row_vsz + row_body
-
-    offs = np.zeros(n_rows + 1, dtype=np.int64)
-    np.cumsum(framed, out=offs[1:])
-    out = np.zeros(int(offs[-1]), dtype=np.uint8)
-
-    # frame varints + key field
-    frame_pos = offs[:-1]
-    _scatter_varints(np, out, frame_pos, row_body, row_vsz)
-    body_pos = frame_pos + row_vsz
-    kp = body_pos[has_k]
-    out[kp] = _ROW_KEY_TAG
-    _scatter_varints(np, out, kp + 1, klen[has_k], klen_vsz[has_k])
-    key_data_pos = kp + 1 + klen_vsz[has_k]
-    idx = _ragged_idx(key_data_pos, klen[has_k])
-    if len(idx):
-        out[idx] = key_data
-
-    if n_cols:
-        # wrapped-column start offsets: key end of the owning row plus
-        # the cumsum of earlier wrapped columns within the row
-        key_end = body_pos + has_k * (1 + klen_vsz + klen)
-        wcum = np.cumsum(wrapped) - wrapped  # exclusive prefix
-        group_base = wcum[cols_before.clip(max=max(n_cols - 1, 0))]
-        col_pos = key_end[row_idx] + (wcum - group_base[row_idx])
-        _scatter_columns(np, out, col_pos, lay, nlen, vlen, wts,
-                         name_data, value_data)
-    return out.tobytes()
+    ksz = _vsz(np, klen)
+    # per-row body: optional key field + the row's wrapped columns
+    wcum = np.concatenate(([0], np.cumsum(wrapped)))
+    ends = np.cumsum(counts)
+    body = has_k * (1 + ksz + klen) + wcum[ends] - wcum[ends - counts]
+    return interleave_block(
+        [_field_head(np, None, body, _vsz(np, body), True),
+         _field_head(np, _ROW_KEY_TAG, klen, ksz, has_k), keys],
+        col_pieces, counts)[0].tobytes()
 
 
 # --------------------------------------------------------------------------

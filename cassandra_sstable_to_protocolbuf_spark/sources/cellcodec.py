@@ -15,10 +15,12 @@ framing is fixed-layout big-endian, so both directions batch:
   (decode_partitions open_part), so one partition of any size streams
   through a bounded read window.
 * ENCODE: whole partition RUNS (headers + cells + end markers) lay out
-  as one preallocated numpy buffer from FLAT columnar inputs;
-  lengths/offsets via cumsum, fixed fields via vectorized scatter
-  stores, variable fields via the inverse ragged scatter. One Python
-  pass per PARTITION (index entry, ordering check), zero per CELL.
+  as one block from FLAT columnar inputs: fixed fields and headers as
+  numpy rows, names/values/keys as Arrow binary arrays, all taken in
+  interleaved order by one Arrow take (interleave_block, also the
+  protobuf writer's block builder), whose data buffer IS the block.
+  One Python pass per PARTITION (index entry, ordering check), zero
+  per CELL.
 * BLOOM: Cassandra's MurmurHash.hash3_x64_128 (including the Java
   signed-tail quirk, see sstable_native.murmur3_hash128) over length-
   grouped uint64 numpy lanes, and the double-hash bit scatter as a
@@ -68,41 +70,6 @@ _LIVE_MARKED = -(1 << 63)
 _M64 = (1 << 64) - 1
 
 
-def _ragged_idx(offs: np.ndarray, lens: np.ndarray) -> np.ndarray:
-    """Flat destination indexes for the writers' ragged scatters
-    (_scatter_spans, protowire's block encoder): byte k of span j maps
-    to offs[j] + k. The readers gather with spans_to_binary instead.
-    Built as a delta array + IN-PLACE cumsum -- O(total bytes), no
-    np.repeat (whose per-tiny-span cost dominated the first cut of this
-    module), int32 and single-buffer so the transient is 4 bytes per
-    payload byte (the int64 double-buffer version tripped the writer
-    memory pin). Zero-length spans are masked out up front so boundary
-    deltas never collide. Writer runs are capped far below 2 GiB -- and
-    a caller that slips past its cap hits the explicit guard below
-    instead of a silent int32 wrap producing corrupt scatters."""
-    nz = lens > 0
-    if not nz.all():
-        offs = offs[nz]
-        lens = lens[nz]
-    total = int(lens.sum())
-    if total == 0:
-        return np.empty(0, dtype=np.int32)
-    if total > _INT32_MAX or int((offs + lens).max()) > _INT32_MAX:
-        raise ValueError(
-            f"span payload ({total} bytes, max source index "
-            f"{int((offs + lens).max())}) overflows the int32 gather "
-            f"index space; reduce the batch/buffer cap")
-    out_ends = np.cumsum(lens)
-    deltas = np.ones(total, dtype=np.int32)
-    deltas[0] = offs[0]
-    # at each span boundary, jump from (prev span's last byte) to the
-    # next span's first byte
-    deltas[out_ends[:-1]] = (offs[1:] - (offs[:-1] + lens[:-1] - 1)
-                             ).astype(np.int32)
-    np.cumsum(deltas, out=deltas)
-    return deltas
-
-
 def spans_to_binary(buf, offs: np.ndarray, lens: np.ndarray,
                     validity: np.ndarray | None = None):
     """Arrow `binary` array of the byte spans buf[offs[j]:offs[j] +
@@ -143,6 +110,130 @@ def spans_to_binary(buf, offs: np.ndarray, lens: np.ndarray,
     if validity is not None and not validity.all():
         idx = pa.array(idx, mask=~validity)
     return view.take(idx).cast(pa.binary())
+
+
+def _binary_lens(arr) -> np.ndarray:
+    """Per-element byte lengths of an Arrow binary array, 0 for NULLs."""
+    import pyarrow as pa
+
+    if arr.type != pa.binary():
+        raise TypeError(f"expected an Arrow binary array, got {arr.type}")
+    if not len(arr):
+        return np.empty(0, dtype=np.int64)
+    offs = np.frombuffer(arr.buffers()[1], dtype=np.int32,
+                         count=len(arr) + 1, offset=4 * arr.offset)
+    lens = np.diff(offs).astype(np.int64)
+    if arr.null_count:
+        lens[~arr.is_valid().to_numpy(zero_copy_only=False)] = 0
+    return lens
+
+
+def _be(vals, dtype: str) -> np.ndarray:
+    """Fixed-width rows of big-endian integers: one row per value."""
+    width = np.dtype(dtype).itemsize
+    return np.asarray(vals).astype(dtype).view(np.uint8).reshape(-1, width)
+
+
+def _piece_lens(piece) -> np.ndarray:
+    """Byte lengths of one interleave_block piece's elements."""
+    import pyarrow as pa
+
+    if isinstance(piece, pa.Array):
+        return _binary_lens(piece)
+    if isinstance(piece, tuple):
+        return np.asarray(piece[1], dtype=np.int64)
+    if isinstance(piece, np.ndarray):
+        return np.full(len(piece), piece.shape[1], dtype=np.int64)
+    return np.fromiter(map(len, piece), dtype=np.int64, count=len(piece))
+
+
+def _piece_array(piece, lens: np.ndarray):
+    """(Arrow binary array, stride) of one interleave_block piece:
+    element i of the piece is the array's element stride * i."""
+    import pyarrow as pa
+
+    if isinstance(piece, pa.Array):
+        return piece, 1
+    if not isinstance(piece, (tuple, np.ndarray)):
+        return pa.array(piece, type=pa.binary()), 1
+    # numpy rows: a view over the whole matrix whose offsets alternate
+    # row start and element end, so the elements are its even slots
+    rows = piece[0] if isinstance(piece, tuple) else piece
+    if rows.size > _INT32_MAX:
+        raise ValueError(f"header rows of {rows.size} bytes pass the "
+                         f"int32 offsets of Arrow binary (2 GiB)")
+    n, width = rows.shape
+    offs = np.empty(2 * n + 1, dtype=np.int32)
+    offs[0::2] = width * np.arange(n + 1, dtype=np.int32)
+    offs[1::2] = offs[0:-1:2] + lens
+    return pa.Array.from_buffers(
+        pa.binary(), 2 * n, [None, pa.py_buffer(offs),
+                             pa.py_buffer(np.ascontiguousarray(rows))]), 2
+
+
+def interleave_block(outer: list, inner: list = (), counts=None,
+                     tail: list = ()):
+    """One contiguous byte block of nested records, laid out by Arrow's
+    C++ take with one memcpy per element and no per-byte index: the
+    writers' twin of spans_to_binary. Record r is element r of every
+    `outer` piece, then its counts[r] inner records (element i of every
+    `inner` piece, i counted across the block), then element r of every
+    `tail` piece; without `inner`, records are flat runs of `outer`.
+
+    A piece is an Arrow `binary` array (NULLs add no bytes), a list of
+    bytes, a 2-D uint8 array of fixed-width rows, or a (rows, lens) pair
+    for a header built in numpy (row i's first lens[i] bytes). The
+    pieces are concatenated into one Arrow binary array and taken in
+    interleaved order, so the result's data buffer IS the block.
+    Returns (block, starts, ends, inner_starts, inner_ends): the block
+    as a uint8 ndarray over that buffer, and each record's and inner
+    record's int64 byte range in it. A block past 2 GiB, Arrow binary's
+    int32 offset limit, raises ValueError before any Arrow array or the
+    block is allocated."""
+    import pyarrow as pa
+
+    pieces = [*outer, *inner, *tail]
+    lens = [_piece_lens(p) for p in pieces]
+    total = sum(int(x.sum()) for x in lens)
+    if total > _INT32_MAX:
+        raise ValueError(f"block of {total} bytes passes the int32 "
+                         f"offsets of Arrow binary (2 GiB)")
+    arrays = [_piece_array(p, x) for p, x in zip(pieces, lens)]
+    h, m, t = len(outer), len(inner), len(tail)
+    n_rec = len(lens[0])
+    n_in = len(lens[h]) if m else 0
+    counts = (np.zeros(n_rec, dtype=np.int64) if counts is None
+              else np.asarray(counts, dtype=np.int64))
+    base = np.cumsum([0] + [len(a) for a, _ in arrays])
+    stride = np.array([st for _, st in arrays], dtype=np.int64)
+
+    # take order: record r's h outer slots from rec_at[r], then the m
+    # slots of each of its inner records (inner record i's from
+    # in_at[i]), then its t tail slots
+    rec = np.arange(n_rec, dtype=np.int64)
+    rec_at = (h + t) * rec + m * (np.cumsum(counts) - counts)
+    stop = rec_at + h + m * counts + t
+    inner = np.arange(n_in, dtype=np.int64)
+    in_at = (h + t) * np.repeat(rec, counts) + h + m * inner
+    order = np.empty((h + t) * n_rec + m * n_in, dtype=np.int64)
+    inner_slot = np.ones(len(order), dtype=bool)
+    for j, at in ([(k, rec_at + k) for k in range(h)]
+                  + [(h + m + k, stop - t + k) for k in range(t)]):
+        order[at] = base[j] + stride[j] * rec
+        inner_slot[at] = False
+    inner_order = np.empty((n_in, m), dtype=np.int64)
+    for k in range(m):
+        inner_order[:, k] = base[h + k] + stride[h + k] * inner
+    order[inner_slot] = inner_order.reshape(-1)
+
+    out = pa.concat_arrays([a for a, _ in arrays]).take(order)
+    offs = np.frombuffer(out.buffers()[1], dtype=np.int32,
+                         count=len(out) + 1, offset=4 * out.offset)
+    data = out.buffers()[2]
+    block = (np.frombuffer(data, dtype=np.uint8)[offs[0]:offs[-1]]
+             if data is not None else np.empty(0, dtype=np.uint8))
+    return (block, *(offs[at].astype(np.int64) - offs[0]
+                     for at in (rec_at, stop, in_at, in_at + m)))
 
 
 def _arrow_offsets(lens: np.ndarray) -> np.ndarray:
@@ -600,73 +691,19 @@ def encode_cells_block(part_keys: list, part_deletions: list,
       vlen) tail -- b"" LIVE/DELETED, pack('>ii', ttl, lexp) EXPIRING,
       pack('>q', tsd) COUNTER. None = all empty (all LIVE/DELETED).
 
-    Returns (block_bytes, hdr_starts, part_ends, cell_starts,
-    cell_ends) -- numpy offset arrays RELATIVE to the block for the
-    caller's index-entry and promoted-block accounting."""
+    Returns (block, hdr_starts, part_ends, cell_starts, cell_ends) --
+    numpy offset arrays RELATIVE to the block for the caller's
+    index-entry and promoted-block accounting."""
     n_parts = len(part_keys)
-    n_cells = len(names)
-
-    nlen = np.fromiter(map(len, names), dtype=np.int64, count=n_cells)
-    if n_cells and int(nlen.min()) == 0:
-        # a zero-length name is the end-of-partition marker in this
-        # format (same guard as add_cell)
-        raise ValueError("cell name must be non-empty")
-    vlen = np.fromiter(map(len, values), dtype=np.int64, count=n_cells)
-    if prefixes is None:
-        plen = np.zeros(n_cells, dtype=np.int64)
-    else:
-        plen = np.fromiter(map(len, prefixes), dtype=np.int64,
-                           count=n_cells)
-    # record = H nlen | name | B flag | prefix | q ts | i vlen | value
-    cell_len = 15 + nlen + plen + vlen
-
     klen = np.fromiter(map(len, part_keys), dtype=np.int64,
                        count=n_parts)
-    hdr_len = 14 + klen
-
-    # global segment order: [hdr_p, cells_p..., end_p] per partition
-    n_segs = 2 * n_parts + n_cells
-    seg_len = np.empty(n_segs, dtype=np.int64)
-    cells_before = np.empty(n_parts, dtype=np.int64)
-    cells_before[0] = 0
-    np.cumsum(counts[:-1], out=cells_before[1:])
-    hdr_pos = 2 * np.arange(n_parts, dtype=np.int64) + cells_before
-    end_pos = hdr_pos + 1 + counts
-    seg_len[hdr_pos] = hdr_len
-    seg_len[end_pos] = 2
-    cell_mask = np.ones(n_segs, dtype=bool)
-    cell_mask[hdr_pos] = False
-    cell_mask[end_pos] = False
-    seg_len[cell_mask] = cell_len
-    offs = np.empty(n_segs + 1, dtype=np.int64)
-    offs[0] = 0
-    np.cumsum(seg_len, out=offs[1:])
-    total = int(offs[-1])
-
-    out = np.zeros(total, dtype=np.uint8)
-
-    # -- headers: H klen | key | i ldt | q marked ------------------------
-    h_rs = offs[hdr_pos]
-    out[h_rs] = (klen >> 8).astype(np.uint8)
-    out[h_rs + 1] = (klen & 0xFF).astype(np.uint8)
-    _scatter_spans(out, h_rs + 2, klen, part_keys)
-    ldt = np.fromiter((d[0] for d in part_deletions), dtype=np.int64,
-                      count=n_parts)
-    marked = np.fromiter((d[1] for d in part_deletions), dtype=np.int64,
-                         count=n_parts)
-    _scatter_be(out, h_rs + 2 + klen, ldt, 4)
-    _scatter_be(out, h_rs + 6 + klen, marked, 8)
-
-    # -- cells -----------------------------------------------------------
-    c_rs = offs[:-1][cell_mask]
-    _fill_cells(out, c_rs, nlen, plen, vlen, names,
-                np.asarray(kind_codes, dtype=np.int8),
-                np.asarray(timestamps, dtype=np.int64), values,
-                prefixes)
-    # end markers are already zero (preallocated buffer)
-
-    return (out, offs[hdr_pos], offs[end_pos] + 2,
-            c_rs, c_rs + cell_len)
+    ldt, marked = np.array(part_deletions, dtype=np.int64).reshape(-1, 2).T
+    # partition = H klen | key | i ldt | q marked | cells | H 0 (end)
+    return interleave_block(
+        [_be(klen, ">u2"), part_keys,
+         np.hstack([_be(ldt, ">i4"), _be(marked, ">i8")])],
+        _cell_pieces(names, kind_codes, timestamps, values, prefixes),
+        counts, [np.zeros((n_parts, 2), dtype=np.uint8)])
 
 
 def encode_cell_run(names: list, kind_codes, timestamps, values: list,
@@ -674,98 +711,60 @@ def encode_cell_run(names: list, kind_codes, timestamps, values: list,
     """Encode a RUN of cells (no partition header, no end marker) --
     the mid-partition continuation encode_cells_block cannot express:
     a gigabyte partition streams through bounded add_cells_batch calls
-    instead of buffering whole. Returns (run_bytes, cell_starts,
-    cell_ends) with offsets relative to the run."""
-    n_cells = len(names)
-    nlen = np.fromiter(map(len, names), dtype=np.int64, count=n_cells)
-    if n_cells and int(nlen.min()) == 0:
+    instead of buffering whole. Returns (run, cell_starts, cell_ends)
+    with offsets relative to the run; the run is a uint8 ndarray
+    (buffer protocol), which callers hand to file writes and digests
+    without a copy."""
+    run, starts, ends, _, _ = interleave_block(
+        _cell_pieces(names, kind_codes, timestamps, values, prefixes))
+    return run, starts, ends
+
+
+def _cell_pieces(names, kind_codes, timestamps, values, prefixes) -> list:
+    """interleave_block pieces of a run of cell records:
+    H nlen | name | B flag | prefix | q ts | i vlen | value, with the
+    flag-to-vlen middle built as one numpy header per cell."""
+    n = len(names)
+    nlen = np.fromiter(map(len, names), dtype=np.int64, count=n)
+    if n and int(nlen.min()) == 0:
+        # a zero-length name is the end-of-partition marker in this
+        # format (same guard as add_cell)
         raise ValueError("cell name must be non-empty")
-    vlen = np.fromiter(map(len, values), dtype=np.int64, count=n_cells)
-    if prefixes is None:
-        plen = np.zeros(n_cells, dtype=np.int64)
-    else:
-        plen = np.fromiter(map(len, prefixes), dtype=np.int64,
-                           count=n_cells)
-    cell_len = 15 + nlen + plen + vlen
-    ends = np.cumsum(cell_len)
-    c_rs = ends - cell_len
-    out = np.zeros(int(ends[-1]) if n_cells else 0, dtype=np.uint8)
-    _fill_cells(out, c_rs, nlen, plen, vlen, names,
-                np.asarray(kind_codes, dtype=np.int8),
-                np.asarray(timestamps, dtype=np.int64), values,
-                prefixes)
-    # return the ndarray itself (buffer-protocol): callers hand it to
-    # file writes / digests directly, skipping a tobytes() copy that
-    # doubled the run transient
-    return out, c_rs, ends
-
-
-def _fill_cells(out, c_rs, nlen, plen, vlen, names, kind_codes,
-                timestamps, values, prefixes) -> None:
-    """Shared cell-record scatter (encode_cells_block / encode_cell_run):
-    record = H nlen | name | B flag | prefix | q ts | i vlen | value."""
-    out[c_rs] = (nlen >> 8).astype(np.uint8)
-    out[c_rs + 1] = (nlen & 0xFF).astype(np.uint8)
-    _scatter_spans(out, c_rs + 2, nlen, names)
-    flag_pos = c_rs + 2 + nlen
-    out[flag_pos] = _KIND_FLAG[kind_codes]
-    if prefixes is not None and plen.any():
-        _scatter_spans(out, flag_pos + 1, plen, prefixes)
-    ts_pos = flag_pos + 1 + plen
-    _scatter_be(out, ts_pos, timestamps, 8)
-    _scatter_be(out, ts_pos + 8, vlen, 4)
-    if vlen.any():
-        _scatter_spans(out, ts_pos + 12, vlen, values)
-
-
-_SCATTER_STEP = 512
-
-
-def _scatter_spans(out: np.ndarray, dst: np.ndarray, lens: np.ndarray,
-                   chunks: list) -> None:
-    """Ragged scatter in bounded sub-chunks: the index array transient
-    stays a few MB regardless of run size (O(batch) writer pin)."""
-    n = len(lens)
-    for s in range(0, n, _SCATTER_STEP):
-        e = min(s + _SCATTER_STEP, n)
-        idx = _ragged_idx(dst[s:e], lens[s:e])
-        if len(idx):
-            out[idx] = np.frombuffer(b"".join(chunks[s:e]),
-                                     dtype=np.uint8)
+    vlen = np.fromiter(map(len, values), dtype=np.int64, count=n)
+    plen = (np.zeros(n, dtype=np.int64) if prefixes is None else
+            np.fromiter(map(len, prefixes), dtype=np.int64, count=n))
+    width = 13 + int(plen.max(initial=0))
+    mid = np.zeros((n, width), dtype=np.uint8)
+    mid[:, 0] = _KIND_FLAG[np.asarray(kind_codes, dtype=np.int8)]
+    if width > 13:
+        mid[:, 1:width - 12][np.arange(width - 13) < plen[:, None]] = \
+            np.frombuffer(b"".join(prefixes), dtype=np.uint8)
+    ts_at = width * np.arange(n, dtype=np.int64) + 1 + plen
+    _scatter_be(mid.reshape(-1), ts_at,
+                np.asarray(timestamps, dtype=np.int64), 8)
+    _scatter_be(mid.reshape(-1), ts_at + 8, vlen, 4)
+    return [_be(nlen, ">u2"), names, (mid, 13 + plen), values]
 
 
 def _scatter_be(out: np.ndarray, pos: np.ndarray, vals: np.ndarray,
                 width: int) -> None:
     """Scatter big-endian fixed-width integers at per-record positions."""
-    if width == 8:
-        b = vals.astype(">i8").view(np.uint8).reshape(-1, 8)
-    else:
-        b = vals.astype(">i4").view(np.uint8).reshape(-1, 4)
-    out[pos[:, None] + np.arange(width)] = b
+    out[pos[:, None] + np.arange(width)] = _be(
+        vals, ">i8" if width == 8 else ">i4")
 
 
 def encode_index_entries(keys: list, positions: np.ndarray,
                          promoted: list):
     """Index.db entries (H klen | key | Q position | I promoted_len |
-    promoted) for a run of partitions, as one scatter block. Returns
+    promoted) for a run of partitions, as one block. Returns
     (entries_ndarray, entry_start_offsets)."""
     n = len(keys)
     klen = np.fromiter(map(len, keys), dtype=np.int64, count=n)
     plen = np.fromiter(map(len, promoted), dtype=np.int64, count=n)
-    entry_len = 14 + klen + plen
-    ends = np.cumsum(entry_len)
-    rs = ends - entry_len
-    out = np.zeros(int(ends[-1]) if n else 0, dtype=np.uint8)
-    out[rs] = (klen >> 8).astype(np.uint8)
-    out[rs + 1] = (klen & 0xFF).astype(np.uint8)
-    _scatter_spans(out, rs + 2, klen, keys)
-    pos_at = rs + 2 + klen
-    b = np.asarray(positions, dtype=">u8").view(np.uint8).reshape(-1, 8)
-    out[pos_at[:, None] + np.arange(8)] = b
-    _scatter_be(out, pos_at + 8, plen, 4)
-    if plen.any():
-        _scatter_spans(out, pos_at + 12, plen, promoted)
-    return out, rs
+    entries, starts, _, _, _ = interleave_block(
+        [_be(klen, ">u2"), keys,
+         np.hstack([_be(positions, ">u8"), _be(plen, ">u4")]), promoted])
+    return entries, starts
 
 
 def iter_index_key_chunks(path: str, chunk_keys: int = 65536):

@@ -172,18 +172,6 @@ def _pb_flat_stream_writer(out_dir: str, max_cells: int | None = None):
 
         metrics_schema = to_arrow_schema(WRITE_METRICS_SCHEMA)
 
-        def bin_parts(arr):
-            # (concatenated payload bytes, per-entry lengths) of a Binary
-            # array; NULL entries contribute zero length (their offsets
-            # do not advance), exactly the b"" the wire codec omits
-            off = np.frombuffer(arr.buffers()[1], dtype=np.int32)[
-                arr.offset: arr.offset + len(arr) + 1]
-            buf = arr.buffers()[2]
-            data = (np.frombuffer(buf, dtype=np.uint8)
-                    if buf is not None else np.empty(0, dtype=np.uint8))
-            return (data[int(off[0]):int(off[-1])],
-                    (off[1:] - off[:-1]).astype(np.int64))
-
         def too_wide(key, n):
             return ValueError(
                 f"partition {base64.b64encode(key).decode()} has {n} "
@@ -246,12 +234,10 @@ def _pb_flat_stream_writer(out_dir: str, max_cells: int | None = None):
                         if pend["n"] + nn > max_cells:
                             raise too_wide(pend["key"], pend["n"] + nn)
                         mask_pa = pa.array(mask)
-                        nd, nl = bin_parts(
-                            name_arr.slice(s, e - s).filter(mask_pa))
-                        vd, vl = bin_parts(
-                            value_arr.slice(s, e - s).filter(mask_pa))
                         pend["chunks"].append(protowire.encode_columns_bufs(
-                            nd, nl, vd, vl, wts_np[s:e][mask]))
+                            name_arr.slice(s, e - s).filter(mask_pa),
+                            value_arr.slice(s, e - s).filter(mask_pa),
+                            wts_np[s:e][mask]))
                         pend["n"] += nn
 
                 # does the batch's first run continue the pending row?
@@ -289,15 +275,11 @@ def _pb_flat_stream_writer(out_dir: str, max_cells: int | None = None):
                                 int(rstarts[int(np.argmax(counts))])
                             ].as_py()
                             raise too_wide(k, wide)
-                        kd, kl = bin_parts(pc.take(
-                            key_arr, pa.array(rstarts)))
                         mask_pa = pa.array(mask)
-                        nd, nl = bin_parts(
-                            name_arr.slice(p, q - p).filter(mask_pa))
-                        vd, vl = bin_parts(
-                            value_arr.slice(p, q - p).filter(mask_pa))
                         block = protowire.encode_rows_block_bufs(
-                            kd, kl, counts, nd, nl, vd, vl,
+                            pc.take(key_arr, pa.array(rstarts)), counts,
+                            name_arr.slice(p, q - p).filter(mask_pa),
+                            value_arr.slice(p, q - p).filter(mask_pa),
                             wts_np[p:q][mask])
                         state["zout"].write(block)
                         state["n_rows"] += len(rstarts)

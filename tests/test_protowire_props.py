@@ -224,8 +224,10 @@ def test_int32_overflow_guards_raise_instead_of_wrapping():
     import numpy as np
     import pytest
 
+    import pyarrow as pa
+
     from cassandra_sstable_to_protocolbuf_spark.sources.cellcodec import (
-        _arrow_offsets, _ragged_idx, spans_to_binary)
+        _arrow_offsets, interleave_block, spans_to_binary)
 
     # spans totalling past 2 GiB inside a buffer that long are refused
     # before the gather allocates, so a zero-stride view (no bytes
@@ -240,34 +242,68 @@ def test_int32_overflow_guards_raise_instead_of_wrapping():
                         np.array([8], dtype=np.int64))
     with pytest.raises(ValueError, match="int32"):
         _arrow_offsets(np.array([1 << 31], dtype=np.int64))
+    # the writers' block: past 2 GiB it is refused before anything is
+    # allocated, so one 1 MiB payload repeated 2049 times (a list of
+    # bytes, an Arrow array) or a header whose length claims 2 GiB
+    # stands in for a real 2 GiB input
+    mib = bytes(1 << 20)
     with pytest.raises(ValueError, match="int32"):
-        _ragged_idx(np.array([0], dtype=np.int64),
-                    np.array([(1 << 31) + 8], dtype=np.int64))
+        interleave_block([[mib] * 2049])
     with pytest.raises(ValueError, match="int32"):
-        _ragged_idx(np.array([1 << 31], dtype=np.int64),
-                    np.array([8], dtype=np.int64))
+        interleave_block([pa.array([mib])] * 2049)
+    with pytest.raises(ValueError, match="int32"):
+        interleave_block([(np.zeros((1, 1), dtype=np.uint8),
+                           np.array([1 << 31], dtype=np.int64))])
+
+
+def _arrow_binary(parts, pad, null_empty=False):
+    """`parts` as an Arrow binary array of the shapes the writer's
+    slice/filter/take produce: sliced out of a larger array (a non-zero
+    offset when pad > 0), and NULL for empty parts when `null_empty`
+    (a NULL encodes as the omitted empty field)."""
+    import pyarrow as pa
+
+    items = [None if null_empty and not p else p for p in parts]
+    padded = pa.array([b"pad"] * pad + items + [b"pad"] * pad,
+                      type=pa.binary())
+    return padded.slice(pad, len(items))
 
 
 @settings(max_examples=100, deadline=None)
-@given(st.lists(row, max_size=12))
-def test_block_encoder_byte_identical(rows):
+@given(st.lists(row, max_size=12), st.integers(0, 3), st.booleans())
+def test_block_encoder_byte_identical(rows, pad, nulls):
     """encode_rows_block_bufs == per-row frame_row(encode_row(...)) for
     any shape hypothesis can draw: empty keys, empty names/values, zero
-    and negative writeTimes, zero-column rows, varint-size boundaries."""
+    and negative writeTimes, zero-column rows, varint-size boundaries,
+    sliced Arrow inputs and NULL values."""
     import numpy as np
 
-    def bufs(parts):
-        # Arrow Binary shape: one concatenated buffer + per-entry lengths
-        return (np.frombuffer(b"".join(parts), dtype=np.uint8),
-                np.array([len(p) for p in parts], dtype=np.int64))
-
     ref = b"".join(frame_row(encode_row(k, cs)) for k, cs in rows)
-    key_data, klen = bufs([k for k, _ in rows])
+    keys = _arrow_binary([k for k, _ in rows], pad)
     counts = np.array([len(cs) for _, cs in rows], dtype=np.int64)
-    name_data, nlen = bufs([n for _, cs in rows for (n, _v, _t) in cs])
-    value_data, vlen = bufs([(v if v is not None else b"")
-                             for _, cs in rows for (_n, v, _t) in cs])
+    names = _arrow_binary([n for _, cs in rows for (n, _v, _t) in cs], pad)
+    values = _arrow_binary([v for _, cs in rows for (_n, v, _t) in cs],
+                           pad, nulls)
     wts = np.array([t for _, cs in rows for (_n, _v, t) in cs],
                    dtype=np.int64)
-    assert pw.encode_rows_block_bufs(key_data, klen, counts, name_data,
-                                     nlen, value_data, vlen, wts) == ref
+    assert pw.encode_rows_block_bufs(keys, counts, names, values,
+                                     wts) == ref
+
+
+@settings(max_examples=100, deadline=None)
+@given(row, st.integers(0, 3), st.booleans())
+def test_framed_columns_encoder_byte_identical(r, pad, nulls):
+    """frame_row_parts(key, encode_columns_bufs(...)), the writer's path
+    for a Row that spans batches, == the oracle's
+    frame_row(encode_row(...))."""
+    import numpy as np
+
+    key, cells = r
+    names = _arrow_binary([n for n, _v, _t in cells], pad)
+    values = _arrow_binary([v for _n, v, _t in cells], pad, nulls)
+    wts = np.array([t for _n, _v, t in cells], dtype=np.int64)
+    assert pw.frame_row_parts(
+        key, pw.encode_columns_bufs(names, values, wts)) == frame_row(
+        encode_row(key, cells))
+
+

@@ -5,21 +5,24 @@ micro-benches (no Spark -- codec work is per-task CPU, exactly what
 one executor core does), with floors at ~1/4 of idle-measured
 throughput so machine load cannot flake them.
 
-Idle 2026-08-16 measurements (200k cells, 4-cell partitions -- the
-per-partition-overhead-heavy WORST case; one task):
-  * batch binary sink (write_partitions_block): ~905k cells/s plain,
-    ~899k cells/s lz4 -- 4.7x / 3.9x the round-7 per-cell loop
-  * legacy per-cell sink (add_cell): ~250k cells/s (bloom build now
-    batched at close; kept as the semantic reference path)
-  * fast Arrow decode (cellcodec read path): ~738k rows/s, 2.5x the
+Measurements of 2026-10-19 on a shared 4-core VM, best of 2 (200k
+cells in 4-cell partitions -- the per-partition-overhead-heavy WORST
+case; one task):
+  * batch binary sink (write_partitions_block): ~840k cells/s plain,
+    ~870k cells/s lz4 -- ~4x the round-7 per-cell loop
+  * legacy per-cell sink (add_cell): ~310k cells/s plain, ~345k lz4
+    (bloom build batched at close; kept as the semantic reference path)
+  * fast Arrow decode (cellcodec read path): 640-850k rows/s, ~2.5x the
     tuple generator chain
-  * pb+zstd sink: ~462k cells/s (protowire, unchanged)
+  * pb+zstd block sink (encode_rows_block_bufs from Python lists):
+    ~1.8M cells/s
+  * pb+zstd flat sink (_pb_flat_stream_writer over 8192-cell Arrow
+    batches, 120k cells): ~2.6M cells/s
 Wall-time complement: bench.py --check-bands."""
 
 from __future__ import annotations
 
 import hashlib
-import io
 import time
 
 import numpy as np
@@ -44,20 +47,33 @@ def _bench_binary(tmp_path, compression, n_cells=120_000):
     return n_cells / (time.monotonic() - start)
 
 
-def _bench_pb(n_cells=120_000):
+def _bench_pb(tmp_path, n_cells=120_000):
+    """The protobuf sink's production writer, _pb_flat_stream_writer
+    (run fold, block encode, zstd, file write), over flat-cell Arrow
+    batches of the native scan's 8192-cell size: 4-cell partitions."""
     import pyarrow as pa
 
-    from tests.sstable_oracle import encode_row, frame_row
+    from cassandra_sstable_to_protocolbuf_spark.sources.sstable_pb import (
+        _pb_flat_stream_writer)
 
-    rows = [(b"key-%07d" % i,
-             [(b"col%d" % c, b"value-%07d-%d" % (i, c), i * 10 + c)
-              for c in range(4)])
-            for i in range(n_cells // 4)]
-    sink = io.BytesIO()
+    cell = np.arange(n_cells)
+    table = pa.table({
+        "sstable_id": pa.array(["s"] * n_cells),
+        "key": pa.array([b"key-%07d" % i for i in (cell // 4).tolist()],
+                        type=pa.binary()),
+        "live": pa.array(np.ones(n_cells, dtype=bool)),
+        "name": pa.array([b"col%d" % c for c in (cell % 4).tolist()],
+                         type=pa.binary()),
+        "value": pa.array([b"value-%07d-%d" % (c // 4, c % 4)
+                           for c in cell.tolist()], type=pa.binary()),
+        "writeTime": pa.array((cell // 4) * 10 + cell % 4)})
+    batches = table.to_batches(max_chunksize=8192)
+    out = tmp_path / f"pb{time.monotonic_ns()}"
+    out.mkdir()
+    write = _pb_flat_stream_writer(str(out))
     start = time.monotonic()
-    with pa.CompressedOutputStream(pa.output_stream(sink), "zstd") as z:
-        for key, cols in rows:
-            z.write(frame_row(encode_row(key, cols)))
+    for _ in write(iter(batches)):
+        pass
     return n_cells / (time.monotonic() - start)
 
 
@@ -135,17 +151,18 @@ def test_fast_decode_throughput_floor(tmp_path, capsys):
     assert best >= 150_000, f"fast decode regressed: {best:,.0f} rows/s"
 
 
-def test_pb_sink_throughput_floor(capsys):
-    best = max(_bench_pb() for _ in range(2))
+def test_pb_sink_throughput_floor(tmp_path, capsys):
+    best = max(_bench_pb(tmp_path) for _ in range(2))
     with capsys.disabled():
-        print(f"\n[capacity] pb+zstd per-row sink {best:,.0f} cells/s "
+        print(f"\n[capacity] pb+zstd flat sink {best:,.0f} cells/s "
               f"(floor 110k)")
     assert best >= 110_000, f"pb encode regressed: {best:,.0f} cells/s"
 
 
 def test_pb_block_throughput_floor(capsys):
-    """The vectorized protobuf block framer (the sink's actual r8 hot
-    path): ~1.27M cells/s idle on the 4-cell shape; floor at ~1/4."""
+    """The vectorized protobuf block framer (the sink's hot path):
+    ~1.8M cells/s on the 4-cell shape (module docstring); floor at
+    ~1/4 of the ~1.27M first measured."""
     from cassandra_sstable_to_protocolbuf_spark import protowire as pw
 
     n_cells = 200_000
@@ -162,16 +179,11 @@ def test_pb_block_throughput_floor(capsys):
         import pyarrow as pa
         sink = _io.BytesIO()
         with pa.CompressedOutputStream(pa.output_stream(sink), "zstd") as z:
-            # the list -> Arrow-shaped buffer join is part of the timing
-            key_data = np.frombuffer(b"".join(keys), dtype=np.uint8)
-            klen = np.fromiter(map(len, keys), np.int64, len(keys))
-            name_data = np.frombuffer(b"".join(names), dtype=np.uint8)
-            nlen = np.fromiter(map(len, names), np.int64, n_cells)
-            value_data = np.frombuffer(b"".join(vals), dtype=np.uint8)
-            vlen = np.fromiter(map(len, vals), np.int64, n_cells)
+            # the list -> Arrow array conversion is part of the timing
             z.write(pw.encode_rows_block_bufs(
-                key_data, klen, counts, name_data, nlen, value_data, vlen,
-                wts))
+                pa.array(keys, type=pa.binary()), counts,
+                pa.array(names, type=pa.binary()),
+                pa.array(vals, type=pa.binary()), wts))
         best = max(best, n_cells / (time.monotonic() - t0))
     with capsys.disabled():
         print(f"\n[capacity] pb+zstd block sink {best:,.0f} cells/s "
