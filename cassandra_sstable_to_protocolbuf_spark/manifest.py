@@ -53,8 +53,9 @@ by ORDERING, with the maintenance transaction log as the arbiter):
 * A manifest entry whose file is MISSING means external tampering:
   discovery falls back to the directory walk for that plan -- degraded
   to O(files), never wrong results.
-* Every publish path records its outputs (write_sstable, OPTIMIZE);
-  reconcile() repairs raw-copy bypasses.
+* Every publish path records its outputs: OPTIMIZE does, and a caller
+  of the lazy write_cells_as_sstables calls add() on the collected
+  paths; reconcile() repairs raw-copy bypasses.
 
 Updates are COMPARE-AND-SWAP on the root only (VERDICT r8 #2): two
 concurrent updaters both keep their entries because the loser re-reads

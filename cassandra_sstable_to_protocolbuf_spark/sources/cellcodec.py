@@ -1,7 +1,7 @@
 """Vectorized batch codec for the SSTable cell framing (VERDICT r7 #1).
 
 The native read and write paths were per-cell pure-Python struct loops
-(a per-atom reader, `SSTableStreamWriter.add_cell`) -- plan-safe but a
+(a per-atom reader, a per-cell writer) -- plan-safe but a
 ~200-460k cells/s/task constant-factor ceiling that dominated the three
 most expensive bench lines (pb/compact/optimize roundtrips). The cell
 framing is fixed-layout big-endian, so both directions batch:
@@ -20,7 +20,8 @@ framing is fixed-layout big-endian, so both directions batch:
   interleaved order by one Arrow take (interleave_block, also the
   protobuf writer's block builder), whose data buffer IS the block.
   One Python pass per PARTITION (index entry, ordering check), zero
-  per CELL.
+  per CELL; promoted-index blocks come from one fold over atom runs
+  (fold_blocks), whatever the chunking.
 * BLOOM: Cassandra's MurmurHash.hash3_x64_128 (including the Java
   signed-tail quirk, see sstable_native.murmur3_hash128) over length-
   grouped uint64 numpy lanes, and the double-hash bit scatter as a
@@ -28,9 +29,11 @@ framing is fixed-layout big-endian, so both directions batch:
 
 DECODE is the reader's only decoder: SSTableNativeReader.read() sends
 every split (plain, sliced, composite, digest-verified, PERMISSIVE)
-through it. The per-cell scalar walk lives on under tests/ as the
-identity oracle (tests/sstable_oracle.py), and the encoders are pinned
-byte-identical to the per-cell writer (tests/test_cellcodec.py).
+through it, and ENCODE is the writer's only encoder. The per-cell
+scalar walk and the per-cell writer live on under tests/ as identity
+oracles (tests/sstable_oracle.py): the decoder is pinned row-identical
+to the one, the encoders and the block fold byte-identical to the
+other (tests/test_cellcodec.py).
 
 Reference parity note: the reference's per-cell iterator is
 SSTableIdentityIteratorPatched.java (computeNext); this module changes
@@ -672,49 +675,57 @@ _KIND_FLAG = np.array([0x00, _FLAG_DELETION, _FLAG_EXPIRATION,
                        _FLAG_COUNTER], dtype=np.uint8)
 
 
-def encode_cells_block(part_keys: list, part_deletions: list,
-                       counts: np.ndarray, names: list,
-                       kind_codes: np.ndarray, timestamps: np.ndarray,
-                       values: list, prefixes: list | None = None):
-    """Encode complete partitions from FLAT columnar inputs into ONE
-    byte block, byte-identical to the equivalent
-    start_partition/add_cell/end_partition sequence.
+def binary_column(col):
+    """`col` as an Arrow `binary` array: an Arrow array passes through,
+    a list of bytes converts once, None stays None -- the writer's entry
+    point, so the encoders below handle one column type."""
+    import pyarrow as pa
 
-    * part_keys / part_deletions: per partition; deletion = (ldt,
-      marked) with the live sentinels for undeleted partitions.
+    if col is None or isinstance(col, pa.Array):
+        return col
+    return pa.array(col, type=pa.binary())
+
+
+def encode_cells_block(part_keys, part_deletions: list,
+                       counts: np.ndarray, names, kind_codes: np.ndarray,
+                       timestamps: np.ndarray, values, prefixes=None):
+    """Encode complete partitions from FLAT columnar inputs into ONE
+    byte block, byte-identical to the equivalent per-cell writes
+    (tests/sstable_oracle.py's PerCellWriter).
+
+    * part_keys (Arrow binary) / part_deletions: per partition;
+      deletion = (ldt, marked) with the live sentinels for undeleted
+      partitions.
     * counts: cells per partition (int64 ndarray, sums to len(names)).
-    * names / values: per cell, list[bytes]. DELETED cells pass their
-      packed int32 local_deletion as `values[i]` (the 4-byte body the
-      scalar path writes).
+    * names / values: per cell, Arrow binary (a NULL value is empty).
+      DELETED cells pass their packed int32 local_deletion as
+      `values[i]` (the 4-byte body).
     * kind_codes: int8 ndarray (KIND_LIVE/DELETED/EXPIRING/COUNTER).
-    * prefixes: per-cell bytes between the flag byte and the (ts,
-      vlen) tail -- b"" LIVE/DELETED, pack('>ii', ttl, lexp) EXPIRING,
-      pack('>q', tsd) COUNTER. None = all empty (all LIVE/DELETED).
+    * prefixes: per-cell Arrow binary bytes between the flag byte and
+      the (ts, vlen) tail -- b"" LIVE/DELETED, pack('>ii', ttl, lexp)
+      EXPIRING, pack('>q', tsd) COUNTER. None = all empty.
 
     Returns (block, hdr_starts, part_ends, cell_starts, cell_ends) --
     numpy offset arrays RELATIVE to the block for the caller's
     index-entry and promoted-block accounting."""
     n_parts = len(part_keys)
-    klen = np.fromiter(map(len, part_keys), dtype=np.int64,
-                       count=n_parts)
     ldt, marked = np.array(part_deletions, dtype=np.int64).reshape(-1, 2).T
     # partition = H klen | key | i ldt | q marked | cells | H 0 (end)
     return interleave_block(
-        [_be(klen, ">u2"), part_keys,
+        [_be(_piece_lens(part_keys), ">u2"), part_keys,
          np.hstack([_be(ldt, ">i4"), _be(marked, ">i8")])],
         _cell_pieces(names, kind_codes, timestamps, values, prefixes),
         counts, [np.zeros((n_parts, 2), dtype=np.uint8)])
 
 
-def encode_cell_run(names: list, kind_codes, timestamps, values: list,
-                    prefixes: list | None = None):
-    """Encode a RUN of cells (no partition header, no end marker) --
-    the mid-partition continuation encode_cells_block cannot express:
-    a gigabyte partition streams through bounded add_cells_batch calls
-    instead of buffering whole. Returns (run, cell_starts, cell_ends)
-    with offsets relative to the run; the run is a uint8 ndarray
-    (buffer protocol), which callers hand to file writes and digests
-    without a copy."""
+def encode_cell_run(names, kind_codes, timestamps, values, prefixes=None):
+    """Encode a RUN of cells (no partition header, no end marker), the
+    open partition's continuation encode_cells_block cannot express:
+    a partition of any size streams through bounded add_cells_batch
+    calls instead of buffering whole. Inputs as encode_cells_block's.
+    Returns (run, cell_starts, cell_ends) with offsets relative to the
+    run; the run is a uint8 ndarray (buffer protocol), which callers
+    hand to file writes and digests without a copy."""
     run, starts, ends, _, _ = interleave_block(
         _cell_pieces(names, kind_codes, timestamps, values, prefixes))
     return run, starts, ends
@@ -722,35 +733,18 @@ def encode_cell_run(names: list, kind_codes, timestamps, values: list,
 
 def _cell_pieces(names, kind_codes, timestamps, values, prefixes) -> list:
     """interleave_block pieces of a run of cell records:
-    H nlen | name | B flag | prefix | q ts | i vlen | value, with the
-    flag-to-vlen middle built as one numpy header per cell."""
-    n = len(names)
-    nlen = np.fromiter(map(len, names), dtype=np.int64, count=n)
-    if n and int(nlen.min()) == 0:
+    H nlen | name | B flag | prefix | q ts | i vlen | value."""
+    nlen = _piece_lens(names)
+    if len(nlen) and int(nlen.min()) == 0:
         # a zero-length name is the end-of-partition marker in this
-        # format (same guard as add_cell)
+        # format; real Cassandra cell names are >= 1 byte
         raise ValueError("cell name must be non-empty")
-    vlen = np.fromiter(map(len, values), dtype=np.int64, count=n)
-    plen = (np.zeros(n, dtype=np.int64) if prefixes is None else
-            np.fromiter(map(len, prefixes), dtype=np.int64, count=n))
-    width = 13 + int(plen.max(initial=0))
-    mid = np.zeros((n, width), dtype=np.uint8)
-    mid[:, 0] = _KIND_FLAG[np.asarray(kind_codes, dtype=np.int8)]
-    if width > 13:
-        mid[:, 1:width - 12][np.arange(width - 13) < plen[:, None]] = \
-            np.frombuffer(b"".join(prefixes), dtype=np.uint8)
-    ts_at = width * np.arange(n, dtype=np.int64) + 1 + plen
-    _scatter_be(mid.reshape(-1), ts_at,
-                np.asarray(timestamps, dtype=np.int64), 8)
-    _scatter_be(mid.reshape(-1), ts_at + 8, vlen, 4)
-    return [_be(nlen, ">u2"), names, (mid, 13 + plen), values]
-
-
-def _scatter_be(out: np.ndarray, pos: np.ndarray, vals: np.ndarray,
-                width: int) -> None:
-    """Scatter big-endian fixed-width integers at per-record positions."""
-    out[pos[:, None] + np.arange(width)] = _be(
-        vals, ">i8" if width == 8 else ">i4")
+    flag = _KIND_FLAG[np.asarray(kind_codes, dtype=np.int8)][:, None]
+    tail = np.hstack([_be(timestamps, ">i8"),
+                      _be(_piece_lens(values), ">i4")])
+    mid = ([np.hstack([flag, tail])] if prefixes is None
+           else [flag, prefixes, tail])
+    return [_be(nlen, ">u2"), names, *mid, values]
 
 
 def encode_index_entries(keys: list, positions: np.ndarray,
@@ -758,12 +752,10 @@ def encode_index_entries(keys: list, positions: np.ndarray,
     """Index.db entries (H klen | key | Q position | I promoted_len |
     promoted) for a run of partitions, as one block. Returns
     (entries_ndarray, entry_start_offsets)."""
-    n = len(keys)
-    klen = np.fromiter(map(len, keys), dtype=np.int64, count=n)
-    plen = np.fromiter(map(len, promoted), dtype=np.int64, count=n)
     entries, starts, _, _, _ = interleave_block(
-        [_be(klen, ">u2"), keys,
-         np.hstack([_be(positions, ">u8"), _be(plen, ">u4")]), promoted])
+        [_be(_piece_lens(keys), ">u2"), keys,
+         np.hstack([_be(positions, ">u8"),
+                    _be(_piece_lens(promoted), ">u4")]), promoted])
     return entries, starts
 
 
@@ -841,27 +833,40 @@ def ascending_decorated(tok_hi: np.ndarray, tok_lo: np.ndarray,
     return int(bad[0]) + 1 if len(bad) else -1
 
 
-def blocks_for_wide_partition(names: list, rel_starts: np.ndarray,
-                              rel_ends: np.ndarray, cib: int) -> list:
-    """Promoted-index block extents for one partition, replicating
-    _note_atom/_maybe_close_block exactly: a block opens at the first
-    unassigned atom's relative offset and closes at the first atom END
-    that puts its width >= cib (the final block force-closes). Returns
-    [(min_name, max_name, start, width), ...]."""
-    blocks = []
-    j = 0
-    n = len(names)
+def fold_blocks(open_block, names, rel_starts, rel_ends, cib: int):
+    """Promoted-index block accounting over a run of atoms of one
+    partition: a block opens at the first unassigned atom's start
+    offset and closes at the first atom END that puts its width >= cib.
+    `names` is an Arrow binary array, and the atoms' start and end
+    offsets are relative to the partition's Data.db position;
+    `open_block` is None or the (min_name, max_name, start) of a block
+    earlier atoms left open.
+    Returns (closed, open_block): the closed blocks as (min_name,
+    max_name, start, width), and the block still open after the run
+    (None when the run ends on a close) -- the caller force-closes it
+    at the partition's end. The same atom stream gives the same blocks
+    under any chunking into runs (pinned against a per-atom fold in
+    tests/test_cellcodec.py). min/max rather than first/last names keep
+    block selection sound even for names out of comparator order."""
+    import pyarrow.compute as pc
+
+    closed = []
+    j, n = 0, len(names)
     while j < n:
-        blk_start = int(rel_starts[j])
-        # first atom index whose end reaches blk_start + cib
-        k = int(np.searchsorted(rel_ends, blk_start + cib))
-        if k >= n:
-            k = n - 1
-        group = names[j:k + 1]
-        blocks.append((min(group), max(group), blk_start,
-                       int(rel_ends[k]) - blk_start))
+        lo, hi, start = (open_block if open_block is not None
+                         else (None, None, int(rel_starts[j])))
+        k = min(int(np.searchsorted(rel_ends, start + cib)), n - 1)
+        mm = pc.min_max(names.slice(j, k + 1 - j))
+        gmn, gmx = mm["min"].as_py(), mm["max"].as_py()
+        if lo is not None:
+            gmn, gmx = min(lo, gmn), max(hi, gmx)
+        width = int(rel_ends[k]) - start
+        if width < cib:
+            return closed, (gmn, gmx, start)
+        closed.append((gmn, gmx, start, width))
+        open_block = None
         j = k + 1
-    return blocks
+    return closed, open_block
 
 
 # --------------------------------------------------------------------------

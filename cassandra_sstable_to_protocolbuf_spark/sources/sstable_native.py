@@ -1043,9 +1043,12 @@ def open_data_file(data_path: str, verify_checksums: bool = True):
 
 
 # --------------------------------------------------------------------------
-# writers: SSTableStreamWriter is the product-surface streaming encoder
-# (O(chunk) memory at any file size); write_sstable is the list-of-dicts
-# fixture convenience built on top of it.
+# writers: SSTableStreamWriter is the streaming encoder (O(chunk) memory
+# at any file size), fed whole Arrow columns -- complete partitions by
+# write_partitions_block, an open partition by add_cells_batch runs;
+# _cells_stream_writer drives it from a sorted cell stream. The per-cell
+# writer and the list-of-dicts fixture writer live under tests/ as its
+# oracle (tests/sstable_oracle.py).
 # --------------------------------------------------------------------------
 
 class SSTableStreamWriter:
@@ -1092,8 +1095,9 @@ class SSTableStreamWriter:
         self._cib = column_index_bytes or 0
         # file-level [min, max] atom-name bounds (StatsMetadata's
         # min/maxColumnNames analog), folded from each partition's
-        # closed blocks at end_partition -- zero extra per-cell cost;
-        # tracked only while block accounting runs
+        # closed blocks at end_partition and from each block's names in
+        # write_partitions_block; tracked only while block accounting
+        # runs
         self._name_min: bytes | None = None
         self._name_max: bytes | None = None
         os.makedirs(dir_path, exist_ok=True)
@@ -1182,8 +1186,10 @@ class SSTableStreamWriter:
         self._part_key = key
         self._part_pos = self._logical_pos
         self._part_deletion = (ldt, marked)
+        # promoted-index blocks: closed ones, and the one still open
+        # (cellcodec.fold_blocks' carry)
         self._blocks: list[tuple[bytes, bytes, int, int]] = []
-        self._blk_start: int | None = None
+        self._open_block: tuple[bytes, bytes, int] | None = None
         # one fused write per header: _write is the per-call hot path
         self._write(struct.pack(f">H{len(key)}siq", len(key), key,
                                 ldt, marked))
@@ -1194,97 +1200,48 @@ class SSTableStreamWriter:
                             local_deletion: int, marked_at: int) -> None:
         if not self._in_partition:
             raise ValueError("range tombstone outside a partition")
+        rel = self._logical_pos - self._part_pos
+        atom = struct.pack(f">H{len(start)}sBH{len(end)}siq", len(start),
+                           start, FLAG_RANGE_TOMBSTONE, len(end), end,
+                           local_deletion, marked_at)
+        self._write(atom)
         if self._cib:
-            self._note_atom(start)
-        self._write(struct.pack(">H", len(start)))
-        self._write(start)
-        self._write(struct.pack(">B", FLAG_RANGE_TOMBSTONE))
-        self._write(struct.pack(">H", len(end)))
-        self._write(end)
-        self._write(struct.pack(">iq", local_deletion, marked_at))
-        if self._cib:
-            self._maybe_close_block()
+            import pyarrow as pa
 
-    # -- promoted-index block accounting (column_index_bytes > 0) -------
-    def _note_atom(self, name: bytes) -> None:
-        """Open a block at the incoming atom's offset, or fold the name
-        into the open block's [min, max]. min/max (rather than
-        first/last) keeps block selection SOUND even if a caller ever
-        streamed names out of comparator order."""
-        if self._blk_start is None:
-            self._blk_start = self._logical_pos - self._part_pos
-            self._blk_min = name
-            self._blk_max = name
-        elif name < self._blk_min:
-            self._blk_min = name
-        elif name > self._blk_max:
-            self._blk_max = name
+            self._fold_blocks(pa.array([start], type=pa.binary()), [rel],
+                              [rel + len(atom)])
 
-    def _maybe_close_block(self, force: bool = False) -> None:
-        if self._blk_start is None:
-            return
-        width = self._logical_pos - self._part_pos - self._blk_start
-        if force or width >= self._cib:
-            self._blocks.append((self._blk_min, self._blk_max,
-                                 self._blk_start, width))
-            self._blk_start = None
+    def _fold_blocks(self, names, rel_starts, rel_ends) -> None:
+        """Fold a run of the open partition's atoms into its blocks."""
+        from cassandra_sstable_to_protocolbuf_spark.sources import (
+            cellcodec as _cc)
 
-    def add_cell(self, name: bytes, kind: str = "LIVE", timestamp: int = 0,
-                 value: bytes = b"", ttl: int = 0, local_expiration: int = 0,
-                 local_deletion: int = 0,
-                 timestamp_of_last_delete: int = 0) -> None:
-        if not self._in_partition:
-            raise ValueError("cell outside a partition")
-        if not name:
-            # a zero-length name is the end-of-partition marker in this
-            # format; real Cassandra cell names are >= 1 byte
-            raise ValueError("cell name must be non-empty")
-        if self._cib:
-            self._note_atom(name)
-        # one fused write per cell: the encoder runs once per cell of a
-        # 100 TB export, so per-call Python overhead IS the write cost
-        if kind == "LIVE":
-            self._write(struct.pack(f">H{len(name)}sBqi", len(name), name,
-                                    0, timestamp, len(value)) + value)
-        elif kind == "DELETED":
-            self._write(struct.pack(f">H{len(name)}sBqii", len(name), name,
-                                    FLAG_DELETION, timestamp, 4,
-                                    local_deletion))
-        elif kind == "EXPIRING":
-            self._write(struct.pack(f">H{len(name)}sBiiqi", len(name), name,
-                                    FLAG_EXPIRATION, ttl, local_expiration,
-                                    timestamp, len(value)) + value)
-        elif kind == "COUNTER":
-            self._write(struct.pack(f">H{len(name)}sBqqi", len(name), name,
-                                    FLAG_COUNTER, timestamp_of_last_delete,
-                                    timestamp, len(value)) + value)
-        else:
-            raise ValueError(f"unknown cell kind {kind}")
-        if self._cib:
-            self._maybe_close_block()
-        self.n_cells += 1
+        closed, self._open_block = _cc.fold_blocks(
+            self._open_block, names, rel_starts, rel_ends, self._cib)
+        self._blocks += closed
+
+    def _note_name_bounds(self, lo: bytes, hi: bytes) -> None:
+        if self._name_min is None or lo < self._name_min:
+            self._name_min = lo
+        if self._name_max is None or hi > self._name_max:
+            self._name_max = hi
 
     def end_partition(self) -> None:
         if not self._in_partition:
             raise ValueError("no partition open")
-        if self._cib:
-            self._maybe_close_block(force=True)  # trailing partial block
-            if self._blocks:
-                bmn = min(b[0] for b in self._blocks)
-                bmx = max(b[1] for b in self._blocks)
-                if self._name_min is None or bmn < self._name_min:
-                    self._name_min = bmn
-                if self._name_max is None or bmx > self._name_max:
-                    self._name_max = bmx
+        blocks = _force_close(self._blocks, self._open_block,
+                              self._logical_pos - self._part_pos)
+        if blocks:
+            self._note_name_bounds(min(b[0] for b in blocks),
+                                   max(b[1] for b in blocks))
         self._write(struct.pack(">H", 0))  # end-of-partition marker
         # deferred Index.db entry, now with the promoted index when the
         # row spans >= 2 blocks (a single block offers nothing to skip
         # -- Cassandra's promote-only-wide-rows posture). Block widths
         # tile the atom region exactly; the end marker is outside them.
         key = self._part_key
-        promoted = (serialize_promoted_index(self._part_deletion,
-                                             self._blocks)
-                    if len(self._blocks) >= 2 else b"")
+        promoted = (serialize_promoted_index(self._part_deletion, blocks)
+                    if len(blocks) >= 2 else b"")
         if self._n_index % DEFAULT_INDEX_INTERVAL == 0:
             self._sampled.append((key, self._index_pos, self._part_pos))
         entry = (struct.pack(">H", len(key)) + key
@@ -1296,111 +1253,64 @@ class SSTableStreamWriter:
         self._blocks = []
         self._in_partition = False
 
-    def add_cells_batch(self, names: list, kind_codes, timestamps,
-                        values: list, prefixes: list | None = None) -> None:
-        """Vectorized run append for the OPEN partition: byte-identical
-        to the equivalent add_cell sequence (cell layout, promoted-index
-        block accounting included) but with one block encode per RUN.
-        This is how a gigabyte partition streams through the batch
-        writer in bounded chunks -- the complement of
-        write_partitions_block, which takes only complete partitions.
-        Input conventions match write_partitions_block (DELETED cells
-        pass their packed int32 body as the value; `prefixes` carries
-        the kind-specific bytes between flag and ts)."""
+    def add_cells_batch(self, names, kind_codes, timestamps, values,
+                        prefixes=None) -> None:
+        """Append a RUN of cells to the OPEN partition with one block
+        encode: how a partition of any size streams through the writer
+        in bounded chunks -- the complement of write_partitions_block,
+        which takes only complete partitions. Inputs as
+        write_partitions_block's; the same cells give the same bytes
+        (promoted-index blocks included) under any chunking into
+        runs."""
         from cassandra_sstable_to_protocolbuf_spark.sources import (
             cellcodec as _cc)
 
         if not self._in_partition:
             raise ValueError("cell outside a partition")
+        names = _cc.binary_column(names)
         n = len(names)
         if n == 0:
             return
-        run, starts, ends = _cc.encode_cell_run(names, kind_codes,
-                                                timestamps, values,
-                                                prefixes)
+        run, starts, ends = _cc.encode_cell_run(
+            names, kind_codes, timestamps, _cc.binary_column(values),
+            _cc.binary_column(prefixes))
         if self._cib:
             rel = self._logical_pos - self._part_pos
-            self._note_atoms_batch(names, starts + rel, ends + rel)
+            self._fold_blocks(names, starts + rel, ends + rel)
         self._write(run)
         self.n_cells += n
 
-    def _note_atoms_batch(self, names: list, rel_starts, rel_ends) -> None:
-        """Batched _note_atom/_maybe_close_block: identical block
-        extents for any chunking of the same atom stream (pinned in
-        tests/test_cellcodec.py). Carry-in: an open block from a prior
-        chunk (or per-cell calls) continues; carry-out: the final
-        block stays OPEN unless it already reached the width
-        threshold."""
-        import numpy as np
-
-        n = len(names)
-        j = 0
-        if self._blk_start is not None:
-            # continue the open block: it closes at the first atom END
-            # reaching blk_start + cib
-            k = int(np.searchsorted(rel_ends, self._blk_start + self._cib))
-            if k >= n:
-                k = n - 1
-            group = names[:k + 1]
-            gmn, gmx = min(group), max(group)
-            if gmn < self._blk_min:
-                self._blk_min = gmn
-            if gmx > self._blk_max:
-                self._blk_max = gmx
-            if int(rel_ends[k]) - self._blk_start < self._cib:
-                return  # still open after the whole run
-            self._blocks.append((self._blk_min, self._blk_max,
-                                 self._blk_start,
-                                 int(rel_ends[k]) - self._blk_start))
-            self._blk_start = None
-            j = k + 1
-        while j < n:
-            blk_start = int(rel_starts[j])
-            k = int(np.searchsorted(rel_ends, blk_start + self._cib))
-            if k >= n:
-                k = n - 1
-            group = names[j:k + 1]
-            gmn, gmx = min(group), max(group)
-            width = int(rel_ends[k]) - blk_start
-            if width < self._cib:
-                # trailing partial block: stays open for the next run
-                # (or end_partition's force-close)
-                self._blk_start = blk_start
-                self._blk_min, self._blk_max = gmn, gmx
-                return
-            self._blocks.append((gmn, gmx, blk_start, width))
-            j = k + 1
-
-    def write_partitions_block(self, part_keys: list,
-                               part_deletions: list, counts,
-                               names: list, kind_codes, timestamps,
-                               values: list,
-                               prefixes: list | None = None) -> None:
-        """Vectorized bulk write of COMPLETE partitions (VERDICT r7 #1):
-        byte-identical to the equivalent start_partition / add_cell /
-        end_partition sequence, but the cell framing lays out as one
-        block (cellcodec.encode_cells_block) with one
-        Python pass per PARTITION (ordering check, index entry,
-        promoted-block accounting) and ZERO per cell.
+    def write_partitions_block(self, part_keys, part_deletions: list,
+                               counts, names, kind_codes, timestamps,
+                               values, prefixes=None) -> None:
+        """Write COMPLETE partitions as one block: the cell framing lays
+        out through cellcodec.encode_cells_block, with one Python pass
+        per PARTITION (ordering check, index entry) and per WIDE
+        partition (promoted-index blocks), and none per cell.
 
         Flat columnar inputs: `part_keys`/`part_deletions` per
         partition, deletion = (ldt, marked) or None for live;
-        `counts` = cells per partition; `names`/`values` = list[bytes]
-        per cell (DELETED cells pass their packed int32 local_deletion
-        as the value -- the 4-byte body add_cell writes);
+        `counts` = cells per partition; `names`/`values` per cell
+        (DELETED cells pass their packed int32 local_deletion as the
+        value -- the 4-byte body on disk; a NULL value is empty);
         `kind_codes` = int8 codes (cellcodec.KIND_*); `prefixes` =
         per-cell bytes between flag and (ts, vlen) -- None when every
-        cell is LIVE/DELETED."""
+        cell is LIVE/DELETED. Binary columns (keys, names, values,
+        prefixes) are Arrow `binary` arrays or lists of bytes."""
         import numpy as np
+        import pyarrow.compute as pc
 
         from cassandra_sstable_to_protocolbuf_spark.sources import (
             cellcodec as _cc)
 
         if self._in_partition:
             raise ValueError("previous partition not ended")
-        n_parts = len(part_keys)
+        keys = _cc.binary_column(part_keys)
+        n_parts = len(keys)
         if n_parts == 0:
             return
+        names = _cc.binary_column(names)
+        key_list = keys.to_pylist()
         counts = np.asarray(counts, dtype=np.int64)
         deletions = [(d if d is not None
                       else (LIVE_LOCAL_DELETION, LIVE_MARKED_AT))
@@ -1409,56 +1319,51 @@ class SSTableStreamWriter:
         # vectorized digest comparison for the md5 partitioner (the
         # engine's own fixture order), scalar tuples otherwise
         if self._partitioner == DEFAULT_PARTITIONER:
-            dg = _cc.md5_digests(part_keys)
+            dg = _cc.md5_digests(key_list)
             hi64, lo64 = dg[:, 0], dg[:, 1]
-            bad = _cc.ascending_decorated(hi64, lo64, part_keys)
+            bad = _cc.ascending_decorated(hi64, lo64, key_list)
             if bad < 0 and self._last_order is not None:
-                if (self._token(part_keys[0]),
-                        part_keys[0]) <= self._last_order:
+                if (self._token(key_list[0]),
+                        key_list[0]) <= self._last_order:
                     bad = 0
             if bad >= 0:
-                prev_key = (part_keys[bad - 1] if bad > 0
+                prev_key = (key_list[bad - 1] if bad > 0
                             else self._last_key)
                 raise ValueError(
                     f"partition keys must arrive in strictly ascending "
-                    f"decorated order: {part_keys[bad]!r} after "
+                    f"decorated order: {key_list[bad]!r} after "
                     f"{prev_key!r}")
         else:
             token = self._token
             prev = self._last_order
-            for i, k in enumerate(part_keys):
+            for i, k in enumerate(key_list):
                 order = (token(k), k)
                 if prev is not None and order <= prev:
                     raise ValueError(
                         f"partition keys must arrive in strictly "
                         f"ascending decorated order: {k!r} after "
-                        f"{part_keys[i - 1] if i else self._last_key!r}")
+                        f"{key_list[i - 1] if i else self._last_key!r}")
                 prev = order
         base = self._logical_pos
         # encode BEFORE mutating writer state: a rejected batch (e.g.
         # empty cell name) must leave ordering/bounds state untouched
         block, hdr_starts, part_ends, cell_starts, cell_ends = \
-            _cc.encode_cells_block(part_keys, deletions, counts, names,
-                                   np.asarray(kind_codes, dtype=np.int8),
-                                   np.asarray(timestamps, dtype=np.int64),
-                                   values, prefixes)
-        self._last_key = part_keys[-1]
+            _cc.encode_cells_block(keys, deletions, counts, names,
+                                   kind_codes, timestamps,
+                                   _cc.binary_column(values),
+                                   _cc.binary_column(prefixes))
+        self._last_key = key_list[-1]
         self._last_order = (self._token(self._last_key), self._last_key)
         if self._first_key is None:
-            self._first_key = part_keys[0]
+            self._first_key = key_list[0]
 
         cells_before = np.empty(n_parts, dtype=np.int64)
         cells_before[0] = 0
         np.cumsum(counts[:-1], out=cells_before[1:])
         promoted = [b""] * n_parts
         if self._cib and len(names):
-            # global name bounds: the fold of per-partition mins/maxes
-            # IS the min/max over all names in the block
-            gmn, gmx = min(names), max(names)
-            if self._name_min is None or gmn < self._name_min:
-                self._name_min = gmn
-            if self._name_max is None or gmx > self._name_max:
-                self._name_max = gmx
+            mm = pc.min_max(names)
+            self._note_name_bounds(mm["min"].as_py(), mm["max"].as_py())
             # promoted blobs only for WIDE partitions (atom region
             # spanning >= cib): detected vectorized, built per hit
             nz = np.flatnonzero(counts)
@@ -1470,20 +1375,23 @@ class SSTableStreamWriter:
                 lo = int(cells_before[i])
                 hi = lo + int(counts[i])
                 hdr = int(hdr_starts[i])
-                blocks = _cc.blocks_for_wide_partition(
-                    names[lo:hi], cell_starts[lo:hi] - hdr,
-                    cell_ends[lo:hi] - hdr, self._cib)
+                closed, open_block = _cc.fold_blocks(
+                    None, names.slice(lo, hi - lo),
+                    cell_starts[lo:hi] - hdr, cell_ends[lo:hi] - hdr,
+                    self._cib)
+                blocks = _force_close(closed, open_block,
+                                      int(cell_ends[hi - 1]) - hdr)
                 if len(blocks) >= 2:
                     promoted[i] = serialize_promoted_index(
                         deletions[i], blocks)
 
         positions = base + hdr_starts
         entries, entry_offs = _cc.encode_index_entries(
-            part_keys, positions, promoted)
+            keys, positions, promoted)
         # summary sample: every DEFAULT_INDEX_INTERVAL-th entry overall
         first = (-self._n_index) % DEFAULT_INDEX_INTERVAL
         for j in range(first, n_parts, DEFAULT_INDEX_INTERVAL):
-            self._sampled.append((part_keys[j],
+            self._sampled.append((key_list[j],
                                   self._index_pos + int(entry_offs[j]),
                                   int(positions[j])))
         self._index.write(memoryview(entries))
@@ -1573,60 +1481,13 @@ class SSTableStreamWriter:
         self._closed = True
 
 
-def write_sstable(dir_path: str, generation: int,
-                  partitions: list[dict], ks: str = "ks", cf: str = "cf",
-                  compression: str | None = None,
-                  chunk_length: int = 65536,
-                  partitioner: str = DEFAULT_PARTITIONER,
-                  column_index_bytes: int | None
-                  = DEFAULT_COLUMN_INDEX_BYTES) -> str:
-    """Write `<ks>-<cf>-ka-<gen>-Data.db` + `-Index.db` (+
-    `-CompressionInfo.db` when compression='lz4') from in-memory dicts
-    (fixture/test convenience; the streaming product path is
-    SSTableStreamWriter, which this thin wrapper drives -- so the
-    golden-byte format tests pin the stream writer too).
-
-    Each partition dict:
-      key: bytes
-      deletion: (localDeletionTime, markedForDeleteAt) -- omit for live
-      cells: list of dicts with name, kind, timestamp, value, and for
-             EXPIRING: ttl, local_expiration; plus optional
-             range_tombstones: [(start, end, local_deletion, marked_at)]
-    """
-    token = token_function(partitioner)
-    # decorated-key order: (token, key-bytes) like Cassandra's
-    # DecoratedKey.compareTo (token first, key bytes break ties)
-    ordered = sorted(partitions, key=lambda p: (token(p["key"]), p["key"]))
-    w = SSTableStreamWriter(dir_path, generation, ks=ks, cf=cf,
-                            compression=compression,
-                            chunk_length=chunk_length,
-                            partitioner=partitioner,
-                            column_index_bytes=column_index_bytes)
-    try:
-        for part in ordered:
-            w.start_partition(part["key"], part.get("deletion"))
-            for rt in part.get("range_tombstones", ()):
-                w.add_range_tombstone(*rt)
-            for cell in part.get("cells", ()):
-                w.add_cell(cell["name"], cell.get("kind", "LIVE"),
-                           cell["timestamp"], cell.get("value", b""),
-                           ttl=cell.get("ttl", 0),
-                           local_expiration=cell.get("local_expiration", 0),
-                           local_deletion=cell.get("local_deletion", 0),
-                           timestamp_of_last_delete=cell.get(
-                               "timestamp_of_last_delete", 0))
-            w.end_partition()
-        data_path = w.close()
-    except BaseException:
-        w.abort()
-        raise
-    # publish step records the addition in a manifest-enabled directory
-    # (no-op otherwise) so out-of-band exports never go invisible to
-    # manifest-driven discovery
-    from cassandra_sstable_to_protocolbuf_spark import manifest
-
-    manifest.add(dir_path, [data_path])
-    return data_path
+def _force_close(blocks: list, open_block, end: int) -> list:
+    """`blocks` plus the partition's still-open block, closed at the
+    atom region's relative end offset `end`."""
+    if open_block is None:
+        return blocks
+    lo, hi, start = open_block
+    return blocks + [(lo, hi, start, end - start)]
 
 
 WRITE_CELLS_METRICS_FIELDS = (
@@ -1634,191 +1495,178 @@ WRITE_CELLS_METRICS_FIELDS = (
     ("n_partitions", "long"), ("n_cells", "long"))
 
 
+def _shift_ne(arr, prev):
+    """Bool ndarray: arr[i] != arr[i - 1], where arr[-1] is `prev`, the
+    previous batch's last value (None: no previous row)."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    n = len(arr)
+    ne = np.empty(n, dtype=bool)
+    ne[0] = prev is None or arr[0].as_py() != prev
+    ne[1:] = np.asarray(pc.not_equal(arr.slice(1), arr.slice(0, n - 1)))
+    return ne
+
+
 def _cells_stream_writer(out_dir: str, compression: str | None,
                          dedup_runs: bool = False):
-    """mapInPandas function factory for write_cells_as_sstables: consumes
-    an ITERATOR of Arrow batches already sorted by (sstable_id,
-    decorated key, comparator), stream-encodes through
+    """mapInArrow function factory for write_cells_as_sstables: consumes
+    an ITERATOR of Arrow batches of flat cells already sorted by
+    (sstable_id, decorated key, comparator), stream-encodes them through
     SSTableStreamWriter, and rolls to a new sstable when sstable_id
-    changes. Peak memory is O(one Arrow batch) + O(compression chunk) --
+    changes. No per-cell Python objects: sstable and partition runs,
+    kind codes, prefixes and values are Arrow/numpy kernels over the
+    batch; its complete partitions go to one write_partitions_block
+    call, and its last partition stays open through add_cells_batch
+    until a later batch starts another key or sstable, or the stream
+    ends. Peak memory is O(one Arrow batch) + O(compression chunk) --
     pinned by tests/test_writer_memory.py -- regardless of sstable size.
 
-    dedup_runs=True keeps only the FIRST cell of each (sstable_id, key,
-    name) run: with the caller sorting LWW-winner-first (see
-    write_cells_as_sstables' lww_by), this IS last-write-wins selection,
-    folded into the stream instead of a separate aggregation exchange.
-    """
+    EXPIRING cells get ttl/local_expiration derived from the engine's
+    ttl_expired flag (expired -> epoch 0, unexpired or NULL -> far
+    future); DELETED cells carry a zero localDeletionTime body; a NULL
+    value writes as empty.
 
-    # complete partitions accumulate to about this many cells before a
-    # vectorized write_partitions_block flush: big enough to amortize
-    # the per-block encode setup, small enough to keep the O(batch)
-    # memory pin (tests/test_writer_memory.py)
-    FLUSH_CELLS = 16384
-    # an OPEN partition buffering past this many cells spills through
-    # add_cells_batch runs -- a gigabyte partition never materializes;
-    # sized with the encode transient (the run's payload copied into
-    # Arrow, concatenated, then taken into the block: ~3 copies of the
-    # run) to stay inside the writer memory pin for fat-value cells
-    OPEN_SPILL_CELLS = 2048
+    dedup_runs=True keeps only the FIRST cell of each (sstable_id, key,
+    name) run, across batch boundaries too: with the caller sorting
+    LWW-winner-first (see write_cells_as_sstables' lww_by), this IS
+    last-write-wins selection, folded into the stream instead of a
+    separate aggregation exchange.
+    """
 
     def write_stream(batches):
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        from cassandra_sstable_to_protocolbuf_spark.sources import (
+            cellcodec as _cc)
+
+        metrics_schema = pa.schema(
+            [(f, pa.string() if t == "string" else pa.int64())
+             for f, t in WRITE_CELLS_METRICS_FIELDS])
+        # a cell kind's code is its index here
+        kind_names = pa.array(_cc.KIND_NAMES[:_cc.KIND_RANGE_TOMBSTONE])
+        # the bytes between flag and (ts, vlen), indexed by prefix_at:
+        # EXPIRING expired, EXPIRING unexpired, COUNTER, none
+        prefix_of = pa.array([struct.pack(">ii", 60, 0),
+                              struct.pack(">ii", 60, LIVE_LOCAL_DELETION - 1),
+                              struct.pack(">q", 0), b""], type=pa.binary())
+        deleted_body = pa.scalar(struct.pack(">i", 0), type=pa.binary())
 
         writer = None
         cur_id = None
-        # the OPEN partition (may span pandas batches)
-        cur_key = None
-        cur_live = True
-        last_name = None  # dedup_runs: previous cell name in the partition
-        cur_cells: list = []  # (name, code, wt, value, prefix)
-        # COMPLETE partitions pending a vectorized block flush
-        pend: dict = {"keys": [], "dels": [], "counts": [],
-                      "names": [], "codes": [], "ts": [], "vals": [],
-                      "prefs": [], "n": 0, "any_pref": False}
-
-        def flush_block():
-            if not pend["keys"]:
-                return
-            writer.write_partitions_block(
-                pend["keys"], pend["dels"],
-                np.array(pend["counts"], dtype=np.int64),
-                pend["names"], np.array(pend["codes"], dtype=np.int8),
-                np.array(pend["ts"], dtype=np.int64), pend["vals"],
-                pend["prefs"] if pend["any_pref"] else None)
-            pend.update(keys=[], dels=[], counts=[], names=[],
-                        codes=[], ts=[], vals=[], prefs=[], n=0,
-                        any_pref=False)
-
-        def spill_open():
-            # a partition wider than one flush window streams through
-            # bounded add_cells_batch runs instead of buffering whole
-            # (O(batch) memory pin, tests/test_writer_memory.py); the
-            # pending COMPLETE partitions flush first so file order is
-            # preserved
-            if not writer._in_partition:
-                flush_block()
-                writer.start_partition(cur_key,
-                                       None if cur_live else (0, 0))
-            names, codes, ts, vals, prefs = zip(*cur_cells)
-            writer.add_cells_batch(
-                list(names), np.array(codes, dtype=np.int8),
-                np.array(ts, dtype=np.int64), list(vals),
-                list(prefs) if any(prefs) else None)
-            cur_cells.clear()
-
-        def close_partition():
-            nonlocal cur_key
-            if cur_key is None:
-                return
-            if writer._in_partition:
-                # the partition was spilled mid-stream: finish it on
-                # the incremental path
-                if cur_cells:
-                    spill_open()
-                writer.end_partition()
-                cur_key = None
-                return
-            pend["keys"].append(cur_key)
-            pend["dels"].append(None if cur_live else (0, 0))
-            pend["counts"].append(len(cur_cells))
-            for name, code, wt, val, pref in cur_cells:
-                pend["names"].append(name)
-                pend["codes"].append(code)
-                pend["ts"].append(wt)
-                pend["vals"].append(val)
-                pend["prefs"].append(pref)
-                if pref:
-                    pend["any_pref"] = True
-            pend["n"] += len(cur_cells)
-            cur_cells.clear()
-            cur_key = None
-            if pend["n"] >= FLUSH_CELLS:
-                flush_block()
+        open_live = True  # the open partition's partition_deletion_live
+        last = (None, None, None)  # previous row's (sstable_id, key, name)
 
         def finish():
-            close_partition()
-            flush_block()
+            if writer._in_partition:
+                writer.end_partition()
             path = writer.close()
-            return pd.DataFrame([{
-                "sstable_id": cur_id, "path": path,
-                "n_partitions": writer.n_partitions,
-                "n_cells": writer.n_cells,
-            }])
-
-        _DELETED_BODY = struct.pack(">i", 0)
-        _EXP_PREF_EXPIRED = struct.pack(">ii", 60, 0)
-        _EXP_PREF_LIVE = struct.pack(">ii", 60, LIVE_LOCAL_DELETION - 1)
-        _COUNTER_PREF = struct.pack(">q", 0)
+            return pa.RecordBatch.from_pylist(
+                [{"sstable_id": cur_id, "path": path,
+                  "n_partitions": writer.n_partitions,
+                  "n_cells": writer.n_cells}], schema=metrics_schema)
 
         try:
-            for pdf in batches:
-                # plain-list iteration for the variable fields (tolist
-                # converts each column once in C); the per-cell loop
-                # only CLASSIFIES -- all byte layout happens in the
-                # vectorized block flush
-                sids = pdf["sstable_id"].tolist()
-                keys = pdf["key"].tolist()
-                names = pdf["name"].tolist()
-                values = pdf["value"].tolist()
-                wts = pdf["writeTime"].tolist()
-                kinds = pdf["cell_kind"].tolist()
-                ttlx = pdf["ttl_expired"].tolist()
-                lives = pdf["partition_deletion_live"].tolist()
-                for sid, key, name, value, wt, kind, ttl_exp, live in zip(
-                        sids, keys, names, values, wts, kinds, ttlx,
-                        lives):
-                    if sid != cur_id:
+            for b in batches:
+                if not b.num_rows:
+                    continue
+                sid, key, name = (b.column("sstable_id"), b.column("key"),
+                                  b.column("name"))
+                new_sid = _shift_ne(sid, last[0])
+                new_part = new_sid | _shift_ne(key, last[1])
+                keep = (new_part | _shift_ne(name, last[2]) if dedup_runs
+                        else None)
+                last = (sid[-1].as_py(), key[-1].as_py(), name[-1].as_py())
+                if keep is not None and not keep.all():
+                    # a beaten LWW candidate repeats its predecessor's
+                    # (sstable_id, key), so the run flags filter as-is
+                    b = b.filter(pa.array(keep))
+                    new_sid, new_part = new_sid[keep], new_part[keep]
+                    sid, key, name = (b.column("sstable_id"),
+                                      b.column("key"), b.column("name"))
+                n = b.num_rows
+                if not n:
+                    continue
+
+                kind = b.column("cell_kind")
+                codes = pc.index_in(kind, value_set=kind_names)
+                if codes.null_count:
+                    bad = np.flatnonzero(
+                        ~codes.is_valid().to_numpy(zero_copy_only=False))
+                    raise ValueError(
+                        f"unknown cell kind {kind[int(bad[0])].as_py()}")
+                codes = codes.to_numpy().astype(np.int8)
+                expired = b.column("ttl_expired").fill_null(False) \
+                    .to_numpy(zero_copy_only=False)
+                prefix_at = np.where(
+                    codes == _cc.KIND_EXPIRING, np.where(expired, 0, 1),
+                    np.where(codes == _cc.KIND_COUNTER, 2, 3))
+                prefixes = prefix_of.take(prefix_at)
+                values = pc.if_else(pa.array(codes == _cc.KIND_DELETED),
+                                    deleted_body, b.column("value"))
+                ts = b.column("writeTime").to_numpy()
+                live = b.column("partition_deletion_live") \
+                    .fill_null(False).to_numpy(zero_copy_only=False)
+
+                # partition_deletion_live is a partition-level attribute
+                # denormalized onto every cell: a flip inside a run (or
+                # against the partition a previous batch left open) is
+                # a data-integrity error -- ignoring it would write a
+                # wrong file
+                starts = np.flatnonzero(new_part)
+                seg = starts if new_part[0] else np.append(0, starts)
+                bad = (np.minimum.reduceat(live, seg)
+                       != np.maximum.reduceat(live, seg))
+                if not new_part[0]:
+                    bad[0] |= bool(live[0]) != open_live
+                if bad.any():
+                    r = int(seg[int(np.argmax(bad))])
+                    raise ValueError(
+                        f"partition_deletion_live disagrees within "
+                        f"partition {key[r].as_py()!r}: the flag is a "
+                        f"partition-level attribute and must be "
+                        f"constant across its cells")
+
+                def cells(p, q):
+                    return (name.slice(p, q - p), codes[p:q], ts[p:q],
+                            values.slice(p, q - p),
+                            prefixes.slice(p, q - p))
+
+                s0 = 0
+                if not new_part[0]:
+                    # the first run continues the open partition
+                    s0 = int(seg[1]) if len(seg) > 1 else n
+                    writer.add_cells_batch(*cells(0, s0))
+                    if s0 == n:
+                        continue
+                if writer is not None and writer._in_partition:
+                    writer.end_partition()
+                # complete partitions, one block per sstable run; the
+                # last partition [t, n) stays open for the next batch
+                t = int(starts[-1])
+                cuts = np.flatnonzero(new_sid)
+                bnds = np.concatenate(([s0], cuts[cuts > s0], [n]))
+                for p, q in zip(bnds[:-1].tolist(), bnds[1:].tolist()):
+                    if new_sid[p]:
                         if writer is not None:
                             yield finish()
-                        cur_id = sid
-                        cur_key = None
+                        cur_id = sid[p].as_py()
                         writer = SSTableStreamWriter(
                             out_dir, 1, ks="ks", cf=cur_id,
                             compression=compression)
-                    if key != cur_key:
-                        close_partition()
-                        cur_key = key
-                        last_name = None
-                        # partition_deletion_live is a partition-level
-                        # attribute denormalized onto every cell -- the
-                        # first cell speaks for the partition, and any
-                        # later disagreement is a data-integrity error
-                        # (silently ignoring the flip would write a
-                        # wrong file)
-                        cur_live = bool(live)
-                    elif bool(live) != cur_live:
-                        raise ValueError(
-                            f"partition_deletion_live disagrees within "
-                            f"partition {key!r}: the flag is a "
-                            f"partition-level attribute and must be "
-                            f"constant across its cells")
-                    if dedup_runs:
-                        if name == last_name:
-                            continue  # a beaten LWW candidate
-                        last_name = name
-                    if len(cur_cells) >= OPEN_SPILL_CELLS:
-                        spill_open()
-                    if kind == "LIVE":
-                        cur_cells.append(
-                            (name, 0, wt,
-                             value if value is not None else b"", b""))
-                    elif kind == "EXPIRING":
-                        cur_cells.append(
-                            (name, 2, wt,
-                             value if value is not None else b"",
-                             _EXP_PREF_EXPIRED if ttl_exp
-                             else _EXP_PREF_LIVE))
-                    elif kind == "DELETED":
-                        cur_cells.append((name, 1, wt, _DELETED_BODY,
-                                          b""))
-                    elif kind == "COUNTER":
-                        cur_cells.append(
-                            (name, 3, wt,
-                             value if value is not None else b"",
-                             _COUNTER_PREF))
-                    else:
-                        raise ValueError(f"unknown cell kind {kind}")
+                    z = min(q, t)
+                    if p < z:
+                        rs = starts[(starts >= p) & (starts < z)]
+                        writer.write_partitions_block(
+                            key.take(rs),
+                            [None if x else (0, 0) for x in live[rs]],
+                            np.diff(np.append(rs, z)), *cells(p, z))
+                open_live = bool(live[t])
+                writer.start_partition(key[t].as_py(),
+                                       None if open_live else (0, 0))
+                writer.add_cells_batch(*cells(t, n))
             if writer is not None:
                 yield finish()
         except BaseException:
@@ -1838,18 +1686,17 @@ def write_cells_as_sstables(cells_df, out_dir: str,
     STREAMING shape: one shuffle partitions by sstable_id, Spark's sort
     machinery (spillable, never memory-bound) puts each partition's
     cells in decorated-key + comparator order, and an iterator-style
-    mapInPandas stream-encodes Arrow batch by Arrow batch, rolling
-    output files on sstable_id change. Executor memory is O(one Arrow
-    batch), never O(sstable) -- the reference's fold-over-a-row-stream
-    posture (Runner.java:114-124) at any file size. The decorated-order
-    sort key is F.md5(key): this engine's md5_token orders identically
-    to the md5 hexdigest string (md5_token docstring), so the sort stays
-    entirely JVM-side -- no Python touches a row until the encoder.
+    mapInArrow (_cells_stream_writer) stream-encodes Arrow batch by
+    Arrow batch, rolling output files on sstable_id change. Executor
+    memory is O(one Arrow batch), never O(sstable) -- the reference's
+    fold-over-a-row-stream posture (Runner.java:114-124) at any file
+    size. The decorated-order sort key is F.md5(key): this engine's
+    md5_token orders identically to the md5 hexdigest string
+    (md5_token docstring), so the sort stays entirely JVM-side -- no
+    Python touches a row until the encoder.
 
-    EXPIRING cells get ttl/local_expiration derived from the engine's
-    ttl_expired flag (expired -> epoch 0, unexpired -> far future);
-    DELETED cells carry their localDeletionTime body.
-    Returns a metrics DataFrame (sstable_id, path, n_partitions, n_cells).
+    Returns a metrics DataFrame (sstable_id, path, n_partitions,
+    n_cells).
 
     MANIFEST NOTE: this returns a LAZY plan, so it cannot itself record
     outputs in a manifest-enabled target directory. Callers exporting
@@ -1870,30 +1717,20 @@ def write_cells_as_sstables(cells_df, out_dir: str,
                                    StructType)
 
     schema = StructType([
-        StructField("sstable_id", StringType(), False),
-        StructField("path", StringType(), False),
-        StructField("n_partitions", LongType(), False),
-        StructField("n_cells", LongType(), False),
-    ])
-
+        StructField(f, StringType() if t == "string" else LongType(), False)
+        for f, t in WRITE_CELLS_METRICS_FIELDS])
+    order = ([F.col("writeTime"), F.col("value")] if lww_by is None
+             else [F.col("writeTime").desc(), F.col(lww_by).desc(),
+                   F.col("value").desc()])
+    plan = (cells_df.repartition("sstable_id")
+            .sortWithinPartitions(F.col("sstable_id"), F.md5("key"),
+                                  F.col("key"), F.col("name"), *order))
+    if lww_by is not None:
+        plan = plan.drop(lww_by)
     os.makedirs(out_dir, exist_ok=True)
-    if lww_by is None:
-        return (cells_df
-                .repartition("sstable_id")
-                .sortWithinPartitions(
-                    "sstable_id", F.md5("key"), "key",
-                    "name", "writeTime", "value")
-                .mapInPandas(_cells_stream_writer(out_dir, compression),
-                             schema))
-    return (cells_df
-            .repartition("sstable_id")
-            .sortWithinPartitions(
-                F.col("sstable_id"), F.md5("key"), F.col("key"),
-                F.col("name"), F.col("writeTime").desc(),
-                F.col(lww_by).desc(), F.col("value").desc())
-            .drop(lww_by)
-            .mapInPandas(_cells_stream_writer(out_dir, compression,
-                                              dedup_runs=True), schema))
+    return plan.mapInArrow(
+        _cells_stream_writer(out_dir, compression,
+                             dedup_runs=lww_by is not None), schema)
 
 
 # --------------------------------------------------------------------------

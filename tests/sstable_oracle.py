@@ -8,6 +8,12 @@ iterator (SSTableIdentityIteratorPatched.computeNext) -- so tests state
 what read() must produce without sharing a line of decode code with it.
 O(one cell) memory: a partition's cells are a lazy generator.
 
+PerCellWriter is the write side's oracle: SSTableStreamWriter with one
+struct write and one promoted-index block step per atom (add_cell, and
+a per-atom add_range_tombstone), independent of the block encoder and
+of cellcodec.fold_blocks, which tests pin byte-identical to it.
+write_sstable, the tests' list-of-dicts fixture writer, drives it.
+
 The per-row protobuf codec below is the golden oracle for the
 engine's `.proto.zst` format (sstable.proto's Row/Column, framed by
 writeDelimitedTo): encode_row + frame_row state one message at a time
@@ -173,6 +179,127 @@ def read_rows(reader, splits=None) -> list[tuple]:
         splits = reader.partitions()
     return [r for s in splits for b in reader.read(s)
             for r in zip(*(c.to_pylist() for c in b.columns))]
+
+
+class PerCellWriter(N.SSTableStreamWriter):
+    """SSTableStreamWriter plus the per-cell write: each atom is one
+    fused struct write, and its promoted-index block accounting runs
+    atom by atom on the writer's shared block state (_open_block,
+    _blocks), so per-cell, range-tombstone and batch appends mix within
+    one partition."""
+
+    def _note_atom(self, name: bytes) -> None:
+        """Open a block at the incoming atom's offset, or fold the name
+        into the open block's [min, max]."""
+        if self._open_block is None:
+            self._open_block = (name, name,
+                                self._logical_pos - self._part_pos)
+        else:
+            lo, hi, start = self._open_block
+            self._open_block = (min(lo, name), max(hi, name), start)
+
+    def _maybe_close_block(self) -> None:
+        """Close the open block once the atom just written puts its
+        width at or past column_index_bytes."""
+        lo, hi, start = self._open_block
+        width = self._logical_pos - self._part_pos - start
+        if width >= self._cib:
+            self._blocks.append((lo, hi, start, width))
+            self._open_block = None
+
+    def _atom(self, name: bytes, body: bytes) -> None:
+        if self._cib:
+            self._note_atom(name)
+        self._write(body)
+        if self._cib:
+            self._maybe_close_block()
+
+    def add_range_tombstone(self, start: bytes, end: bytes,
+                            local_deletion: int, marked_at: int) -> None:
+        if not self._in_partition:
+            raise ValueError("range tombstone outside a partition")
+        self._atom(start, struct.pack(
+            f">H{len(start)}sBH{len(end)}siq", len(start), start,
+            N.FLAG_RANGE_TOMBSTONE, len(end), end, local_deletion,
+            marked_at))
+
+    def add_cell(self, name: bytes, kind: str = "LIVE", timestamp: int = 0,
+                 value: bytes = b"", ttl: int = 0, local_expiration: int = 0,
+                 local_deletion: int = 0,
+                 timestamp_of_last_delete: int = 0) -> None:
+        if not self._in_partition:
+            raise ValueError("cell outside a partition")
+        if not name:
+            # a zero-length name is the end-of-partition marker
+            raise ValueError("cell name must be non-empty")
+        head = struct.pack(">H", len(name)) + name
+        if kind == "LIVE":
+            body = struct.pack(">Bqi", 0, timestamp, len(value)) + value
+        elif kind == "DELETED":
+            body = struct.pack(">Bqii", N.FLAG_DELETION, timestamp, 4,
+                               local_deletion)
+        elif kind == "EXPIRING":
+            body = struct.pack(">Biiqi", N.FLAG_EXPIRATION, ttl,
+                               local_expiration, timestamp,
+                               len(value)) + value
+        elif kind == "COUNTER":
+            body = struct.pack(">Bqqi", N.FLAG_COUNTER,
+                               timestamp_of_last_delete, timestamp,
+                               len(value)) + value
+        else:
+            raise ValueError(f"unknown cell kind {kind}")
+        self._atom(name, head + body)
+        self.n_cells += 1
+
+
+def write_sstable(dir_path: str, generation: int,
+                  partitions: list[dict], ks: str = "ks", cf: str = "cf",
+                  compression: str | None = None,
+                  chunk_length: int = 65536,
+                  partitioner: str = N.DEFAULT_PARTITIONER,
+                  column_index_bytes: int | None
+                  = N.DEFAULT_COLUMN_INDEX_BYTES) -> str:
+    """Write `<ks>-<cf>-ka-<gen>-Data.db` and its components from
+    in-memory dicts through PerCellWriter, then record the file in a
+    manifest-enabled directory (manifest.add; a no-op otherwise).
+
+    Each partition dict:
+      key: bytes
+      deletion: (localDeletionTime, markedForDeleteAt) -- omit for live
+      cells: list of dicts with name, kind, timestamp, value, and for
+             EXPIRING: ttl, local_expiration; plus optional
+             range_tombstones: [(start, end, local_deletion, marked_at)]
+    """
+    from cassandra_sstable_to_protocolbuf_spark import manifest
+
+    token = N.token_function(partitioner)
+    # decorated-key order: (token, key-bytes) like Cassandra's
+    # DecoratedKey.compareTo (token first, key bytes break ties)
+    ordered = sorted(partitions, key=lambda p: (token(p["key"]), p["key"]))
+    w = PerCellWriter(dir_path, generation, ks=ks, cf=cf,
+                      compression=compression, chunk_length=chunk_length,
+                      partitioner=partitioner,
+                      column_index_bytes=column_index_bytes)
+    try:
+        for part in ordered:
+            w.start_partition(part["key"], part.get("deletion"))
+            for rt in part.get("range_tombstones", ()):
+                w.add_range_tombstone(*rt)
+            for cell in part.get("cells", ()):
+                w.add_cell(cell["name"], cell.get("kind", "LIVE"),
+                           cell["timestamp"], cell.get("value", b""),
+                           ttl=cell.get("ttl", 0),
+                           local_expiration=cell.get("local_expiration", 0),
+                           local_deletion=cell.get("local_deletion", 0),
+                           timestamp_of_last_delete=cell.get(
+                               "timestamp_of_last_delete", 0))
+            w.end_partition()
+        data_path = w.close()
+    except BaseException:
+        w.abort()
+        raise
+    manifest.add(dir_path, [data_path])
+    return data_path
 
 
 def iter_delimited(stream) -> Iterator[bytes]:

@@ -11,6 +11,7 @@ import os
 import pytest
 
 from cassandra_sstable_to_protocolbuf_spark.sources import sstable_native as N
+from tests.sstable_oracle import PerCellWriter, write_sstable
 
 
 def test_roundtrip_and_layout(tmp_path):
@@ -62,7 +63,7 @@ def test_writer_emits_filter_component(tmp_path):
     parts = [{"key": b"k%03d" % i,
               "cells": [{"name": b"c", "kind": "LIVE", "timestamp": 1,
                          "value": b"v"}]} for i in range(300)]
-    data = N.write_sstable(str(tmp_path), 1, parts)
+    data = write_sstable(str(tmp_path), 1, parts)
     filt = data[:-len(N.DATA_SUFFIX)] + N.FILTER_SUFFIX
     assert os.path.exists(filt)
     bloom = N.BloomFilter.parse(filt)
@@ -79,7 +80,7 @@ def test_point_lookup_skips_non_owning_files(spark, tmp_path, monkeypatch):
         parts = [{"key": k, "cells": [{"name": b"c", "kind": "LIVE",
                                        "timestamp": 1, "value": cf.encode()}]}
                  for k in keys]
-        return N.write_sstable(str(tmp_path), 1, parts, cf=cf)
+        return write_sstable(str(tmp_path), 1, parts, cf=cf)
 
     a = mk("aa", [b"only-in-a"] + [b"a%02d" % i for i in range(40)])
     mk("bb", [b"b%02d" % i for i in range(40)])
@@ -128,7 +129,7 @@ def test_lookup_still_works_without_filter_component(spark, tmp_path):
     parts = [{"key": b"k%02d" % i, "cells": [{"name": b"c", "kind": "LIVE",
                                               "timestamp": 1, "value": b"v"}]}
              for i in range(20)]
-    data = N.write_sstable(str(tmp_path), 1, parts)
+    data = write_sstable(str(tmp_path), 1, parts)
     os.unlink(data[:-len(N.DATA_SUFFIX)] + N.FILTER_SUFFIX)
     reader = N.SSTableNativeReader(str(tmp_path), 4096)
     reader.pushed_keys = {b"k07"}
@@ -156,8 +157,8 @@ def test_digest_and_toc_components(tmp_path, capsys):
               "cells": [{"name": b"c", "kind": "LIVE", "timestamp": 1,
                          "value": b"v" * 50}]} for i in range(200)]
     for cf, comp in (("plain", None), ("lz", "lz4")):
-        data = N.write_sstable(str(tmp_path), 1, parts, cf=cf,
-                               compression=comp)
+        data = write_sstable(str(tmp_path), 1, parts, cf=cf,
+                             compression=comp)
         base = data[:-len(N.DATA_SUFFIX)]
         recorded = open(base + N.DIGEST_SUFFIX).read().split()[0]
         actual = hashlib.sha1(open(data, "rb").read()).hexdigest()
@@ -188,12 +189,12 @@ def test_statistics_records_real_fp_chance(tmp_path):
     parts = [{"key": b"k%02d" % i, "cells": [{"name": b"c", "kind": "LIVE",
                                               "timestamp": 1, "value": b"v"}]}
              for i in range(20)]
-    data = N.write_sstable(str(tmp_path), 1, parts, cf="withbloom")
+    data = write_sstable(str(tmp_path), 1, parts, cf="withbloom")
     stats = N.read_statistics(data[:-len(N.DATA_SUFFIX)] + N.STATS_SUFFIX)
     assert stats["bloom_fp_chance"] == 0.01
 
-    w = N.SSTableStreamWriter(str(tmp_path), 2, cf="nobloom",
-                              bloom_fp_chance=None)
+    w = PerCellWriter(str(tmp_path), 2, cf="nobloom",
+                      bloom_fp_chance=None)
     w.start_partition(b"k")
     w.add_cell(b"c", "LIVE", 1, b"v")
     w.end_partition()
@@ -215,7 +216,7 @@ def test_bloom_trust_is_evidence_gated(tmp_path):
     parts = [{"key": b"k%02d" % i, "cells": [{"name": b"c", "kind": "LIVE",
                                               "timestamp": 1, "value": b"v"}]}
              for i in range(20)]
-    data = N.write_sstable(str(tmp_path), 1, parts, cf="foreign")
+    data = write_sstable(str(tmp_path), 1, parts, cf="foreign")
     base = data[:-len(N.DATA_SUFFIX)]
     stats = base + N.STATS_SUFFIX
     filt = base + N.FILTER_SUFFIX
@@ -320,7 +321,7 @@ def test_probe_keys_are_provably_present(tmp_path):
     parts = [{"key": b"p%04d" % i, "cells": [{"name": b"c", "kind": "LIVE",
                                               "timestamp": 1, "value": b"v"}]}
              for i in range(300)]
-    data = N.write_sstable(str(tmp_path), 1, parts)
+    data = write_sstable(str(tmp_path), 1, parts)
     real = {p["key"] for p in parts}
     probes = N._bloom_probe_keys(data)
     assert probes and len(probes) <= 16
@@ -340,7 +341,7 @@ def test_corrupt_trusted_bloom_falls_back(tmp_path):
     parts = [{"key": b"k%02d" % i, "cells": [{"name": b"c", "kind": "LIVE",
                                               "timestamp": 1, "value": b"v"}]}
              for i in range(20)]
-    data = N.write_sstable(str(tmp_path), 1, parts)
+    data = write_sstable(str(tmp_path), 1, parts)
     filt = data[:-len(N.DATA_SUFFIX)] + N.FILTER_SUFFIX
     raw = open(filt, "rb").read()
     with open(filt, "wb") as f:
@@ -358,7 +359,7 @@ def test_malformed_digest_component_reports_mismatch(tmp_path):
 
     parts = [{"key": b"k", "cells": [{"name": b"c", "kind": "LIVE",
                                       "timestamp": 1, "value": b"v"}]}]
-    data = N.write_sstable(str(tmp_path), 1, parts)
+    data = write_sstable(str(tmp_path), 1, parts)
     digest = data[:-len(N.DATA_SUFFIX)] + N.DIGEST_SUFFIX
     for blob in (b"", b"   \n", b"nothex!" * 6, b"abc123\n"):
         with open(digest, "wb") as f:

@@ -1,8 +1,8 @@
 """Vectorized cell codec (cellcodec) parity pins -- VERDICT r7 #1.
 
 The batch codec must be BYTE-identical (write side) and ROW-identical
-(read side) to the per-cell reference: the scalar writer, and the
-scalar walk kept as the identity oracle in tests/sstable_oracle.py.
+(read side) to the per-cell references kept as identity oracles in
+tests/sstable_oracle.py: the per-cell writer and the scalar walk.
 These tests pin that equivalence over mixed cell kinds, dead
 partitions, chunked block accounting, resuming a partition cut at any
 byte, every read() mode, and the Cassandra-quirk murmur/bloom
@@ -23,7 +23,8 @@ import pytest
 
 from cassandra_sstable_to_protocolbuf_spark.sources import cellcodec as C
 from cassandra_sstable_to_protocolbuf_spark.sources import sstable_native as N
-from tests.sstable_oracle import expected_rows, iter_rows, read_rows
+from tests.sstable_oracle import (PerCellWriter, expected_rows, iter_rows,
+                                  read_rows, write_sstable)
 
 LIVE = (N.LIVE_LOCAL_DELETION, N.LIVE_MARKED_AT)
 
@@ -34,7 +35,7 @@ def test_liveness_sentinels_match():
 
 
 def _mixed_fixture(dir_path, n_parts=60, seed=3):
-    """Scalar-writer sstable with every cell kind and a few dead
+    """Per-cell-writer sstable with every cell kind and a few dead
     partitions; returns (data_path, the per-partition build plan)."""
     random.seed(seed)
     keys = sorted([b"pk%04d" % i for i in range(n_parts)],
@@ -49,7 +50,7 @@ def _mixed_fixture(dir_path, n_parts=60, seed=3):
                         for _ in range(random.randrange(0, 30)))
             cells.append((b"c%03d" % c, kind, j * 100 + c, val))
         plan.append((k, (5, 5) if j % 7 == 0 else None, cells))
-    w = N.SSTableStreamWriter(dir_path, 1)
+    w = PerCellWriter(dir_path, 1)
     for k, deletion, cells in plan:
         w.start_partition(k, deletion)
         for name, kind, ts, val in cells:
@@ -116,43 +117,51 @@ def test_batch_writer_components_byte_identical(tmp_path):
 
 def test_batch_writer_wide_rows_promote_identically(tmp_path):
     """Promoted-index blobs (block extents, min/max names) from the
-    batch path equal the scalar path's for wide rows, and chunked
-    add_cells_batch block accounting equals one-shot accounting for
-    EVERY chunking of the same atom stream."""
+    batch path equal the per-cell writer's for wide rows, and chunked
+    add_cells_batch block accounting equals the per-atom accounting for
+    EVERY chunking of the same atom stream -- also behind a range
+    tombstone that opens the partition's first block (the shape
+    perfbench/gen.py writes)."""
     keys = sorted([b"w1", b"w2"], key=lambda k: (N.md5_token(k), k))
     cells = [(b"n%04d" % i, i, b"v" * 20) for i in range(300)]
 
-    w1 = N.SSTableStreamWriter(str(tmp_path / "scalar"), 1,
-                               column_index_bytes=256)
-    for k in keys:
-        w1.start_partition(k)
-        for name, ts, val in cells:
-            w1.add_cell(name, "LIVE", ts, val)
-        w1.end_partition()
-    p1 = w1.close()
-
-    for chunks in ([300], [1] * 300, [7, 100, 193], [299, 1]):
-        w2 = N.SSTableStreamWriter(
-            str(tmp_path / f"batch{len(chunks)}"), 1,
-            column_index_bytes=256)
+    for rt in (None, (b"n0000", b"n0299\xff", 600, 105)):
+        tag = "plain" if rt is None else "rt"
+        w1 = PerCellWriter(str(tmp_path / f"scalar-{tag}"), 1,
+                           column_index_bytes=256)
         for k in keys:
-            w2.start_partition(k)
-            pos = 0
-            for c in chunks:
-                sub = cells[pos:pos + c]
-                w2.add_cells_batch(
-                    [s[0] for s in sub], np.zeros(len(sub), np.int8),
-                    np.array([s[1] for s in sub], np.int64),
-                    [s[2] for s in sub])
-                pos += c
-            w2.end_partition()
-        p2 = w2.close()
-        with open(p1, "rb") as fa, open(p2, "rb") as fb:
-            assert fa.read() == fb.read(), chunks
-        ia = p1[:-len(N.DATA_SUFFIX)] + N.INDEX_SUFFIX
-        ib = p2[:-len(N.DATA_SUFFIX)] + N.INDEX_SUFFIX
-        with open(ia, "rb") as fa, open(ib, "rb") as fb:
-            assert fa.read() == fb.read(), chunks
+            w1.start_partition(k)
+            if rt is not None:
+                w1.add_range_tombstone(*rt)
+            for name, ts, val in cells:
+                w1.add_cell(name, "LIVE", ts, val)
+            w1.end_partition()
+        p1 = w1.close()
+
+        for chunks in ([300], [1] * 300, [7, 100, 193], [299, 1]):
+            w2 = N.SSTableStreamWriter(
+                str(tmp_path / f"batch{len(chunks)}-{tag}"), 1,
+                column_index_bytes=256)
+            for k in keys:
+                w2.start_partition(k)
+                if rt is not None:
+                    w2.add_range_tombstone(*rt)
+                pos = 0
+                for c in chunks:
+                    sub = cells[pos:pos + c]
+                    w2.add_cells_batch(
+                        [s[0] for s in sub], np.zeros(len(sub), np.int8),
+                        np.array([s[1] for s in sub], np.int64),
+                        [s[2] for s in sub])
+                    pos += c
+                w2.end_partition()
+            p2 = w2.close()
+            with open(p1, "rb") as fa, open(p2, "rb") as fb:
+                assert fa.read() == fb.read(), chunks
+            ia = p1[:-len(N.DATA_SUFFIX)] + N.INDEX_SUFFIX
+            ib = p2[:-len(N.DATA_SUFFIX)] + N.INDEX_SUFFIX
+            with open(ia, "rb") as fa, open(ib, "rb") as fb:
+                assert fa.read() == fb.read(), chunks
 
 
 def test_batch_writer_rejects_out_of_order_and_empty_names(tmp_path):
@@ -346,7 +355,7 @@ def _sliced_fixture(dir_path, n_parts=40, seed=11):
     random.seed(seed)
     keys = sorted([b"pk%04d" % i for i in range(n_parts)],
                   key=lambda k: (N.md5_token(k), k))
-    w = N.SSTableStreamWriter(dir_path, 1, column_index_bytes=256)
+    w = PerCellWriter(dir_path, 1, column_index_bytes=256)
     for j, k in enumerate(keys):
         w.start_partition(k, (5, 5) if j % 9 == 0 else None)
         n_cells = 40 if j % 3 == 0 else random.randrange(1, 6)
@@ -445,7 +454,7 @@ def _matrix_fixture(dir_path: str, n_parts: int = 30, seed: int = 5):
                 (N.composite_encode([b"0000"]),
                  N.composite_encode([b"0001"]), 600, 105)]
         parts.append(part)
-    return N.write_sstable(dir_path, 1, parts, column_index_bytes=256)
+    return write_sstable(dir_path, 1, parts, column_index_bytes=256)
 
 
 @pytest.fixture(scope="module")

@@ -9,8 +9,8 @@ import sys
 
 import pytest
 
-from cassandra_sstable_to_protocolbuf_spark.sources import sstable_native as N
-from tests.sstable_oracle import iter_delimited, scan_partitions_eager
+from tests.sstable_oracle import (PerCellWriter, iter_delimited,
+                                  scan_partitions_eager, write_sstable)
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -36,7 +36,7 @@ def test_missing_input_path():
 
 def test_convert_end_to_end(tmp_path):
     src = str(tmp_path / "sst_in")
-    N.write_sstable(src, 1, [
+    write_sstable(src, 1, [
         {"key": b"k1", "cells": [
             {"name": b"a", "kind": "LIVE", "timestamp": 10, "value": b"x"},
             {"name": b"b", "kind": "DELETED", "timestamp": 11},
@@ -77,8 +77,8 @@ def test_convert_discovers_like_the_scan(tmp_path, flags):
         return [{"key": b"k1", "cells": [
             {"name": b"a", "kind": "LIVE", "timestamp": ts, "value": b"v"}]}]
 
-    old = [N.write_sstable(src, gen, cells(gen)) for gen in (1, 2)]
-    new = N.write_sstable(src, 3, cells(2))
+    old = [write_sstable(src, gen, cells(gen)) for gen in (1, 2)]
+    new = write_sstable(src, 3, cells(2))
     txnlog.begin(src, "opt-1", "opt-1", old)
     txnlog.commit(src, "opt-1", [new])
 
@@ -96,7 +96,7 @@ def test_compact_merges_generations_lww(tmp_path):
     sstable: the newer write wins, tombstoned data is dropped, and the
     output is a genuine parseable sstable."""
     src = str(tmp_path / "sst_in")
-    N.write_sstable(src, 1, [
+    write_sstable(src, 1, [
         {"key": b"k1", "cells": [
             {"name": b"a", "kind": "LIVE", "timestamp": 10, "value": b"old"},
             {"name": b"b", "kind": "LIVE", "timestamp": 11, "value": b"keep"},
@@ -104,7 +104,7 @@ def test_compact_merges_generations_lww(tmp_path):
         {"key": b"k2", "deletion": (1, 2), "cells": [
             {"name": b"c", "kind": "LIVE", "timestamp": 12, "value": b"dead"}]},
     ])
-    N.write_sstable(src, 2, [
+    write_sstable(src, 2, [
         {"key": b"k1", "cells": [
             {"name": b"a", "kind": "LIVE", "timestamp": 20, "value": b"new"}]},
     ])
@@ -127,7 +127,7 @@ def test_to_parquet_lands_lww_partitioned(tmp_path):
     win over gen-1's, dead partitions and tombstones must not land, and
     the output directory must be hive-partitioned by sstable_id."""
     src = str(tmp_path / "sst_in")
-    N.write_sstable(src, 1, [
+    write_sstable(src, 1, [
         {"key": b"k1", "cells": [
             {"name": b"a", "kind": "LIVE", "timestamp": 10, "value": b"old"},
             {"name": b"b", "kind": "DELETED", "timestamp": 11},
@@ -135,7 +135,7 @@ def test_to_parquet_lands_lww_partitioned(tmp_path):
         {"key": b"k2", "deletion": (1, 2), "cells": [
             {"name": b"c", "kind": "LIVE", "timestamp": 12, "value": b"dead"}]},
     ])
-    N.write_sstable(src, 2, [
+    write_sstable(src, 2, [
         {"key": b"k1", "cells": [
             {"name": b"a", "kind": "LIVE", "timestamp": 20, "value": b"new"}]},
         {"key": b"k3", "cells": [
@@ -166,14 +166,14 @@ def test_merge_and_delete_keys_cli(tmp_path):
     to-parquet --by-shard lands the base, merge upserts a delta sstable
     copy-on-write, delete-keys removes a victim key."""
     base_sst = str(tmp_path / "base_sst")
-    N.write_sstable(base_sst, 1, [
+    write_sstable(base_sst, 1, [
         {"key": b"alpha", "cells": [
             {"name": b"c", "kind": "LIVE", "timestamp": 10, "value": b"old"}]},
         {"key": b"beta", "cells": [
             {"name": b"c", "kind": "LIVE", "timestamp": 10, "value": b"keep"}]},
     ])
     delta_sst = str(tmp_path / "delta_sst")
-    N.write_sstable(delta_sst, 2, [
+    write_sstable(delta_sst, 2, [
         {"key": b"alpha", "cells": [
             {"name": b"c", "kind": "LIVE", "timestamp": 99, "value": b"new"}]},
         {"key": b"gamma", "cells": [
@@ -206,7 +206,7 @@ def test_merge_and_delete_keys_cli(tmp_path):
 
 def test_merge_requires_existing_landed_dir(tmp_path):
     sst = str(tmp_path / "sst")
-    N.write_sstable(sst, 1, [
+    write_sstable(sst, 1, [
         {"key": b"k", "cells": [
             {"name": b"c", "kind": "LIVE", "timestamp": 1, "value": b"v"}]}])
     r = _run("merge", sst, str(tmp_path / "missing"))
@@ -219,7 +219,7 @@ def test_delete_keys_strips_crlf(tmp_path):
     delete its keys -- b'key\\r' matching nothing would report success
     while every victim row remained."""
     base_sst = str(tmp_path / "base_sst")
-    N.write_sstable(base_sst, 1, [
+    write_sstable(base_sst, 1, [
         {"key": b"victim", "cells": [
             {"name": b"c", "kind": "LIVE", "timestamp": 1, "value": b"x"}]},
         {"key": b"other", "cells": [
@@ -247,14 +247,14 @@ def test_versioned_lifecycle_cli(tmp_path):
     vacuum, end-to-end through the command line: time travel and
     rollback must work from the user surface, not just the library."""
     base = str(tmp_path / "base")
-    N.write_sstable(base, 1, [
+    write_sstable(base, 1, [
         {"key": b"k1", "cells": [
             {"name": b"a", "kind": "LIVE", "timestamp": 10, "value": b"v1"}]},
         {"key": b"k2", "cells": [
             {"name": b"a", "kind": "LIVE", "timestamp": 10, "value": b"v2"}]},
     ])
     delta = str(tmp_path / "delta")
-    N.write_sstable(delta, 2, [
+    write_sstable(delta, 2, [
         {"key": b"k1", "cells": [
             {"name": b"a", "kind": "LIVE", "timestamp": 20, "value": b"NEW"}]},
     ])
@@ -306,12 +306,12 @@ def test_versioned_mor_and_compact_cli(tmp_path):
     """merge-versioned --mor appends O(delta) files; compact-versioned
     folds the debt -- both from the command line."""
     base = str(tmp_path / "base")
-    N.write_sstable(base, 1, [
+    write_sstable(base, 1, [
         {"key": b"k1", "cells": [
             {"name": b"a", "kind": "LIVE", "timestamp": 10, "value": b"v1"}]},
     ])
     delta = str(tmp_path / "delta")
-    N.write_sstable(delta, 2, [
+    write_sstable(delta, 2, [
         {"key": b"k1", "cells": [
             {"name": b"a", "kind": "LIVE", "timestamp": 20, "value": b"NEW"}]},
     ])
@@ -370,7 +370,7 @@ def test_sstable_info_driver_only(tmp_path):
     """sstablemetadata-style CLI report: reads ONLY metadata components
     (no Spark session -- the command must answer in interactive time)."""
     src = str(tmp_path / "sst_in")
-    N.write_sstable(src, 1, [
+    write_sstable(src, 1, [
         {"key": b"k%03d" % i, "cells": [
             {"name": b"c", "kind": "LIVE", "timestamp": 1, "value": b"v"}]}
         for i in range(300)], compression="lz4")
@@ -390,7 +390,7 @@ def test_sstable_info_reports_promoted(tmp_path):
     """A wide partition shows up in the report: promoted entry count
     and the file's [min, max] name bounds."""
     src = str(tmp_path / "sst_wide")
-    N.write_sstable(src, 1, [
+    write_sstable(src, 1, [
         {"key": b"w", "cells": [
             {"name": b"n%04d" % i, "kind": "LIVE", "timestamp": 1,
              "value": b"v" * 30} for i in range(100)]}],
@@ -411,11 +411,11 @@ def test_repair_diff_cli(tmp_path):
         {"key": b"k2", "cells": [
             {"name": b"a", "kind": "LIVE", "timestamp": 10, "value": b"s"}]},
     ]
-    N.write_sstable(stale, 1, base)
-    N.write_sstable(synced, 1, base)
+    write_sstable(stale, 1, base)
+    write_sstable(synced, 1, base)
     # the synced replica also got a later generation: k1 rewritten with a
     # new value, k3 created -- the stale replica missed both writes
-    N.write_sstable(synced, 2, [
+    write_sstable(synced, 2, [
         {"key": b"k1", "cells": [
             {"name": b"a", "kind": "LIVE", "timestamp": 20, "value": b"y"}]},
         {"key": b"k3", "cells": [
@@ -458,7 +458,7 @@ def test_merge_into_cli(tmp_path):
     deletes as a single version; the delete-then-upsert key comes back
     as its upsert row."""
     base_sst = str(tmp_path / "base_sst")
-    N.write_sstable(base_sst, 1, [
+    write_sstable(base_sst, 1, [
         {"key": b"alpha", "cells": [
             {"name": b"c", "kind": "LIVE", "timestamp": 10, "value": b"old"}]},
         {"key": b"beta", "cells": [
@@ -467,7 +467,7 @@ def test_merge_into_cli(tmp_path):
             {"name": b"c", "kind": "LIVE", "timestamp": 10, "value": b"keep"}]},
     ])
     delta_sst = str(tmp_path / "delta_sst")
-    N.write_sstable(delta_sst, 2, [
+    write_sstable(delta_sst, 2, [
         {"key": b"alpha", "cells": [
             {"name": b"c", "kind": "LIVE", "timestamp": 99, "value": b"new"}]},
         {"key": b"beta", "cells": [
@@ -526,14 +526,14 @@ def test_reshard_evolution_cli(tmp_path):
     reshard, MoR append under the new spec, deferred respec compaction
     relabeling the files."""
     base = str(tmp_path / "base")
-    N.write_sstable(base, 1, [
+    write_sstable(base, 1, [
         {"key": b"k1", "cells": [
             {"name": b"a", "kind": "LIVE", "timestamp": 10, "value": b"v1"}]},
         {"key": b"k2", "cells": [
             {"name": b"a", "kind": "LIVE", "timestamp": 10, "value": b"v2"}]},
     ])
     delta = str(tmp_path / "delta")
-    N.write_sstable(delta, 2, [
+    write_sstable(delta, 2, [
         {"key": b"k1", "cells": [
             {"name": b"a", "kind": "LIVE", "timestamp": 20, "value": b"NEW"}]},
     ])
@@ -566,8 +566,6 @@ def test_optimize_plan_cli(tmp_path, capsys):
     group into merge tasks, a lone out-of-tier giant is left alone, and
     no data bytes are read (metadata plane only)."""
     from cassandra_sstable_to_protocolbuf_spark.__main__ import main
-    from cassandra_sstable_to_protocolbuf_spark.sources.sstable_native import (
-        write_sstable)
 
     def mk(cf, n_cells, val_len):
         parts = [{"key": b"k%04d" % i, "cells": [
@@ -601,12 +599,12 @@ def test_slice_cli(tmp_path, spark, capsys):
     empty/inverted slice dies with usage-style exit 2."""
     from cassandra_sstable_to_protocolbuf_spark.__main__ import main
     from cassandra_sstable_to_protocolbuf_spark.sources.sstable_native import (
-        SSTableStreamWriter, md5_token)
+        md5_token)
 
     d = tmp_path / "in"
     out = tmp_path / "out"
     keys = sorted([b"p1", b"q2"], key=lambda k: (md5_token(k), k))
-    w = SSTableStreamWriter(str(d), 1, cf="wide", column_index_bytes=256)
+    w = PerCellWriter(str(d), 1, cf="wide", column_index_bytes=256)
     for k in keys:
         w.start_partition(k)
         for i in range(200 if k == b"p1" else 3):

@@ -8,6 +8,7 @@ import subprocess
 import sys
 
 from cassandra_sstable_to_protocolbuf_spark.sources import sstable_native as N
+from tests.sstable_oracle import write_sstable
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -23,8 +24,8 @@ def test_continue_on_error_skips_corrupt_file(tmp_path):
     src = str(tmp_path / "in")
     good = [{"key": b"k1", "cells": [
         {"name": b"a", "kind": "LIVE", "timestamp": 1, "value": b"v"}]}]
-    N.write_sstable(src, 1, good)
-    bad_data = N.write_sstable(src, 2, good, compression="lz4")
+    write_sstable(src, 1, good)
+    bad_data = write_sstable(src, 2, good, compression="lz4")
     raw = bytearray(open(bad_data, "rb").read())
     raw[8] ^= 0xFF  # corrupt the compressed chunk -> checksum failure
     open(bad_data, "wb").write(bytes(raw))
@@ -52,7 +53,7 @@ def test_manifest_cli_lifecycle(tmp_path, capsys):
     parts = [{"key": b"k%02d" % i,
               "cells": [{"name": b"c", "kind": "LIVE", "timestamp": 1,
                          "value": b"v"}]} for i in range(10)]
-    a = N.write_sstable(d, 1, parts)
+    a = write_sstable(d, 1, parts)
     assert main(["manifest", "init", d]) == 0
     assert "1 sstables recorded" in capsys.readouterr().out
     assert main(["manifest", "status", d]) == 0

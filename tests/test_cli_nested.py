@@ -18,7 +18,7 @@ import os
 import subprocess
 import sys
 
-from cassandra_sstable_to_protocolbuf_spark.sources import sstable_native as N
+from tests.sstable_oracle import write_sstable
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -37,9 +37,9 @@ def test_convert_nested_tree(tmp_path):
     dead = [{"key": b"k2", "deletion": (100, 200), "cells": []}]
     # ks/table nesting for both a live file and an all-dead file, plus one
     # file at the top level to prove mixed depths coexist
-    N.write_sstable(os.path.join(src, "ks1", "users"), 1, live, cf="users")
-    N.write_sstable(os.path.join(src, "ks1", "events"), 2, dead, cf="events")
-    N.write_sstable(src, 3, live)
+    write_sstable(os.path.join(src, "ks1", "users"), 1, live, cf="users")
+    write_sstable(os.path.join(src, "ks1", "events"), 2, dead, cf="events")
+    write_sstable(src, 3, live)
 
     out = str(tmp_path / "out")
     r = _run("convert", src, out)
@@ -63,8 +63,8 @@ def test_convert_duplicate_basenames_refused(tmp_path):
     live = [{"key": b"k1", "cells": [
         {"name": b"a", "kind": "LIVE", "timestamp": 1, "value": b"v"}]}]
     # same ks/cf/generation in two subdirs -> same flat output name
-    N.write_sstable(os.path.join(src, "a"), 1, live)
-    N.write_sstable(os.path.join(src, "b"), 1, live)
+    write_sstable(os.path.join(src, "a"), 1, live)
+    write_sstable(os.path.join(src, "b"), 1, live)
     r = _run("convert", src, str(tmp_path / "out"))
     assert r.returncode != 0
     assert "duplicate sstable basename" in (r.stderr + r.stdout)

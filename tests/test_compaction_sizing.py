@@ -11,6 +11,7 @@ import pytest
 
 from cassandra_sstable_to_protocolbuf_spark import compaction as CP
 from cassandra_sstable_to_protocolbuf_spark.sources import sstable_native as N
+from tests.sstable_oracle import write_sstable
 
 
 def test_derive_ladder_and_bounds():
@@ -136,8 +137,8 @@ def test_logical_bytes_is_metadata_only_and_exact(tmp_path):
                          "value": b"v" * (i + 1)}]} for i in range(30)]
     algebra = sum(  # 16+keylen partition overhead, 15+name+value per cell
         16 + 3 + 15 + 3 + (i + 1) for i in range(30))
-    plain = N.write_sstable(str(tmp_path / "p"), 1, parts)
-    lz = N.write_sstable(str(tmp_path / "z"), 1, parts, compression="lz4")
+    plain = write_sstable(str(tmp_path / "p"), 1, parts)
+    lz = write_sstable(str(tmp_path / "z"), 1, parts, compression="lz4")
     assert CP.logical_data_bytes([plain]) == algebra
     assert CP.logical_data_bytes([lz]) == algebra
     assert CP.logical_data_bytes([plain, lz]) == 2 * algebra
@@ -155,7 +156,7 @@ def test_compact_shard_count_grows_with_input(spark, tmp_path):
                   "cells": [{"name": b"c", "kind": "LIVE", "timestamp": 1,
                              "value": b"v" * 40}]} for i in range(n_keys)]
         d = str(tmp_path / dirname)
-        N.write_sstable(d, 1, parts)
+        write_sstable(d, 1, parts)
         return d
 
     small = mk("small", 60)     # ~4.5 KB logical
@@ -196,8 +197,8 @@ def test_compact_gate_green_at_demo_and_production_targets(
     parts = [{"key": b"key-%05d" % i,
               "cells": [{"name": b"c", "kind": "LIVE", "timestamp": 1,
                          "value": b"v" * 40}]} for i in range(300)]
-    N.write_sstable(d, 1, parts)
-    N.write_sstable(d, 2, [dict(p, cells=[dict(p["cells"][0],
+    write_sstable(d, 1, parts)
+    write_sstable(d, 2, [dict(p, cells=[dict(p["cells"][0],
                                                timestamp=2)])
                            for p in parts[:100]])
     out = str(tmp_path / f"out{target}")
@@ -235,10 +236,10 @@ def test_compact_writer_folded_lww_byte_equality(spark, tmp_path):
                          "value": b"v1-%d" % i},
                         {"name": b"b", "kind": "LIVE", "timestamp": 1,
                          "value": b"w"}]} for i in range(200)]
-    N.write_sstable(d, 1, parts)
+    write_sstable(d, 1, parts)
     # overlapping generation: same keys, name 'a' newer, name 'b' TIES on
     # writeTime (tiebreak order: origin sstable_id DESC, then value DESC)
-    N.write_sstable(d, 2, [{"key": p["key"],
+    write_sstable(d, 2, [{"key": p["key"],
                             "cells": [{"name": b"a", "kind": "LIVE",
                                        "timestamp": 9, "value": b"v2"},
                                       {"name": b"b", "kind": "LIVE",

@@ -20,7 +20,7 @@ from cassandra_sstable_to_protocolbuf_spark.sources.sstable_native import (
     SSTableNativeReader, composite_compare, composite_encode,
     composite_split, read_native_cells, read_stats_column_name_lists,
     write_real_ka_statistics)
-from tests.sstable_oracle import scan_partitions
+from tests.sstable_oracle import scan_partitions, write_sstable
 
 _components = st.lists(
     st.tuples(st.binary(min_size=0, max_size=6),
@@ -73,7 +73,7 @@ def _write_composite(d, cf, g_range, keys=(b"k1", b"k2"), per=40,
                     "kind": "LIVE", "timestamp": ts,
                     "value": b"v-%d-%d" % (g, j)})
         parts.append({"key": key, "cells": cells})
-    return N.write_sstable(d, 1, parts, cf=cf, column_index_bytes=512)
+    return write_sstable(d, 1, parts, cf=cf, column_index_bytes=512)
 
 
 def _model_rows(spark, d, lo, hi):

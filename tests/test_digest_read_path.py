@@ -11,15 +11,16 @@ import os
 import pytest
 
 from cassandra_sstable_to_protocolbuf_spark.sources import sstable_native as N
+from tests.sstable_oracle import write_sstable
 
 
 def _fixture(tmp_path, n=40):
     d = str(tmp_path / "sst")
     for cf, ts in (("aa", 1), ("bb", 2)):
-        N.write_sstable(d, 1, [
+        write_sstable(d, 1, [
             {"key": b"k%03d" % i,
              "cells": [{"name": b"c", "kind": "LIVE", "timestamp": ts,
-                        "value": b"%s-%03d" % (cf.encode(), i)}]}
+                      "value": b"%s-%03d" % (cf.encode(), i)}]}
             for i in range(n)], cf=cf)
     return d
 

@@ -33,7 +33,7 @@ import struct
 import pytest
 
 from cassandra_sstable_to_protocolbuf_spark.sources import sstable_native as N
-from tests.sstable_oracle import scan_partitions_eager
+from tests.sstable_oracle import scan_partitions_eager, write_sstable
 
 
 def _atom_live(name: bytes, ts: int, value: bytes) -> bytes:
@@ -149,7 +149,8 @@ def test_writer_layout_matches_golden_bytes(tmp_path):
         {"key": KEY_B, "deletion": (500, 99), "cells": [
             {"name": b"zcol", "kind": "LIVE", "timestamp": 104, "value": b"zombie"}]},
     ]
-    data = N.write_sstable(str(tmp_path), 3, parts, ks="Keyspace1", cf="Standard1")
+    data = write_sstable(str(tmp_path), 3, parts, ks="Keyspace1",
+                         cf="Standard1")
     with open(data, "rb") as f:
         assert f.read() == GOLDEN_JB_DATA
     index = data[:-len(N.DATA_SUFFIX)] + N.INDEX_SUFFIX
@@ -168,8 +169,8 @@ def test_writer_summary_matches_golden_bytes(tmp_path):
         {"key": KEY_B, "cells": [
             {"name": b"c", "kind": "LIVE", "timestamp": 1, "value": b"v"}]},
     ]
-    data = N.write_sstable(str(tmp_path), 3, parts, ks="Keyspace1",
-                           cf="Standard1")
+    data = write_sstable(str(tmp_path), 3, parts, ks="Keyspace1",
+                         cf="Standard1")
     golden = (
         b"SGSUM1" + struct.pack(">iq", 128, 1)
         + struct.pack(">H", len(KEY_A)) + KEY_A + struct.pack(">QQ", 0, 0)
@@ -252,7 +253,7 @@ def _promoted_fixture(tmp_path, n=300):
               "cells": [{"name": b"c%d" % (i % 3), "kind": "LIVE",
                          "timestamp": i, "value": b"v%04d" % i}]}
              for i in range(n)]
-    data = N.write_sstable(d, 1, parts)
+    data = write_sstable(d, 1, parts)
     n_entries = _inject_promoted_index(data)
     assert n_entries == n
     return d, data

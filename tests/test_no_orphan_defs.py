@@ -18,8 +18,6 @@ PACKAGE = REPO / "cassandra_sstable_to_protocolbuf_spark"
 
 # name -> why it stays without a production caller (one line each)
 ALLOWED: dict[str, str] = {
-    "write_sstable": "the fixture writer the native-source tests build "
-                     "their sstables with",
     "emb_cosine_all_pairs": "the exact twin the ANN recall test "
                             "measures emb_ann_topk against",
 }

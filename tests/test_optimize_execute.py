@@ -13,6 +13,7 @@ import os
 
 from cassandra_sstable_to_protocolbuf_spark import compaction as CP
 from cassandra_sstable_to_protocolbuf_spark.sources import sstable_native as N
+from tests.sstable_oracle import write_sstable
 
 
 def _mk(dirname, cf, n_keys, vlen, ts, overlap_from=0):
@@ -20,7 +21,7 @@ def _mk(dirname, cf, n_keys, vlen, ts, overlap_from=0):
               "cells": [{"name": b"c", "kind": "LIVE", "timestamp": ts,
                          "value": b"%s-%04d" % (cf.encode(), i) + b"x" * vlen}]}
              for i in range(n_keys)]
-    return N.write_sstable(dirname, 1, parts, cf=cf)
+    return write_sstable(dirname, 1, parts, cf=cf)
 
 
 def test_plan_merge_tasks_tiers_bins_and_stragglers(tmp_path):
@@ -194,7 +195,7 @@ def test_plan_merge_tasks_matches_pure_model(tmp_path):
     for i in range(9):
         n = rng.randint(2, 120)
         d = str(tmp_path)
-        p = N.write_sstable(d, 1, [{"key": b"k%04d" % k, "cells": [
+        p = write_sstable(d, 1, [{"key": b"k%04d" % k, "cells": [
             {"name": b"c", "kind": "LIVE", "timestamp": 1,
              "value": b"v" * rng.randint(1, 60)}]} for k in range(n)],
             cf=f"f{i}")

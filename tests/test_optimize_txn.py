@@ -19,9 +19,9 @@ from cassandra_sstable_to_protocolbuf_spark import commit_backend
 from cassandra_sstable_to_protocolbuf_spark import compaction as CP
 from cassandra_sstable_to_protocolbuf_spark import txnlog
 from cassandra_sstable_to_protocolbuf_spark.landed import lww_live_cells
-from cassandra_sstable_to_protocolbuf_spark.sources import sstable_native as N
 from cassandra_sstable_to_protocolbuf_spark.sources.sstable_native import (
     read_native_cells)
+from tests.sstable_oracle import write_sstable
 from tests.memory_commit_backend import InMemoryCommitBackend
 
 
@@ -30,7 +30,7 @@ def _mk(dirname, cf, n_keys, vlen, ts, overlap_from=0):
               "cells": [{"name": b"c", "kind": "LIVE", "timestamp": ts,
                          "value": b"%s-%04d" % (cf.encode(), i) + b"x" * vlen}]}
              for i in range(n_keys)]
-    return N.write_sstable(dirname, 1, parts, cf=cf)
+    return write_sstable(dirname, 1, parts, cf=cf)
 
 
 def _lww(spark, path):

@@ -19,7 +19,8 @@ import struct
 import pytest
 
 from cassandra_sstable_to_protocolbuf_spark.sources import sstable_native as N
-from tests.sstable_oracle import expected_rows, read_rows
+from tests.sstable_oracle import (PerCellWriter, expected_rows, read_rows,
+                                  write_sstable)
 
 
 def _write_fixture(dir_path: str, cib: int = 256, wide_n: int = 200,
@@ -27,9 +28,8 @@ def _write_fixture(dir_path: str, cib: int = 256, wide_n: int = 200,
                    dead_partition: bool = False) -> str:
     """Two-partition sstable: p1 wide (wide_n cells), q2 narrow (3)."""
     keys = sorted([b"p1", b"q2"], key=lambda k: (N.md5_token(k), k))
-    w = N.SSTableStreamWriter(dir_path, 1, cf="wide",
-                              column_index_bytes=cib,
-                              compression=compression)
+    w = PerCellWriter(dir_path, 1, cf="wide", column_index_bytes=cib,
+                      compression=compression)
     for k in keys:
         deletion = (5, 5) if dead_partition and k == b"p1" else None
         w.start_partition(k, deletion)
@@ -418,7 +418,7 @@ def test_narrow_rows_chunk_by_partitions_per_split(tmp_path):
               "cells": [{"name": b"n%02d" % (i % 7), "kind": "LIVE",
                          "timestamp": 1, "value": b"v"}]}
              for i in range(50)]
-    N.write_sstable(str(tmp_path), 1, parts, column_index_bytes=256)
+    write_sstable(str(tmp_path), 1, parts, column_index_bytes=256)
     rdr = N.SSTableNativeReader(str(tmp_path), 8,
                                 name_range=(b"n00", b"n04"))
     splits = rdr.partitions()

@@ -10,7 +10,7 @@ import pytest
 from cassandra_sstable_to_protocolbuf_spark import protowire as pw
 from tests.sstable_oracle import (
     decode_column, decode_row, decode_varint, encode_column, encode_row,
-    frame_row, iter_delimited)
+    frame_row, iter_delimited, write_sstable)
 from tests.test_cellcodec import _mixed_fixture, _write_ic_fixture
 
 
@@ -278,10 +278,7 @@ def test_read_keys_sorted_within_file(spark, tmp_path):
 def _all_dead_cells_fixture(d):
     """A live partition whose cells are all dead (DELETED, EXPIRING, a
     range tombstone) beside a plain live one and a deleted one."""
-    from cassandra_sstable_to_protocolbuf_spark.sources import (
-        sstable_native as N)
-
-    return N.write_sstable(d, 1, [
+    return write_sstable(d, 1, [
         {"key": b"k-alldead", "cells": [
             {"name": b"a", "kind": "DELETED", "timestamp": 3},
             {"name": b"b", "kind": "EXPIRING", "timestamp": 4,
@@ -296,10 +293,7 @@ def _all_dead_cells_fixture(d):
 
 
 def _all_deleted_fixture(d):
-    from cassandra_sstable_to_protocolbuf_spark.sources import (
-        sstable_native as N)
-
-    return N.write_sstable(d, 1, [
+    return write_sstable(d, 1, [
         {"key": b"k%02d" % i, "deletion": (10, 20 + i), "cells": [
             {"name": b"a", "kind": "LIVE", "timestamp": 1, "value": b"v"}]}
         for i in range(12)])
@@ -389,10 +383,7 @@ def test_native_writer_scan_order_golden(spark, tmp_path, fixture):
 
 
 def _multi_split_fixture(d, generation=1, compression=None):
-    from cassandra_sstable_to_protocolbuf_spark.sources import (
-        sstable_native as N)
-
-    return N.write_sstable(d, generation, [
+    return write_sstable(d, generation, [
         {"key": b"key-%05d" % i,
          "deletion": (1, 2) if i % 11 == 0 else None,
          "cells": [{"name": b"c%02d" % c,
@@ -478,10 +469,7 @@ def _good_and_bad_inputs(src):
     read cleanly and only the last one fails."""
     import os
 
-    from cassandra_sstable_to_protocolbuf_spark.sources import (
-        sstable_native as N)
-
-    N.write_sstable(src, 1, [{"key": b"k1", "cells": [
+    write_sstable(src, 1, [{"key": b"k1", "cells": [
         {"name": b"a", "kind": "LIVE", "timestamp": 1, "value": b"v"}]}])
     _corrupt_last_chunk(_multi_split_fixture(
         os.path.join(src, "nested"), generation=2, compression="lz4"))
@@ -550,8 +538,6 @@ def test_native_writer_refuses_shared_basenames(spark, tmp_path):
     refused at plan time, before any task writes."""
     import os
 
-    from cassandra_sstable_to_protocolbuf_spark.sources import (
-        sstable_native as N)
     from cassandra_sstable_to_protocolbuf_spark.sources.sstable_pb import (
         write_native_pb)
 
@@ -559,7 +545,7 @@ def test_native_writer_refuses_shared_basenames(spark, tmp_path):
     part = [{"key": b"k", "cells": [
         {"name": b"a", "kind": "LIVE", "timestamp": 1, "value": b"v"}]}]
     for sub in ("ks1", "ks2"):
-        N.write_sstable(os.path.join(src, sub), 1, part)
+        write_sstable(os.path.join(src, sub), 1, part)
     out = str(tmp_path / "out")
     with pytest.raises(ValueError, match="duplicate sstable basename"):
         write_native_pb(spark, src, out)

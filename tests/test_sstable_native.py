@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from cassandra_sstable_to_protocolbuf_spark.sources import sstable_native as N
 from tests.sstable_oracle import (read_rows, scan_partitions,
-                                  scan_partitions_eager)
+                                  scan_partitions_eager, write_sstable)
 
 
 @pytest.fixture(scope="module")
@@ -41,8 +41,8 @@ def fixture_sstables(tmp_path_factory):
             {"name": b"d1", "kind": "LIVE", "timestamp": 107, "value": b""},
         ]},
     ]
-    N.write_sstable(d, 1, parts1)
-    N.write_sstable(d, 2, parts2)
+    write_sstable(d, 1, parts1)
+    write_sstable(d, 2, parts2)
     return d
 
 
@@ -104,7 +104,7 @@ def test_write_scan_murmur3_partitioner(spark, tmp_path):
     parts = [{"key": b"key-%03d" % i, "cells": [
         {"name": b"c", "kind": "LIVE", "timestamp": 1, "value": b"v"}]}
         for i in range(40)]
-    data = N.write_sstable(d, 1, parts, partitioner=N.MURMUR3_PARTITIONER)
+    data = write_sstable(d, 1, parts, partitioner=N.MURMUR3_PARTITIONER)
     import os
     scanned = [p["key"] for p in
                scan_partitions_eager(data, 0, os.path.getsize(data))]
@@ -129,7 +129,7 @@ def test_validate_first_key_after_last_rejected(tmp_path):
     parts = [{"key": b"k%d" % i, "cells": [
         {"name": b"c", "kind": "LIVE", "timestamp": 1, "value": b"v"}]}
         for i in range(4)]
-    data = N.write_sstable(d, 1, parts)
+    data = write_sstable(d, 1, parts)
     index = data[:-len(N.DATA_SUFFIX)] + N.INDEX_SUFFIX
     entries = N.read_index(index)
     with open(index, "wb") as f:  # rewrite reversed -> first > last
@@ -325,8 +325,8 @@ def test_lz4_compressed_roundtrip(spark, tmp_path):
                         for j in range(5)]}
              for i in range(50)]
     plain_dir, comp_dir = str(tmp_path / "plain"), str(tmp_path / "comp")
-    N.write_sstable(plain_dir, 1, parts)
-    N.write_sstable(comp_dir, 1, parts, compression="lz4", chunk_length=4096)
+    write_sstable(plain_dir, 1, parts)
+    write_sstable(comp_dir, 1, parts, compression="lz4", chunk_length=4096)
     # multi-chunk: compressed file must really be chunked
     info = N.CompressionInfo.parse(
         os.path.join(comp_dir, "ks-cf-ka-1-CompressionInfo.db"))
@@ -345,7 +345,7 @@ def test_lz4_corruption_detected(tmp_path):
     parts = [{"key": b"k", "cells": [
         {"name": b"n", "kind": "LIVE", "timestamp": 1, "value": b"v" * 100}]}]
     d = str(tmp_path)
-    data = N.write_sstable(d, 1, parts, compression="lz4")
+    data = write_sstable(d, 1, parts, compression="lz4")
     raw = bytearray(open(data, "rb").read())
     raw[10] ^= 0xFF  # flip a byte inside the compressed chunk
     open(data, "wb").write(bytes(raw))
@@ -374,7 +374,7 @@ def test_missing_index_component_fails(spark, tmp_path):
     import os
 
     d = str(tmp_path / "broken")
-    N.write_sstable(d, 9, [{"key": b"k", "cells": [
+    write_sstable(d, 9, [{"key": b"k", "cells": [
         {"name": b"n", "kind": "LIVE", "timestamp": 1, "value": b"v"}]}])
     os.remove(os.path.join(d, "ks-cf-ka-9-Index.db"))
     with pytest.raises(Exception, match="missing index component|FileNotFound"):
@@ -385,7 +385,7 @@ def test_partitioner_check(spark, tmp_path):
     """S2: Statistics.db VALIDATION metadata round-trips; the partitioner
     check passes on match and refuses the scan on mismatch."""
     d = str(tmp_path / "stats")
-    N.write_sstable(d, 1, [{"key": b"k", "cells": [
+    write_sstable(d, 1, [{"key": b"k", "cells": [
         {"name": b"n", "kind": "LIVE", "timestamp": 1, "value": b"v"}]}])
     import os
 
@@ -409,7 +409,7 @@ def test_partitioner_check(spark, tmp_path):
 
 def test_empty_cell_name_rejected(tmp_path):
     with pytest.raises(ValueError, match="non-empty"):
-        N.write_sstable(str(tmp_path), 1, [{"key": b"k", "cells": [
+        write_sstable(str(tmp_path), 1, [{"key": b"k", "cells": [
             {"name": b"", "kind": "LIVE", "timestamp": 1, "value": b"v"}]}])
 
 
@@ -485,7 +485,7 @@ def test_permissive_covers_plan_time_component_errors(spark, tmp_path):
     import os
 
     from cassandra_sstable_to_protocolbuf_spark.sources.sstable_native import (
-        read_native_cells, write_sstable)
+        read_native_cells)
 
     d = str(tmp_path / "ssts")
     write_sstable(d, 1, [
@@ -517,8 +517,6 @@ def test_truncated_value_raises_not_silently_truncates(tmp_path):
 
     import pytest as _pytest
 
-    from cassandra_sstable_to_protocolbuf_spark.sources.sstable_native import (
-        write_sstable)
 
     d = str(tmp_path / "ssts")
     write_sstable(d, 1, [
@@ -553,7 +551,7 @@ def _corrupt_fixture(d: str, case: str) -> dict:
             {"name": b"c%04d" % j, "kind": "LIVE", "timestamp": j,
              "value": b"%d-" % i + b"v" * 40} for j in range(n)]}
             for i, n in enumerate((3, 300, 3))]
-    data = N.write_sstable(d, 1, parts)
+    data = write_sstable(d, 1, parts)
     size = os.path.getsize(data)
     raw = bytearray(open(data, "rb").read())
     if case == "eof_in_value":

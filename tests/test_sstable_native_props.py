@@ -9,7 +9,8 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from cassandra_sstable_to_protocolbuf_spark.sources import sstable_native as N
-from tests.sstable_oracle import read_rows, scan_partitions_eager
+from tests.sstable_oracle import (read_rows, scan_partitions_eager,
+                                  write_sstable)
 
 name_bytes = st.binary(min_size=1, max_size=32)
 value_bytes = st.binary(min_size=0, max_size=128)
@@ -44,7 +45,7 @@ partition = st.fixed_dictionaries(
                 unique_by=lambda p: p["key"]))
 def test_native_write_scan_roundtrip(tmp_path_factory, parts):
     d = str(tmp_path_factory.mktemp("prop_sst"))
-    data = N.write_sstable(d, 1, parts)
+    data = write_sstable(d, 1, parts)
     scanned = list(scan_partitions_eager(data, 0, os.path.getsize(data)))
     assert len(scanned) == len(parts)
     expected = {p["key"]: p for p in parts}
@@ -89,7 +90,7 @@ def test_promoted_slice_equals_filter(tmp_path_factory, parts, cib, lo, hi):
     full scan's atoms with name in range -- never a dropped or
     duplicated atom at any block boundary."""
     d = str(tmp_path_factory.mktemp("prop_slice"))
-    data = N.write_sstable(d, 1, parts, column_index_bytes=cib)
+    data = write_sstable(d, 1, parts, column_index_bytes=cib)
     index_path = data[:-len(N.DATA_SUFFIX)] + N.INDEX_SUFFIX
 
     # (1) extent tiling for every promoted entry

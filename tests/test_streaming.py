@@ -16,6 +16,7 @@ from pyspark.sql.types import (
 
 from cassandra_sstable_to_protocolbuf_spark.streaming.pipeline import (
     stream_dedup)
+from tests.sstable_oracle import write_sstable
 from tests.conftest import SF_SMOKE
 
 EVENT_SCHEMA = StructType([
@@ -317,8 +318,6 @@ def test_native_ingest_kill_and_resume_matches(spark, tmp_path):
     from cassandra_sstable_to_protocolbuf_spark.commit_backend import (
         get_commit_backend)
     from cassandra_sstable_to_protocolbuf_spark.landed import lww_live_cells
-    from cassandra_sstable_to_protocolbuf_spark.sources import (
-        sstable_native as N)
     from cassandra_sstable_to_protocolbuf_spark.sources.sstable_native import (
         read_native_cells)
     from cassandra_sstable_to_protocolbuf_spark.streaming.pipeline import (
@@ -334,7 +333,7 @@ def test_native_ingest_kill_and_resume_matches(spark, tmp_path):
                              "timestamp": ts,
                              "value": b"%s-%04d" % (cf.encode(), i)}]}
                  for i in range(40)]
-        return N.write_sstable(watch, 1, parts, cf=cf)
+        return write_sstable(watch, 1, parts, cf=cf)
 
     # wave 1 lands the table
     arrive("w1", ts=100)

@@ -15,14 +15,14 @@ import os
 import struct
 
 from cassandra_sstable_to_protocolbuf_spark.sources import sstable_native as N
-from tests.sstable_oracle import read_rows
+from tests.sstable_oracle import read_rows, write_sstable
 
 
 def _mk(dir_path, n_parts, gen=1, **kw):
     parts = [{"key": b"key-%06d" % i, "cells": [
         {"name": b"c", "kind": "LIVE", "timestamp": 1, "value": b"v"}]}
         for i in range(n_parts)]
-    return N.write_sstable(str(dir_path), gen, parts, **kw)
+    return write_sstable(str(dir_path), gen, parts, **kw)
 
 
 def _scan_keys(reader):
@@ -158,7 +158,7 @@ def test_pre_ja_versions_ignore_summary(tmp_path):
     parts = [{"key": b"k%d" % i, "cells": [
         {"name": b"c", "kind": "LIVE", "timestamp": 1, "value": b"v"}]}
         for i in range(5)]
-    data = N.write_sstable(str(tmp_path), 1, parts)
+    data = write_sstable(str(tmp_path), 1, parts)
     # rename every component to an 'ic' descriptor
     for fname in sorted(os.listdir(tmp_path)):
         os.rename(os.path.join(tmp_path, fname),

@@ -12,14 +12,14 @@ import os
 import pytest
 
 from cassandra_sstable_to_protocolbuf_spark.sources import sstable_native as N
-from tests.sstable_oracle import read_rows
+from tests.sstable_oracle import read_rows, write_sstable
 
 
 def _mk(dir_path, n_parts):
     parts = [{"key": b"key-%05d" % i, "cells": [
         {"name": b"c", "kind": "LIVE", "timestamp": 1, "value": b"v"}]}
         for i in range(n_parts)]
-    return N.write_sstable(str(dir_path), 1, parts)
+    return write_sstable(str(dir_path), 1, parts)
 
 
 def _scan_keys(reader):
@@ -66,8 +66,8 @@ def test_token_range_rejected_for_murmur3_files(tmp_path):
     parts = [{"key": b"k%d" % i, "cells": [
         {"name": b"c", "kind": "LIVE", "timestamp": 1, "value": b"v"}]}
         for i in range(10)]
-    N.write_sstable(str(tmp_path), 1, parts,
-                    partitioner=N.MURMUR3_PARTITIONER)
+    write_sstable(str(tmp_path), 1, parts,
+                  partitioner=N.MURMUR3_PARTITIONER)
     r = N.SSTableNativeReader(str(tmp_path), 64, token_range=("", "g"))
     with pytest.raises(ValueError, match="md5 token space"):
         r.partitions()
@@ -91,7 +91,7 @@ def test_compact_respect_tombstones_stops_resurrection(spark, tmp_path):
     documents that it does NOT cross files."""
     from cassandra_sstable_to_protocolbuf_spark.compaction import compact
     from cassandra_sstable_to_protocolbuf_spark.sources.sstable_native import (
-        read_native_cells, write_sstable)
+        read_native_cells)
 
     d = str(tmp_path / "in")
     write_sstable(d, 1, [
@@ -122,7 +122,7 @@ def test_compact_cell_tombstone_stops_resurrection(spark, tmp_path):
     go to the tombstone (Cassandra's rule); other names are untouched."""
     from cassandra_sstable_to_protocolbuf_spark.compaction import compact
     from cassandra_sstable_to_protocolbuf_spark.sources.sstable_native import (
-        read_native_cells, write_sstable)
+        read_native_cells)
 
     d = str(tmp_path / "in")
     write_sstable(d, 1, [
@@ -151,7 +151,7 @@ def test_compact_range_tombstone_stops_resurrection(spark, tmp_path):
     written after the deletion survive."""
     from cassandra_sstable_to_protocolbuf_spark.compaction import compact
     from cassandra_sstable_to_protocolbuf_spark.sources.sstable_native import (
-        read_native_cells, write_sstable)
+        read_native_cells)
 
     d = str(tmp_path / "in")
     write_sstable(d, 1, [

@@ -5,13 +5,15 @@ micro-benches (no Spark -- codec work is per-task CPU, exactly what
 one executor core does), with floors at ~1/4 of idle-measured
 throughput so machine load cannot flake them.
 
-Measurements of 2026-10-19 on a shared 4-core VM, best of 2 (200k
+Measurements of 2026-10-19/20 on a shared 4-core VM, best of 2 (200k
 cells in 4-cell partitions -- the per-partition-overhead-heavy WORST
 case; one task):
-  * batch binary sink (write_partitions_block): ~840k cells/s plain,
-    ~870k cells/s lz4 -- ~4x the round-7 per-cell loop
-  * legacy per-cell sink (add_cell): ~310k cells/s plain, ~345k lz4
-    (bloom build batched at close; kept as the semantic reference path)
+  * batch binary sink (write_partitions_block): ~840-970k cells/s
+    plain, ~590-910k cells/s lz4 -- ~4x the round-7 per-cell loop
+  * binary cell sink (_cells_stream_writer over 10k-cell Arrow batches,
+    120k cells): ~590-960k cells/s plain, ~770-970k lz4; the per-cell
+    writer it replaced as this floor's timed path (tests/
+    sstable_oracle.py's PerCellWriter) ran ~220-330k
   * fast Arrow decode (cellcodec read path): 640-850k rows/s, ~2.5x the
     tuple generator chain
   * pb+zstd block sink (encode_rows_block_bufs from Python lists):
@@ -29,21 +31,36 @@ import numpy as np
 
 
 def _bench_binary(tmp_path, compression, n_cells=120_000):
+    """The binary sink's production writer, _cells_stream_writer (run
+    detection, kind and prefix maps, block encode, file write), over
+    Arrow batches of 10k flat cells (Spark's default Arrow batch
+    size): 4-cell LIVE partitions in decorated-key order."""
+    import pyarrow as pa
+
     from cassandra_sstable_to_protocolbuf_spark.sources.sstable_native import (
-        SSTableStreamWriter)
+        _cells_stream_writer)
 
     keys = sorted((b"key-%07d" % i for i in range(n_cells // 4)),
                   key=lambda k: hashlib.md5(k).digest())
-    w = SSTableStreamWriter(str(tmp_path / (compression or "plain")), 1,
-                            compression=compression)
+    cell = np.arange(n_cells)
+    table = pa.table({
+        "sstable_id": pa.array(["s"] * n_cells),
+        "key": pa.array([k for k in keys for _ in range(4)],
+                        type=pa.binary()),
+        "name": pa.array([b"col%d" % c for c in (cell % 4).tolist()],
+                         type=pa.binary()),
+        "value": pa.array([b"value-%07d-%d" % (c // 4, c % 4)
+                           for c in cell.tolist()], type=pa.binary()),
+        "writeTime": pa.array((cell // 4) * 10 + cell % 4),
+        "cell_kind": pa.array(["LIVE"] * n_cells),
+        "ttl_expired": pa.array(np.zeros(n_cells, dtype=bool)),
+        "partition_deletion_live": pa.array(np.ones(n_cells, dtype=bool))})
+    batches = table.to_batches(max_chunksize=10_000)
+    out = tmp_path / f"{compression or 'plain'}{time.monotonic_ns()}"
+    write = _cells_stream_writer(str(out), compression)
     start = time.monotonic()
-    for i, k in enumerate(keys):
-        w.start_partition(k)
-        for c in range(4):
-            w.add_cell(b"col%d" % c, "LIVE", i * 10 + c,
-                       b"value-%07d-%d" % (i, c))
-        w.end_partition()
-    w.close()
+    for _ in write(iter(batches)):
+        pass
     return n_cells / (time.monotonic() - start)
 
 
@@ -108,7 +125,7 @@ def test_binary_sink_throughput_floor(tmp_path, capsys):
     best = max(_bench_binary(tmp_path, None) for _ in range(2))
     best_lz = max(_bench_binary(tmp_path, "lz4") for _ in range(2))
     with capsys.disabled():
-        print(f"\n[capacity] per-cell binary sink {best:,.0f} cells/s "
+        print(f"\n[capacity] binary cell sink {best:,.0f} cells/s "
               f"plain, {best_lz:,.0f} cells/s lz4 (floor 50k)")
     assert best >= 50_000, f"binary encode regressed: {best:,.0f} cells/s"
     assert best_lz >= 50_000, f"lz4 encode regressed: {best_lz:,.0f} cells/s"

@@ -16,18 +16,19 @@ from __future__ import annotations
 
 import json
 import os
+import random
 import subprocess
 import sys
 import tracemalloc
 
-import pandas as pd
 import pyarrow as pa
 import pytest
 
 from cassandra_sstable_to_protocolbuf_spark.sources import sstable_native as N
 from cassandra_sstable_to_protocolbuf_spark.sources import sstable_pb as PB
 from tests.sstable_oracle import (
-    decode_row, iter_delimited, scan_partitions, scan_partitions_eager)
+    PerCellWriter, decode_row, iter_delimited, scan_partitions,
+    scan_partitions_eager, write_sstable)
 
 PIN_BYTES = 8 * 1024 * 1024  # generous vs the ~40 MB streamed through
 
@@ -41,7 +42,18 @@ def _flat_batch(cells):
     return pa.RecordBatch.from_pylist(cells, schema=_FLAT_CELLS)
 
 
-def _pb_metrics(write, batches):
+_NATIVE_CELLS = pa.schema([
+    ("sstable_id", pa.string()), ("key", pa.binary()),
+    ("name", pa.binary()), ("value", pa.binary()),
+    ("writeTime", pa.int64()), ("cell_kind", pa.string()),
+    ("ttl_expired", pa.bool_()), ("partition_deletion_live", pa.bool_())])
+
+
+def _native_batch(cells):
+    return pa.RecordBatch.from_pylist(cells, schema=_NATIVE_CELLS)
+
+
+def _metrics(write, batches):
     return pa.Table.from_batches(list(write(batches))).to_pylist()
 
 
@@ -89,12 +101,12 @@ def _pb_batches(n_batches):
 def _pb_run(out_dir, n_batches):
     # warm: the first call's imports alone would dwarf the pin
     os.mkdir(out_dir + "-warm")
-    _pb_metrics(PB._pb_flat_stream_writer(out_dir + "-warm"),
+    _metrics(PB._pb_flat_stream_writer(out_dir + "-warm"),
                 _pb_batches(1))
     os.mkdir(out_dir)
     write = PB._pb_flat_stream_writer(out_dir)
     tracemalloc.start()
-    metrics = _pb_metrics(write, _pb_batches(n_batches))
+    metrics = _metrics(write, _pb_batches(n_batches))
     _, peak = tracemalloc.get_traced_memory()
     tracemalloc.stop()
     (m,) = metrics
@@ -149,7 +161,7 @@ def test_pb_sink_rolls_files_on_sstable_change(tmp_path):
             cell("sst-c", b"c1", True, b"n", b"y", 3),
         ])
 
-    out = _pb_metrics(PB._pb_flat_stream_writer(str(tmp_path)), batches())
+    out = _metrics(PB._pb_flat_stream_writer(str(tmp_path)), batches())
     assert [m["sstable_id"] for m in out] == ["sst-a", "sst-b", "sst-c"]
     assert [m["n_rows"] for m in out] == [2, 1, 1]
     assert sorted(os.listdir(tmp_path)) == [
@@ -179,7 +191,7 @@ def _cell_batches(n_batches, cells_per_batch, val, sstable_id="big",
                 "partition_deletion_live": True,
             })
             cell_no += 1
-        yield pd.DataFrame(rows)
+        yield _native_batch(rows)
 
 
 _NATIVE_CELLS_PER_BATCH, _NATIVE_VAL = 1000, b"x" * 400
@@ -191,16 +203,14 @@ def _native_run(out_dir, compression, n_batches):
         _cell_batches(1, 10, _NATIVE_VAL)))
     write = N._cells_stream_writer(out_dir, compression)
     tracemalloc.start()
-    metrics = pd.concat(
-        list(write(_cell_batches(n_batches, _NATIVE_CELLS_PER_BATCH,
-                                 _NATIVE_VAL))),
-        ignore_index=True)
+    metrics = _metrics(
+        write, _cell_batches(n_batches, _NATIVE_CELLS_PER_BATCH,
+                             _NATIVE_VAL))
     _, peak = tracemalloc.get_traced_memory()
     tracemalloc.stop()
-    assert len(metrics) == 1
-    return {"path": str(metrics["path"].iloc[0]),
-            "n_partitions": int(metrics["n_partitions"].iloc[0]),
-            "n_cells": int(metrics["n_cells"].iloc[0]), "peak": peak}
+    (m,) = metrics
+    return {"path": m["path"], "n_partitions": m["n_partitions"],
+            "n_cells": m["n_cells"], "peak": peak}
 
 
 @pytest.mark.parametrize("compression", [None, "lz4"])
@@ -244,7 +254,7 @@ def test_native_sink_rolls_sstables_and_partitions(tmp_path):
     """sstable_id and key changes roll files/partitions correctly across
     batch boundaries; deleted partitions and cell kinds survive."""
     def batches():
-        yield pd.DataFrame([
+        yield _native_batch([
             dict(sstable_id="s1", key=b"a", name=b"n1", value=b"v1",
                  writeTime=1, cell_kind="LIVE", ttl_expired=False,
                  partition_deletion_live=True),
@@ -252,7 +262,7 @@ def test_native_sink_rolls_sstables_and_partitions(tmp_path):
                  writeTime=2, cell_kind="EXPIRING", ttl_expired=True,
                  partition_deletion_live=True),
         ])
-        yield pd.DataFrame([
+        yield _native_batch([
             dict(sstable_id="s1", key=b"b", name=b"n1", value=None,
                  writeTime=3, cell_kind="DELETED", ttl_expired=False,
                  partition_deletion_live=False),
@@ -266,14 +276,13 @@ def test_native_sink_rolls_sstables_and_partitions(tmp_path):
     tok = N.token_function(N.DEFAULT_PARTITIONER)
     assert tok(b"a") < tok(b"b")
 
-    out = pd.concat(
-        list(N._cells_stream_writer(str(tmp_path), "lz4")(batches())),
-        ignore_index=True).set_index("sstable_id")
-    assert out.loc["s1", "n_partitions"] == 2
-    assert out.loc["s1", "n_cells"] == 3
-    assert out.loc["s2", "n_partitions"] == 1
+    out = {m["sstable_id"]: m for m in _metrics(
+        N._cells_stream_writer(str(tmp_path), "lz4"), batches())}
+    assert out["s1"]["n_partitions"] == 2
+    assert out["s1"]["n_cells"] == 3
+    assert out["s2"]["n_partitions"] == 1
 
-    s1_path = out.loc["s1", "path"]
+    s1_path = out["s1"]["path"]
     f, logical_size = N.open_data_file(s1_path)
     f.close()
     parts = {p["key"]: p
@@ -298,28 +307,112 @@ def test_stream_writer_rejects_out_of_order_keys(tmp_path):
 
 
 def test_stream_writer_abort_leaves_no_temp_files(tmp_path):
-    w = N.SSTableStreamWriter(str(tmp_path), 1, compression="lz4")
+    w = PerCellWriter(str(tmp_path), 1, compression="lz4")
     w.start_partition(b"k")
     w.add_cell(b"c", "LIVE", 1, b"v")
     w.abort()
     assert os.listdir(tmp_path) == []
 
 
+def _native_cell(key, name, wt, live=True, value=b"v"):
+    return dict(sstable_id="s1", key=key, name=name, value=value,
+                writeTime=wt, cell_kind="LIVE", ttl_expired=False,
+                partition_deletion_live=live)
+
+
 def test_native_sink_rejects_inconsistent_partition_flag(tmp_path):
     """partition_deletion_live flipping mid-partition is a data-integrity
     error: the partition header already streamed, so the writer must
     fail loudly rather than write a file that contradicts half its
-    input rows."""
-    def batches():
-        yield pd.DataFrame([
-            dict(sstable_id="s1", key=b"a", name=b"n1", value=b"v",
-                 writeTime=1, cell_kind="LIVE", ttl_expired=False,
-                 partition_deletion_live=True),
-            dict(sstable_id="s1", key=b"a", name=b"n2", value=b"v",
-                 writeTime=2, cell_kind="LIVE", ttl_expired=False,
-                 partition_deletion_live=False),
-        ])
+    input rows -- whether the flip is inside one batch or in the next
+    batch, against the partition the first one left open."""
+    inside = [[_native_cell(b"a", b"n1", 1),
+               _native_cell(b"a", b"n2", 2, live=False)]]
+    across = [[_native_cell(b"a", b"n1", 1)],
+              [_native_cell(b"a", b"n2", 2, live=False)]]
+    for i, cells in enumerate((inside, across)):
+        out = tmp_path / str(i)
+        out.mkdir()
+        with pytest.raises(ValueError, match="disagrees within"):
+            list(N._cells_stream_writer(str(out), None)(
+                _native_batch(c) for c in cells))
+        assert os.listdir(out) == []  # abort cleaned the temp components
 
-    with pytest.raises(ValueError, match="disagrees within"):
-        list(N._cells_stream_writer(str(tmp_path), None)(batches()))
-    assert os.listdir(tmp_path) == []  # abort cleaned the temp components
+
+def test_native_sink_dedups_across_batches(tmp_path):
+    """dedup_runs keeps each (sstable_id, key, name) run's first cell
+    also when the run continues into the next batch: the second batch's
+    first row, the LWW loser of the run the first batch began, is
+    dropped; the next name and key are kept."""
+    first = [_native_cell(b"a", b"n1", 1), _native_cell(b"a", b"n2", 9)]
+    second = [_native_cell(b"a", b"n2", 5, value=b"loser"),
+              _native_cell(b"a", b"n3", 4)]
+    (m,) = _metrics(
+        N._cells_stream_writer(str(tmp_path), None, dedup_runs=True),
+        iter([_native_batch(first), _native_batch(second)]))
+    assert (m["n_partitions"], m["n_cells"]) == (1, 3)
+    (part,) = scan_partitions_eager(m["path"], 0,
+                                    os.path.getsize(m["path"]))
+    assert [(c["name"], c["timestamp"], c["value"])
+            for c in part["cells"]] == [
+        (b"n1", 1, b"v"), (b"n2", 9, b"v"), (b"n3", 4, b"v")]
+
+
+def test_native_sink_matches_oracle_at_any_batch_split(tmp_path):
+    """Every component the sink writes equals the per-cell oracle
+    writer's over the same cells -- three sstables, dead partitions,
+    every cell kind, NULL values and ttl_expired flags, repeated names
+    -- however the stream splits into batches, with and without
+    dedup_runs: the sstable, partition, flag and dedup carries are
+    invisible in the output."""
+    rng = random.Random(5)
+    rows = []
+    for sid in ("s1", "s2", "s3"):
+        keys = sorted((b"k%03d" % i for i in range(rng.randrange(1, 30))),
+                      key=lambda k: (N.md5_token(k), k))
+        for k in keys:
+            live = rng.random() > 0.2
+            for c in range(rng.randrange(1, 12)):
+                for dup in range(rng.choice([1, 1, 2, 3])):
+                    value = rng.choice([None, b"", b"v" * rng.randrange(40)])
+                    rows.append(dict(
+                        sstable_id=sid, key=k, name=b"n%03d" % c, value=value,
+                        writeTime=100 - dup,
+                        cell_kind=rng.choice(["LIVE", "LIVE", "DELETED",
+                                              "EXPIRING", "COUNTER"]),
+                        ttl_expired=rng.choice([None, True, False]),
+                        partition_deletion_live=live))
+
+    def files(d):
+        return {f: open(os.path.join(d, f), "rb").read()
+                for f in os.listdir(d)}
+
+    for dedup in (False, True):
+        oracle = str(tmp_path / f"oracle-{dedup}")
+        for sid in ("s1", "s2", "s3"):
+            parts, seen = {}, set()
+            for r in rows:
+                if r["sstable_id"] != sid or (
+                        dedup and (r["key"], r["name"]) in seen):
+                    continue
+                seen.add((r["key"], r["name"]))
+                part = parts.setdefault(r["key"], {
+                    "key": r["key"], "cells": [],
+                    "deletion": None if r["partition_deletion_live"]
+                    else (0, 0)})
+                part["cells"].append(dict(
+                    name=r["name"], kind=r["cell_kind"],
+                    timestamp=r["writeTime"], value=r["value"] or b"",
+                    ttl=60, local_expiration=(
+                        0 if r["ttl_expired"] else N.LIVE_LOCAL_DELETION - 1)))
+            write_sstable(oracle, 1, list(parts.values()), cf=sid,
+                          compression="lz4")
+        want = files(oracle)
+        for trial in range(12):
+            cuts = sorted(rng.sample(range(1, len(rows)),
+                                     rng.randrange(0, 40)))
+            out = str(tmp_path / f"sink-{dedup}-{trial}")
+            list(N._cells_stream_writer(out, "lz4", dedup_runs=dedup)(
+                _native_batch(rows[a:b])
+                for a, b in zip([0] + cuts, cuts + [len(rows)])))
+            assert files(out) == want, (dedup, cuts)
