@@ -11,9 +11,11 @@ framing is fixed-layout big-endian, so both directions batch:
   struct), then EVERY field materializes in bulk: names/values by
   Arrow's take over the walked spans (spans_to_binary, also the
   protobuf reader's gather), timestamps by a strided numpy view.
-  Per-cell Python objects never exist. The walk resumes mid-partition
-  (decode_partitions open_part), so one partition of any size streams
-  through a bounded read window.
+  Per-cell Python objects never exist. decode_partitions is the one
+  cell-atom walker. It resumes mid-partition (open_part), so one
+  partition of any size streams through a bounded read window, and a
+  clustering slice's promoted-index block run is the same resume over
+  a buffer view that ends at the run's end.
 * ENCODE: whole partition RUNS (headers + cells + end markers) lay out
   as one block from FLAT columnar inputs: fixed fields and headers as
   numpy rows, names/values/keys as Arrow binary arrays, all taken in
@@ -42,18 +44,15 @@ HOW fast the same atoms move, not WHAT is read or written.
 
 from __future__ import annotations
 
-import struct
 from array import array
 
 import numpy as np
 
-_INT32_MAX = (1 << 31) - 1
+from cassandra_sstable_to_protocolbuf_spark.sources.sstable_native import (
+    FLAG_COUNTER, FLAG_DELETION, FLAG_EXPIRATION, FLAG_RANGE_TOMBSTONE,
+    LIVE_LOCAL_DELETION, LIVE_MARKED_AT)
 
-# cell flag bytes (mirror sstable_native's constants)
-_FLAG_DELETION = 0x01
-_FLAG_EXPIRATION = 0x02
-_FLAG_COUNTER = 0x04
-_FLAG_RANGE_TOMBSTONE = 0x10
+_INT32_MAX = (1 << 31) - 1
 
 # record-kind codes used by the decoder's columnar registers
 KIND_LIVE = 0
@@ -64,11 +63,6 @@ KIND_RANGE_TOMBSTONE = 4
 KIND_PARTITION = 5
 KIND_NAMES = ("LIVE", "DELETED", "EXPIRING", "COUNTER",
               "RANGE_TOMBSTONE", "PARTITION")
-
-# partition liveness sentinels (== sstable_native.LIVE_LOCAL_DELETION /
-# LIVE_MARKED_AT; asserted equal in tests)
-_LIVE_LDT = 0x7FFFFFFF
-_LIVE_MARKED = -(1 << 63)
 
 _M64 = (1 << 64) - 1
 
@@ -304,7 +298,16 @@ def decode_partitions(buf, base: int, end_hint: int, regs: _Registers,
     `emit_partition(key) -> bool` optionally decides per-partition
     emission (pushed keys / token range); skipped partitions are still
     WALKED (the stream has no other way to find their end) but append
-    nothing."""
+    nothing.
+
+    A promoted-index block run (a clustering slice's selected blocks,
+    whole atoms with no partition header or end-of-row marker) is a
+    resume: open_part=(key, live, True, None), start_at=run_start,
+    end_hint=run_start and a buffer view ending at the run's end. The
+    buffer edge stops the walk there, and a zero-length name returns at
+    once instead of reading on as a new partition header. The run is
+    clean only if the call returns (run_end, open_part is not None);
+    the caller raises on anything else."""
     n = len(buf)
     o = start_at
     s_extend = regs.spans.extend
@@ -351,7 +354,7 @@ def decode_partitions(buf, base: int, end_hint: int, regs: _Registers,
                                         "big", signed=True)
                 o = marked_off + 8
                 remaining = None
-            live = (ldt == _LIVE_LDT and marked == _LIVE_MARKED)
+            live = (ldt == LIVE_LOCAL_DELETION and marked == LIVE_MARKED_AT)
             emit = emit_partition(key) if emit_partition is not None \
                 else True
             if live_only and not live:
@@ -403,7 +406,7 @@ def decode_partitions(buf, base: int, end_hint: int, regs: _Registers,
                                   body))
                         nrec += 1
                     continue
-                if flags & _FLAG_RANGE_TOMBSTONE:
+                if flags & FLAG_RANGE_TOMBSTONE:
                     elen = (buf[body] << 8) | buf[body + 1]
                     end_off = body + 2
                     rt_ldt_off = end_off + elen
@@ -419,7 +422,7 @@ def decode_partitions(buf, base: int, end_hint: int, regs: _Registers,
                             buf[rt_ldt_off:rt_ldt_off + 4], "big",
                             signed=True)))
                     continue
-                if flags & (_FLAG_EXPIRATION | _FLAG_COUNTER):
+                if flags & (FLAG_EXPIRATION | FLAG_COUNTER):
                     ts_off = body + 8
                 else:  # DELETED (or unknown flags, read as LIVE)
                     ts_off = body
@@ -433,7 +436,7 @@ def decode_partitions(buf, base: int, end_hint: int, regs: _Registers,
                 o = end
                 if not emit or live_only:
                     continue
-                if flags & _FLAG_EXPIRATION:
+                if flags & FLAG_EXPIRATION:
                     s_extend((KIND_EXPIRING, name_off, nlen, ve, vlen,
                               ts_off))
                     nrec += 1
@@ -441,11 +444,11 @@ def decode_partitions(buf, base: int, end_hint: int, regs: _Registers,
                         buf[body:body + 4], "big", signed=True)))
                     lexp_append((nrec - 1, int.from_bytes(
                         buf[body + 4:body + 8], "big", signed=True)))
-                elif flags & _FLAG_COUNTER:
+                elif flags & FLAG_COUNTER:
                     s_extend((KIND_COUNTER, name_off, nlen, ve, vlen,
                               ts_off))
                     nrec += 1
-                elif flags & _FLAG_DELETION:
+                elif flags & FLAG_DELETION:
                     # DELETED surfaces value=b"" (empty, not null)
                     s_extend((KIND_DELETED, name_off, nlen, ve, 0,
                               ts_off))
@@ -467,106 +470,6 @@ def decode_partitions(buf, base: int, end_hint: int, regs: _Registers,
         if nrec > snap:
             parts.append((key, live))
             pc_append(nrec - snap)
-
-
-def decode_atom_run(buf, start: int, end: int, regs: _Registers,
-                    parts: list, key: bytes, live: bool) -> None:
-    """Promoted-index block read: walk the COMPLETE atoms tiling
-    buf[start:end) -- a promoted-index block run; the end-of-row marker
-    is outside every block, so a zero-length name or an atom overrunning
-    `end` is corruption and raises ValueError. Appends every atom's
-    spans into `regs` (ALL kinds -- the caller applies
-    live_only/name-range as a columnar mask) and one (key, live) group
-    into `parts`. NO partition marker record is emitted: the sliced
-    read surface is cell atoms only."""
-    o = start
-    s_extend = regs.spans.extend
-    ttl_append = regs.sparse_ttl.append
-    lexp_append = regs.sparse_lexp.append
-    nrec0 = nrec = len(regs)
-    snap_ttl = len(regs.sparse_ttl)
-    snap_lexp = len(regs.sparse_lexp)
-    n = len(buf)
-    try:
-        while o < end:
-            nlen = (buf[o] << 8) | buf[o + 1]
-            if nlen == 0:
-                raise ValueError(
-                    "zero-length cell name inside a promoted-index block")
-            name_off = o + 2
-            flag_off = name_off + nlen
-            flags = buf[flag_off]
-            body = flag_off + 1
-            if flags == 0:  # LIVE: the dominant fast branch
-                vlen_off = body + 8
-                vlen = ((buf[vlen_off] << 24) | (buf[vlen_off + 1] << 16)
-                        | (buf[vlen_off + 2] << 8) | buf[vlen_off + 3])
-                ve = vlen_off + 4
-                o = ve + vlen
-                s_extend((KIND_LIVE, name_off, nlen, ve, vlen, body))
-                nrec += 1
-                continue
-            if flags & _FLAG_RANGE_TOMBSTONE:
-                elen = (buf[body] << 8) | buf[body + 1]
-                end_off = body + 2
-                rt_ldt_off = end_off + elen
-                o = rt_ldt_off + 12
-                if o > n:
-                    raise IndexError
-                s_extend((KIND_RANGE_TOMBSTONE, name_off, nlen,
-                          end_off, elen, rt_ldt_off + 4))
-                nrec += 1
-                lexp_append((nrec - 1, int.from_bytes(
-                    buf[rt_ldt_off:rt_ldt_off + 4], "big", signed=True)))
-                continue
-            if flags & (_FLAG_EXPIRATION | _FLAG_COUNTER):
-                ts_off = body + 8
-            else:  # DELETED (or unknown flags, read as LIVE)
-                ts_off = body
-            vlen_off = ts_off + 8
-            vlen = ((buf[vlen_off] << 24) | (buf[vlen_off + 1] << 16)
-                    | (buf[vlen_off + 2] << 8) | buf[vlen_off + 3])
-            ve = vlen_off + 4
-            o = ve + vlen
-            if flags & _FLAG_EXPIRATION:
-                s_extend((KIND_EXPIRING, name_off, nlen, ve, vlen,
-                          ts_off))
-                nrec += 1
-                ttl_append((nrec - 1, int.from_bytes(
-                    buf[body:body + 4], "big", signed=True)))
-                lexp_append((nrec - 1, int.from_bytes(
-                    buf[body + 4:body + 8], "big", signed=True)))
-            elif flags & _FLAG_COUNTER:
-                s_extend((KIND_COUNTER, name_off, nlen, ve, vlen, ts_off))
-                nrec += 1
-            elif flags & _FLAG_DELETION:
-                if o > n:
-                    raise IndexError
-                s_extend((KIND_DELETED, name_off, nlen, ve, 0, ts_off))
-                nrec += 1
-                lexp_append((nrec - 1, int.from_bytes(
-                    buf[ve:ve + 4], "big", signed=True)
-                    if vlen == 4 else 0))
-            else:  # unknown flag combo: read as LIVE
-                s_extend((KIND_LIVE, name_off, nlen, ve, vlen, ts_off))
-                nrec += 1
-        if o != end:
-            raise ValueError(
-                f"atom overran its promoted-index block end by "
-                f"{o - end} bytes (corrupt block extents)")
-    except (IndexError, ValueError) as e:
-        # roll the partial run back: corruption surfaces as a clean
-        # ValueError with nothing half-appended (FAILFAST contract)
-        del regs.spans[nrec0 * 6:], regs.sparse_ttl[snap_ttl:], \
-            regs.sparse_lexp[snap_lexp:]
-        if isinstance(e, IndexError):
-            raise ValueError(
-                "truncated atom inside a promoted-index block run"
-            ) from None
-        raise
-    if nrec > nrec0:
-        regs.part_counts.append(nrec - nrec0)
-        parts.append((key, live))
 
 
 def _sparse_int32(pairs: list, nrec: int):
@@ -671,8 +574,8 @@ def error_batch(sstable_id: str, message: str):
 # encode: flat columnar partition runs -> one contiguous byte block
 # --------------------------------------------------------------------------
 
-_KIND_FLAG = np.array([0x00, _FLAG_DELETION, _FLAG_EXPIRATION,
-                       _FLAG_COUNTER], dtype=np.uint8)
+_KIND_FLAG = np.array([0x00, FLAG_DELETION, FLAG_EXPIRATION,
+                       FLAG_COUNTER], dtype=np.uint8)
 
 
 def binary_column(col):

@@ -1786,8 +1786,9 @@ def serialize_promoted_index(deletion: tuple[int, int],
 def parse_promoted_index(blob: bytes) -> dict | None:
     """None for an empty blob (narrow row); ValueError on corruption --
     a genuine file's blob is parsed defensively, never trusted blindly.
-    Returns {"ldt", "marked_at", "blocks": [(first, last, offset,
-    width), ...]} with blocks in file order."""
+    Returns {"ldt", "marked_at", "live", "blocks": [(first, last,
+    offset, width), ...]} with blocks in file order; "live" is True
+    when the DeletionTime is the live sentinel pair."""
     if not blob:
         return None
     try:
@@ -1821,7 +1822,10 @@ def parse_promoted_index(blob: bytes) -> dict | None:
                 f"entries")
     except struct.error as e:
         raise ValueError(f"corrupt promoted index: {e}") from e
-    return {"ldt": ldt, "marked_at": marked, "blocks": blocks}
+    return {"ldt": ldt, "marked_at": marked,
+            "live": (ldt == LIVE_LOCAL_DELETION
+                     and marked == LIVE_MARKED_AT),
+            "blocks": blocks}
 
 
 def _block_range_tests(lo: bytes | None, hi: bytes | None, cmp):
@@ -2646,8 +2650,7 @@ class SSTableNativeReader(DataSourceReader):
             if self.token_range is not None \
                     and not self._in_token_range(key):
                 continue
-            live = (pi["ldt"] == LIVE_LOCAL_DELETION
-                    and pi["marked_at"] == LIVE_MARKED_AT)
+            live = pi["live"]
             if self.live_only and not live:
                 continue
             for chunk in _chunk_block_runs(pi["blocks"], lo, hi,
@@ -2716,8 +2719,7 @@ class SSTableNativeReader(DataSourceReader):
                     narrow_n += 1
                     continue
                 flush_narrow(off)
-                live = (pi["ldt"] == LIVE_LOCAL_DELETION
-                        and pi["marked_at"] == LIVE_MARKED_AT)
+                live = pi["live"]
                 if self.live_only and not live:
                     continue  # dead wide partition: zero splits, zero IO
                 for chunk in _chunk_block_runs(pi["blocks"], lo, hi,
@@ -2922,10 +2924,14 @@ class SSTableNativeReader(DataSourceReader):
 
     def _read_fast_sliced(self, split) -> Iterator:
         """Clustering-slice read on the same codec: the selected
-        promoted-index block runs are contiguous byte regions, decoded
-        by cellcodec.decode_atom_run, with the per-atom residual applied
-        as one columnar mask per batch (_slice_batch_filter). Three
-        shapes:
+        promoted-index block runs are contiguous byte regions of whole
+        atoms. decode_runs walks each one with cellcodec.decode_partitions
+        as a resume of its partition (the block-run contract in that
+        docstring): every kind is decoded, a walk that does not end
+        exactly at the run's end raises ValueError naming the sstable and
+        the run, and the per-atom residual (slice bounds, live_only)
+        applies as one columnar mask per batch (_slice_batch_filter).
+        Three shapes:
 
         * _SliceRunSplit (plan-chunked runs inside one wide partition):
           read the runs (about SLICE_SPLIT_BYTES by plan), decode, mask.
@@ -2964,13 +2970,20 @@ class SSTableNativeReader(DataSourceReader):
                             f"logical offset {s} in {split.data_path}")
                     chunks.append(data)
             buf = b"".join(chunks)
+            view = memoryview(buf)
             regs = _cc._Registers()
             parts: list = []
-            off = 0
-            for (key, live, _s, _e), data in zip(runs, chunks):
-                _cc.decode_atom_run(buf, off, off + len(data), regs,
-                                    parts, key, live)
-                off += len(data)
+            run_end = 0
+            for (key, live, s, e), data in zip(runs, chunks):
+                run_start, run_end = run_end, run_end + len(data)
+                o, open_part = _cc.decode_partitions(
+                    view[:run_end], 0, run_start, regs, parts,
+                    start_at=run_start, open_part=(key, live, True, None))
+                if o != run_end or open_part is None:
+                    raise ValueError(
+                        f"corrupt promoted-index block run [{s}, {e}) in "
+                        f"{sid}: the atom walk stopped at logical offset "
+                        f"{s + o - run_start}")
             if len(regs):
                 out = self._slice_batch_filter(_cc.registers_to_arrow(
                     buf, regs, parts, sid, self.live_only))
@@ -3029,8 +3042,7 @@ class SSTableNativeReader(DataSourceReader):
             if self.token_range is not None \
                     and not self._in_token_range(key):
                 continue
-            live = (pi["ldt"] == LIVE_LOCAL_DELETION
-                    and pi["marked_at"] == LIVE_MARKED_AT)
+            live = pi["live"]
             if self.live_only and not live:
                 continue  # decided from the blob: zero data IO
             for chunk in _chunk_block_runs(pi["blocks"], lo, hi, budget,

@@ -457,7 +457,10 @@ def write_native_pb(spark, input_path: str, out_dir: str,
     converts. Returns (metrics, errors) -- per-file metrics dicts in
     WRITE_METRICS_SCHEMA's fields, sorted by sstable_id, one for each
     input without an error; {sstable_id: message}. `_parts` is removed
-    before the job and again when the call ends, whatever the outcome."""
+    before the job and again when the call ends, whatever the outcome.
+    The job is described as `convert <n> files` in Spark's UI and status
+    store; the caller's job description (and job group) stand again
+    afterwards."""
     from cassandra_sstable_to_protocolbuf_spark.sources.sstable_native import (
         SSTableNativeReader)
 
@@ -477,12 +480,15 @@ def write_native_pb(spark, input_path: str, out_dir: str,
     parts_root = os.path.join(out_dir, "_parts")
     shutil.rmtree(parts_root, ignore_errors=True)
     os.mkdir(parts_root)
+    caller_desc = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"convert {len(paths)} files")
     try:
         records = (sc.parallelize(list(enumerate(splits)), len(splits))
                    .mapPartitions(_native_split_writer(reader, parts_root))
                    .collect()) if splits else []
         return _commit_parts(records, list(paths), out_dir)
     finally:
+        sc.setLocalProperty("spark.job.description", caller_desc)
         shutil.rmtree(parts_root, ignore_errors=True)
 
 

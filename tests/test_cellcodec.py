@@ -29,11 +29,6 @@ from tests.sstable_oracle import (PerCellWriter, expected_rows, iter_rows,
 LIVE = (N.LIVE_LOCAL_DELETION, N.LIVE_MARKED_AT)
 
 
-def test_liveness_sentinels_match():
-    assert C._LIVE_LDT == N.LIVE_LOCAL_DELETION
-    assert C._LIVE_MARKED == N.LIVE_MARKED_AT
-
-
 def _mixed_fixture(dir_path, n_parts=60, seed=3):
     """Per-cell-writer sstable with every cell kind and a few dead
     partitions; returns (data_path, the per-partition build plan)."""

@@ -73,6 +73,7 @@ def test_promoted_golden_bytes():
     assert blob == want
     back = N.parse_promoted_index(blob)
     assert back == {"ldt": 0x7FFFFFFF, "marked_at": -(1 << 63),
+                    "live": True,
                     "blocks": [(b"aa", b"mm", 16, 300),
                                (b"mn", b"zz", 316, 120)]}
     assert N.parse_promoted_index(b"") is None
@@ -250,7 +251,7 @@ def test_dead_partition_skipped_without_data_io(tmp_path):
     index_path = data[:-len(N.DATA_SUFFIX)] + N.INDEX_SUFFIX
     pi = N.parse_promoted_index(
         {k: b for k, _o, _p, b in N.iter_index_promoted(index_path)}[b"p1"])
-    assert (pi["ldt"], pi["marked_at"]) == (5, 5)
+    assert (pi["ldt"], pi["marked_at"], pi["live"]) == (5, 5, False)
     orig = N.open_data_file
     reads = [0]
 
@@ -667,6 +668,72 @@ def test_slice_permissive_error_row(tmp_path, spark):
     with pytest.raises(Exception):
         N.read_native_cells(spark, str(tmp_path),
                             name_range=(b"n0000", b"n0050")).collect()
+
+
+@pytest.mark.parametrize("planned", [True, False],
+                         ids=["run_splits", "coarse_walk"])
+@pytest.mark.parametrize("corruption",
+                         ["zero_name", "value_past_block", "value_short"])
+def test_slice_block_run_corruption(tmp_path, corruption, planned):
+    """A corrupt atom inside a selected promoted-index block run fails
+    loudly. Three LIVE partitions of 4000 cells each, sliced to
+    [c00100, c03900); the atom c02000 of the last partition in file
+    order gets a zero name length, a value length past the block end,
+    or a value length too short (the walk then reads value bytes as the
+    next atom). FAILFAST raises ValueError; PERMISSIVE yields the good
+    prefix -- the clean read's first rows -- then exactly one ERROR
+    row. Both reader shapes: plan-chunked _SliceRunSplits and the
+    coarse split's index walk, batched small so a prefix exists."""
+    import numpy as np
+
+    per = 4000
+    keys = sorted((b"key-%04d" % i for i in range(3)),
+                  key=lambda k: (N.md5_token(k), k))
+    w = N.SSTableStreamWriter(str(tmp_path), 1)
+    for k in keys:
+        w.write_partitions_block(
+            [k], [None], np.array([per], np.int64),
+            [b"c%05d" % c for c in range(per)], np.zeros(per, np.int8),
+            np.arange(per, dtype=np.int64),
+            [b"value-%05d" % c for c in range(per)], None)
+    data = w.close()
+
+    def reader(**kw):
+        rdr = N.SSTableNativeReader(str(tmp_path), 10 ** 6,
+                                    name_range=(b"c00100", b"c03900"), **kw)
+        if not planned:
+            rdr.SLICE_INDEX_WALK_CAP = 0
+            rdr.SLICE_FAST_BATCH_BYTES = 16 << 10
+        return rdr
+
+    clean = read_rows(reader())
+    assert len(clean) == 3 * 3800
+    if planned:
+        assert all(isinstance(s, N._SliceRunSplit)
+                   for s in reader().partitions())
+    raw = bytearray(open(data, "rb").read())
+    at = raw.rfind(b"\x00\x06c02000")  # name length + name
+    vlen_at = at + 2 + 6 + 1 + 8       # past the flags and timestamp
+    if corruption == "zero_name":
+        raw[at:at + 2] = b"\x00\x00"
+    elif corruption == "value_past_block":
+        raw[vlen_at:vlen_at + 4] = struct.pack(">i", 1 << 24)
+    else:
+        raw[vlen_at:vlen_at + 4] = struct.pack(">i", 3)
+    with open(data, "wb") as f:
+        f.write(raw)
+
+    with pytest.raises(ValueError, match="promoted-index block"):
+        read_rows(reader())
+    rows = read_rows(reader(permissive=True))
+    assert [r[5] for r in rows].count("ERROR") == 1
+    assert rows[-1][5] == "ERROR"
+    assert b"promoted-index block" in rows[-1][3]
+    good = rows[:-1]
+    assert good == clean[:len(good)]
+    assert 2 * 3800 <= len(good) < len(clean)
+    if planned:
+        assert len(good) == 2 * 3800  # each partition is its own split
 
 
 def test_foreign_ka_fixture_is_stamp_free_and_gate_composes(spark):

@@ -382,6 +382,43 @@ def test_native_writer_scan_order_golden(spark, tmp_path, fixture):
     assert _row_multiset(rows) == _row_multiset(sorted_rows)
 
 
+def test_native_writer_job_carries_its_name(spark, tmp_path):
+    """convert's one Spark job is described `convert <n> files` in the
+    status store, and the caller's job group and description stand
+    again once the call returns."""
+    import os
+
+    from cassandra_sstable_to_protocolbuf_spark.sources.sstable_pb import (
+        write_native_pb)
+
+    src = str(tmp_path / "in")
+    for gen in (1, 2):
+        write_sstable(os.path.join(src, f"g{gen}"), gen, [{
+            "key": b"k%d" % gen, "cells": [
+                {"name": b"a", "kind": "LIVE", "timestamp": 1,
+                 "value": b"v"}]}])
+    sc = spark.sparkContext
+    group = f"caller-{tmp_path.name}"
+    sc.setJobGroup(group, "caller's description")
+    try:
+        metrics, errors = write_native_pb(spark, src, str(tmp_path / "out"))
+        assert (len(metrics), errors) == (2, {})
+        assert sc.getLocalProperty("spark.jobGroup.id") == group
+        assert sc.getLocalProperty("spark.job.description") \
+            == "caller's description"
+    finally:
+        sc._jsc.clearJobGroup()
+
+    def text(opt):  # scala Option[String] -> str | None
+        return opt.get() if opt.isDefined() else None
+
+    jobs = sc._jsc.sc().statusStore().jobsList(None)
+    descs = [text(job.description())
+             for job in (jobs.apply(i) for i in range(jobs.size()))
+             if text(job.jobGroup()) == group]
+    assert descs == ["convert 2 files"]
+
+
 def _multi_split_fixture(d, generation=1, compression=None):
     return write_sstable(d, generation, [
         {"key": b"key-%05d" % i,
