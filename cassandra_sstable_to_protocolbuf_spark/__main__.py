@@ -45,8 +45,6 @@ def convert(input_path: str, output_dir: str,
             continue_on_error: bool = False) -> int:
     from cassandra_sstable_to_protocolbuf_spark.session import (
         ensure_shipped, get_spark)
-    from cassandra_sstable_to_protocolbuf_spark.sources.sstable_native import (
-        discover_data_files)
     from cassandra_sstable_to_protocolbuf_spark.sources.sstable_pb import (
         write_native_pb)
 
@@ -54,24 +52,21 @@ def convert(input_path: str, output_dir: str,
     spark.sparkContext.setLogLevel("ERROR")
     ensure_shipped(spark)
 
-    # the scan's own discovery (manifest-first, recursive walk, then the
-    # maintenance transaction log's visibility filter): inputs an
-    # in-place OPTIMIZE already replaced get no output and no metrics
-    # (metrics and outputs are keyed by sstable_id, the basename sans
-    # -Data.db; write_native_pb refuses two inputs sharing one)
-    id_to_path = {os.path.basename(p)[:-len("-Data.db")]: p
-                  for p in discover_data_files(input_path)}
-
     # one job, one task per scan split; every input gets an output, an
-    # empty stream when nothing in it is live (Runner.java:75-82).
-    # --continue-on-error plans the scan PERMISSIVE: like the reference
-    # (Runner.java:84-87), a corrupt file prints its error, gets no
-    # output, and the other files still convert.
+    # empty stream when nothing in it is live (Runner.java:75-82). The
+    # inputs are the scan's own discovery (manifest-first, recursive
+    # walk, then the maintenance transaction log's visibility filter),
+    # listed once: inputs an in-place OPTIMIZE already replaced get no
+    # output and no metrics, and each metric carries the Data.db path
+    # it was planned from. --continue-on-error plans the scan
+    # PERMISSIVE: like the reference (Runner.java:84-87), a corrupt
+    # file prints its error, gets no output, and the other files still
+    # convert.
     metrics, errors = write_native_pb(spark, input_path, output_dir,
                                       permissive=continue_on_error)
     total_saved = 0
     for m in metrics:
-        src = os.path.getsize(id_to_path[m["sstable_id"]])
+        src = os.path.getsize(m["data_path"])
         saved = src - m["compressed_bytes"]
         total_saved += saved
         print(f"{m['sstable_id']}: rows={m['n_rows']} cells={m['n_cells']} "

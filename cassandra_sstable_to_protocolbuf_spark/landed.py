@@ -56,16 +56,14 @@ def lww_winners(df, extra_group_cols: tuple = ()) -> "DataFrame":
                     *extra_group_cols))
 
 
-def land_to_parquet(spark: SparkSession, input_path: str, out_dir: str,
-                    partitions_per_split: int | None = None) -> None:
+def land_to_parquet(spark: SparkSession, input_path: str,
+                    out_dir: str) -> None:
     """Scan -> live filter -> LWW -> parquet partitioned by the winning
     cell's origin sstable. Overwrites `out_dir`."""
     from cassandra_sstable_to_protocolbuf_spark.sources.sstable_native import (
         read_native_cells)
 
-    cells = read_native_cells(spark, input_path,
-                              partitions_per_split=partitions_per_split,
-                              live_only=True)
+    cells = read_native_cells(spark, input_path, live_only=True)
     (lww_live_cells(cells)
      .repartition(F.col("sstable_id"))
      .write.mode("overwrite").partitionBy("sstable_id").parquet(out_dir))

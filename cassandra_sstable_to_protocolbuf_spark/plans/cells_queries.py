@@ -529,13 +529,14 @@ def _single_file_fixture_dir(spark: SparkSession, sf_dir: str) -> str:
 
 def sst_single_file_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S3 at the single-giant-file extreme: one sstable holding the
-    whole corpus, scanned through summary-strided byte-range splits
-    (partitionsPerSplit=4096 -> one task per ~4096 partitions). This is
-    the read shape a 100 TB table's largest files force: parallelism
-    must come from WITHIN the file. tests/test_single_file_splits.py
-    pins the actual speedup of N splits over 1 split; this gate pins
-    the content, and its bench line records the parallel scan's wall
-    time next to the five-file sst_native_scan twin."""
+    whole corpus, scanned through adaptive byte-range splits (a cut
+    every clamp(bytes / defaultParallelism, 1 MiB, 128 MiB) logical
+    bytes) packed into tasks. This is the read shape a 100 TB table's
+    largest files force: parallelism must come from WITHIN the file.
+    tests/test_single_file_splits.py pins the actual speedup of N
+    splits over 1 split; this gate pins the content, and its bench line
+    records the parallel scan's wall time next to the five-file
+    sst_native_scan twin."""
     from cassandra_sstable_to_protocolbuf_spark.sources.sstable_native import (
         read_native_cells)
 

@@ -876,11 +876,11 @@ def bloom_bit_indexes(h1: np.ndarray, h2: np.ndarray, hash_count: int,
 
 
 def bloom_add_batch(bloom, keys: list) -> None:
-    """Vectorized BloomFilter.add over many keys: murmur lanes + a
-    boolean-mask scatter packed back into words (np.packbits with
-    bitorder='little' reproduces the words[b >> 6] |= 1 << (b & 63)
-    convention exactly). Bit-identical to per-key add() (pinned in
-    tests); memory stays O(filter bits) per call."""
+    """Set many keys' bloom bits at once: murmur lanes + a boolean-mask
+    scatter packed back into words (np.packbits with bitorder='little'
+    reproduces the words[b >> 6] |= 1 << (b & 63) convention exactly).
+    Bit-identical to the per-key oracle, tests/sstable_oracle.py
+    bloom_add; memory stays O(filter bits) per call."""
     if not keys:
         return
     h1, h2 = murmur3_hash128_batch(keys)

@@ -339,11 +339,6 @@ class BloomFilter:
             u = (h1 + i * h2) & _M64
             yield ((1 << 64) - u if u >= 1 << 63 else u) % m
 
-    def add(self, key: bytes) -> None:
-        words = self.words
-        for b in self._bits(key):
-            words[b >> 6] |= 1 << (b & 63)
-
     def might_contain(self, key: bytes) -> bool:
         words = self.words
         return all(words[b >> 6] & (1 << (b & 63)) for b in self._bits(key))
@@ -1986,10 +1981,13 @@ def read_summary(summary_path: str) -> dict:
 
 def load_summary(data_path: str) -> dict | None:
     """loadSummary analog (SSTableReaderPatched.java:180-211): None when
-    the component is absent or the format version predates summaries
-    (version.offHeapSummaries, i.e. pre-2.0 'ic'); a corrupt file is
-    deleted so the caller falls back to rebuilding from the index, the
-    reference's delete-and-rebuild path."""
+    the component is absent, the format version predates summaries
+    (version.offHeapSummaries, i.e. pre-2.0 'ic') or the file is not in
+    this engine's format (no SUMMARY_MAGIC: a genuine Cassandra
+    summary, left in place -- planning then streams Index.db). An
+    engine-format file that fails to parse is deleted so the caller
+    falls back to rebuilding from the index, the reference's
+    delete-and-rebuild path."""
     summary_path = data_path[:-len(DATA_SUFFIX)] + SUMMARY_SUFFIX
     if not os.path.exists(summary_path):
         return None
@@ -1998,6 +1996,9 @@ def load_summary(data_path: str) -> dict | None:
             return None
     except ValueError:
         pass  # unnamed fixture paths: current layout, summaries allowed
+    with open(summary_path, "rb") as f:
+        if f.read(len(SUMMARY_MAGIC)) != SUMMARY_MAGIC:
+            return None
     try:
         return read_summary(summary_path)
     except ValueError:
@@ -2090,16 +2091,18 @@ class SSTableNativeReader(DataSourceReader):
     only PARTITION markers + LIVE cells reach Spark.
     """
 
-    # Adaptive split-size bounds (partitions_per_split=None): target
-    # logical bytes per split is clamp(total/scan_parallelism, MIN, MAX).
-    # MAX mirrors Spark's own files.maxPartitionBytes default (128 MiB)
-    # -- at 100 TB the split count is bytes-derived, never a constant;
-    # MIN keeps ~parallelism-many splits on small inputs, where the
-    # per-task Python-runner handshake (70-120 ms of wall per task on a
-    # 4-core host, barely overlapping across tasks) would otherwise
-    # dominate a 2 MiB split's 50 ms of decode. A DataSource scan packs
-    # splits into tasks anyway (_PackedNativeReader), so an explicit
-    # fine partitions_per_split does not multiply that cost either.
+    # Adaptive split size (partitions_per_split=None): a new split
+    # starts once clamp(total / scan_parallelism, MIN, MAX) logical
+    # bytes have passed since the last cut (_cut_rule), whether the
+    # boundaries come from the summary or from Index.db. MAX mirrors
+    # Spark's own files.maxPartitionBytes default (128 MiB) -- at
+    # 100 TB the split count is bytes-derived, never a constant; MIN
+    # keeps small inputs from planning splits so fine that the per-task
+    # Python-runner handshake (70-120 ms of wall per task on a 4-core
+    # host, barely overlapping across tasks) outweighs their decode:
+    # write_native_pb runs one task per split. A DataSource scan packs
+    # splits into tasks (_PackedNativeReader), so there an explicit
+    # fine partitions_per_split does not multiply that cost.
     SPLIT_TARGET_MIN_BYTES = 1 << 20
     SPLIT_TARGET_MAX_BYTES = 128 << 20
 
@@ -2284,35 +2287,19 @@ class SSTableNativeReader(DataSourceReader):
             raise FileNotFoundError(f"no {DATA_SUFFIX} files under {self.path}")
         return files
 
-    def _split_stride(self, size: int, summary: dict | None) -> int:
-        """Index entries per byte-range split for one file.
-
-        Explicit partitions_per_split (tests, fixed-granularity callers)
-        is honored verbatim. The adaptive default derives the stride
-        from DATA VOLUME (guide: partitioning must be scale-adaptive,
-        not a constant tuned for one deployment): target split bytes =
-        clamp(corpus_total / scan_parallelism,
-              SPLIT_TARGET_MIN_BYTES, SPLIT_TARGET_MAX_BYTES),
-        stride = target / avg_partition_bytes. On local[32] over a
-        35 MiB fixture that yields ~32 splits (vs 135 at the old fixed
-        4096 stride -- measured 3.0 -> 1.8 s, per-task Python-runner
-        overhead dominating tiny splits); on a 100 TB corpus it yields
-        128 MiB splits, the same ceiling Spark's own parquet planner
-        uses. The stride rounds down to a multiple of the summary
-        interval so planning keeps the zero-Index.db-IO summary path.
-        """
-        if self.partitions_per_split is not None:
-            return self.partitions_per_split
-        if summary is None or not summary["entries"]:
-            return 4096  # no entry-count estimate: legacy stride
-        n_entries = max(len(summary["entries"]) * summary["interval"], 1)
-        avg = max(size // n_entries, 1)
+    def _cut_rule(self, size: int):
+        """The one split-cut predicate for one file: cut(n, nbytes) is
+        true once a new split should start, given the n index entries
+        and nbytes logical bytes since the last cut. An explicit
+        partitions_per_split (tests, fixed-granularity callers) cuts
+        every k entries; the adaptive default cuts by DATA VOLUME,
+        every _split_target_bytes(size) bytes, so the split count
+        follows the data, not a constant tuned for one deployment."""
+        k = self.partitions_per_split
+        if k is not None:
+            return lambda n, nbytes: n >= k
         target = self._split_target_bytes(size)
-        k = max(int(target // avg), 1)
-        interval = summary["interval"]
-        if k >= interval:
-            k -= k % interval
-        return k
+        return lambda n, nbytes: nbytes >= target
 
     def _split_target_bytes(self, size: int) -> int:
         """Adaptive bytes-per-split goal for one file. Token-interval
@@ -2455,7 +2442,6 @@ class SSTableNativeReader(DataSourceReader):
                 f"{part_name}")
         size = self._logical_size(data_path)
         summary = load_summary(data_path)
-        k = self._split_stride(size, summary)
 
         if self.verify:
             # digest granularity is the whole file: one verified split
@@ -2483,52 +2469,14 @@ class SSTableNativeReader(DataSourceReader):
 
         if self.name_range is not None:
             sliced = self._slice_splits(sstable_id, data_path, index_path,
-                                        token, size, k)
+                                        token, size)
             if sliced is not None:
                 splits.extend(sliced)
                 return splits
             # fallback (huge index / old format / unparseable blob):
             # coarse splits below, executor-side index walk as before
 
-        # S3: split boundaries every k-th index entry. Planning never
-        # materializes the index: either stride over the sampled
-        # summary (no Index.db IO at all) or stream the index keeping
-        # only every k-th offset -- O(entries/k) driver memory, the
-        # summary-chunking analog of SSTableReaderPatched.java:138-178.
-        if self.partitions_per_split is None and summary is not None \
-                and len(summary["entries"]) < self.scan_parallelism:
-            # coarse summary (few or very wide partitions): the
-            # entry-count estimate behind the stride is off by up to
-            # interval-x (one summary entry stands for <= interval real
-            # partitions), which left wide-partition files as one fat
-            # split. Derive boundaries from EXACT index offsets against
-            # the byte target instead -- the index has < parallelism x
-            # interval entries here, so the plan-time walk is trivial,
-            # and at scale (summaries with >= parallelism entries) this
-            # branch never fires.
-            target = self._split_target_bytes(size)
-            starts, first, last = [], None, None
-            next_at = 0
-            for key, off, ipos in iter_index(index_path):
-                if first is None:
-                    first = key
-                last = key
-                if off >= next_at:
-                    starts.append((off, key, ipos))
-                    next_at = off + target
-        elif summary is not None and k % summary["interval"] == 0:
-            stride = k // summary["interval"]
-            starts = [(data_pos, key, ipos) for j, (key, ipos, data_pos)
-                      in enumerate(summary["entries"]) if j % stride == 0]
-            first, last = summary["first"], summary["last"]
-        else:
-            starts, first, last = [], None, None
-            for i, (key, off, ipos) in enumerate(iter_index(index_path)):
-                if first is None:
-                    first = key
-                last = key
-                if i % k == 0:
-                    starts.append((off, key, ipos))
+        starts, first, last = self._split_starts(index_path, summary, size)
         if first is not None:
             # validate() analog (SSTableReaderPatched.java:213-216):
             # the first decorated key must not sort after the last.
@@ -2557,6 +2505,43 @@ class SSTableNativeReader(DataSourceReader):
             splits.append(_SSTableSplit(sstable_id, data_path, start, end,
                                         index_start=ipos))
         return splits
+
+    def _split_starts(self, index_path: str, summary: dict | None,
+                      size: int) -> tuple[list, bytes | None, bytes | None]:
+        """S3: one file's split boundaries, as ([(data_offset, key,
+        index_pos)] of each split's first entry, first key, last key).
+
+        One walk over one entry source, cutting where _cut_rule fires.
+        The source is the sampled summary -- zero Index.db IO -- when it
+        can carry the cut: an explicit k that is a multiple of its
+        interval, or adaptive sizing with at least scan_parallelism
+        entries (with fewer, one sampled entry can span more than a
+        split's bytes of wide partitions). Otherwise Index.db streams,
+        keeping only the cut entries: O(splits) driver memory, never
+        the materialized index -- the summary-chunking analog of
+        SSTableReaderPatched.java:138-178. A summary entry counts as
+        `interval` index entries."""
+        k = self.partitions_per_split
+        use_summary = summary is not None and (
+            len(summary["entries"]) >= self.scan_parallelism
+            if k is None else k % summary["interval"] == 0)
+        if use_summary:
+            weight = summary["interval"]
+            entries = ((key, off, ipos)
+                       for key, ipos, off in summary["entries"])
+        else:
+            weight, entries = 1, iter_index(index_path)
+        cut = self._cut_rule(size)
+        starts, last, n = [], None, 0
+        for key, off, ipos in entries:
+            if not starts or cut(n, off - starts[-1][0]):
+                starts.append((off, key, ipos))
+                n = 0
+            n += weight
+            last = key
+        if use_summary:
+            return starts, summary["first"], summary["last"]
+        return starts, starts[0][1] if starts else None, last
 
     def _seek_splits(self, sstable_id: str, data_path: str, index_path: str,
                      summary: dict | None, token, size: int,
@@ -2662,8 +2647,7 @@ class SSTableNativeReader(DataSourceReader):
         return out
 
     def _slice_splits(self, sstable_id: str, data_path: str,
-                      index_path: str, token, size: int,
-                      stride: int) -> list | None:
+                      index_path: str, token, size: int) -> list | None:
         """Plan-time split derivation for a clustering slice: walk the
         index ONCE on the driver, skip whole partitions whose promoted
         blocks (or liveness) exclude the slice, and chunk each wide
@@ -2685,7 +2669,7 @@ class SSTableNativeReader(DataSourceReader):
             return None
         lo, hi = self.name_range
         out: list = []
-        k = stride
+        cut = self._cut_rule(size)
         narrow_start = narrow_ipos = None
         narrow_n = 0
 
@@ -2710,9 +2694,11 @@ class SSTableNativeReader(DataSourceReader):
                     continue
                 pi = parse_promoted_index(blob)
                 if pi is None:
-                    # narrow row: coalesce into classic splits, at most
-                    # k rows each (the executor walk emit-filters)
-                    if narrow_n >= k:
+                    # narrow row: coalesce into classic splits, closed
+                    # by the plain scan's cut rule (the executor walk
+                    # emit-filters)
+                    if narrow_start is not None \
+                            and cut(narrow_n, off - narrow_start):
                         flush_narrow(off)  # close the full window here
                     if narrow_start is None:
                         narrow_start, narrow_ipos = off, ipos

@@ -347,20 +347,18 @@ def write_cells_pb(cells_binary: DataFrame, out_dir: str) -> DataFrame:
                         WRITE_METRICS_SCHEMA))
 
 
-class _SplitError(Exception):
-    """A PERMISSIVE scan hit corruption in the split being written."""
-
-
 def _native_split_writer(reader, parts_root: str):
-    """mapPartitions function over (split index, split) pairs: drain
-    reader.read(split) -- live-only batches in scan order, F1/F2 applied
-    by the source -- add the writer's `live` flag (PARTITION markers are
-    the only non-LIVE rows) and write the split's part into
-    <parts_root>/<split index>/. Yields one record per written file (the
-    writer's metrics plus `split`) or, when a PERMISSIVE read reports
-    corruption, one error record for the split's sstable; raising through
-    the writer aborts that split's temp file, so a failed split leaves no
-    part."""
+    """mapPartitions function over (split index, split) pairs: drain the
+    reader's decode of each split (reader._decode_split) -- live-only
+    batches in scan order, F1/F2 applied by the source -- add the
+    writer's `live` flag (PARTITION markers are the only non-LIVE rows)
+    and write the split's part into <parts_root>/<split index>/. Yields
+    one record per written file (the writer's metrics plus `split`).
+    An exception aborts the split's temp file, so a failed split leaves
+    no part; FAILFAST raises it, and PERMISSIVE (the reader's mode)
+    yields one error record for the split's sstable instead, as the
+    reference's loop reports a failed file and goes on
+    (Runner.java:84-87)."""
 
     def run(items):
         import pyarrow.compute as pc
@@ -371,40 +369,34 @@ def _native_split_writer(reader, parts_root: str):
                 os.mkdir(part_dir)  # never recreates a removed parts_root
             except FileExistsError:
                 pass  # a retried task overwrites its own part
-
-            def batches():
-                for b in reader.read(split):
-                    kind = b.column("cell_kind")
-                    row = (pc.index(kind, "ERROR").as_py()
-                           if reader.permissive else -1)
-                    if row >= 0:
-                        raise _SplitError(
-                            b.column("value")[row].as_py().decode(
-                                "utf-8", "replace"))
-                    yield b.append_column("live", pc.equal(kind, "LIVE"))
-
+            batches = (b.append_column(
+                "live", pc.equal(b.column("cell_kind"), "LIVE"))
+                for b in reader._decode_split(split))
             try:
-                for m in _pb_flat_stream_writer(part_dir)(batches()):
+                for m in _pb_flat_stream_writer(part_dir)(batches):
                     for rec in m.to_pylist():
                         yield {**rec, "split": idx}
-            except _SplitError as e:
+            except Exception as e:  # noqa: BLE001 -- error channel
+                if not reader.permissive:
+                    raise
                 yield {"sstable_id": split.sstable_id, "split": idx,
-                       "error": str(e)}
+                       "error": str(e)[:500]}
 
     return run
 
 
-def _commit_parts(records: list[dict], sstable_ids: list[str],
+def _commit_parts(records: list[dict], data_paths: dict[str, str],
                   out_dir: str) -> tuple[list[dict], dict[str, str]]:
-    """Driver-side publish of write_native_pb's parts: per sstable, its
+    """Driver-side publish of write_native_pb's parts for the inputs in
+    data_paths ({sstable_id: planned Data.db path}): per sstable, its
     parts in split order -- one part is renamed into place, several are
     concatenated (the later parts appended to the first, then renamed;
     zstd frames concatenate into one valid stream) -- with rows, cells,
     raw bytes and writer seconds summed. An sstable with no part gets an
     empty stream, as the reference opens an output per input even when
     nothing is live (Runner.java:75-82). An sstable with an error record
-    gets no output. Returns (metrics sorted by sstable_id,
-    {sstable_id: first error message})."""
+    gets no output. Returns (metrics sorted by sstable_id, each with its
+    input's `data_path`; {sstable_id: first error message})."""
     records = sorted(records, key=lambda r: r["split"])
     errors: dict[str, str] = {}
     parts: dict[str, list[dict]] = {}
@@ -414,10 +406,11 @@ def _commit_parts(records: list[dict], sstable_ids: list[str],
         else:
             parts.setdefault(r["sstable_id"], []).append(r)
     metrics = []
-    for sid in sorted(set(sstable_ids) - set(errors)):
+    for sid in sorted(set(data_paths) - set(errors)):
         ps = parts.get(sid)
         if not ps:
-            metrics.append(_close_pb_file(_open_pb_file(out_dir, sid)))
+            metrics.append({**_close_pb_file(_open_pb_file(out_dir, sid)),
+                            "data_path": data_paths[sid]})
             continue
         final = os.path.join(out_dir, f"{sid}-Data.db{FILE_SUFFIX}")
         head = ps[0]["path"]
@@ -434,6 +427,7 @@ def _commit_parts(records: list[dict], sstable_ids: list[str],
             "raw_bytes": sum(p["raw_bytes"] for p in ps),
             "compressed_bytes": os.path.getsize(final),
             "seconds": f"{sum(float(p['seconds']) for p in ps):.3f}",
+            "data_path": data_paths[sid],
         })
     return metrics, errors
 
@@ -455,9 +449,10 @@ def write_native_pb(spark, input_path: str, out_dir: str,
     PERMISSIVE: a file whose plan or any split reports corruption gets no
     output and one entry in the returned errors, and every other file
     converts. Returns (metrics, errors) -- per-file metrics dicts in
-    WRITE_METRICS_SCHEMA's fields, sorted by sstable_id, one for each
-    input without an error; {sstable_id: message}. `_parts` is removed
-    before the job and again when the call ends, whatever the outcome.
+    WRITE_METRICS_SCHEMA's fields plus the input's planned `data_path`,
+    sorted by sstable_id, one for each input without an error;
+    {sstable_id: message}. `_parts` is removed before the job and again
+    when the call ends, whatever the outcome.
     The job is described as `convert <n> files` in Spark's UI and status
     store; the caller's job description (and job group) stand again
     afterwards."""
@@ -486,7 +481,7 @@ def write_native_pb(spark, input_path: str, out_dir: str,
         records = (sc.parallelize(list(enumerate(splits)), len(splits))
                    .mapPartitions(_native_split_writer(reader, parts_root))
                    .collect()) if splits else []
-        return _commit_parts(records, list(paths), out_dir)
+        return _commit_parts(records, paths, out_dir)
     finally:
         sc.setLocalProperty("spark.job.description", caller_desc)
         shutil.rmtree(parts_root, ignore_errors=True)

@@ -13,6 +13,8 @@ struct write and one promoted-index block step per atom (add_cell, and
 a per-atom add_range_tombstone), independent of the block encoder and
 of cellcodec.fold_blocks, which tests pin byte-identical to it.
 write_sstable, the tests' list-of-dicts fixture writer, drives it.
+bloom_add sets one key's bloom bits at a time, the oracle for
+cellcodec.bloom_add_batch.
 
 The per-row protobuf codec below is the golden oracle for the
 engine's `.proto.zst` format (sstable.proto's Row/Column, framed by
@@ -179,6 +181,15 @@ def read_rows(reader, splits=None) -> list[tuple]:
         splits = reader.partitions()
     return [r for s in splits for b in reader.read(s)
             for r in zip(*(c.to_pylist() for c in b.columns))]
+
+
+def bloom_add(bloom: N.BloomFilter, key: bytes) -> None:
+    """Set one key's bits, one bit at a time: the scalar oracle that
+    cellcodec.bloom_add_batch, the writer's bloom build, is pinned
+    against."""
+    words = bloom.words
+    for b in bloom._bits(key):
+        words[b >> 6] |= 1 << (b & 63)
 
 
 class PerCellWriter(N.SSTableStreamWriter):

@@ -11,13 +11,13 @@ import os
 import pytest
 
 from cassandra_sstable_to_protocolbuf_spark.sources import sstable_native as N
-from tests.sstable_oracle import PerCellWriter, write_sstable
+from tests.sstable_oracle import PerCellWriter, bloom_add, write_sstable
 
 
 def test_roundtrip_and_layout(tmp_path):
     b = N.BloomFilter.build(500, 0.01)
     for i in range(500):
-        b.add(b"key-%d" % i)
+        bloom_add(b, b"key-%d" % i)
     path = str(tmp_path / "x-Filter.db")
     b.write(path)
     back = N.BloomFilter.parse(path)
@@ -35,7 +35,7 @@ def test_no_false_negatives_and_fp_bound():
     b = N.BloomFilter.build(n, 0.01)
     keys = [b"doc|%d|%d" % (i, i * 31) for i in range(n)]
     for k in keys:
-        b.add(k)
+        bloom_add(b, k)
     assert all(b.might_contain(k) for k in keys), "false negative!"
     fp = sum(b.might_contain(b"absent-%d" % i) for i in range(20_000))
     assert fp / 20_000 < 0.03, f"fp rate {fp / 20_000} vs 0.01 target"
@@ -256,7 +256,7 @@ def test_bloom_trust_is_evidence_gated(tmp_path):
     d_c = fresh_copy("c")
     wrong = N.BloomFilter.build(20, 0.01)
     for i in range(20):
-        wrong.add(b"other-%d" % i)
+        bloom_add(wrong, b"other-%d" % i)
     wrong.write(d_c[:-len(N.DATA_SUFFIX)] + N.FILTER_SUFFIX)
     os.unlink(d_c[:-len(N.DATA_SUFFIX)] + N.STATS_SUFFIX)
     assert N.load_trusted_bloom(d_c) is None

@@ -23,8 +23,8 @@ import pytest
 
 from cassandra_sstable_to_protocolbuf_spark.sources import cellcodec as C
 from cassandra_sstable_to_protocolbuf_spark.sources import sstable_native as N
-from tests.sstable_oracle import (PerCellWriter, expected_rows, iter_rows,
-                                  read_rows, write_sstable)
+from tests.sstable_oracle import (PerCellWriter, bloom_add, expected_rows,
+                                  iter_rows, read_rows, write_sstable)
 
 LIVE = (N.LIVE_LOCAL_DELETION, N.LIVE_MARKED_AT)
 
@@ -316,7 +316,7 @@ def test_murmur_and_bloom_batch_bit_identical():
     b_scalar = N.BloomFilter.build(len(keys), 0.01)
     b_batch = N.BloomFilter.build(len(keys), 0.01)
     for k in keys:
-        b_scalar.add(k)
+        bloom_add(b_scalar, k)
     C.bloom_add_batch(b_batch, keys)
     assert b_scalar.words == b_batch.words
     for k in keys:

@@ -186,3 +186,75 @@ def test_read_summary_rejects_bad_magic(tmp_path):
         f.write(b"NOTSUM" + struct.pack(">iq", 128, 0))
     with pytest.raises(ValueError):
         N.read_summary(p)
+
+
+def test_foreign_summary_left_in_place(tmp_path):
+    """A Summary.db without the engine's magic (a genuine Cassandra
+    one) is foreign, not corrupt: planning ignores it and never deletes
+    it, and the scan equals the scan with no summary at all."""
+    data = _mk(tmp_path, 300)
+    spath = data[:-len(N.DATA_SUFFIX)] + N.SUMMARY_SUFFIX
+    # Cassandra 2.0 IndexSummary header: indexInterval, entry count,
+    # off-heap byte size, then the sampled entries
+    foreign = struct.pack(">iiq", 128, 3, 96) + bytes(range(96))
+    with open(spath, "wb") as f:
+        f.write(foreign)
+    assert N.load_summary(data) is None
+    reader = N.SSTableNativeReader(str(tmp_path), 128)
+    with_foreign = read_rows(reader)
+    with open(spath, "rb") as f:
+        assert f.read() == foreign
+    os.unlink(spath)
+    assert read_rows(N.SSTableNativeReader(str(tmp_path), 128)) \
+        == with_foreign
+    assert len([r for r in with_foreign if r[5] == "PARTITION"]) == 300
+
+
+def _lz4_200k(dir_path) -> str:
+    """One LZ4 sstable of 200k partitions of 4 cells (~35 MB logical),
+    written through the block writer; returns its Data.db path."""
+    import numpy as np
+
+    n, per = 200_000, 4
+    keys = sorted((b"key-%07d" % i for i in range(n)),
+                  key=lambda k: (N.md5_token(k), k))
+    names = [b"c%d" % c for c in range(per)]
+    w = N.SSTableStreamWriter(str(dir_path), 1, cf="lz",
+                              compression="lz4")
+    step = 20_000
+    for s in range(0, n, step):
+        chunk = keys[s:s + step]
+        w.write_partitions_block(
+            chunk, [None] * len(chunk), np.full(len(chunk), per, np.int64),
+            names * len(chunk), np.zeros(per * len(chunk), np.int8),
+            np.arange(per * len(chunk), dtype=np.int64),
+            [b"value-%s-%d" % (k, c) for k in chunk for c in range(per)])
+    w.close()
+    (data,) = N.discover_data_files(str(dir_path))
+    return data
+
+
+def test_summaryless_file_plans_by_bytes(tmp_path):
+    """Adaptive sizing cuts by logical bytes whatever the entry source:
+    with Summary.db removed, the plan streams Index.db and still holds
+    about as many splits as with the summary, none of them (but the
+    file's last) under SPLIT_TARGET_MIN_BYTES."""
+    data = _lz4_200k(tmp_path)
+    size = N.SSTableNativeReader._logical_size(data)
+    assert size > 30 << 20
+
+    def plan():
+        reader = N.SSTableNativeReader(str(tmp_path), None,
+                                       scan_parallelism=4)
+        return sorted((s.start, s.end) for s in reader.partitions())
+
+    with_summary = plan()
+    os.unlink(data[:-len(N.DATA_SUFFIX)] + N.SUMMARY_SUFFIX)
+    without = plan()
+    for splits in (with_summary, without):
+        assert splits[0][0] == 0 and splits[-1][1] == size
+        assert all(a[1] == b[0] for a, b in zip(splits, splits[1:]))
+    assert abs(len(without) - len(with_summary)) <= 1, (
+        len(without), len(with_summary))
+    assert all(end - start >= N.SSTableNativeReader.SPLIT_TARGET_MIN_BYTES
+               for start, end in without[:-1]), without
