@@ -13,10 +13,10 @@ Mirrors the reference's contract (reference: Runner.java:39-103):
   bytes, bytes saved, seconds (Runner.java:88-96).
 
 Unlike the reference's single-threaded loop, conversion is one Spark job
-with one task per scan split: each task reads its byte range, drops dead
-cells and writes that range's rows in scan (token) order, as the
-reference's loop does; the driver then publishes one output per input
-(sources/sstable_pb.py write_native_pb).
+whose tasks are packs of consecutive scan splits: each task reads its
+splits' byte ranges, drops dead cells and writes their rows in scan
+(token) order, as the reference's loop does; the driver then publishes
+one output per input (sources/sstable_pb.py write_native_pb).
 
 Every subcommand is one COMMANDS entry, which drives both parsing and
 dispatch; `-h`, at the top or after a subcommand, prints the usage.
@@ -52,16 +52,16 @@ def convert(input_path: str, output_dir: str,
     spark.sparkContext.setLogLevel("ERROR")
     ensure_shipped(spark)
 
-    # one job, one task per scan split; every input gets an output, an
-    # empty stream when nothing in it is live (Runner.java:75-82). The
-    # inputs are the scan's own discovery (manifest-first, recursive
-    # walk, then the maintenance transaction log's visibility filter),
-    # listed once: inputs an in-place OPTIMIZE already replaced get no
-    # output and no metrics, and each metric carries the Data.db path
-    # it was planned from. --continue-on-error plans the scan
-    # PERMISSIVE: like the reference (Runner.java:84-87), a corrupt
-    # file prints its error, gets no output, and the other files still
-    # convert.
+    # one job, one task per pack of scan splits; every input gets an
+    # output, an empty stream when nothing in it is live
+    # (Runner.java:75-82). The inputs are the scan's own discovery
+    # (manifest-first, recursive walk, then the maintenance transaction
+    # log's visibility filter), listed once: inputs an in-place OPTIMIZE
+    # already replaced get no output and no metrics, and each metric
+    # carries the Data.db path it was planned from. --continue-on-error
+    # plans the scan PERMISSIVE: like the reference (Runner.java:84-87),
+    # a corrupt file prints its error, gets no output, and the other
+    # files still convert, its pack-mates included.
     metrics, errors = write_native_pb(spark, input_path, output_dir,
                                       permissive=continue_on_error)
     total_saved = 0

@@ -40,16 +40,16 @@ Murmur3Partitioner (Cassandra's hash3_x64_128 with its signed-tail-byte
 quirk, the reference's configured default, cassandra.yaml:91) are
 implemented; Statistics.db records which one wrote the file.
 
-Scale design: the scan plans BYTE-RANGE SPLITS of Data.db computed
-from Index.db entries (the reference's index-summary chunking analog,
+Scale design: the scan plans BYTE-RANGE SPLITS of Data.db computed from
+Index.db entries (the reference's index-summary chunking analog,
 SSTableReaderPatched.java:123-178), each seeking to its first partition
-boundary and reading a bounded extent. The DataSource then packs runs of
-consecutive splits into Spark tasks: max(defaultParallelism,
-bytes / SPLIT_TARGET_MAX_BYTES) of them, never more than there are
-splits, balanced by logical bytes (the rule of Spark's own
-FilePartition.getFilePartitions). A 100 GB sstable thus becomes many
-parallel scan tasks instead of the reference's one thread per file,
-while a fine split plan does not pay one Python task start per split.
+boundary and reading a bounded extent. Every scan (DataSource or
+convert) packs runs of consecutive splits into Spark tasks
+(pack_splits): max(defaultParallelism, bytes / SPLIT_TARGET_MAX_BYTES)
+of them, never more than there are splits, balanced by logical bytes
+(Spark's FilePartition.getFilePartitions rule). A 100 GB sstable thus
+becomes many parallel scan tasks, not the reference's one thread per
+file, while a fine split plan pays no Python task start per split.
 Cell decoding streams lazily: O(one cell) memory, matching the
 reference's iterator pipeline.
 """
@@ -2079,10 +2079,10 @@ class SSTableNativeReader(DataSourceReader):
     """Byte-range splits computed from Index.db, and the read of one.
 
     partitions() is the flat split list: the unit of planning, of
-    PERMISSIVE error rows and of write_native_pb's output parts. The
-    DataSource does not hand it to Spark as is: _PackedNativeReader
-    packs runs of consecutive splits into one task each, so the number
-    of Python tasks follows cores and bytes, not splits.
+    PERMISSIVE error rows and of write_native_pb's output parts. No
+    scan hands it to Spark as is: the DataSource (_PackedNativeReader)
+    and write_native_pb both run one task per pack of pack_splits, so
+    the number of Python tasks follows cores and bytes, not splits.
 
     live_only=True pushes the reference's F1/F2 filters INTO the source
     (manual predicate pushdown, the analog of its early filtering before
@@ -2097,12 +2097,10 @@ class SSTableNativeReader(DataSourceReader):
     # boundaries come from the summary or from Index.db. MAX mirrors
     # Spark's own files.maxPartitionBytes default (128 MiB) -- at
     # 100 TB the split count is bytes-derived, never a constant; MIN
-    # keeps small inputs from planning splits so fine that the per-task
-    # Python-runner handshake (70-120 ms of wall per task on a 4-core
-    # host, barely overlapping across tasks) outweighs their decode:
-    # write_native_pb runs one task per split. A DataSource scan packs
-    # splits into tasks (_PackedNativeReader), so there an explicit
-    # fine partitions_per_split does not multiply that cost.
+    # keeps small inputs from planning splits so fine that planning
+    # work, write_native_pb's parts and their zstd frames grow with the
+    # split count instead of the bytes. Tasks are packs of splits
+    # (pack_splits), so a fine plan adds no Python tasks.
     SPLIT_TARGET_MIN_BYTES = 1 << 20
     SPLIT_TARGET_MAX_BYTES = 128 << 20
 
@@ -3061,14 +3059,21 @@ def _split_bytes(split) -> int:
     return split.end - split.start
 
 
-def pack_splits(splits: list, n_tasks: int) -> list[list]:
-    """Cut `splits` into n_tasks (1 <= n_tasks <= len(splits)) non-empty
-    runs of CONSECUTIVE splits with near-equal logical bytes: each split
-    joins the run whose share of the byte total holds its midpoint,
-    never skipping a run and always leaving one split per run still to
-    fill. Keeping runs consecutive keeps the scan's row order."""
+def pack_splits(splits: list, scan_parallelism: int) -> list[list]:
+    """The one task plan of every native scan (the DataSource's and
+    write_native_pb's): min(splits, max(scan_parallelism,
+    ceil(bytes / SPLIT_TARGET_MAX_BYTES))) non-empty runs of CONSECUTIVE
+    (split index, split) pairs with near-equal logical bytes. A Python
+    task costs 70-120 ms of start-up that overlaps poorly, so tasks
+    follow cores and bytes, not splits. Each split joins the run whose
+    share of the byte total holds its midpoint, never skipping a run and
+    always leaving one split per run still to fill. Consecutive runs
+    keep the scan's row order."""
     weights = [_split_bytes(s) for s in splits]
     total = sum(weights) or 1
+    n_tasks = min(len(splits), max(
+        scan_parallelism,
+        -(-total // SSTableNativeReader.SPLIT_TARGET_MAX_BYTES)))
     packs: list[list] = []
     acc = 0
     for i, (split, w) in enumerate(zip(splits, weights)):
@@ -3077,27 +3082,20 @@ def pack_splits(splits: list, n_tasks: int) -> list[list]:
                 len(packs))
         if t == len(packs):
             packs.append([])
-        packs[t].append(split)
+        packs[t].append((i, split))
         acc += w
     return packs
 
 
 class _PackedNativeReader(SSTableNativeReader):
-    """The DataSource's reader: one Spark task per _SplitPack. A Python
-    task costs 70-120 ms of start-up that overlaps poorly with other
-    tasks, so one task per split let 37 splits of one sstable on 4
-    cores scan slower than a single split. The task count is
-    min(splits, max(scan_parallelism, bytes / SPLIT_TARGET_MAX_BYTES)),
-    and read() drains a pack's splits in order through the per-split
+    """The DataSource's reader: one Spark task per pack of pack_splits.
+    read() drains a pack's splits in order through the per-split
     read(): row order is the flat plan's, and PERMISSIVE still gives
     one ERROR row per bad split without dropping its pack-mates."""
 
     def partitions(self):
-        splits = super().partitions()
-        total = sum(_split_bytes(s) for s in splits)
-        n_tasks = min(len(splits), max(
-            self.scan_parallelism, -(-total // self.SPLIT_TARGET_MAX_BYTES)))
-        return [_SplitPack(run) for run in pack_splits(splits, n_tasks)]
+        return [_SplitPack([s for _, s in pack]) for pack in
+                pack_splits(super().partitions(), self.scan_parallelism)]
 
     def read(self, pack) -> Iterator:
         if pack is None:  # pushed filters matched nothing: zero packs

@@ -7,10 +7,10 @@ zstd-compressed stream, one output file per input SSTable, named
 
 * write_native_pb -- the CLI's `convert`: SSTables on disk straight to
   `.proto.zst`, in scan (token) order like the reference's loop. One
-  Spark job with one task per scan split: each task drains the native
-  reader's live-only Arrow batches (F1/F2 applied in the source) into
-  the flat writer, which writes that split's part; the driver then
-  publishes each sstable's parts in split order (zstd frames
+  Spark job with one task per pack of scan splits (pack_splits): a task
+  drains each split's live-only Arrow batches (F1/F2 applied in the
+  source) into the flat writer, which writes that split's part; the
+  driver then publishes each sstable's parts in split order (zstd frames
   concatenate into one valid stream) and sums their metrics. Cells never
   enter the JVM: no row conversion, no exchange, no sort.
 * write_cells_pb -- the sink for DataFrame inputs that carry no scan
@@ -34,7 +34,7 @@ zstd-compressed stream, one output file per input SSTable, named
   Rows of any size, nested Row schema.
 
 Scale notes: convert's parallelism is the scan's -- a 50 GB sstable
-plans into byte-range splits, each written by its own task with O(batch)
+plans into byte-range splits, each written as its own part with O(batch)
 memory (pinned by tests/test_writer_memory.py), and the driver's commit
 is a rename per single-split file or one sequential append of the later
 parts per multi-split file, never a decode. write_cells_pb shuffles once
@@ -348,22 +348,22 @@ def write_cells_pb(cells_binary: DataFrame, out_dir: str) -> DataFrame:
 
 
 def _native_split_writer(reader, parts_root: str):
-    """mapPartitions function over (split index, split) pairs: drain the
-    reader's decode of each split (reader._decode_split) -- live-only
-    batches in scan order, F1/F2 applied by the source -- add the
-    writer's `live` flag (PARTITION markers are the only non-LIVE rows)
-    and write the split's part into <parts_root>/<split index>/. Yields
-    one record per written file (the writer's metrics plus `split`).
-    An exception aborts the split's temp file, so a failed split leaves
-    no part; FAILFAST raises it, and PERMISSIVE (the reader's mode)
-    yields one error record for the split's sstable instead, as the
-    reference's loop reports a failed file and goes on
-    (Runner.java:84-87)."""
+    """flatMap function over one pack of (split index, split) pairs
+    (pack_splits): for each split, drain the reader's decode
+    (reader._decode_split) -- live-only batches in scan order, F1/F2
+    applied by the source -- add the writer's `live` flag (PARTITION
+    markers are the only non-LIVE rows) and write the split's part into
+    <parts_root>/<split index>/. Yields one record per written file (the
+    writer's metrics plus `split`). An exception aborts the split's temp
+    file, so a failed split leaves no part; FAILFAST raises it, and
+    PERMISSIVE (the reader's mode) yields one error record for the
+    split's sstable and goes on to the pack's next split, as the
+    reference's loop goes on past a failed file (Runner.java:84-87)."""
 
-    def run(items):
+    def run(pack):
         import pyarrow.compute as pc
 
-        for idx, split in items:
+        for idx, split in pack:
             part_dir = os.path.join(parts_root, str(idx))
             try:
                 os.mkdir(part_dir)  # never recreates a removed parts_root
@@ -437,12 +437,13 @@ def write_native_pb(spark, input_path: str, out_dir: str,
                     ) -> tuple[list[dict], dict[str, str]]:
     """K1 sink straight from SSTables on disk, in scan order: the CLI's
     convert. The driver plans the live-only native scan; ONE Spark job
-    runs one task per split (_native_split_writer), each writing its
-    split's part under <out_dir>/_parts; the driver then publishes every
-    sstable's `<id>-Data.db.proto.zst` (_commit_parts). Rows come out in
-    token order and each Row's cells in on-disk clustering order, as the
-    reference emits them. Plain-scan splits start and end on partition
-    boundaries, so no Row spans two parts.
+    runs one task per pack of consecutive splits (pack_splits, the
+    DataSource's task plan), each writing its splits' parts under
+    <out_dir>/_parts (_native_split_writer); the driver then publishes
+    every sstable's `<id>-Data.db.proto.zst` (_commit_parts). Rows come
+    out in token order and each Row's cells in on-disk clustering order,
+    as the reference emits them. Plain-scan splits start and end on
+    partition boundaries, so no Row spans two parts.
 
     FAILFAST (default): a corrupt split fails the job, and the call
     raises with nothing published. permissive=True plans the reader
@@ -457,7 +458,7 @@ def write_native_pb(spark, input_path: str, out_dir: str,
     store; the caller's job description (and job group) stand again
     afterwards."""
     from cassandra_sstable_to_protocolbuf_spark.sources.sstable_native import (
-        SSTableNativeReader)
+        SSTableNativeReader, pack_splits)
 
     sc = spark.sparkContext
     reader = SSTableNativeReader(input_path, None, live_only=True,
@@ -478,9 +479,10 @@ def write_native_pb(spark, input_path: str, out_dir: str,
     caller_desc = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(f"convert {len(paths)} files")
     try:
-        records = (sc.parallelize(list(enumerate(splits)), len(splits))
-                   .mapPartitions(_native_split_writer(reader, parts_root))
-                   .collect()) if splits else []
+        packs = pack_splits(splits, reader.scan_parallelism)
+        records = (sc.parallelize(packs, len(packs))
+                   .flatMap(_native_split_writer(reader, parts_root))
+                   .collect()) if packs else []
         return _commit_parts(records, paths, out_dir)
     finally:
         sc.setLocalProperty("spark.job.description", caller_desc)

@@ -570,6 +570,106 @@ def test_native_writer_permissive_drops_failed_file(spark, tmp_path,
     assert os.listdir(out) == ["ks-cf-ka-1-Data.db.proto.zst"]
 
 
+def test_native_writer_packs_splits_into_tasks(spark, tmp_path,
+                                               monkeypatch):
+    """convert runs the DataSource's task plan (pack_splits): more
+    one-split inputs than cores run as min(splits, defaultParallelism)
+    Spark tasks, and every published file and metric equals the
+    one-task-per-split plan's."""
+    import os
+    import pathlib
+
+    from cassandra_sstable_to_protocolbuf_spark.sources import (
+        sstable_native as N)
+    from cassandra_sstable_to_protocolbuf_spark.sources.sstable_pb import (
+        write_native_pb)
+
+    sc = spark.sparkContext
+    n = max(8, sc.defaultParallelism + 4)
+    src = str(tmp_path / "in")
+    for gen in range(1, n + 1):
+        write_sstable(os.path.join(src, f"g{gen:02d}"), gen, [
+            {"key": b"k%02d-%03d" % (gen, i), "cells": [
+                {"name": b"c", "kind": "LIVE", "timestamp": i,
+                 "value": b"v" * (i % 7)}]}
+            for i in range(10 * gen)])
+
+    def convert(name):
+        group = f"{tmp_path.name}-{name}"
+        sc.setJobGroup(group, name)
+        try:
+            metrics, errors = write_native_pb(spark, src,
+                                              str(tmp_path / name))
+        finally:
+            sc._jsc.clearJobGroup()
+        assert errors == {}
+        tracker = sc.statusTracker()
+        (job,) = tracker.getJobIdsForGroup(group)
+        tasks = sum(tracker.getStageInfo(stage).numTasks
+                    for stage in tracker.getJobInfo(job).stageIds)
+        outputs = [({k: v for k, v in m.items()
+                     if k not in ("path", "seconds")},
+                    pathlib.Path(m["path"]).read_bytes()) for m in metrics]
+        return tasks, outputs
+
+    packed_tasks, packed = convert("packed")
+    monkeypatch.setattr(N, "pack_splits", lambda splits, par: [
+        [pair] for pair in enumerate(splits)])
+    split_tasks, per_split = convert("per_split")
+    assert packed_tasks == min(n, sc.defaultParallelism)
+    assert split_tasks == n
+    assert len(packed) == n and packed == per_split
+
+
+def test_native_writer_permissive_spares_pack_mates(spark, tmp_path,
+                                                    monkeypatch, capsys):
+    """A corrupt file between two good ones, all three in ONE task (the
+    rule's parallelism patched down to 1): write_native_pb(permissive)
+    reports exactly the bad file and converts the pack-mates on both
+    sides of it, and `convert --continue-on-error` prints exactly one
+    `ERROR converting` line and exits 1."""
+    import os
+
+    from cassandra_sstable_to_protocolbuf_spark import __main__ as cli
+    from cassandra_sstable_to_protocolbuf_spark.sources import (
+        sstable_native as N)
+    from cassandra_sstable_to_protocolbuf_spark.sources.sstable_pb import (
+        write_native_pb)
+
+    src = str(tmp_path / "in")
+    _good_and_bad_inputs(src)
+    write_sstable(os.path.join(src, "zz"), 3, [{"key": b"k3", "cells": [
+        {"name": b"a", "kind": "LIVE", "timestamp": 1, "value": b"w"}]}])
+    plans = []
+    pack = N.pack_splits
+
+    def one_task(splits, scan_parallelism):
+        plans.append(pack(splits, 1))
+        return plans[-1]
+
+    monkeypatch.setattr(N, "pack_splits", one_task)
+    out = str(tmp_path / "out")
+    metrics, errors = write_native_pb(spark, src, out, permissive=True)
+    (only,) = plans[0]
+    assert list(dict.fromkeys(s.sstable_id for _, s in only)) == [
+        "ks-cf-ka-1", "ks-cf-ka-2", "ks-cf-ka-3"]
+    assert list(errors) == ["ks-cf-ka-2"]
+    assert "checksum mismatch" in errors["ks-cf-ka-2"]
+    assert [(m["sstable_id"], m["n_rows"]) for m in metrics] == [
+        ("ks-cf-ka-1", 1), ("ks-cf-ka-3", 1)]
+    assert sorted(os.listdir(out)) == [
+        "ks-cf-ka-1-Data.db.proto.zst", "ks-cf-ka-3-Data.db.proto.zst"]
+
+    capsys.readouterr()
+    assert cli.main(["convert", "--continue-on-error", src,
+                     str(tmp_path / "cli")]) == 1
+    err = capsys.readouterr().err.splitlines()
+    assert len(plans) == 2 and len(plans[1]) == 1
+    assert [ln.split(":")[0] for ln in err
+            if ln.startswith("ERROR converting")] == [
+        "ERROR converting ks-cf-ka-2-Data.db"]
+
+
 def test_native_writer_refuses_shared_basenames(spark, tmp_path):
     """Outputs are named by basename: two nested inputs sharing one are
     refused at plan time, before any task writes."""

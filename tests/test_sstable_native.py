@@ -287,22 +287,20 @@ def test_packed_tasks_keep_split_rows_in_order(spark, fixture_sstables,
         assert two.rdd.getNumPartitions() == 2
         assert [tuple(r) for r in two.collect()] == want
 
-def test_pack_rule_follows_cores_and_bytes(monkeypatch):
-    """The DataSource runs min(splits, max(scan_parallelism,
+def test_pack_rule_follows_cores_and_bytes():
+    """pack_splits plans min(splits, max(scan_parallelism,
     ceil(bytes / SPLIT_TARGET_MAX_BYTES))) tasks, each a non-empty run
-    of consecutive splits, balanced by logical bytes."""
+    of consecutive (split index, split) pairs, balanced by logical
+    bytes."""
     mb = 1 << 20
 
     def plan(sizes, cores):
         offs = np.cumsum([0] + sizes).tolist()
         splits = [N._SSTableSplit("s", "p", a, b)
                   for a, b in zip(offs, offs[1:])]
-        monkeypatch.setattr(N.SSTableNativeReader, "partitions",
-                            lambda self: splits)
-        packs = N._PackedNativeReader("unused", None,
-                                      scan_parallelism=cores).partitions()
-        assert [s for p in packs for s in p.splits] == splits
-        return [[s.end - s.start for s in p.splits] for p in packs]
+        packs = N.pack_splits(splits, cores)
+        assert [pair for p in packs for pair in p] == list(enumerate(splits))
+        return [[s.end - s.start for _, s in p] for p in packs]
 
     assert plan([], 4) == []
     assert len(plan([mb] * 3, 4)) == 3  # never more tasks than splits
